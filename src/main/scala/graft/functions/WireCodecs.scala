@@ -31,7 +31,7 @@ object WireCodecs {
 
   /** Epoch-seconds → 5-byte big-endian binary (the header field). */
   def encodeExpiry40(seconds: Column): Column =
-    unhex(lpad(hex(seconds.cast("long").bitwiseAND(lit(Max40))), 12, "0"))
+    unhex(lpad(hex(seconds.cast("long").bitwiseAND(lit(Max40))), 10, "0"))
 
   /** 5-byte binary → epoch seconds. */
   def decodeExpiry40(bin: Column): Column =

@@ -11,24 +11,49 @@ import graft.core.FeatureGroupDef
   * (`FeatureService.RetrieveFeatures`,
   * `online-feature-store/internal/handler/feature/retrieve.go:88-266`):
   * the tier cascade and the `fillMatrix` assembler goroutine become a
-  * single declarative join + projection; defaults (P3), TTL expiry (P4)
-  * and negative caching (P5) all collapse into left-join null handling.
+  * lookup tier plus a single declarative join + projection; defaults
+  * (P3), TTL expiry (P4) and negative caching (P5) all collapse into
+  * left-join null handling.
   *
-  * == Scale design ==
-  * A feature table at 100 TB must never be shuffled for a point-lookup
-  * of a few thousand keys. `retrieve` therefore broadcasts the KEY SET,
-  * not the table:
+  * == Scale design: a two-tier cascade ==
+  * 1. Lookup tier ([[LookupTier]]). A point retrieve whose key set is
+  *    local data (its optimized plan is a `LocalRelation`, e.g. a
+  *    request's ids via `toDF`), with `broadcastKeys = true`, against a
+  *    projected table that is deterministic over file scans or local
+  *    data and estimated at most `spark.sql.autoBroadcastJoinThreshold`,
+  *    with key columns of one integral, string, date or timestamp type
+  *    on both sides, is answered on the driver from a hash index of that
+  *    table. The index is built once per table snapshot — keyed by the
+  *    table's canonicalized optimized plan plus its input-file set, so a
+  *    rewrite (an `Ingest.upsertBatch` swap, a refreshed file index)
+  *    gives a new key and a stale snapshot is never served — and the
+  *    last [[LookupTier.MaxSnapshots]] snapshots stay cached. The answer
+  *    is a `LocalRelation`: the feature projection folds into it and
+  *    collecting it runs no Spark job. [[stitch]] over parts that are
+  *    all local data joins them on the driver the same way.
+  *
+  * 2. Broadcast-key scan. Everything else — non-local or scoring-sized
+  *    key sets, big or non-file tables, other key types — plans joins.
+  *    A feature table at 100 TB must never be shuffled for a
+  *    point-lookup of a few thousand keys, so `retrieve` broadcasts the
+  *    KEY SET, not the table:
   *
   *   hits   = fgTable ⋈_inner broadcast(keys)   // table streamed once,
   *                                              // no shuffle, scan prunes
   *   result = keys ⋈_left broadcast(hits)       // both sides tiny;
   *                                              // nulls → defaults
   *
-  * A plain `keys.join(fgTable, pk, "left")` cannot broadcast the small
-  * side (Spark only broadcasts the non-preserved side of an outer join),
-  * so it would sort-merge-shuffle the full table. The two-stage shape
-  * scans the table exactly once and keeps every exchange proportional
-  * to the key count.
+  *    A plain `keys.join(fgTable, pk, "left")` cannot broadcast the
+  *    small side (Spark only broadcasts the non-preserved side of an
+  *    outer join), so it would sort-merge-shuffle the full table. The
+  *    two-stage shape scans the table exactly once and keeps every
+  *    exchange proportional to the key count.
+  *
+  * Both tiers compute the same joins (dedup, fan-out to duplicate
+  * keys, null keys reading null features) and apply one shared
+  * default/TTL/schema-version/quantize projection, so their answers
+  * agree row for row, schema and nullability included
+  * (LookupTierSpec).
   */
 object FeatureStore {
 
@@ -49,6 +74,10 @@ object FeatureStore {
     * @param asOf      evaluation time for TTL expiry (P4); pass a fixed
     *                  literal for deterministic tests
     * @param writtenAt name of the write-timestamp column in fgTable
+    * @param broadcastKeys point-lookup shape (default): the lookup tier
+    *                  when eligible, else broadcast key-set joins. Pass
+    *                  `false` for scoring-sized key sets — shuffled
+    *                  joins, never the lookup tier.
     * @param schemaVersionCol name of the per-row written-schema-version
     *                  column in fgTable. When present, each row resolves
     *                  a requested feature against the schema version it
@@ -82,34 +111,26 @@ object FeatureStore {
     val projections = features.map(Projections.parse(fg, _))
     val neededCols = projections.map(_.source).distinct
 
+    val ttl = fg.ttlSeconds > 0 && fgTable.columns.contains(writtenAt)
     val expired: Column =
-      if (fg.ttlSeconds > 0 && fgTable.columns.contains(writtenAt))
+      if (ttl)
         col(writtenAt) + expr(s"INTERVAL ${fg.ttlSeconds} SECONDS") <=
           asOf.getOrElse(current_timestamp())
       else lit(false)
 
     val hasVersion = fgTable.columns.contains(schemaVersionCol)
-
-    val dedupKeys = keys.dropDuplicates(pk)
-
-    // ONE streamed pass over the table: inner join against the
-    // broadcast key set. (A direct outer join can't broadcast its
-    // preserved small side, and hits/anti/union shapes scan the table
-    // twice — this scans once and every later join is key-set-sized.)
     val extraCols =
-      (if (fg.ttlSeconds > 0 && fgTable.columns.contains(writtenAt))
-         Seq(writtenAt) else Nil) ++
+      (if (ttl) Seq(writtenAt) else Nil) ++
       (if (hasVersion) Seq(schemaVersionCol) else Nil)
-    val hits = fgTable
-      .select((pk ++ neededCols ++ extraCols).distinct.map(col): _*)
-      .join(maybeBroadcast(dedupKeys), pk, "inner")
+    val table = fgTable.select((pk ++ neededCols ++ extraCols).distinct.map(col): _*)
 
-    // key-set-sized left join re-attaches hits to every requested key;
-    // a missing or expired row falls through the same coalesce to the
-    // per-feature default (P3/P4/P5 in one projection). Per-row schema
-    // versioning rides the same projection: a feature that did not yet
-    // exist in the version the row was written under reads as the
-    // active default, never as whatever bytes sit in the column.
+    // The per-key projection both tiers apply to the
+    // `dedup(keys) ⋈left hits` rows: a missing or expired row falls
+    // through the same coalesce to the per-feature default (P3/P4/P5 in
+    // one projection). Per-row schema versioning rides the same
+    // projection: a feature that did not yet exist in the version the
+    // row was written under reads as the active default, never as
+    // whatever bytes sit in the column.
     val resultCols = pk.map(col) ++ projections.map { p =>
       val notInWrittenVersion: Column =
         if (hasVersion && p.sinceVersion > 1)
@@ -119,12 +140,27 @@ object FeatureStore {
         .otherwise(col(p.source))
       p.quantize(coalesce(raw, p.default)).as(p.outName)
     }
-    val perKey = dedupKeys.join(maybeBroadcast(hits), pk, "left")
-      .select(resultCols: _*)
+    val resolve = (perKey: DataFrame) => perKey.select(resultCols: _*)
+    val outCols = (pk ++ projections.map(_.outName)).map(col)
 
-    // fan results back out to the original (possibly duplicated) keys
-    keys.join(maybeBroadcast(perKey), pk, "left")
-      .select((pk ++ projections.map(_.outName)).map(col): _*)
+    // tier 1: a local key set against a small table is answered from
+    // the driver-resident index, with no job
+    val local =
+      if (broadcastKeys) LookupTier.retrieve(keys, table, pk, resolve) else None
+    local.map(_.select(outCols: _*)).getOrElse {
+      // tier 2 — ONE streamed pass over the table: inner join against
+      // the broadcast key set. (A direct outer join can't broadcast its
+      // preserved small side, and hits/anti/union shapes scan the table
+      // twice — this scans once and every later join is key-set-sized.)
+      val dedupKeys = keys.dropDuplicates(pk)
+      val hits = table.join(maybeBroadcast(dedupKeys), pk, "inner")
+
+      // key-set-sized left join re-attaches hits to every requested key
+      val perKey = resolve(dedupKeys.join(maybeBroadcast(hits), pk, "left"))
+
+      // fan results back out to the original (possibly duplicated) keys
+      keys.join(maybeBroadcast(perKey), pk, "left").select(outCols: _*)
+    }
   }
 
   /** Composite key string: ordered key columns joined with `"|"`
@@ -136,9 +172,12 @@ object FeatureStore {
   /** Stitch several per-FG retrievals into one row matrix (SURVEY J2).
     * Every `retrieve` output carries the full key set, so the parts are
     * key-aligned and a left join is exact — and unlike full outer it
-    * supports broadcasting the (≤ |keys|-sized) right side. */
+    * supports broadcasting the (≤ |keys|-sized) right side. Parts that
+    * are all local data (lookup-tier answers) are joined on the driver,
+    * with the same output, and no job. */
   def stitch(pk: Seq[String], parts: Seq[DataFrame]): DataFrame =
-    parts.reduce((a, b) => a.join(broadcast(b), pk, "left"))
+    LookupTier.stitch(pk, parts).getOrElse(
+      parts.reduce((a, b) => a.join(broadcast(b), pk, "left")))
 
   /** Last-write-wins upsert of `updates` into `current` (SURVEY S2/ST3:
     * each persist is a full FG overwrite for its keys). Duplicate keys

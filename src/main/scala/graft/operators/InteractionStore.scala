@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /** Time-series interaction store: weekly event-time bucketing, bounded
   * per-bucket retention, descending time-range retrieval.
@@ -121,6 +123,14 @@ object InteractionStore {
   /** Time-range retrieval: filter to [start, end], newest-first per
     * user, at most `limit` events each (W1/O1/O3/P6). `types` narrows
     * event types (click/order twin services, J5).
+    *
+    * When `events` scans a file relation partitioned by a date-typed
+    * `week` column (the [[graft.sources.Layout.writeWeekPartitionedEvents]]
+    * layout), the range also bounds `week`, so only the touched week
+    * directories are listed and read. The bound is widened by one week
+    * on each side: week buckets are cut in the WRITER's session time
+    * zone and `start`/`end` are truncated in the reader's, and two time
+    * zones place an instant at most one week boundary apart.
     */
   def retrieveRange(
       events: DataFrame,
@@ -132,13 +142,31 @@ object InteractionStore {
       tsCol: String = "ts",
       tieBreak: String = "event_id"): DataFrame = {
     val capped = math.min(limit, MaxRetrieveLimit)
-    val ranged = events.filter(col(tsCol).between(start, end))
+    val pruned = weekPartition(events).fold(events)(w => events.filter(
+      w.between(date_sub(week(start), 7), date_add(week(end), 7))))
+    val ranged = pruned.filter(col(tsCol).between(start, end))
     val typed = if (types.isEmpty) ranged
                 else ranged.filter(col("event_type").isin(types: _*))
     val w = Window.partitionBy(col(userCol))
       .orderBy(col(tsCol).desc, col(tieBreak).asc)
     typed.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= capped)
+  }
+
+  /** `events`' `week` column when it is a date-typed partition column
+    * of a file relation `events` reads, passed through unchanged. */
+  private def weekPartition(events: DataFrame): Option[Column] = {
+    val plan = events.queryExecution.analyzed
+    plan.output.find(a => a.name == "week" && a.dataType == DateType).filter { w =>
+      plan.exists {
+        case r: LogicalRelation => r.relation match {
+          case fs: HadoopFsRelation =>
+            fs.partitionSchema.fieldNames.contains(w.name) && r.output.exists(_.exprId == w.exprId)
+          case _ => false
+        }
+        case _ => false
+      }
+    }.map(w => col(w.name))
   }
 
   /** Click ∪ order side-by-side retrieval (J5/SO2): both event classes

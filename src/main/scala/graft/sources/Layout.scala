@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   *    executors that is the difference between a full-table exchange
   *    per batch and none.
   *  - An event table partitioned by week turns every time-range
-  *    predicate ([[graft.operators.InteractionStore.retrieveRange]])
-  *    and retention sweep ([[graft.operators.InteractionStore.retention]])
-  *    into partition pruning: only the ≤24 touched weekly directories
-  *    are listed and scanned.
+  *    predicate into partition pruning: only the ≤24 touched weekly
+  *    directories are listed and scanned.
+  *    [[graft.operators.InteractionStore.retrieveRange]] adds the week
+  *    bound itself when it reads this layout.
   */
 object Layout {
 

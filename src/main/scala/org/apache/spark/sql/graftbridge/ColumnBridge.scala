@@ -32,3 +32,32 @@ object GraftInstaller {
         cs.experimental.extraOptimizations :+ graft.expr.FoldQuantize
   }
 }
+
+/** Logical-plan entry points the DataFrame API keeps `private[sql]`:
+  * wrapping a hand-built plan (a driver-side `LocalRelation`) as a
+  * DataFrame, the session's SQL conf, and collecting a DataFrame as
+  * Catalyst rows without the external-`Row` round trip. Used by the
+  * feature store's lookup tier (`graft.operators.LookupTier`).
+  */
+object PlanBridge {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.execution.SQLExecution
+  import org.apache.spark.sql.internal.SQLConf
+
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(classic(spark), plan)
+
+  def conf(spark: SparkSession): SQLConf = classic(spark).sessionState.conf
+
+  /** `df.collect()` as Catalyst rows: one tracked SQL execution, like
+    * any action, but no conversion to external `Row`s. */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  private def classic(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+}

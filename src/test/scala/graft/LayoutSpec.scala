@@ -99,6 +99,48 @@ class LayoutSpec extends AnyFunSuite with SparkSuite {
     assert(scan.count() < Layout.readEvents(spark, dir).count())
   }
 
+  test("retrieveRange prunes week directories and matches the unpruned " +
+      "result when the reader's time zone differs from the writer's") {
+    import graft.operators.InteractionStore
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    val dir = Files.createTempDirectory("graft-events-tz").toString + "/events"
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli // a Monday
+    // one event every 2 h for 10 weeks, cycling over 3 users
+    val ev = (0 until 840).map { i =>
+      (i.toLong, new java.sql.Timestamp(t0 + i * 7200000L), i.toLong % 3, "click")
+    }.toDF("event_id", "ts", "user_id", "event_type")
+    val prevTz = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
+      Layout.writeWeekPartitionedEvents(ev, dir)
+      // start is a Sunday afternoon in UTC (week 2024-01-15 on disk) but
+      // already Monday in Kiritimati (UTC+14, week 2024-01-22 there);
+      // end is a Monday morning in UTC (week 2024-02-05 on disk) but
+      // still Sunday in Los Angeles (week 2024-01-29 there)
+      val start = lit(java.sql.Timestamp.from(java.time.Instant.parse("2024-01-21T15:00:00Z")))
+      val end = lit(java.sql.Timestamp.from(java.time.Instant.parse("2024-02-05T04:00:00Z")))
+      for (tz <- Seq("UTC", "Pacific/Kiritimati", "America/Los_Angeles")) {
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        val events = Layout.readEvents(spark, dir)
+        val pruned = InteractionStore.retrieveRange(events, start, end, limit = 2000)
+        // the same rows behind a plan that is not a partitioned file scan
+        val unpruned = InteractionStore.retrieveRange(events.localCheckpoint(), start, end,
+          limit = 2000)
+        val got = pruned.collect().sortBy(_.toString).toSeq
+        assert(got === unpruned.collect().sortBy(_.toString).toSeq, s"tz=$tz")
+        // events 248..422 (2024-01-21T16:00Z .. 2024-02-05T04:00Z)
+        assert(got.size === 175, s"tz=$tz")
+        val filesRead = Plans.collect(pruned.queryExecution.executedPlan) {
+          case s: FileSourceScanExec => s.metrics("numFiles").value
+        }.sum
+        assert(filesRead > 0 && filesRead < events.inputFiles.length,
+          s"tz=$tz read $filesRead of ${events.inputFiles.length} files")
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+  }
+
   test("compact rewrites a many-file table into the target file count") {
     val dir = Files.createTempDirectory("graft-compact").toString + "/t"
     (1L to 1000L).toDF("v").repartition(40).write.parquet(dir)
