@@ -8,8 +8,10 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, Sh
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.{GlobalLimitExec, LocalLimitExec, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Path, Paths}
 
-/** Final-plan shape audit backing [[Bench]]'s per-query verdicts.
+/** Final-plan shape audit of the query corpus.
   *
   * Works on the plan TREE, not its string: the adaptive root and query
   * stages are leaf nodes to `collect`, and the one shape that matters
@@ -23,6 +25,17 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
   * checked against the reviewed per-query expectation in the baseline
   * file (brute-force ANN baselines, for example, are all-pairs BY
   * DESIGN against a ≤5-row query set the plan can't prove small).
+  *
+  * As a main it audits every query at one data dir:
+  * `runMain graft.PlanAudit <sfDir> [--write-baseline] [query ...]`.
+  * AQE may broadcast at sf0.001 (PlanLintSpec's scale) what it must
+  * shuffle at sf0.1, so the hazard check reruns here on each query's
+  * FINAL adaptive plan, and each query's shuffle count is compared
+  * with its entry in [[BaselineFile]] so an AQE-masked extra shuffle
+  * cannot creep in silently. Prints one `PLANAUDIT <query> <verdict>`
+  * line per query plus `PLANAUDIT_SUMMARY`; exits nonzero on any flag
+  * or error. `--write-baseline` rewrites the baseline from the
+  * observed shapes (see [[mergeBaseline]]).
   */
 object PlanAudit {
 
@@ -181,6 +194,15 @@ object PlanAudit {
     case _ => false
   }
 
+  /** Shape of `df`'s FINAL plan: executes through `df`'s own
+    * QueryExecution so AQE finalizes the adaptive plan being audited
+    * (`df.count()` would plan a separate aggregate and leave `df`'s
+    * plan at its initial static shape). */
+  def finalShape(df: DataFrame): Shape = {
+    df.queryExecution.toRdd.count()
+    audit(df.queryExecution.executedPlan)
+  }
+
   def audit(plan: SparkPlan): Shape = {
     var shuffles, cartesian, bnlj = 0
     walk(plan) {
@@ -195,5 +217,99 @@ object PlanAudit {
       case _ => ()
     }
     Shape(shuffles, cartesian, bnlj)
+  }
+
+  /** Per-query expectations, relative to the working directory: the
+    * shuffle count per query name, plus `<name>!bnlj` entries — the
+    * hand-reviewed allowances for by-design unbounded nested-loop
+    * joins. Other `!`-suffixed entries are carried verbatim. */
+  val BaselineFile = "bench_exchange_baseline.json"
+
+  def readBaseline(path: Path): Map[String, Int] =
+    if (Files.exists(path))
+      "\"([^\"]+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(Files.readString(path))
+        .map(m => m.group(1) -> m.group(2).toInt).toMap
+    else Map.empty
+
+  /** The hazard verdict, independent of shuffle counts: a cartesian
+    * product, or more unbounded nested-loop joins than the query's
+    * reviewed `!bnlj` allowance. None when the plan has neither. */
+  def hazard(name: String, shape: Shape,
+      baseline: Map[String, Int]): Option[String] = {
+    val okBnlj = baseline.getOrElse(s"$name!bnlj", 0)
+    if (shape.cartesian > 0) Some("CartesianProduct")
+    else if (shape.unboundedBnlj > okBnlj)
+      Some(s"BroadcastNestedLoopJoin:${shape.unboundedBnlj}>$okBnlj")
+    else None
+  }
+
+  /** Full verdict: the hazard, then the shuffle count against the
+    * baseline. MORE shuffles than recorded is a flag; FEWER is noted as
+    * an improvement (AQE variance or a real win) but not flagged, so
+    * flags stay a monotone signal. Verdicts starting with "ok" pass. */
+  def verdict(name: String, shape: Shape,
+      baseline: Map[String, Int]): String =
+    hazard(name, shape, baseline).getOrElse(baseline.get(name) match {
+      case Some(exp) if shape.shuffles > exp => s"exchanges:${shape.shuffles}!=$exp"
+      case Some(exp) if shape.shuffles < exp => s"ok(improved:${shape.shuffles}<$exp)"
+      case Some(_) => "ok"
+      case None => s"ok(no-baseline:${shape.shuffles},bnlj:${shape.unboundedBnlj})"
+    })
+
+  /** The baseline rewritten from observed shapes. Flagged queries
+    * still get their counts recorded (bootstrapping from an empty file
+    * works). A `!bnlj` allowance is NEVER minted — a query that
+    * regressed into an unbounded BNLJ must stay flagged rather than
+    * self-approve — and an existing one ratchets down to the observed
+    * count, disappearing with the shape. Entries of queries not
+    * audited this run carry over unchanged. */
+  def mergeBaseline(baseline: Map[String, Int],
+      shapes: Map[String, Shape]): Map[String, Int] = {
+    val fresh = shapes.toSeq.flatMap { case (n, s) =>
+      Seq(n -> s.shuffles) ++ (baseline.get(s"$n!bnlj") match {
+        case Some(prior) if s.unboundedBnlj > 0 =>
+          Seq(s"$n!bnlj" -> math.min(s.unboundedBnlj, prior))
+        case _ => Nil
+      })
+    }
+    baseline.filter { case (k, _) => !shapes.contains(k.stripSuffix("!bnlj")) } ++ fresh
+  }
+
+  def main(args: Array[String]): Unit = {
+    val usage = "usage: PlanAudit <sfDir> [--write-baseline] [query ...]"
+    val (opts, rest) = args.partition(_.startsWith("--"))
+    require(rest.nonEmpty && opts.forall(_ == "--write-baseline"), usage)
+    val sfDir = rest.head
+    val only = rest.tail.toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = GraftSession.builder("graft-plan-audit",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    GraftSession.quietNoisyLoggers()
+    val baselinePath = Paths.get(BaselineFile)
+    val baseline = readBaseline(baselinePath)
+    var shapes = Map.empty[String, Shape]
+    val verdicts = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .map { case (name, fn) =>
+        val v =
+          try {
+            val shape = finalShape(fn(spark, sfDir))
+            shapes += name -> shape
+            verdict(name, shape, baseline)
+          } catch { case e: Throwable => s"error:${e.getClass.getSimpleName}" }
+        println(s"PLANAUDIT $name $v")
+        name -> v
+      }
+    if (opts.nonEmpty)
+      Files.writeString(baselinePath, mergeBaseline(baseline, shapes).toSeq.sorted
+        .map { case (n, c) => s"""  "$n": $c""" }.mkString("{\n", ",\n", "\n}\n"))
+    val errors = verdicts.count(_._2.startsWith("error"))
+    val flags = verdicts.count(!_._2.startsWith("ok")) - errors
+    println(s"""PLANAUDIT_SUMMARY {"dir":"$sfDir","audited":${verdicts.size},""" +
+      s""""flags":$flags,"errors":$errors}""")
+    spark.stop()
+    if (flags + errors > 0) sys.exit(1)
   }
 }

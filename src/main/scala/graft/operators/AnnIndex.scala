@@ -183,32 +183,33 @@ final case class IvfIndex(
       queryIdCol: String = "query_id",
       queryEmbCol: String = "query_embedding"): DataFrame = {
     // double-cast + L2 norms staged per vector (not per candidate pair)
-    val qCells = queries
+    val qCells = probe(queries
       .select(col(queryIdCol),
         col(queryEmbCol).cast("array<double>").as(queryEmbCol),
-        Similarity.l2(col(queryEmbCol)).as("__qn"))
-      .crossJoin(broadcast(IvfIndex.boundedCentroids(centroids)))
-      .withColumn("__d", Similarity.euclidean(col(queryEmbCol), col("centroid")))
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col(queryIdCol)).orderBy(col("__d").asc, col("cell_id").asc)))
-      .filter(col("__r") <= nProbe)
-      // align the probe key's type with the corpus side so any type
-      // coercion casts THIS (tiny) side — a cast over the corpus scan's
-      // partition column would defeat dynamic partition pruning on
-      // cell-partitioned layouts (sources/Layout.writeIvf)
-      .select(col(queryIdCol), col(queryEmbCol), col("__qn"),
-        col("cell_id").cast(assigned.schema("cell_id").dataType).as("cell_id"))
+        Similarity.l2(col(queryEmbCol)).as("__qn")),
+      nProbe, queryIdCol, queryEmbCol)
     val corp = assigned.select(col(idCol), col("cell_id"),
       col(embCol).cast("array<double>").as(embCol),
       Similarity.l2(col(embCol)).as("__n"))
     val cands = corp.join(qCells, "cell_id") // cell-pruned candidate set
-    val scored = cands.select(col(queryIdCol), col(idCol),
+    IvfIndex.topK(cands.select(col(queryIdCol), col(idCol),
       (Similarity.dot(col(embCol), col(queryEmbCol)) /
-        (col("__n") * col("__qn"))).as("score"))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        (col("__n") * col("__qn"))).as("score")), k, queryIdCol, idCol)
   }
+
+  /** Each staged query row joined to its `nProbe` nearest cells. The
+    * probe key's type is aligned with the corpus side so any type
+    * coercion casts THIS (tiny) side — a cast over the corpus scan's
+    * partition column would defeat dynamic partition pruning on
+    * cell-partitioned layouts (sources/Layout.writeIvf). */
+  private def probe(
+      staged: DataFrame,
+      nProbe: Int,
+      queryIdCol: String,
+      queryEmbCol: String): DataFrame =
+    IvfIndex.nearestCells(staged, centroids, queryIdCol, queryEmbCol, nProbe)
+      .select(staged.columns.map(col) :+
+        col("cell_id").cast(assigned.schema("cell_id").dataType).as("cell_id"): _*)
 
   /** Materialize int8 codes + scales as stored columns of the assigned
     * table (column names [[IvfIndex.Int8CodeCol]]/[[IvfIndex.Int8ScaleCol]]).
@@ -275,19 +276,13 @@ final case class IvfIndex(
       embCol: String = "embedding",
       queryIdCol: String = "query_id",
       queryEmbCol: String = "query_embedding"): DataFrame = {
-    val qCells = queries
+    val qCells = probe(queries
       .select(col(queryIdCol),
         col(queryEmbCol).cast("array<double>").as(queryEmbCol),
         Similarity.int8Scale(col(queryEmbCol)).as("__qs"))
       .select(col(queryIdCol), col(queryEmbCol), col("__qs"),
-        Similarity.int8Codes(col(queryEmbCol), col("__qs")).as("__qc"))
-      .crossJoin(broadcast(IvfIndex.boundedCentroids(centroids)))
-      .withColumn("__d", Similarity.euclidean(col(queryEmbCol), col("centroid")))
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col(queryIdCol)).orderBy(col("__d").asc, col("cell_id").asc)))
-      .filter(col("__r") <= nProbe)
-      .select(col(queryIdCol), col("__qs"), col("__qc"),
-        col("cell_id").cast(assigned.schema("cell_id").dataType).as("cell_id"))
+        Similarity.int8Codes(col(queryEmbCol), col("__qs")).as("__qc")),
+      nProbe, queryIdCol, queryEmbCol)
     val corp =
       if (assigned.columns.contains(IvfIndex.Int8CodeCol) &&
           assigned.columns.contains(IvfIndex.Int8ScaleCol))
@@ -301,13 +296,10 @@ final case class IvfIndex(
           col(embCol).cast("array<double>").as(embCol))
         .select(col(idCol), col("cell_id"), col("__s"),
           Similarity.int8Codes(col(embCol), col("__s")).as("__c"))
-    val scored = corp.join(qCells, "cell_id")
+    IvfIndex.topK(corp.join(qCells, "cell_id")
       .select(col(queryIdCol), col(idCol),
         (Similarity.dotInt8(col("__c"), col("__qc")) * col("__s") * col("__qs"))
-          .as("score"))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+          .as("score")), k, queryIdCol, idCol)
   }
 }
 
@@ -332,20 +324,40 @@ object IvfIndex {
   private[operators] def boundedCentroids(centroids: DataFrame): DataFrame =
     centroids.orderBy(col("cell_id")).limit(MaxCells)
 
-  /** Nearest-centroid assignment: corpus × broadcast(centroids), keep
-    * the closest cell per vector (ties → lowest cell_id). One broadcast
-    * join, no corpus shuffle — the only full-corpus pass per build
-    * iteration. */
+  /** The `n` nearest cells of every row: rows × broadcast(bounded
+    * centroids), Euclidean distance from `embCol`, ranked per `keyCol`
+    * (ties → lowest cell_id). Output: the row's columns + `cell_id`,
+    * `centroid`, `__d` and `__r` (the 1-based rank). One broadcast join,
+    * no shuffle of `rows`. */
+  private def nearestCells(
+      rows: DataFrame,
+      centroids: DataFrame,
+      keyCol: String,
+      embCol: String,
+      n: Int): DataFrame =
+    rows.crossJoin(broadcast(boundedCentroids(centroids)))
+      .withColumn("__d", Similarity.euclidean(col(embCol), col("centroid")))
+      .withColumn("__r", row_number().over(
+        Window.partitionBy(col(keyCol)).orderBy(col("__d").asc, col("cell_id").asc)))
+      .filter(col("__r") <= n)
+
+  /** The top `k` of `scored` (`queryIdCol`, `idCol`, `score`) per query
+    * by score descending, ties → lowest id; adds the 1-based `rank`. */
+  private def topK(scored: DataFrame, k: Int, queryIdCol: String,
+      idCol: String): DataFrame = {
+    val w = Window.partitionBy(col(queryIdCol))
+      .orderBy(col("score").desc, col(idCol).asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** Nearest-centroid assignment: the closest cell per vector — the
+    * only full-corpus pass per build iteration. */
   private def assign(
       corpus: DataFrame,
       centroids: DataFrame,
       idCol: String,
       embCol: String): DataFrame =
-    corpus.crossJoin(broadcast(boundedCentroids(centroids)))
-      .withColumn("__d", Similarity.euclidean(col(embCol), col("centroid")))
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col(idCol)).orderBy(col("__d").asc, col("cell_id").asc)))
-      .filter(col("__r") === 1)
+    nearestCells(corpus, centroids, idCol, embCol, 1)
       .drop("__d", "__r", "centroid")
 
   /** Deterministic id-sampled seed centroids (also the k-means init).

@@ -59,8 +59,11 @@ object Evaluation {
     // (group, score) total order, so the group's first cell carries it
     val offs = cum.groupBy(g: _*)
       .agg(min(col("__cum") - col("__cnt")).as("__goff"))
+      .select(groupCols.map(c => col(c).as(s"__o_$c")) :+ col("__goff"): _*)
     val lo = col("__cum") - col("__goff") - col("__cnt")
-    cum.join(offs, groupCols)
+    // null-safe: a null group key is a group of its own, not a miss
+    cum.join(offs,
+        groupCols.map(c => col(c) <=> col(s"__o_$c")).foldLeft(lit(true))(_ && _))
       .groupBy(g: _*)
       .agg(sum(col("__pos")).as("n_pos"),
         sum(col("__neg")).as("n_neg"),

@@ -181,9 +181,8 @@ object FeatureStore {
 
   /** Last-write-wins upsert of `updates` into `current` (SURVEY S2/ST3:
     * each persist is a full FG overwrite for its keys). Duplicate keys
-    * inside `updates` resolve by highest `versionCol` then arbitrary-but-
-    * deterministic tie-break on the remaining columns' hash — mirrors
-    * the reference's per-key serial consumer, which applies the latest
+    * inside `updates` resolve through [[latestPerKey]] — mirrors the
+    * reference's per-key serial consumer, which applies the latest
     * Kafka offset last (`internal/consumer/listeners/kafka.go:308+`).
     *
     * Scale note: this shuffles both sides by pk once (window + join).
@@ -194,16 +193,31 @@ object FeatureStore {
       current: DataFrame,
       updates: DataFrame,
       pk: Seq[String],
-      versionCol: String): DataFrame = {
+      versionCol: String): DataFrame =
+    mergeLatest(current, latestPerKey(updates, pk, versionCol), pk)
+
+  /** ST7-safe in-batch reduction: one row per key — the highest
+    * `versionCol`, ties broken arbitrarily but deterministically by the
+    * remaining columns' hash — so a merge is deterministic regardless
+    * of source row order. */
+  def latestPerKey(batch: DataFrame, pk: Seq[String], versionCol: String): DataFrame = {
     val w = Window.partitionBy(pk.map(col): _*)
       .orderBy(col(versionCol).desc,
-        xxhash64(updates.columns.filterNot(pk.contains).map(col): _*))
-    val latest = updates
-      .withColumn("__rn", row_number().over(w))
+        xxhash64(batch.columns.filterNot(pk.contains).map(col): _*))
+    batch.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    current.join(latest.select(pk.map(col): _*), pk, "left_anti")
-      .unionByName(latest.select(current.columns.map(col): _*))
   }
+
+  /** Replace every `current` row whose key appears in `latest` (one row
+    * per key, as [[latestPerKey]] yields) with that key's `latest` row
+    * when `keep` holds for it; a key whose row fails `keep` is removed. */
+  private[graft] def mergeLatest(
+      current: DataFrame,
+      latest: DataFrame,
+      pk: Seq[String],
+      keep: Column = lit(true)): DataFrame =
+    current.join(latest.select(pk.map(col): _*), pk, "left_anti")
+      .unionByName(latest.filter(keep).select(current.columns.map(col): _*))
 
   /** Entity-level RESET ingestion (SURVEY ST9, "reset" leg): a full
     * sync replaces an entity's stored rows WHOLESALE — every current
@@ -246,15 +260,7 @@ object FeatureStore {
       events: DataFrame,
       pk: Seq[String],
       versionCol: String,
-      opCol: String): DataFrame = {
-    val w = Window.partitionBy(pk.map(col): _*)
-      .orderBy(col(versionCol).desc,
-        xxhash64(events.columns.filterNot(pk.contains).map(col): _*))
-    val latest = events
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    current.join(latest.select(pk.map(col): _*), pk, "left_anti")
-      .unionByName(latest.filter(col(opCol) =!= "DELETE")
-        .select(current.columns.map(col): _*))
-  }
+      opCol: String): DataFrame =
+    mergeLatest(current, latestPerKey(events, pk, versionCol), pk,
+      keep = col(opCol) =!= "DELETE")
 }

@@ -285,8 +285,7 @@ object Pipeline {
     // is one cheap window over the checkpointed pool), and the union
     // after the FINAL hop would be a pure waste of one eager
     // materialization job — guard both. Hop frontiers stay pinned for
-    // the session (the result plan reads them); the bench's
-    // dropAccumulatedState sweeps those between measurements.
+    // the session (the result plan reads them).
     val seedSet = seeds.select(g :+ col(itemCol).as("__n"): _*)
     var visited = if (depth > 1) seedSet.localCheckpoint() else seedSet
     var frontier = visited

@@ -89,16 +89,15 @@ object Layout {
     * `nProbe` probed cells' files — the IVF promise carried all the way
     * into the scan.
     *
-    * `materializeInt8` (default on) additionally stores int8 codes +
-    * scales as columns, so [[graft.operators.IvfIndex.searchInt8]] over
-    * the loaded index scans the 4×-smaller code payload and column-
-    * prunes the float embeddings entirely — quantize once at build,
-    * never per query (the reference persists indexed vectors the same
-    * way, `skye/internal/repositories/embedding/embedding_store.go:114-180`). */
+    * The int8 codes + scales are stored as columns too, so
+    * [[graft.operators.IvfIndex.searchInt8]] over the loaded index scans
+    * the 4×-smaller code payload and column-prunes the float embeddings
+    * entirely — quantize once at build, never per query (the reference
+    * persists indexed vectors the same way,
+    * `skye/internal/repositories/embedding/embedding_store.go:114-180`). */
   def writeIvf(idx: graft.operators.IvfIndex, path: String,
-      materializeInt8: Boolean = true, embCol: String = "embedding"): Unit = {
-    val toWrite = if (materializeInt8) idx.materializeInt8(embCol) else idx
-    toWrite.assigned.write.mode("overwrite")
+      embCol: String = "embedding"): Unit = {
+    idx.materializeInt8(embCol).assigned.write.mode("overwrite")
       .partitionBy("cell_id").parquet(s"$path/assigned")
     idx.centroids.write.mode("overwrite").parquet(s"$path/centroids")
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.operators.FeatureStore
 
 /** One interaction event for the typed stateful merge (ST7). `ts` is
   * event-time epoch millis (the wire form of `clicked_at`). */
@@ -168,17 +169,6 @@ object Ingest {
     batch.filter(col(requiredCol).isNotNull)
   }
 
-  /** ST7-safe in-batch reduction: collapse duplicate keys inside one
-    * micro-batch to the latest version BEFORE merging, so the merge is
-    * deterministic regardless of source row order. */
-  def latestPerKey(batch: DataFrame, pk: Seq[String], versionCol: String): DataFrame = {
-    val w = Window.partitionBy(pk.map(col): _*)
-      .orderBy(col(versionCol).desc,
-        xxhash64(batch.columns.filterNot(pk.contains).map(col): _*))
-    batch.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
-
   /** foreachBatch upsert into a parquet table at `path` (ST1/ST3):
     * read-merge-overwrite with last-write-wins per key. On Delta/Iceberg
     * this becomes a storage-level MERGE INTO; parquet emulation keeps
@@ -202,15 +192,14 @@ object Ingest {
   def upsertBatch(batch: DataFrame, path: String, pk: Seq[String],
       versionCol: String): Unit = {
     val spark = batch.sparkSession
-    val latest = latestPerKey(batch, pk, versionCol).cache()
+    val latest = FeatureStore.latestPerKey(batch, pk, versionCol).cache()
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverSwap(fs, target)
     val merged =
-      if (fs.exists(target)) {
-        val current = spark.read.parquet(path)
-        graft.operators.FeatureStore.upsert(current, latest, pk, versionCol)
-      } else latest
+      if (fs.exists(target))
+        FeatureStore.mergeLatest(spark.read.parquet(path), latest, pk)
+      else latest
     val staging = new org.apache.hadoop.fs.Path(path + "__staging")
     merged.write.mode("overwrite").parquet(staging.toString)
     swapInto(fs, staging, target)

@@ -3,24 +3,22 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Builder-side generator for EXTRA scale factors of the driver's
-  * synthetic star schema (`TESTDATA.md`): same tables, same schemas,
-  * same per-decade scaling rules (every table's rows grow 10× per
-  * decade above sf0.01; region/nation stay fixed), similar value
-  * distributions. Used to materialize `benchdata/sf1` for the
-  * multi-sf scaling sweep ([[graft.Bench]]) — `/root/testdata` is
-  * read-only, so the extra decade lives inside the repo.
+/** Generator for EXTRA scale factors of the synthetic star schema
+  * (`TESTDATA.md`): same tables, same schemas, same per-decade scaling
+  * rules (every table's rows grow 10× per decade above sf0.01;
+  * region/nation stay fixed), similar value distributions. Used for
+  * runs past the shipped scale factors and, with `--skew`, for the
+  * Zipf-skewed dirs the [[SkewIdentity]] gate checks.
   *
-  * NOT the driver's generator: correctness gates never read this data
-  * (the DuckDB oracle compare stays on the driver's sf0.01). The sweep
-  * only needs the same schema and the same SHAPE of distributions so
-  * measured time-vs-rows exponents are meaningful.
+  * Not the oracle data: the DuckDB compare stays on the shipped
+  * sf0.01. Generated dirs only need the same schema and the same
+  * SHAPE of distributions.
   *
   * Determinism: every column is a pure hash of (table salt, row id) —
   * `u(id, salt) ∈ [0,1)` from xxhash64 — so regeneration is
   * bit-stable and parallelism-independent (no sequential RNG state).
   *
-  * Usage: `runMain graft.tools.GenSf <outDir> <sf>`
+  * Usage: `runMain graft.tools.GenSf <outDir> <sf> [--skew]`
   */
 object GenSf {
 
@@ -31,7 +29,7 @@ object GenSf {
   /** Deterministic bounded-Zipf rank in [0, n): inverse CDF of the
     * continuous power law with density ∝ x^(-alpha) on [1, n+1),
     * driven by the same per-row hash uniform as every other column.
-    * alpha = 1.1 (the skew-tier default) puts ~10% of rows on the top
+    * alpha = 1.1 (the `--skew` default) puts ~10% of rows on the top
     * rank and ~1/3 on the top ten at n = 15000 — the celebrity-key
     * regime the skew machinery exists for. Pure column arithmetic, so
     * regeneration stays bit-stable and parallelism-independent. */
@@ -69,9 +67,8 @@ object GenSf {
     *    100-item catalog can't express item skew at all),
     *  - `customer.c_nationkey` (a hot blocking key for the
     *    blocked-match linkage).
-    * Everything else is byte-identical to the uniform generator, so a
-    * skew-vs-uniform time ratio at equal sf isolates the key
-    * distribution as the only variable. */
+    * Everything else is byte-identical to the uniform generator, so
+    * the key distribution is the only variable. */
   def generate(spark: SparkSession, out: String, sf: Double,
       skew: Boolean = false): Unit = {
     def n(base: Long): Long = math.max(1L, (base * sf).toLong)

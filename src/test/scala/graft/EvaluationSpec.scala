@@ -7,15 +7,14 @@ import graft.operators.Evaluation
 class EvaluationSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  test("groupAuc matches brute-force pair counting, ties at 1/2") {
-    val rnd = new scala.util.Random(3)
-    val rows = (1 to 200).map { i =>
-      ("g" + (i % 2), (rnd.nextInt(20) / 2.0), rnd.nextInt(2).toLong) }
+  /** groupAuc on (group, score, label) rows vs brute-force pair
+    * counting per group, ties at 1/2; returns the groups seen. */
+  private def assertGroupAucBrute(rows: Seq[(String, Double, Long)]): Set[Option[String]] = {
     val got = Evaluation.groupAuc(rows.toDF("g", "score", "label"),
         Seq("g"), "score", "label")
-      .select($"g", $"auc").as[(String, Double)].collect().toMap
-    for (g <- Seq("g0", "g1")) {
-      val in = rows.filter(_._1 == g)
+      .select($"g", $"auc").as[(Option[String], Double)].collect().toMap
+    for (g <- got.keySet) {
+      val in = rows.filter(r => Option(r._1) == g)
       val pos = in.filter(_._3 == 1L).map(_._2)
       val neg = in.filter(_._3 == 0L).map(_._2)
       val pairs = for (p <- pos; n <- neg)
@@ -23,6 +22,22 @@ class EvaluationSpec extends AnyFunSuite with SparkSuite {
       val brute = pairs.sum / (pos.size.toDouble * neg.size.toDouble)
       assert(math.abs(got(g) - brute) < 1e-12, g)
     }
+    got.keySet
+  }
+
+  test("groupAuc matches brute-force pair counting, ties at 1/2") {
+    val rnd = new scala.util.Random(3)
+    val rows = (1 to 200).map { i =>
+      ("g" + (i % 2), (rnd.nextInt(20) / 2.0), rnd.nextInt(2).toLong) }
+    assert(assertGroupAucBrute(rows) === Set(Some("g0"), Some("g1")))
+  }
+
+  test("groupAuc keeps a null group, matching brute-force pair counting") {
+    val rnd = new scala.util.Random(5)
+    val rows = (1 to 120).map { i =>
+      (if (i % 3 == 0) null else "g" + (i % 3), rnd.nextInt(10) / 2.0,
+        rnd.nextInt(2).toLong) }
+    assert(assertGroupAucBrute(rows) === Set(None, Some("g1"), Some("g2")))
   }
 
   test("groupAuc: degenerate groups yield null; perfect ranking 1.0") {

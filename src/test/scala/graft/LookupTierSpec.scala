@@ -129,20 +129,27 @@ class LookupTierSpec extends AnyFunSuite with SparkSuite {
         FeatureStore.retrieve(keys, other, Seq("k"), ofg, Seq("c"))))
       .select("k", "v", "c").collect()
     val group = "lookup-tier-zero-jobs"
+    val barrierGroup = "lookup-tier-barrier"
     val jobs = new AtomicInteger
+    val barrier = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`barrierGroup`) => barrier.countDown()
+          case _ => ()
+        }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      spark.sparkContext.setJobGroup(group, "warm lookup")
       val cold = request()
-      org.apache.spark.graftshim.ListenerFlush.flush(spark.sparkContext)
-      jobs.set(0)
+      spark.sparkContext.setJobGroup(group, "warm lookup")
       val warm = request()
-      org.apache.spark.graftshim.ListenerFlush.flush(spark.sparkContext)
+      // a listener sees events in posting order: once this later job's
+      // start arrives, every job start of the warm request has too
+      spark.sparkContext.setJobGroup(barrierGroup, "listener barrier")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(barrier.await(60, TimeUnit.SECONDS))
       assert(jobs.get() === 0)
       assert(warm.sortBy(_.toString).toSeq === cold.sortBy(_.toString).toSeq)
       // 8 keys; k = 3 is stored twice and the twice-requested k = 1

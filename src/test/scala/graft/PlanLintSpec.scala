@@ -13,16 +13,9 @@ class PlanLintSpec extends AnyFunSuite with SparkSuite {
   test("all queries execute at sf0.001 with no cartesian product and " +
       "no unreviewed unbounded nested-loop join in the FINAL plan") {
     val dir = "/root/testdata/sf0.001"
-    // same reviewed `!bnlj` allowances the bench audit uses (the 11
-    // by-design brute-force / centroid-probe shapes)
-    val allow: Map[String, Int] = {
-      val p = java.nio.file.Paths.get("bench_exchange_baseline.json")
-      if (java.nio.file.Files.exists(p)) {
-        val txt = java.nio.file.Files.readString(p)
-        "\"([^\"]+)!bnlj\"\\s*:\\s*(\\d+)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toInt).toMap
-      } else Map.empty
-    }
+    // same reviewed `!bnlj` allowances the sf0.1 audit uses
+    val baseline = PlanAudit.readBaseline(
+      java.nio.file.Paths.get(PlanAudit.BaselineFile))
     // The 294 queries are independent jobs on a shared session: run
     // them from a small thread pool (guide §2.6 — actions are only
     // sequential because the driver calls them sequentially) so the
@@ -37,16 +30,8 @@ class PlanLintSpec extends AnyFunSuite with SparkSuite {
         pool.submit(new Runnable {
           def run(): Unit =
             try {
-              val df = fn(spark, dir)
-              // execute through THIS QueryExecution so the audited
-              // adaptive plan is the finalized one (the Bench convention)
-              df.queryExecution.toRdd.count()
-              val shape = PlanAudit.audit(df.queryExecution.executedPlan)
-              if (shape.cartesian > 0)
-                failures.add(s"$name: CartesianProduct in plan")
-              if (shape.unboundedBnlj > allow.getOrElse(name, 0))
-                failures.add(s"$name: ${shape.unboundedBnlj} unbounded " +
-                  s"BroadcastNestedLoopJoin (allowance ${allow.getOrElse(name, 0)})")
+              PlanAudit.hazard(name, PlanAudit.finalShape(fn(spark, dir)), baseline)
+                .foreach(h => failures.add(s"$name: $h"))
             } catch {
               case e: Throwable => failures.add(s"$name: ${e.getMessage}")
             }
@@ -64,13 +49,9 @@ class PlanLintSpec extends AnyFunSuite with SparkSuite {
   test("audit: full-outer 1x1 BNLJ is NOT bounded; explicit top-N is") {
     import spark.implicits._
     val n = (1L to 100L).toDF("v")
-    def shapeOf(df: org.apache.spark.sql.DataFrame): PlanAudit.Shape = {
-      df.queryExecution.toRdd.count()
-      PlanAudit.audit(df.queryExecution.executedPlan)
-    }
     // inner 1x1 (the stacked global-stat shape): bounded, as before
     val a = n.agg(sum($"v").as("s"))
-    val innerShape = shapeOf(a.crossJoin(
+    val innerShape = PlanAudit.finalShape(a.crossJoin(
       broadcast(n.agg(count(lit(1)).as("c")))))
     assert(innerShape.unboundedBnlj === 0)
     // FULL OUTER 1x1 with a non-matching condition emits TWO rows, so
@@ -85,13 +66,13 @@ class PlanLintSpec extends AnyFunSuite with SparkSuite {
         "full_outer")))
     // previously atMostOneRow claimed the outer 1x1 build side was one
     // row; now only inner/cross qualify, so this counts as unbounded
-    assert(shapeOf(foAsBuild).unboundedBnlj >= 1)
+    assert(PlanAudit.finalShape(foAsBuild).unboundedBnlj >= 1)
     // an orderBy().limit(N) build side is explicitly bounded: the
     // pairwise-join-over-TakeOrdered convention needs no allowance
     val top = n.orderBy($"v".desc).limit(10)
     val pairs = top.as("a").join(
       top.select($"v".as("v2")).as("b"), $"v" < $"v2")
-    assert(shapeOf(pairs).unboundedBnlj === 0)
+    assert(PlanAudit.finalShape(pairs).unboundedBnlj === 0)
     assert(pairs.count() === 45L)
   }
 

@@ -24,8 +24,10 @@ mutation: expectation, observed gate color, per-query detail).
 Filtered and sampled runs MERGE into the artifact — seeded from the
 newest prior round's artifact when this round's doesn't exist yet —
 so a partial run never shrinks the recorded corpus. Dev tooling only —
-the Scala library never depends on this. Restores every mutated file
-afterwards (verifies the tree is byte-identical before exiting).
+the Scala library never depends on this. Refuses to start unless every
+mutation target file matches git HEAD, restores every mutated file
+afterwards, and checks with `git diff` that they match HEAD again, so a
+mutation can never ride into a commit.
 """
 import json
 import os
@@ -165,7 +167,7 @@ MUTATIONS = [
         # (n) PLAN-AUDIT gate class (not the DuckDB compare): dropping
         # the retrieve path's broadcast hint changes the query's
         # exchange count away from its pinned bench_exchange_baseline
-        # entry — the bench plan audit, the gate that guards plan
+        # entry — the plan audit, the gate that guards plan
         # shape, must flag it. Values stay identical (a shuffled join
         # computes the same rows), so the DuckDB compare CANNOT catch
         # this class; the audit is the only gate with eyes on it.
@@ -545,16 +547,15 @@ MUTATIONS = [
     },
     # ---- batch 4: the families NOTES listed as sharing kernels ----
     {
-        # (ae) ANN probe-config class: searchInt8 consumes one probe
-        # cell fewer than configured (nProbe-1). The oracle's SQL
-        # mirrors the 2-cell probe structurally, so candidates from
-        # the second-closest cell vanish from the engine's top-k only.
+        # (ae) ANN probe-config class: the shared search probe (search
+        # and searchInt8) consumes one cell fewer than configured
+        # (nProbe-1). The oracle's SQL mirrors the 2-cell probe
+        # structurally, so candidates from the second-closest cell
+        # vanish from the engine's top-k only.
         "name": "ivf_nprobe_consume",
         "file": "src/main/scala/graft/operators/AnnIndex.scala",
-        "old": '      .filter(col("__r") <= nProbe)\n'
-               '      .select(col(queryIdCol), col("__qs"), col("__qc"),',
-        "new": '      .filter(col("__r") <= nProbe - 1)\n'
-               '      .select(col(queryIdCol), col("__qs"), col("__qc"),',
+        "old": '    IvfIndex.nearestCells(staged, centroids, queryIdCol, queryEmbCol, nProbe)\n',
+        "new": '    IvfIndex.nearestCells(staged, centroids, queryIdCol, queryEmbCol, nProbe - 1)\n',
         "queries": ["q48_ann_ivf_int8"],
         "expect": "red",
         "mechanism": "second-cell candidates drop out of the engine's "
@@ -653,16 +654,17 @@ MUTATIONS = [
                      "mat-vec",
     },
     {
-        # (al) content-defined-chunking class: the rolling cut window
-        # anchors one character late — every cut position shifts, so
-        # chunk boundaries, lengths, and hashes all move.
+        # (al) content-defined-chunking class: the cut kernel's
+        # rolling window drops its last character on the single-byte
+        # text path — every cut position shifts, so chunk boundaries,
+        # lengths, and hashes all move.
         "name": "cdc_window_anchor",
-        "file": "src/main/scala/graft/operators/Dedup.scala",
-        "old": "        pmod(md5Hash32(col(textCol).substr(i - lit(w - 1), lit(w)), seed),",
-        "new": "        pmod(md5Hash32(col(textCol).substr(i - lit(w - 2), lit(w)), seed),",
+        "file": "src/main/scala/graft/functions/TextHashKernels.scala",
+        "old": "        d.update(bytes, i - w, w)\n",
+        "new": "        d.update(bytes, i - w, w - 1)\n",
         "queries": ["q186_cdc_chunks", "q187_cdc_dedup"],
         "expect": "red",
-        "mechanism": "cut test reads chars (i-w+2..i+1) instead of "
+        "mechanism": "cut test hashes chars (i-w+1..i-1) instead of "
                      "(i-w+1..i) -> boundary set shifts, chunk rows and "
                      "dedup stats drift",
     },
@@ -773,26 +775,9 @@ def run(cmd, **kw):
     return subprocess.run(cmd, cwd=REPO, capture_output=True, text=True, **kw)
 
 
-def bench_audit_color(queries, tag):
-    """Run the bench's plan audit on `queries` (AUDIT_ALL, no sweep);
-    RED = any audit flag / non-ok plan_audit entry — the gate that
-    guards plan SHAPE, for mutations the value compare cannot see."""
-    env = dict(os.environ,
-               SPARK_GRAFT_SF_DIR="/root/testdata/sf0.1",
-               SPARK_GRAFT_BENCH_ONLY=",".join(queries),
-               SPARK_GRAFT_AUDIT_ALL="1",
-               SPARK_GRAFT_NO_SWEEP="1")
-    r = subprocess.run(["sbt", "-batch", "runMain graft.Bench"],
-                       cwd=REPO, capture_output=True, text=True, env=env)
-    import re
-    line = next((l for l in r.stdout.splitlines() if '"metric"' in l), "")
-    m = re.search(r'"audit_flags":(\d+)', line)
-    flags = int(m.group(1)) if m else -1
-    audits = re.search(r'"plan_audit":(\{[^}]*\})', line)
-    detail = {"audit_flags": flags,
-              "plan_audit": audits.group(1) if audits else "missing"}
-    color = "red" if flags != 0 else "green"
-    return color, detail
+def differs_from_head(files):
+    """True if any of `files` differs from git HEAD (staged or not)."""
+    return run(["git", "diff", "--quiet", "HEAD", "--"] + sorted(files)).returncode != 0
 
 
 def spec_color(m):
@@ -812,8 +797,8 @@ def spec_color(m):
 
 
 def skew_identity_color(tag):
-    """Run the skew tier's row-identity gate (SkewTier.identityChecks
-    via graft.tools.SkewIdentity) on a Zipf sf0.01 dir; RED = any
+    """Run the skew row-identity gate (graft.tools.SkewIdentity) on a
+    Zipf sf0.01 dir; RED = any
     salted/capped path's multiset signature mismatches its direct
     twin. The only gate that sees kernels no q-number exercises
     (Skew.saltedJoin). The data dir is generated once and reused —
@@ -869,7 +854,7 @@ def _derive_round():
     mid-round by this tool and would self-advance). A hard default only
     fires on a checkout with no artifacts; the old in-code constant had
     to be bumped by hand every round and a forgotten bump silently
-    froze the rotation window (r16 ADVICE, Bench.scala twin rule)."""
+    froze the rotation window (r16 ADVICE)."""
     env = os.environ.get("KILLTEST_ROUND")
     if env is not None:
         return int(env)
@@ -924,6 +909,10 @@ def main():
         only = set(picked)
         print(f"== sample rotation: round {rnd}, window [{start}..) "
               f"-> {picked}")
+    targets = {m["file"] for m in MUTATIONS}
+    if differs_from_head(targets):
+        sys.exit("refusing to start: mutation target files differ from git "
+                 "HEAD; commit or stash them first")
     results = []
     originals = {}
     try:
@@ -946,9 +935,7 @@ def main():
                                 "detail": comp.stdout[-2000:]})
             else:
                 gate = m.get("gate")
-                if gate == "bench_audit":
-                    color, detail = bench_audit_color(m["queries"], m["name"])
-                elif gate == "spec":
+                if gate == "spec":
                     color, detail = spec_color(m)
                 elif gate == "skew_identity":
                     color, detail = skew_identity_color(m["name"])
@@ -968,9 +955,9 @@ def main():
     finally:
         for path, src in originals.items():
             open(path, "w").write(src)
-    # tree must be byte-identical to where we started
-    for path, src in originals.items():
-        assert open(path).read() == src, f"restore failed: {path}"
+    # every mutated file must be back at HEAD
+    assert not differs_from_head(originals), "restore failed: " + \
+        run(["git", "diff", "--stat", "HEAD", "--"] + sorted(originals)).stdout
     seed = seed_artifact()
     if only and seed:
         # filtered/sampled run: MERGE into the existing artifact
