@@ -45,8 +45,8 @@ object GraftSession {
     * warning with no information content in THIS suite:
     *  - `execution.window` — every unpartitioned window in the repo
     *    is the documented bounded two-phase pattern (a window over at
-    *    most `rangePartitions` per-partition-total rows — PrefixSum
-    *    scaladoc; same shape in Sampling and the post-limit Corpus
+    *    most `spark.sql.shuffle.partitions` per-partition-total rows —
+    *    PrefixSum scaladoc; same shape in the post-limit Corpus
     *    sites), so the single-partition warning is a false alarm by
     *    construction;
     *  - `streaming.runtime` (MicroBatchExecution,

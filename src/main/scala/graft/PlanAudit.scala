@@ -222,7 +222,7 @@ object PlanAudit {
   /** Per-query expectations, relative to the working directory: the
     * shuffle count per query name, plus `<name>!bnlj` entries — the
     * hand-reviewed allowances for by-design unbounded nested-loop
-    * joins. Other `!`-suffixed entries are carried verbatim. */
+    * joins. */
   val BaselineFile = "bench_exchange_baseline.json"
 
   def readBaseline(path: Path): Map[String, Int] =

@@ -134,8 +134,9 @@ package graft
   *  - `Pipeline.reinforcementScores(horizon, maxRank)` — gate: 16/32.
   *    Weight-table literals = horizon·maxRank longs planted in the
   *    plan AND the oracle; keep ≤ a few thousand.
-  *  - `PrefixSum(rangePartitions)` — gate: 32 (= local cores). 100×:
-  *    O(total cores); the offset table materializes rangePartitions
+  *  - `PrefixSum` range partitions — derived from the session's
+  *    `spark.sql.shuffle.partitions` (gate: 32, = local cores). 100×:
+  *    O(total cores); the offset table materializes that many
   *    rows on one partition, so 10⁴ is still trivially safe.
   */
 object ScaleProfile

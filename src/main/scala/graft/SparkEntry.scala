@@ -50,7 +50,10 @@ object SparkEntry {
     * shared session's conf is never mutated, so any concurrently
     * planned batch query keeps the session default. */
   private val streamSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+    // weak keys: a dropped parent releases its clone (a clone shares
+    // only the SparkContext, never the parent, so it cannot pin its key)
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, SparkSession]())
 
   private def streamSession(s: SparkSession): SparkSession =
     // ONE clone per parent session, cached (r18, verdict item 8):

@@ -14,12 +14,16 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.quietNoisyLoggers()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val selected = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    // failures are counted, not fatal: the exit code stays 0 and
+    // check_oracle reads a query with no parquet as a FAIL
+    var failed = 0
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
+        failed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -42,5 +46,6 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    println(s"VERIFY_SUMMARY queries=${selected.size} failed=$failed")
   }
 }

@@ -155,12 +155,9 @@ object AnnIndex {
       .select(col(queryIdCol), col(idCol), col(embCol), col(queryEmbCol),
         col("__n"), col("__qn"))
       .dropDuplicates(queryIdCol, idCol)
-    val scored = cands.select(col(queryIdCol), col(idCol),
-      (Similarity.dot(col(embCol), col(queryEmbCol)) /
-        (col("__n") * col("__qn"))).as("score"))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    SimilaritySearch.rankTopK(cands.select(col(queryIdCol), col(idCol),
+      SimilaritySearch.Cosine.stagedScore(col(embCol), col("__n"),
+        col(queryEmbCol), col("__qn")).as("score")), k, queryIdCol, idCol)
   }
 }
 
@@ -192,17 +189,18 @@ final case class IvfIndex(
       col(embCol).cast("array<double>").as(embCol),
       Similarity.l2(col(embCol)).as("__n"))
     val cands = corp.join(qCells, "cell_id") // cell-pruned candidate set
-    IvfIndex.topK(cands.select(col(queryIdCol), col(idCol),
-      (Similarity.dot(col(embCol), col(queryEmbCol)) /
-        (col("__n") * col("__qn"))).as("score")), k, queryIdCol, idCol)
+    SimilaritySearch.rankTopK(cands.select(col(queryIdCol), col(idCol),
+      SimilaritySearch.Cosine.stagedScore(col(embCol), col("__n"),
+        col(queryEmbCol), col("__qn")).as("score")), k, queryIdCol, idCol)
   }
 
   /** Each staged query row joined to its `nProbe` nearest cells. The
     * probe key's type is aligned with the corpus side so any type
     * coercion casts THIS (tiny) side — a cast over the corpus scan's
     * partition column would defeat dynamic partition pruning on
-    * cell-partitioned layouts (sources/Layout.writeIvf). */
-  private def probe(
+    * cell-partitioned layouts (sources/Layout.writeIvf). The one cell
+    * probe of every IVF search, [[PqIndex.searchDotIvf]] included. */
+  private[operators] def probe(
       staged: DataFrame,
       nProbe: Int,
       queryIdCol: String,
@@ -296,7 +294,7 @@ final case class IvfIndex(
           col(embCol).cast("array<double>").as(embCol))
         .select(col(idCol), col("cell_id"), col("__s"),
           Similarity.int8Codes(col(embCol), col("__s")).as("__c"))
-    IvfIndex.topK(corp.join(qCells, "cell_id")
+    SimilaritySearch.rankTopK(corp.join(qCells, "cell_id")
       .select(col(queryIdCol), col(idCol),
         (Similarity.dotInt8(col("__c"), col("__qc")) * col("__s") * col("__qs"))
           .as("score")), k, queryIdCol, idCol)
@@ -321,7 +319,7 @@ object IvfIndex {
     * rather than construction because `localCheckpoint` (the k-means
     * loop) erases upstream plan nodes, and loaded indexes come off a
     * bare parquet scan. */
-  private[operators] def boundedCentroids(centroids: DataFrame): DataFrame =
+  private def boundedCentroids(centroids: DataFrame): DataFrame =
     centroids.orderBy(col("cell_id")).limit(MaxCells)
 
   /** The `n` nearest cells of every row: rows × broadcast(bounded
@@ -340,15 +338,6 @@ object IvfIndex {
       .withColumn("__r", row_number().over(
         Window.partitionBy(col(keyCol)).orderBy(col("__d").asc, col("cell_id").asc)))
       .filter(col("__r") <= n)
-
-  /** The top `k` of `scored` (`queryIdCol`, `idCol`, `score`) per query
-    * by score descending, ties → lowest id; adds the 1-based `rank`. */
-  private def topK(scored: DataFrame, k: Int, queryIdCol: String,
-      idCol: String): DataFrame = {
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
 
   /** Nearest-centroid assignment: the closest cell per vector — the
     * only full-corpus pass per build iteration. */

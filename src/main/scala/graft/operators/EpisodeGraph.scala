@@ -29,9 +29,9 @@ import graft.functions.Similarity
   * == Scale design ==
   * Adjacency needs a GLOBAL rank — computed with [[PrefixSum]]'s
   * range-partitioned lineage (nothing materializes more than
-  * `rangePartitions` rows on one partition), then consecutive ranks
-  * meet in a plain equi-join on the rank value. The RETRY_OF pair
-  * generator is blocked by the state key (an equi-join, never
+  * `spark.sql.shuffle.partitions` rows on one partition), then
+  * consecutive ranks meet in a plain equi-join on the rank value. The
+  * RETRY_OF pair generator is blocked by the state key (an equi-join, never
   * all-pairs — the [[SimilaritySearch.nearDupPairs]] posture); its
   * within-state pair mass is the data's own retry structure, and a
   * degenerate hot state is kept off a single executor by
@@ -68,8 +68,7 @@ object EpisodeGraph {
       outcomeCol: String = "outcome",
       embCol: String = "embedding",
       failureValue: String = "failure",
-      maxStateBlock: Int = 0,
-      rangePartitions: Int = 32): DataFrame = {
+      maxStateBlock: Int = 0): DataFrame = {
     // the episode table feeds three lineages (rank, candidate leg,
     // failed leg) — materialize once (RangeJoin convention)
     val base = episodes.select(col(idCol), col(stateCol),
@@ -79,8 +78,7 @@ object EpisodeGraph {
     // -- CONTINUATION: global (start, id) rank, consecutive ranks join
     val ranked = PrefixSum.inclusiveBy(
       base.withColumn("__w", lit(1L)),
-      Seq(col(startCol).asc, col(idCol).asc), "__w", "__rk",
-      rangePartitions)
+      Seq(col(startCol).asc, col(idCol).asc), "__w", "__rk")
     val prev = ranked.select(col(idCol).as("__pid"),
       col(stateCol).as("__pstate"), col(endCol).as("__pen"),
       (col("__rk") + 1L).as("__rk"))
@@ -154,7 +152,7 @@ object EpisodeGraph {
     * single-partition window): one ranked pass for the
     * consecutive-pair join, one prefix sum over the boundary flags,
     * one hash aggregation per episode. Nothing materializes more than
-    * `rangePartitions` rows on one partition.
+    * `spark.sql.shuffle.partitions` rows on one partition.
     *
     * Output: `(episode_idx, start_ts, end_ts, entry_start, entry_end,
     * n_entries, state[, summary])`.
@@ -168,8 +166,7 @@ object EpisodeGraph {
       tsCol: String = "ts",
       stateCol: String = "state",
       embCol: String = "embedding",
-      contentCol: String = "",
-      rangePartitions: Int = 32): DataFrame = {
+      contentCol: String = ""): DataFrame = {
     val hasContent = contentCol.nonEmpty
     val base = entries.select(
       Seq(col(idCol), col(tsCol),
@@ -179,8 +176,7 @@ object EpisodeGraph {
         (if (hasContent) Seq(col(contentCol)) else Nil): _*)
     val ranked = PrefixSum.inclusiveBy(
       base.withColumn("__w", lit(1L)),
-      Seq(col(tsCol).asc, col(idCol).asc), "__w", "__rk",
-      rangePartitions).drop("__w")
+      Seq(col(tsCol).asc, col(idCol).asc), "__w", "__rk").drop("__w")
     val prev = ranked.select(col(stateCol).as("__pstate"),
       col(embCol).as("__pemb"), col("__n").as("__pn"),
       (col("__rk") + 1L).as("__rk"))
@@ -199,7 +195,7 @@ object EpisodeGraph {
           lit(stateWeight) * flip + lit(semanticWeight) * shift >=
             threshold, lit(1L)).otherwise(lit(0L)))
     val seg = PrefixSum.inclusiveBy(scored, Seq(col("__rk").asc),
-      "__flag", "episode_idx", rangePartitions)
+      "__flag", "episode_idx")
     val aggs = Seq(
       min(col(tsCol)).as("start_ts"), max(col(tsCol)).as("end_ts"),
       min_by(col(idCol), col("__rk")).as("entry_start"),

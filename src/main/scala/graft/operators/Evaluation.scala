@@ -283,14 +283,13 @@ object Evaluation {
       df: DataFrame,
       scoreCol: String,
       labelCol: String,
-      nBins: Int,
-      rangePartitions: Int = 32): DataFrame = {
+      nBins: Int): DataFrame = {
     require(nBins >= 1, s"nBins must be >= 1, got $nBins")
     val binned = Normalize.percentRank(
         df.select(col(scoreCol),
           floor(col(scoreCol).cast("double") * 1e6).cast("long").as("__sm"),
           col(labelCol).cast("long").as("__y")),
-        scoreCol, "__pr", rangePartitions)
+        scoreCol, "__pr")
       .withColumn("bin", least(floor(col("__pr") * nBins), lit(nBins - 1))
         .cast("int"))
     binned.groupBy(col("bin"))

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * None of these use a global `Window.orderBy` over the data (which
   * would single-partition 100 TB). Min/max/percentiles reduce to one
   * small aggregate row cross-joined (broadcast) back; percent_rank
-  * builds a distinct-value cumulative-count table with range-
-  * partitioned prefix sums — every stage is partition-parallel.
+  * builds a distinct-value cumulative-count table with [[PrefixSum]]
+  * — every stage is partition-parallel.
   */
 object Normalize {
 
@@ -44,46 +44,21 @@ object Normalize {
   }
 
   /** Exact percent_rank of `c` among all values (A5/W2):
-    * (# strictly smaller) / (n - 1), the standard definition.
+    * (# strictly smaller) / (n - 1), the standard definition. A null
+    * value counts toward `n` and sorts first (smaller than every
+    * value); null rows themselves get a null rank.
     *
     * Scalable construction — no global single-partition window:
-    *  1. distinct-value counts (shuffle by value),
-    *  2. range-repartition the (much smaller) distinct table, cumsum
-    *     WITHIN each range partition via a window keyed on
-    *     `spark_partition_id()` (partition-parallel),
-    *  3. per-partition totals (tiny, one row per partition) → prefix
-    *     offsets joined back by partition id,
-    *  4. broadcast-join rank table back to the data by value.
+    * distinct-value counts (shuffle by value), then a [[PrefixSum]]
+    * over the (much smaller) distinct table, whose grand total is the
+    * `n`; the rank table joins back to the data by value.
     */
-  def percentRank(df: DataFrame, c: String, out: String,
-      rangePartitions: Int = 32): DataFrame = {
+  def percentRank(df: DataFrame, c: String, out: String): DataFrame = {
     val counts = df.groupBy(col(c).as("__v")).agg(count(lit(1)).as("__cnt"))
-    // materialized ONCE: `ranged` feeds both the local cumsum and the
-    // partition totals; re-executing repartitionByRange re-samples its
-    // range bounds (fresh sampling seed per physical execution), which
-    // could hand the two subplans inconsistent partition ids
-    val ranged = counts.repartitionByRange(rangePartitions, col("__v"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val wIn = Window.partitionBy(col("__pid")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = ranged.withColumn("__before_local",
-      coalesce(sum(col("__cnt")).over(wIn), lit(0L)))
-    val partTotals = ranged.groupBy(col("__pid"))
-      .agg(sum(col("__cnt")).as("__ptotal"))
-    val wOff = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1) // ≤ rangePartitions rows
-    val wAll = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // the grand total rides the same tiny per-partition-totals table —
-    // no separate df.count() action (= a full extra pass over the data)
-    val offsets = partTotals
-      .withColumn("__offset", coalesce(sum(col("__ptotal")).over(wOff), lit(0L)))
-      .withColumn("__total", sum(col("__ptotal")).over(wAll))
-    val rankTable = local
-      .join(broadcast(offsets.select(col("__pid"), col("__offset"), col("__total"))), "__pid")
+    val rankTable = PrefixSum.inclusiveWithTotal(counts, Seq(col("__v")),
+        Seq("__cnt" -> "__cum"), "__total")
       .select(col("__v"),
-        ((col("__before_local") + col("__offset")) /
+        ((col("__cum") - col("__cnt")) /
           (col("__total") - lit(1L)).cast("double")).as(out))
     // no broadcast hint: the distinct-value table can be large for
     // continuous columns — AQE converts to broadcast when it is small
@@ -243,12 +218,11 @@ object Normalize {
       df: DataFrame,
       scoreCol: String,
       labelCol: String,
-      nBins: Int,
-      rangePartitions: Int = 32): DataFrame = {
+      nBins: Int): DataFrame = {
     require(nBins >= 1, s"nBins must be >= 1, got $nBins")
     val binned = percentRank(
         df.select(col(scoreCol), col(labelCol).cast("long").as("__y")),
-        scoreCol, "__pr", rangePartitions)
+        scoreCol, "__pr")
       .withColumn("bin", least(floor(col("__pr") * nBins), lit(nBins - 1))
         .cast("int"))
     binned.groupBy(col("bin"))
@@ -627,8 +601,7 @@ object Normalize {
   def quantileMatch(
       ref: DataFrame,
       src: DataFrame,
-      valueCol: String,
-      rangePartitions: Int = 32): DataFrame = {
+      valueCol: String): DataFrame = {
     // one range-partitioned pass per side carries BOTH cumulative axes
     // (occurrence mass __cum + dense distinct-value index __idx) —
     // fused via inclusiveMultiBy so the ref side does not pay a second
@@ -640,7 +613,7 @@ object Normalize {
         .groupBy(col("__vm")).agg(count(lit(1)).as("__c"))
         .withColumn("__one", lit(1L))
       PrefixSum.inclusiveMultiBy(counts, Seq(col("__vm")),
-          Seq("__c" -> "__cum", "__one" -> "__idx"), rangePartitions)
+          Seq("__c" -> "__cum", "__one" -> "__idx"))
         .drop("__one")
         .localCheckpoint() // consumed by 2-3 downstream legs
     }
@@ -670,8 +643,7 @@ object Normalize {
         col("__cum").as("__scum"))
     val merged = PrefixSum.inclusiveBy(
       refAxis.unionByName(probeAxis),
-      Seq(col("__rank").asc, col("__tag").asc), "__isref", "__below",
-      rangePartitions)
+      Seq(col("__rank").asc, col("__tag").asc), "__isref", "__below")
     val resolved = merged.filter(col("__tag") === 0L)
       .withColumn("__refidx", col("__below") + lit(1L))
       .join(refRanked.select(col("__idx").as("__refidx"),

@@ -42,14 +42,9 @@ final case class PqIndex(
       idCol: String = "vec_id",
       queryIdCol: String = "query_id",
       queryEmbCol: String = "query_embedding"): DataFrame = {
-    val qCells = queries
-      .select(col(queryIdCol),
-        col(queryEmbCol).cast("array<double>").as(queryEmbCol))
-      .crossJoin(broadcast(IvfIndex.boundedCentroids(ivf.centroids)))
-      .withColumn("__d", Similarity.euclidean(col(queryEmbCol), col("centroid")))
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col(queryIdCol)).orderBy(col("__d").asc, col("cell_id").asc)))
-      .filter(col("__r") <= nProbe)
+    val qCells = ivf.probe(queries.select(col(queryIdCol),
+        col(queryEmbCol).cast("array<double>").as(queryEmbCol)),
+      nProbe, queryIdCol, queryEmbCol)
       .select(col(queryIdCol), col("cell_id"))
     val cand = ivf.assigned.select(col(idCol), col("cell_id"))
       .join(qCells, "cell_id")
@@ -86,10 +81,7 @@ final case class PqIndex(
       .agg(parts.head, parts.tail: _*)
       .select(col("__lq").as(queryIdCol), col("vec_id"),
         (0 until m).map(j => col(s"__v$j")).reduce(_ + _).as("score"))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kResults)
+    SimilaritySearch.rankTopK(scored, kResults, queryIdCol, "vec_id")
   }
 
   /** Per-vector quantization distortion audit: the squared L2 distance

@@ -5,9 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Range-partitioned global prefix sum — the scalable replacement for a
-  * single-partition `Window.orderBy` cumulative sum (the same
-  * construction [[Normalize.percentRank]] and
-  * [[Sampling.systematicByWeight]] inline):
+  * single-partition `Window.orderBy` cumulative sum, and the one such
+  * kernel in the operator layer:
   *
   *   1. `repartitionByRange` on the order key, then `localCheckpoint`:
   *      a re-executed range exchange re-SAMPLES its bounds (fresh
@@ -17,12 +16,13 @@ import org.apache.spark.sql.functions._
   *   2. cumulative sum WITHIN each range partition via a window keyed
   *      on `spark_partition_id()` — partition-parallel;
   *   3. per-partition totals (one row per partition) → prefix offsets
-  *      via a tiny ≤`rangePartitions`-row window;
+  *      and the grand total via a tiny one-row-per-partition window;
   *   4. global inclusive cumsum = local cumsum + broadcast offset.
   *
-  * Every stage is partition-parallel; nothing materializes more than
-  * `rangePartitions` rows on a single partition. Gate/knob scale
-  * table: [[graft.ScaleProfile]].
+  * The range-partition count is the session's
+  * `spark.sql.shuffle.partitions`, so nothing materializes more than
+  * that many rows on a single partition. Gate/knob scale table:
+  * [[graft.ScaleProfile]].
   */
 object PrefixSum {
 
@@ -32,9 +32,8 @@ object PrefixSum {
       df: DataFrame,
       orderCol: String,
       valueCol: String,
-      out: String,
-      rangePartitions: Int = 32): DataFrame =
-    inclusiveBy(df, Seq(col(orderCol)), valueCol, out, rangePartitions)
+      out: String): DataFrame =
+    inclusiveBy(df, Seq(col(orderCol)), valueCol, out)
 
   /** [[inclusive]] over a composite sort key (e.g. `cnt DESC, token
     * ASC` for frequency-ranked vocabularies). The key columns together
@@ -43,9 +42,8 @@ object PrefixSum {
       df: DataFrame,
       orderBy: Seq[Column],
       valueCol: String,
-      out: String,
-      rangePartitions: Int = 32): DataFrame =
-    inclusiveMultiBy(df, orderBy, Seq(valueCol -> out), rangePartitions)
+      out: String): DataFrame =
+    inclusiveMultiBy(df, orderBy, Seq(valueCol -> out))
 
   /** Several inclusive prefix sums over the SAME total order in ONE
     * range-partitioned pass: each `(valueCol, outCol)` pair rides the
@@ -58,11 +56,23 @@ object PrefixSum {
   def inclusiveMultiBy(
       df: DataFrame,
       orderBy: Seq[Column],
+      sums: Seq[(String, String)]): DataFrame =
+    inclusiveWithTotal(df, orderBy, sums, "__ps_total").drop("__ps_total")
+
+  /** [[inclusiveMultiBy]] plus `totalOut` = the grand total of the first
+    * value column on every row, read off the broadcast offsets table
+    * (one more frame over the per-partition totals): no second
+    * aggregate and no extra Spark job. */
+  private[graft] def inclusiveWithTotal(
+      df: DataFrame,
+      orderBy: Seq[Column],
       sums: Seq[(String, String)],
-      rangePartitions: Int = 32): DataFrame = {
+      totalOut: String): DataFrame = {
     require(sums.nonEmpty, "sums must list at least one (value, out) pair")
     require(sums.map(_._2).distinct.size == sums.size,
       s"duplicate out columns in $sums")
+    val rangePartitions =
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val ranged = df.repartitionByRange(rangePartitions, orderBy: _*)
       .withColumn("__pid", spark_partition_id())
       .localCheckpoint()
@@ -75,14 +85,16 @@ object PrefixSum {
       .agg(sum(col(sums.head._1)).as(s"__pt_${sums.head._2}"),
         sums.tail.map { case (v, out) => sum(col(v)).as(s"__pt_$out") }: _*)
     val wOff = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1) // ≤ rangePartitions rows
+      .rowsBetween(Window.unboundedPreceding, -1) // one row per partition
     val offsets = sums.foldLeft(partTotals) { case (d, (_, out)) =>
       d.withColumn(s"__off_$out",
         coalesce(sum(col(s"__pt_$out")).over(wOff), lit(0L)))
     }
-    val offCols = col("__pid") +: sums.map(s => col(s"__off_${s._2}"))
-    val joined = local.join(
-      broadcast(offsets.select(offCols: _*)), "__pid")
+    val wAll = Window.orderBy(col("__pid"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val offCols = (col("__pid") +: sums.map(s => col(s"__off_${s._2}"))) :+
+      sum(col(s"__pt_${sums.head._2}")).over(wAll).as(totalOut)
+    val joined = local.join(broadcast(offsets.select(offCols: _*)), "__pid")
     val summed = sums.foldLeft(joined) { case (d, (_, out)) =>
       d.withColumn(out, col(s"__cl_$out") + col(s"__off_$out"))
     }

@@ -107,8 +107,7 @@ object RangeJoin {
     * ties so ≤ vs < is exact): total work O(n log n) with no pair
     * mass at all — the measured sf0.01→sf1 exponent drops from ~1.1
     * (pair join, intrinsic pair growth) to ~flat. */
-  def sessionConcurrencyCounts(spans: DataFrame,
-      rangePartitions: Int = 32): DataFrame = {
+  def sessionConcurrencyCounts(spans: DataFrame): DataFrame = {
     val sp = spans.localCheckpoint()
     def ranked(eventV: String, probeV: String, eventTag: Int,
         out: String): DataFrame = {
@@ -120,8 +119,7 @@ object RangeJoin {
         lit(1 - eventTag).as("__t"), lit(0L).as("__w"),
         col("user_id"), col("session_idx"))
       PrefixSum.inclusiveBy(events.unionByName(probes),
-          Seq(col("__v").asc, col("__t").asc), "__w", out,
-          rangePartitions)
+          Seq(col("__v").asc, col("__t").asc), "__w", out)
         .filter(col("__t") === (1 - eventTag))
         .select(col("user_id"), col("session_idx"), col(out))
     }

@@ -32,9 +32,8 @@ object Sampling {
     * is taken wherever the axis crosses a multiple of total/n.
     * Weights become micro-unit integers, so every comparison is exact —
     * the same sample on any engine and any partitioning (no RNG, no
-    * float rounding). Cumulative sums use the range-partitioned
-    * prefix-sum construction (cf. [[Normalize.percentRank]]) — no
-    * global single-partition window.
+    * float rounding). The cumulative axis and its total come from
+    * [[PrefixSum]] — no global single-partition window.
     *
     * Requires unique `keyCol` values and `total_micro_weight * n <
     * 2^63`. A row whose weight spans several boundaries is taken once,
@@ -45,33 +44,12 @@ object Sampling {
       df: DataFrame,
       keyCol: String,
       weightCol: String,
-      n: Int,
-      rangePartitions: Int = 32): DataFrame = {
-    val wi = df.withColumn("__wi", round(col(weightCol) * 1e6).cast("long"))
-    // materialized ONCE: `ranged` feeds two subplans, and a re-executed
-    // repartitionByRange re-SAMPLES its range bounds (fresh RDD id →
-    // fresh sampling seed), which would hand `local` and `partTotals`
-    // inconsistent partition ids — the checkpoint pins one layout
-    val ranged = wi.repartitionByRange(rangePartitions, col(keyCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val wIn = Window.partitionBy(col("__pid")).orderBy(col(keyCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = ranged.withColumn("__cum_local", sum(col("__wi")).over(wIn))
-    val partTotals = ranged.groupBy(col("__pid"))
-      .agg(sum(col("__wi")).as("__ptotal"))
-    val wOff = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1) // ≤ rangePartitions rows
-    val offsets = partTotals.withColumn("__offset",
-      coalesce(sum(col("__ptotal")).over(wOff), lit(0L)))
-    // total rides along as a broadcast scalar — no separate driver job
-    val total = partTotals.agg(sum(col("__ptotal")).as("__t"))
-    local.join(broadcast(offsets.select(col("__pid"), col("__offset"))), "__pid")
-      .crossJoin(broadcast(total))
-      .withColumn("__cum", col("__cum_local") + col("__offset"))
+      n: Int): DataFrame =
+    PrefixSum.inclusiveWithTotal(
+        df.withColumn("__wi", round(col(weightCol) * 1e6).cast("long")),
+        Seq(col(keyCol)), Seq("__wi" -> "__cum"), "__t")
       .filter(expr(s"(__cum * $n) div __t > ((__cum - __wi) * $n) div __t"))
-      .drop("__pid", "__wi", "__cum_local", "__offset", "__cum", "__t")
-  }
+      .drop("__wi", "__cum", "__t")
 
   /** Deterministic train/val/test assignment: the key's hash bucket
     * falls into one of the `splits` fractions (must sum to 1). Stable

@@ -49,6 +49,23 @@ object SimilaritySearch {
     def descending = false
   }
 
+  /** The top `k` of `scored` (`queryIdCol`, `idCol`, `score`) rows per
+    * query — score descending (ascending when `descending` is false,
+    * the [[Euclidean]] order), ties to the lowest id — with the 1-based
+    * `rank`. The one ranking window of every vector search: [[topK]],
+    * [[knnLabelConsistency]], [[AnnIndex.topK]], [[IvfIndex]] and
+    * [[PqIndex]]. */
+  private[operators] def rankTopK(
+      scored: DataFrame,
+      k: Int,
+      queryIdCol: String,
+      idCol: String,
+      descending: Boolean = true): DataFrame = {
+    val ord = if (descending) col("score").desc else col("score").asc
+    val w = Window.partitionBy(col(queryIdCol)).orderBy(ord, col(idCol).asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
   /** Brute-force exact top-K per query.
     *
     * Also the mapping for the episode graph's `find_similar_by_state`
@@ -107,10 +124,7 @@ object SimilaritySearch {
       .select(col(queryIdCol), col(idCol),
         metric.stagedScore(col(embCol), col(s"__n_$embCol"),
           col(queryEmbCol), col(s"__n_$queryEmbCol")).as("score"))
-    val ord = if (metric.descending) col("score").desc else col("score").asc
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(ord, col(idCol).asc)
-    val ranked = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val ranked = rankTopK(scored, k, queryIdCol, idCol, metric.descending)
     if (maxQueries > 0 && !allowTruncate)
       Bounds.guardCap(ranked, Bounds.census(q0), maxQueries,
         "SimilaritySearch.topK query batch")
@@ -309,18 +323,14 @@ object SimilaritySearch {
       col(labelCol),
       col(embCol).cast("array<double>").as(embCol),
       Similarity.l2(col(embCol)).as("__n"))
-    val nb = side.as("a").join(side.as("b"),
+    val nb = rankTopK(side.as("a").join(side.as("b"),
         col("a.cell_id") === col("b.cell_id") &&
         col(s"a.$idCol") =!= col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("__vid"),
         col(s"a.$labelCol").as("__own"),
         col(s"b.$idCol").as("__nid"), col(s"b.$labelCol").as("__nbl"),
-        (Similarity.dot(col(s"a.$embCol"), col(s"b.$embCol")) /
-          (col("a.__n") * col("b.__n"))).as("__cos"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__vid"))
-          .orderBy(col("__cos").desc, col("__nid").asc)))
-      .filter(col("__rn") <= k)
+        Cosine.stagedScore(col(s"a.$embCol"), col("a.__n"),
+          col(s"b.$embCol"), col("b.__n")).as("score")), k, "__vid", "__nid")
     val pred = nb
       .groupBy(col("__vid"), col("__own"), col("__nbl"))
       .agg(count(lit(1)).as("__c"))

@@ -145,13 +145,11 @@ object Training {
       docs: DataFrame,
       orderCol: String,
       tokens: Column,
-      blockTokens: Int,
-      rangePartitions: Int = 32): DataFrame = {
+      blockTokens: Int): DataFrame = {
     require(blockTokens > 0, "blockTokens must be positive")
     val staged = docs.select(col(orderCol), tokens.cast("long").as("__tok"))
       .filter(col("__tok") > 0)
-    val cum = PrefixSum.inclusive(staged, orderCol, "__tok", "__end",
-        rangePartitions)
+    val cum = PrefixSum.inclusive(staged, orderCol, "__tok", "__end")
       .withColumn("__start", col("__end") - col("__tok"))
     // `div` keeps the block math in exact integer arithmetic (a double
     // division would round above 2^53 total tokens)

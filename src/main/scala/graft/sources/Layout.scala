@@ -158,25 +158,47 @@ object Layout {
   /** Compact a parquet directory to ~`targetRowsPerFile` rows per file
     * (streaming upserts and partitioned writes accumulate small files;
     * at 1000 executors, file-open overhead dominates a scan of a
-    * million 1 MB files). Rewrites via a staging dir + swap like
-    * [[graft.streaming.Ingest.upsertBatch]].
+    * million 1 MB files). Rewrites via a staging dir + [[swapInto]],
+    * first healing a swap a crash interrupted ([[recoverSwap]]).
     */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long): Unit = {
-    val df = spark.read.parquet(path)
-    val files = math.max(1, math.ceil(df.count().toDouble / targetRowsPerFile).toInt)
     val target = new org.apache.hadoop.fs.Path(path)
     // resolve the FILESYSTEM OF THE PATH (FileSystem.get would return
     // the default FS and break s3a:// etc.)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwap(fs, target)
+    val df = spark.read.parquet(path)
+    val files = math.max(1, math.ceil(df.count().toDouble / targetRowsPerFile).toInt)
     val staging = new org.apache.hadoop.fs.Path(path + "__compacting")
     df.repartition(files).write.mode("overwrite").parquet(staging.toString)
-    // rename the old table aside before the swap so no crash window
-    // leaves NO table (delete-then-rename has exactly that window)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
+    swapInto(fs, staging, target)
+  }
+
+  /** Crash-safe directory replacement: the old table is renamed ASIDE
+    * (`target__old`) before the staging dir takes its place, so no
+    * crash window ever leaves NO table — at worst the previous state
+    * survives under `__old` and [[recoverSwap]] restores it on the next
+    * call. (A delete-then-rename swap has a window where the entire
+    * state table and its replay marker are gone; a replayed batch would
+    * then silently re-initialize state from itself alone.) Shared by
+    * [[compact]] and [[graft.streaming.Ingest]]'s state writers. */
+  private[graft] def swapInto(fs: org.apache.hadoop.fs.FileSystem,
+      staging: org.apache.hadoop.fs.Path,
+      target: org.apache.hadoop.fs.Path): Unit = {
+    val old = new org.apache.hadoop.fs.Path(target.toString + "__old")
     if (fs.exists(old)) fs.delete(old, true)
-    fs.rename(target, old)
+    if (fs.exists(target)) fs.rename(target, old)
     fs.rename(staging, target)
-    fs.delete(old, true)
+    if (fs.exists(old)) fs.delete(old, true)
+  }
+
+  /** Heal an interrupted [[swapInto]]: a crash between the two renames
+    * leaves `target` missing and `target__old` holding the last good
+    * state — put it back before reading. */
+  private[graft] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
+      target: org.apache.hadoop.fs.Path): Unit = {
+    val old = new org.apache.hadoop.fs.Path(target.toString + "__old")
+    if (!fs.exists(target) && fs.exists(old)) fs.rename(old, target)
   }
 
   /** Morton (Z-order) code of two non-negative int columns: the low

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.operators.FeatureStore
+import graft.sources.Layout
 
 /** One interaction event for the typed stateful merge (ST7). `ts` is
   * event-time epoch millis (the wire form of `clicked_at`). */
@@ -195,41 +196,15 @@ object Ingest {
     val latest = FeatureStore.latestPerKey(batch, pk, versionCol).cache()
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, target)
+    Layout.recoverSwap(fs, target)
     val merged =
       if (fs.exists(target))
         FeatureStore.mergeLatest(spark.read.parquet(path), latest, pk)
       else latest
     val staging = new org.apache.hadoop.fs.Path(path + "__staging")
     merged.write.mode("overwrite").parquet(staging.toString)
-    swapInto(fs, staging, target)
+    Layout.swapInto(fs, staging, target)
     latest.unpersist()
-  }
-
-  /** Crash-safe directory replacement: the old table is renamed ASIDE
-    * (`target__old`) before the staging dir takes its place, so no
-    * crash window ever leaves NO table — at worst the previous state
-    * survives under `__old` and [[recoverSwap]] restores it on the next
-    * call. (A delete-then-rename swap has a window where the entire
-    * state table and its replay marker are gone; a replayed batch would
-    * then silently re-initialize state from itself alone.) */
-  private def swapInto(fs: org.apache.hadoop.fs.FileSystem,
-      staging: org.apache.hadoop.fs.Path,
-      target: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(target.toString + "__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(target)) fs.rename(target, old)
-    fs.rename(staging, target)
-    if (fs.exists(old)) fs.delete(old, true)
-  }
-
-  /** Heal an interrupted [[swapInto]]: a crash between the two renames
-    * leaves `target` missing and `target__old` holding the last good
-    * state — put it back before reading. */
-  private def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(target.toString + "__old")
-    if (!fs.exists(target) && fs.exists(old)) fs.rename(old, target)
   }
 
   /** Streaming incremental-aggregate maintenance: each micro-batch is
@@ -266,7 +241,8 @@ object Ingest {
   /** Marker file recording the last applied foreachBatch id plus the
     * query scope (checkpoint path) it belongs to. It lives INSIDE the
     * state directory (underscore-prefixed — parquet readers ignore it),
-    * so the [[swapInto]] sequence commits data + marker together.
+    * so the [[graft.sources.Layout.swapInto]] sequence commits data +
+    * marker together.
     *
     * The scope line exists because bare batch ids are only monotonic
     * within one checkpoint lineage: a stream restarted against a FRESH
@@ -337,7 +313,7 @@ object Ingest {
     val spark = delta.sparkSession
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, target)
+    Layout.recoverSwap(fs, target)
     val existing =
       if (fs.exists(target)) readMarker(fs, target) else None
     if (batchId != Long.MinValue &&
@@ -354,7 +330,7 @@ object Ingest {
       // batch-mode rewrite keeps the stream's replay protection intact
       writeMarker(fs, staging, id, sc)
     }
-    swapInto(fs, staging, target)
+    Layout.swapInto(fs, staging, target)
   }
 
   /** First/last-touch state maintenance for one micro-batch —

@@ -9,37 +9,59 @@ import graft.operators.{AnnIndex, Corpus, PrefixSum, Sampling, Training}
 class CorpusPackingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
+  /** PrefixSum takes its range-partition count from the session's
+    * shuffle-partition setting; run `body` at `n` partitions. */
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   test("PrefixSum.inclusive equals the sequential cumsum on random data") {
-    val rnd = new scala.util.Random(3)
-    // non-contiguous, shuffled keys across many partitions
-    val rows = rnd.shuffle((1 to 500).map(i => (i * 7L + 3, rnd.nextInt(100).toLong)))
-    val df = spark.createDataFrame(rows).toDF("k", "v").repartition(13)
-    val got = PrefixSum.inclusive(df, "k", "v", "cum", rangePartitions = 8)
-      .select("k", "cum").as[(Long, Long)].collect().toMap
-    var acc = 0L
-    rows.sortBy(_._1).foreach { case (k, v) =>
-      acc += v
-      assert(got(k) === acc, s"key $k")
+    withShufflePartitions(8) {
+      val rnd = new scala.util.Random(3)
+      // non-contiguous, shuffled keys across many partitions
+      val rows = rnd.shuffle((1 to 500).map(i => (i * 7L + 3, rnd.nextInt(100).toLong)))
+      val df = spark.createDataFrame(rows).toDF("k", "v").repartition(13)
+      val got = PrefixSum.inclusive(df, "k", "v", "cum")
+        .select("k", "cum").as[(Long, Long)].collect().toMap
+      var acc = 0L
+      rows.sortBy(_._1).foreach { case (k, v) =>
+        acc += v
+        assert(got(k) === acc, s"key $k")
+      }
+    }
+  }
+
+  test("PrefixSum grand total equals the sum of the values") {
+    withShufflePartitions(8) {
+      val rnd = new scala.util.Random(4)
+      val rows = rnd.shuffle((1 to 300).map(i => (i * 3L, rnd.nextInt(1000).toLong)))
+      val df = spark.createDataFrame(rows).toDF("k", "v").repartition(9)
+      val got = PrefixSum.inclusiveWithTotal(df, Seq(col("k")), Seq("v" -> "cum"), "tot")
+        .select("tot").as[Long].collect()
+      assert(got.length === rows.size)
+      assert(got.toSet === Set(rows.map(_._2).sum))
     }
   }
 
   test("PrefixSum.inclusiveMultiBy: each fused axis equals its own inclusiveBy") {
-    val rnd = new scala.util.Random(7)
-    val rows = rnd.shuffle((1 to 400).map(i =>
-      (i * 5L + 1, rnd.nextInt(50).toLong, rnd.nextInt(9).toLong)))
-    val df = spark.createDataFrame(rows).toDF("k", "v", "w").repartition(11)
-    val fused = PrefixSum.inclusiveMultiBy(df, Seq(col("k")),
-        Seq("v" -> "cv", "w" -> "cw"), rangePartitions = 8)
-      .select("k", "cv", "cw").as[(Long, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    val cv = PrefixSum.inclusiveBy(df, Seq(col("k")), "v", "cv",
-        rangePartitions = 8)
-      .select("k", "cv").as[(Long, Long)].collect().toMap
-    val cw = PrefixSum.inclusiveBy(df, Seq(col("k")), "w", "cw",
-        rangePartitions = 8)
-      .select("k", "cw").as[(Long, Long)].collect().toMap
-    rows.foreach { case (k, _, _) =>
-      assert(fused(k) === ((cv(k), cw(k))), s"key $k")
+    withShufflePartitions(8) {
+      val rnd = new scala.util.Random(7)
+      val rows = rnd.shuffle((1 to 400).map(i =>
+        (i * 5L + 1, rnd.nextInt(50).toLong, rnd.nextInt(9).toLong)))
+      val df = spark.createDataFrame(rows).toDF("k", "v", "w").repartition(11)
+      val fused = PrefixSum.inclusiveMultiBy(df, Seq(col("k")),
+          Seq("v" -> "cv", "w" -> "cw"))
+        .select("k", "cv", "cw").as[(Long, Long, Long)].collect()
+        .map(r => r._1 -> (r._2, r._3)).toMap
+      val cv = PrefixSum.inclusiveBy(df, Seq(col("k")), "v", "cv")
+        .select("k", "cv").as[(Long, Long)].collect().toMap
+      val cw = PrefixSum.inclusiveBy(df, Seq(col("k")), "w", "cw")
+        .select("k", "cw").as[(Long, Long)].collect().toMap
+      rows.foreach { case (k, _, _) =>
+        assert(fused(k) === ((cv(k), cw(k))), s"key $k")
+      }
     }
   }
 

@@ -76,4 +76,23 @@ class RpnSpec extends AnyFunSuite with SparkSuite {
     assert(out.count() === li.count())
     assert(out.filter($"pr".isNull).count() === 0)
   }
+
+  test("percentRank over nulls and ties equals a brute-force count") {
+    // pinned semantics: a null counts toward n and sorts first (smaller
+    // than every value); a null row itself ranks null
+    val rnd = new scala.util.Random(11)
+    val xs: Seq[Option[Int]] = (1 to 300).map(_ =>
+      if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(40)))
+    val in = xs.zipWithIndex.map { case (x, i) => (i.toLong, x) }
+      .toDF("id", "x").repartition(7)
+    val got = Normalize.percentRank(in, "x", "pr")
+      .select("id", "pr").as[(Long, Option[Double])].collect().toMap
+    assert(got.size === xs.size)
+    val nulls = xs.count(_.isEmpty)
+    xs.zipWithIndex.foreach { case (x, i) =>
+      val want = x.map(v =>
+        (nulls + xs.flatten.count(_ < v)).toDouble / (xs.size - 1))
+      assert(got(i.toLong) === want, s"row $i (x = $x)")
+    }
+  }
 }

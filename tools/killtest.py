@@ -9,21 +9,21 @@ mutated tree, and asserts the gate reads RED. A mutation that survives
 GREEN is a gate bug: the finding is recorded and the GATE gets fixed
 (never the harness weakened).
 
-Usage: python3 tools/killtest.py [mutation-name ...]
-       python3 tools/killtest.py --sample N [--round R]
+Usage: python3 tools/killtest.py [--round R] [mutation-name ...]
+       python3 tools/killtest.py --sample N --round R
 
 `--sample N` runs a deterministic ROTATION of N mutations chosen by
-round number (window start = R*N mod len(MUTATIONS), so consecutive
-rounds sweep the whole corpus with no repeats until wraparound) — the
-cheap per-round cadence that keeps the full corpus from rotting
-between full runs (r14 verdict item 3). R defaults to $KILLTEST_ROUND
-or the round encoded in the artifact name.
+round number R, which it requires (window start = R*N mod
+len(MUTATIONS), so consecutive rounds sweep the whole corpus with no
+repeats until wraparound) — the cheap per-round cadence that keeps the
+full corpus from rotting between full runs.
 
-Writes KILLTEST_r{N}.json (override: $KILLTEST_ART; one entry per
-mutation: expectation, observed gate color, per-query detail).
-Filtered and sampled runs MERGE into the artifact — seeded from the
-newest prior round's artifact when this round's doesn't exist yet —
-so a partial run never shrinks the recorded corpus. Dev tooling only —
+Writes history/KILLTEST_r{R}.json, or history/KILLTEST.json without
+`--round` (override: $KILLTEST_ART; one entry per mutation:
+expectation, observed gate color, per-query detail). Filtered and
+sampled runs MERGE into the artifact — seeded from the newest
+history/KILLTEST_r*.json when the artifact doesn't exist yet — so a
+partial run never shrinks the recorded corpus. Dev tooling only —
 the Scala library never depends on this. Refuses to start unless every
 mutation target file matches git HEAD, restores every mutated file
 afterwards, and checks with `git diff` that they match HEAD again, so a
@@ -547,16 +547,16 @@ MUTATIONS = [
     },
     # ---- batch 4: the families NOTES listed as sharing kernels ----
     {
-        # (ae) ANN probe-config class: the shared search probe (search
-        # and searchInt8) consumes one cell fewer than configured
-        # (nProbe-1). The oracle's SQL mirrors the 2-cell probe
-        # structurally, so candidates from the second-closest cell
-        # vanish from the engine's top-k only.
+        # (ae) ANN probe-config class: the shared search probe (search,
+        # searchInt8 and PqIndex.searchDotIvf) consumes one cell fewer
+        # than configured (nProbe-1). The oracle's SQL mirrors the
+        # 2-cell probe structurally, so candidates from the
+        # second-closest cell vanish from the engine's top-k only.
         "name": "ivf_nprobe_consume",
         "file": "src/main/scala/graft/operators/AnnIndex.scala",
         "old": '    IvfIndex.nearestCells(staged, centroids, queryIdCol, queryEmbCol, nProbe)\n',
         "new": '    IvfIndex.nearestCells(staged, centroids, queryIdCol, queryEmbCol, nProbe - 1)\n',
-        "queries": ["q48_ann_ivf_int8"],
+        "queries": ["q48_ann_ivf_int8", "q59_ann_ivf_pq"],
         "expect": "red",
         "mechanism": "second-cell candidates drop out of the engine's "
                      "re-rank -> top-10 rows differ wherever the oracle's "
@@ -672,15 +672,18 @@ MUTATIONS = [
         # (am) distributed-prefix-sum class: the cross-partition offset
         # window includes the CURRENT partition's total (-1 -> 0) —
         # every row's cumulative sum double-counts its own partition.
+        # PrefixSum is the one prefix-sum kernel, so packSequences and
+        # percentRank both go red.
         "name": "prefix_sum_offset",
         "file": "src/main/scala/graft/operators/PrefixSum.scala",
-        "old": "      .rowsBetween(Window.unboundedPreceding, -1) // ≤ rangePartitions rows",
-        "new": "      .rowsBetween(Window.unboundedPreceding, 0) // ≤ rangePartitions rows",
-        "queries": ["q63_pack_sequences"],
+        "old": "      .rowsBetween(Window.unboundedPreceding, -1) // one row per partition",
+        "new": "      .rowsBetween(Window.unboundedPreceding, 0) // one row per partition",
+        "queries": ["q63_pack_sequences", "q13_percentile_rank"],
         "expect": "red",
         "mechanism": "offsets include the own-partition total -> token "
                      "intervals shift by a partition's worth, blocks "
-                     "misassign corpus-wide",
+                     "misassign corpus-wide; percent ranks past the "
+                     "first range partition inflate",
     },
     {
         # (ad) set-semantics class: decontamination's benchmark gram
@@ -845,41 +848,23 @@ def gate_color(queries, tag):
     return color, {"compare": lines, "verify_errors": verify_errs}
 
 
-def _derive_round():
-    """Round number for the sample-window rotation. When KILLTEST_ROUND
-    is unset, derive it from the newest driver-committed bench artifact
-    (BENCH_r{N}.json exists for every COMPLETED round and is only ever
-    written at round end, so max(N)+1 is the current round and stays
-    stable for the whole round — KILLTEST_r*.json itself is written
-    mid-round by this tool and would self-advance). A hard default only
-    fires on a checkout with no artifacts; the old in-code constant had
-    to be bumped by hand every round and a forgotten bump silently
-    froze the rotation window (r16 ADVICE)."""
-    env = os.environ.get("KILLTEST_ROUND")
-    if env is not None:
-        return int(env)
+HISTORY = os.path.join(REPO, "history")
+
+
+def artifact_path(rnd):
+    """$KILLTEST_ART, else the round's artifact under history/."""
+    name = f"KILLTEST_r{rnd}.json" if rnd is not None else "KILLTEST.json"
+    return os.environ.get("KILLTEST_ART", os.path.join(HISTORY, name))
+
+
+def seed_artifact(art_path):
+    """The artifact to merge a partial run into: `art_path` if it
+    exists, else the newest round's under history/ (carries the full
+    corpus forward across rounds)."""
+    if os.path.exists(art_path):
+        return art_path
     import glob
-    import re
-    ns = [int(m.group(1))
-          for p in glob.glob(os.path.join(REPO, "BENCH_r*.json"))
-          for m in [re.match(r"BENCH_r(\d+)\.json$", os.path.basename(p))]
-          if m]
-    return (max(ns) + 1) if ns else 17
-
-
-ROUND = _derive_round()
-ART_PATH = os.environ.get(
-    "KILLTEST_ART", os.path.join(REPO, f"KILLTEST_r{ROUND}.json"))
-
-
-def seed_artifact():
-    """The artifact to merge a partial run into: this round's if it
-    exists, else the newest prior round's (carries the full corpus
-    forward across round boundaries)."""
-    if os.path.exists(ART_PATH):
-        return ART_PATH
-    import glob
-    prior = sorted(glob.glob(os.path.join(REPO, "KILLTEST_r*.json")),
+    prior = sorted(glob.glob(os.path.join(HISTORY, "KILLTEST_r*.json")),
                    key=lambda p: int("".join(filter(str.isdigit,
                                                     os.path.basename(p)))))
     return prior[-1] if prior else None
@@ -888,7 +873,7 @@ def seed_artifact():
 def main():
     args = sys.argv[1:]
     sample = None
-    rnd = ROUND
+    rnd = None
     rest = []
     it = iter(args)
     for a in it:
@@ -899,6 +884,9 @@ def main():
         else:
             rest.append(a)
     only = set(rest)
+    if sample and rnd is None:
+        sys.exit("--sample needs --round R (the rotation window's round)")
+    art_path = artifact_path(rnd)
     if sample:
         # deterministic rotation: round R takes the window starting at
         # R*N mod |MUTATIONS|, so consecutive rounds sweep the corpus
@@ -958,7 +946,7 @@ def main():
     # every mutated file must be back at HEAD
     assert not differs_from_head(originals), "restore failed: " + \
         run(["git", "diff", "--stat", "HEAD", "--"] + sorted(originals)).stdout
-    seed = seed_artifact()
+    seed = seed_artifact(art_path)
     if only and seed:
         # filtered/sampled run: MERGE into the existing artifact
         # (replace re-run mutations by name, keep the rest; seeded
@@ -973,10 +961,10 @@ def main():
                          key=lambda r: order.get(r["mutation"], 99))
     ok = all(r.get("ok") for r in results)
     art = {"sf": SF, "all_expected": ok, "mutations": results}
-    with open(ART_PATH, "w") as f:
+    with open(art_path, "w") as f:
         json.dump(art, f, indent=1)
     print(f"== {'ALL EXPECTED' if ok else 'UNEXPECTED RESULTS'} "
-          f"-> {os.path.basename(ART_PATH)}")
+          f"-> {os.path.basename(art_path)}")
     sys.exit(0 if ok else 1)
 
 
