@@ -55,7 +55,7 @@ object SparkEntry {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, SparkSession]())
 
-  private def streamSession(s: SparkSession): SparkSession =
+  private[graft] def streamSession(s: SparkSession): SparkSession =
     // ONE clone per parent session, cached (r18, verdict item 8):
     // every clone that starts a stream lazily attaches a
     // StreamingQueryListenerBus to the shared SparkContext
@@ -3569,18 +3569,21 @@ object SparkEntry {
       // happen in this chain — streamingContinuations carries no
       // event-time column, no watermark, no timeout, so no late
       // filter exists to discard anything; every episode row is
-      // final-on-emission by streamingEpisodes' contract. Scoped to
-      // this gate's session clone (streamSession), never the shared
-      // session.
-      raw.sparkSession.conf.set(
-        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
-        "false")
-      val eps = Ingest.streamingEpisodes(raw, threshold = 0.38,
-        maxPending = 1 << 16)
-      runStreamTo(Ingest.streamingContinuations(eps, maxGap = 500L)
-          .toDF(), base)
-        .select(col("key"), col("src"), col("dst"), col("link_type"),
-          col("strength"))
+      // final-on-emission by streamingEpisodes' contract. Set on the
+      // stream session clone (streamSession) for this gate's run only,
+      // then restored, so the other stream gates keep the check.
+      val check = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+      val conf = raw.sparkSession.conf
+      val prev = conf.getAll.get(check) // explicitly set values only
+      conf.set(check, "false")
+      try {
+        val eps = Ingest.streamingEpisodes(raw, threshold = 0.38,
+          maxPending = 1 << 16)
+        runStreamTo(Ingest.streamingContinuations(eps, maxGap = 500L)
+            .toDF(), base)
+          .select(col("key"), col("src"), col("dst"), col("link_type"),
+            col("strength"))
+      } finally prev.fold(conf.unset(check))(conf.set(check, _))
     }),
 
     // ---- retrieval boost scoring + causal narrative

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
+import graft.functions.VectorKernels
+
 /** Native codegen'd embedding kernels (SURVEY A6/J6).
   *
   * The HOF form (`aggregate(zip_with(a, b, _*_), 0d, _+_)`) is
@@ -75,8 +77,9 @@ case class DotProduct(left: Expression, right: Expression) extends VectorFoldBas
 
 /** Σ qaᵢ·qbᵢ over int8 codes — the integer kernel of quantized
   * similarity search ([[graft.functions.Similarity.int8Codes]]): 4×
-  * less IO than fp32 embeddings, exact long accumulation (max
-  * |dot| ≤ dim·127² — no overflow until dim ≈ 5.7e14). */
+  * less IO than fp32 embeddings. Interpreted and generated code both
+  * accumulate in [[VectorKernels.dotInt8]] (the IVF driver tier's
+  * kernel too); a length mismatch or a null element is null here. */
 case class DotProductInt8(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[ArrayType] =
@@ -91,32 +94,24 @@ case class DotProductInt8(left: Expression, right: Expression)
     val n = a.numElements()
     if (n != b.numElements()) return null
     var i = 0
-    var s = 0L
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      s += a.getByte(i).toLong * b.getByte(i)
       i += 1
     }
-    s
+    VectorKernels.dotInt8(a, b)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
       s"""
          |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $s = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $s += (long) $a.getByte($i) * $b.getByte($i);
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $s;
+         |${ev.isNull} = $n != $b.numElements();
+         |for (int $i = 0; !${ev.isNull} && $i < $n; $i++) {
+         |  ${ev.isNull} = $a.isNullAt($i) || $b.isNullAt($i);
          |}
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.VectorKernels.dotInt8($a, $b);
        """.stripMargin
     })
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductInt8 =

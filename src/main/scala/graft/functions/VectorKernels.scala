@@ -19,4 +19,16 @@ object VectorKernels {
     }
     new GenericArrayData(out)
   }
+
+  /** Σ aᵢ·bᵢ over int8 codes in ascending index order, exact long
+    * accumulation (max |dot| ≤ dim·127², no overflow until dim ≈ 5.7e14).
+    * The caller guarantees equal lengths and no null element — the
+    * [[graft.expr.DotProductInt8]] expression turns either into null. */
+  def dotInt8(a: ArrayData, b: ArrayData): Long = {
+    val n = a.numElements()
+    var s = 0L
+    var i = 0
+    while (i < n) { s += a.getByte(i).toLong * b.getByte(i); i += 1 }
+    s
+  }
 }

@@ -265,7 +265,25 @@ final case class IvfIndex(
     * scan × 4×-smaller vector payload). Deterministic end to end, so
     * it carries a full SQL oracle (q48). Uses codes materialized by
     * [[materializeInt8]] when the assigned table carries them (the
-    * stored-index fast path); otherwise derives them inline. */
+    * stored-index fast path); otherwise derives them inline.
+    *
+    * == Driver tier ==
+    * A top-k over local queries against a small stored index is
+    * answered on the driver by [[IvfTier]], from one snapshot of the
+    * centroids and per-cell (id, scale, code) rows held in a
+    * [[SnapshotCache]] (built by the first such call, reused until the
+    * index files change): no Spark job, and the same rows, scores
+    * (bit for bit), ranks and output attributes as the scan path.
+    * Eligibility (anything else takes the scan path):
+    *  - the queries' optimized plan is a non-streaming `LocalRelation`
+    *    whose ids are non-null, distinct and integral, string, date or
+    *    timestamp, and whose embeddings are non-null;
+    *  - `assigned` carries the stored [[IvfIndex.Int8CodeCol]] /
+    *    [[IvfIndex.Int8ScaleCol]] columns;
+    *  - the projected corpus (id, `cell_id`, scale, code) and the
+    *    centroids are deterministic, subquery-free file or local scans,
+    *    each estimated at most `spark.sql.autoBroadcastJoinThreshold`.
+    */
   def searchInt8(
       queries: DataFrame,
       k: Int,
@@ -274,16 +292,16 @@ final case class IvfIndex(
       embCol: String = "embedding",
       queryIdCol: String = "query_id",
       queryEmbCol: String = "query_embedding"): DataFrame = {
-    val qCells = probe(queries
+    val staged = queries
       .select(col(queryIdCol),
         col(queryEmbCol).cast("array<double>").as(queryEmbCol),
         Similarity.int8Scale(col(queryEmbCol)).as("__qs"))
       .select(col(queryIdCol), col(queryEmbCol), col("__qs"),
-        Similarity.int8Codes(col(queryEmbCol), col("__qs")).as("__qc")),
-      nProbe, queryIdCol, queryEmbCol)
+        Similarity.int8Codes(col(queryEmbCol), col("__qs")).as("__qc"))
+    val stored = assigned.columns.contains(IvfIndex.Int8CodeCol) &&
+      assigned.columns.contains(IvfIndex.Int8ScaleCol)
     val corp =
-      if (assigned.columns.contains(IvfIndex.Int8CodeCol) &&
-          assigned.columns.contains(IvfIndex.Int8ScaleCol))
+      if (stored)
         // stored codes: the scan never touches the embedding column
         assigned.select(col(idCol), col("cell_id"),
           col(IvfIndex.Int8ScaleCol).as("__s"),
@@ -294,10 +312,14 @@ final case class IvfIndex(
           col(embCol).cast("array<double>").as(embCol))
         .select(col(idCol), col("cell_id"), col("__s"),
           Similarity.int8Codes(col(embCol), col("__s")).as("__c"))
-    SimilaritySearch.rankTopK(corp.join(qCells, "cell_id")
-      .select(col(queryIdCol), col(idCol),
-        (Similarity.dotInt8(col("__c"), col("__qc")) * col("__s") * col("__qs"))
-          .as("score")), k, queryIdCol, idCol)
+    (if (stored) IvfTier.searchInt8(staged, corp, centroids, k, nProbe) else None)
+      .getOrElse {
+        val qCells = probe(staged, nProbe, queryIdCol, queryEmbCol)
+        SimilaritySearch.rankTopK(corp.join(qCells, "cell_id")
+          .select(col(queryIdCol), col(idCol),
+            (Similarity.dotInt8(col("__c"), col("__qc")) * col("__s") * col("__qs"))
+              .as("score")), k, queryIdCol, idCol)
+      }
   }
 }
 
@@ -319,7 +341,7 @@ object IvfIndex {
     * rather than construction because `localCheckpoint` (the k-means
     * loop) erases upstream plan nodes, and loaded indexes come off a
     * bare parquet scan. */
-  private def boundedCentroids(centroids: DataFrame): DataFrame =
+  private[operators] def boundedCentroids(centroids: DataFrame): DataFrame =
     centroids.orderBy(col("cell_id")).limit(MaxCells)
 
   /** The `n` nearest cells of every row: rows × broadcast(bounded

@@ -23,11 +23,13 @@ import graft.core.FeatureGroupDef
   *    data and estimated at most `spark.sql.autoBroadcastJoinThreshold`,
   *    with key columns of one integral, string, date or timestamp type
   *    on both sides, is answered on the driver from a hash index of that
-  *    table. The index is built once per table snapshot — keyed by the
-  *    table's canonicalized optimized plan plus its input-file set, so a
-  *    rewrite (an `Ingest.upsertBatch` swap, a refreshed file index)
-  *    gives a new key and a stale snapshot is never served — and the
-  *    last [[LookupTier.MaxSnapshots]] snapshots stay cached. The answer
+  *    table. The index is built once per table snapshot and held in a
+  *    [[SnapshotCache]] (the mechanism the int8 IVF tier, [[IvfTier]],
+  *    uses too) — keyed by the table's canonicalized optimized plan
+  *    plus its input-file set, so a rewrite (an `Ingest.upsertBatch`
+  *    swap, a refreshed file index) gives a new key and a stale snapshot
+  *    is never served — and the last [[LookupTier.MaxSnapshots]]
+  *    snapshots stay cached. The answer
   *    is a `LocalRelation`: the feature projection folds into it and
   *    collecting it runs no Spark job. [[stitch]] over parts that are
   *    all local data joins them on the driver the same way.

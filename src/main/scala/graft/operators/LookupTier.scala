@@ -1,15 +1,12 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicLong
-
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types._
 
@@ -39,35 +36,25 @@ import org.apache.spark.sql.types._
   *    estimated size is at most `spark.sql.autoBroadcastJoinThreshold`
   *    — the bound Spark already trusts to hold a table in memory.
   *
-  * The index of one table snapshot is keyed by the canonicalized
-  * optimized plan plus its input-file set, so a rewrite (an
-  * `Ingest.upsertBatch` swap, a re-saved bucketed table) yields a new
-  * key and a stale snapshot is never served. At most [[MaxSnapshots]]
-  * indexes are held, least recently used evicted first; concurrent
-  * callers of one snapshot wait for a single build.
+  * The index of one table snapshot lives in a [[SnapshotCache]] (keyed
+  * by the canonicalized optimized plan plus its input-file set, so a
+  * rewrite — an `Ingest.upsertBatch` swap, a re-saved bucketed table —
+  * is never served stale). At most [[MaxSnapshots]] indexes are held,
+  * least recently used evicted first; concurrent callers of one
+  * snapshot wait for a single build.
   */
 private[graft] object LookupTier {
 
-  val MaxSnapshots = 8
-
-  private final case class Snapshot(plan: LogicalPlan, files: Set[String])
+  val MaxSnapshots: Int = SnapshotCache.MaxEntries
 
   /** One snapshot's index: non-null key → its table rows. */
-  private final class Slot(build: () => Map[Any, Seq[InternalRow]]) {
-    lazy val index: Map[Any, Seq[InternalRow]] = { builds.incrementAndGet(); build() }
-  }
-
-  private val slots = new java.util.LinkedHashMap[Snapshot, Slot](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[Snapshot, Slot]): Boolean =
-      size() > MaxSnapshots
-  }
-  private val builds = new AtomicLong
+  private val cache = new SnapshotCache[Map[Any, Seq[InternalRow]]](MaxSnapshots)
 
   /** Indexes built so far (tests observe reuse and eviction with it). */
-  def indexBuilds: Long = builds.get()
+  def indexBuilds: Long = cache.builds
 
   /** Snapshots currently indexed. */
-  def cachedSnapshots: Int = slots.synchronized(slots.size())
+  def cachedSnapshots: Int = cache.size
 
   /** `keys ⋈left features-of(dedup(keys))`, projected by `resolve`, for
     * a local key set against an eligible `table` (pk + feature columns);
@@ -77,16 +64,14 @@ private[graft] object LookupTier {
   def retrieve(keys: DataFrame, table: DataFrame, pk: Seq[String],
       resolve: DataFrame => DataFrame): Option[DataFrame] = {
     val spark = keys.sparkSession
-    val conf = PlanBridge.conf(spark)
     for {
-      kr <- localRelation(keys)
+      kr <- SnapshotCache.localRelation(keys)
       tablePlan = table.queryExecution.optimizedPlan
       keyAttrs <- attrs(kr.output, pk)
       tableKeyAttrs <- attrs(tablePlan.output, pk)
       if keyAttrs.map(_.dataType) == tableKeyAttrs.map(_.dataType) &&
         keyAttrs.forall(a => keyType(a.dataType)) &&
-        scansOnlyFilesOrLocalData(tablePlan) &&
-        tablePlan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold
+        SnapshotCache.fitsDriver(table)
     } yield {
       val index = snapshotIndex(table, tablePlan, tableKeyAttrs)
       // dedup(keys): a null key matches nothing in the final join, so it
@@ -106,7 +91,7 @@ private[graft] object LookupTier {
   /** `parts` joined left-to-right on `pk` as `FeatureStore.stitch` does,
     * when every part is local data with matching eligible key types. */
   def stitch(pk: Seq[String], parts: Seq[DataFrame]): Option[DataFrame] = {
-    val locals = parts.flatMap(localRelation)
+    val locals = parts.flatMap(SnapshotCache.localRelation)
     val keyTypes = locals.map(r => attrs(r.output, pk).map(_.map(_.dataType)))
     Option.when(parts.nonEmpty && locals.size == parts.size &&
         keyTypes.forall(_ == keyTypes.head) && keyTypes.head.exists(_.forall(keyType))) {
@@ -152,20 +137,10 @@ private[graft] object LookupTier {
     new GenericInternalRow(out)
   }
 
-  /** `df`'s optimized plan when it is local data. Plans that read
-    * anything but local data are turned away before optimization, so
-    * the check costs the scan path nothing. */
-  private def localRelation(df: DataFrame): Option[LocalRelation] =
-    if (!df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
-    else df.queryExecution.optimizedPlan match {
-      case r: LocalRelation if !r.isStreaming => Some(r)
-      case _ => None
-    }
-
   /** `df` as local data: its folded plan when Catalyst folded it (every
     * expression evaluable), else its collected rows. */
   private def toLocal(df: DataFrame): LocalRelation =
-    localRelation(df).getOrElse(
+    SnapshotCache.localRelation(df).getOrElse(
       LocalRelation(df.queryExecution.analyzed.output, PlanBridge.collectInternal(df).toSeq))
 
   /** The attributes `names` resolve to in `output` (session resolver);
@@ -177,7 +152,9 @@ private[graft] object LookupTier {
     Option.when(found.forall(_.size == 1))(found.map(_.head))
   }
 
-  private def keyType(t: DataType): Boolean = t match {
+  /** Types whose Catalyst value equality is Spark's join and grouping
+    * equality. */
+  private[operators] def keyType(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType |
         TimestampNTZType => true
     case s: StringType => s == StringType
@@ -197,28 +174,10 @@ private[graft] object LookupTier {
       else ArraySeq.unsafeWrapArray(Array.tabulate[Any](ords.length)(i => r.get(ords(i), types(i))))
   }
 
-  private def scansOnlyFilesOrLocalData(plan: LogicalPlan): Boolean =
-    !plan.isStreaming && plan.deterministic &&
-      !plan.exists(_.expressions.exists(SubqueryExpression.hasSubquery)) &&
-      plan.collectLeaves().forall {
-        case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
-        case _: LocalRelation => true
-        case _ => false
-      }
-
   private def snapshotIndex(table: DataFrame, plan: LogicalPlan,
-      key: Seq[Attribute]): Map[Any, Seq[InternalRow]] = {
-    val snapshot = Snapshot(plan.canonicalized, table.inputFiles.toSet)
-    val slot = slots.synchronized {
-      Option(slots.get(snapshot)).getOrElse {
-        val s = new Slot(() => {
-          val keyOf = keyFn(plan.output, key)
-          PlanBridge.collectInternal(table).toSeq.groupBy(keyOf) - null
-        })
-        slots.put(snapshot, s)
-        s
-      }
+      key: Seq[Attribute]): Map[Any, Seq[InternalRow]] =
+    cache.get(SnapshotCache.key(table), plan.stats.sizeInBytes) {
+      val keyOf = keyFn(plan.output, key)
+      PlanBridge.collectInternal(table).toSeq.groupBy(keyOf) - null
     }
-    slot.index
-  }
 }

@@ -954,6 +954,20 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
       "true")
   }
 
+  test("q294 restores the stream session clone's correctness-check setting") {
+    val check = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    val conf = SparkEntry.streamSession(spark).conf
+    val q294 = SparkEntry.queries("q294_stream_episode_links")
+    try {
+      conf.unset(check)
+      q294(spark, sf).count()
+      assert(conf.getAll.get(check) === None, "an unset setting stays unset")
+      conf.set(check, "true")
+      q294(spark, sf).count()
+      assert(conf.getOption(check) === Some("true"), "a set value is restored")
+    } finally conf.unset(check)
+  }
+
   test("readability scores a hand-computed fixture") {
     val docs = Seq((1L, "The cat sat. It ran!"),
       (2L, "no punctuation here")).toDF("doc_id", "text")

@@ -296,6 +296,42 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     assert(probeAll === brute)
   }
 
+  test("int8 dot: generated code, interpreted eval and the kernel agree") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, ByteType}
+    val t = ArrayType(ByteType, containsNull = true)
+    val dot = graft.expr.DotProductInt8(BoundReference(0, t, nullable = true),
+      BoundReference(1, t, nullable = true))
+    val generated = GenerateMutableProjection.generate(Seq(dot))
+    def evalBoth(a: ArrayData, b: ArrayData): (Any, Any) = {
+      val row = InternalRow(a, b)
+      val g = generated(row)
+      (dot.eval(row), if (g.isNullAt(0)) null else g.getLong(0))
+    }
+    val rnd = new scala.util.Random(7)
+    val extremes = Seq(Array.fill(64)(127.toByte) -> Array.fill(64)(127.toByte),
+      Array.fill(64)(-127.toByte) -> Array.fill(64)(127.toByte),
+      Array.fill(64)(-127.toByte) -> Array.fill(64)(-127.toByte))
+    val random = Seq(0, 1, 7, 64, 513).map { n =>
+      def codes = Array.fill(n)((rnd.nextInt(255) - 127).toByte)
+      codes -> codes
+    }
+    for ((a, b) <- extremes ++ random) {
+      val expected = a.zip(b).map { case (x, y) => x.toLong * y }.sum
+      val (ua, ub) = (UnsafeArrayData.fromPrimitiveArray(a), UnsafeArrayData.fromPrimitiveArray(b))
+      assert(graft.functions.VectorKernels.dotInt8(ua, ub) === expected)
+      assert(evalBoth(ua, ub) === ((expected, expected)))
+      assert(evalBoth(new GenericArrayData(a), new GenericArrayData(b)) === ((expected, expected)))
+    }
+    // a dimension mismatch and a null element are null on both paths
+    val two = UnsafeArrayData.fromPrimitiveArray(Array[Byte](1, 2))
+    assert(evalBoth(two, UnsafeArrayData.fromPrimitiveArray(Array[Byte](1, 2, 3))) === ((null, null)))
+    assert(evalBoth(two, new GenericArrayData(Array[Any](3.toByte, null))) === ((null, null)))
+  }
+
   test("PQ: m codes per vector, ADC top-K overlaps exact dot top-K") {
     import graft.operators.PqIndex
     val emb = Tables.embeddings(spark, sf)
