@@ -46,9 +46,8 @@ object GraftSession {
     *  - `execution.window` — every unpartitioned window in the repo
     *    is the documented bounded two-phase pattern (a window over at
     *    most `spark.sql.shuffle.partitions` per-partition-total rows —
-    *    PrefixSum scaladoc; same shape in the post-limit Corpus
-    *    sites), so the single-partition warning is a false alarm by
-    *    construction;
+    *    PrefixSum scaladoc), so the single-partition warning is a
+    *    false alarm by construction;
     *  - `streaming.runtime` (MicroBatchExecution,
     *    ResolveWriteToStream live here in Spark 4.1) — the fixed
     *    "AQE is not supported in stateful workloads" notices, emitted

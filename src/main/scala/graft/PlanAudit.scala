@@ -261,10 +261,11 @@ object PlanAudit {
     * works). A `!bnlj` allowance is NEVER minted — a query that
     * regressed into an unbounded BNLJ must stay flagged rather than
     * self-approve — and an existing one ratchets down to the observed
-    * count, disappearing with the shape. Entries of queries not
-    * audited this run carry over unchanged. */
+    * count, disappearing with the shape. Entries of `live` queries not
+    * audited this run carry over unchanged; entries (and `!bnlj`
+    * allowances) of queries no longer in `live` are dropped. */
   def mergeBaseline(baseline: Map[String, Int],
-      shapes: Map[String, Shape]): Map[String, Int] = {
+      shapes: Map[String, Shape], live: Set[String]): Map[String, Int] = {
     val fresh = shapes.toSeq.flatMap { case (n, s) =>
       Seq(n -> s.shuffles) ++ (baseline.get(s"$n!bnlj") match {
         case Some(prior) if s.unboundedBnlj > 0 =>
@@ -272,7 +273,10 @@ object PlanAudit {
         case _ => Nil
       })
     }
-    baseline.filter { case (k, _) => !shapes.contains(k.stripSuffix("!bnlj")) } ++ fresh
+    baseline.filter { case (k, _) =>
+      val q = k.stripSuffix("!bnlj")
+      live(q) && !shapes.contains(q)
+    } ++ fresh
   }
 
   def main(args: Array[String]): Unit = {
@@ -303,7 +307,8 @@ object PlanAudit {
         name -> v
       }
     if (opts.nonEmpty)
-      Files.writeString(baselinePath, mergeBaseline(baseline, shapes).toSeq.sorted
+      Files.writeString(baselinePath, mergeBaseline(baseline, shapes,
+        SparkEntry.queries.keySet).toSeq.sorted
         .map { case (n, c) => s"""  "$n": $c""" }.mkString("{\n", ",\n", "\n}\n"))
     val errors = verdicts.count(_._2.startsWith("error"))
     val flags = verdicts.count(!_._2.startsWith("ok")) - errors

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.OracleMath._
 import graft.expr.Rpn
 import graft.functions.{Decode, Similarity, TextFunctions}
-import graft.operators.{ChangeCapture, Dedup, FeatureStore, Filters, InteractionStore, Multimodal, Normalize, Pipeline, SimilaritySearch, Sketches}
+import graft.operators.{ChangeCapture, Dedup, FeatureStore, Filters, InteractionStore, Normalize, Pipeline, SimilaritySearch, Sketches}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, each with a DuckDB-equivalent SQL oracle where the
@@ -663,18 +663,6 @@ object SparkEntry {
         .withColumn("is_canonical", col("doc_id") === col("component"))
     }),
 
-    // ---- multimodal feature extraction: binary media -> fixed-dim
-    // embedding (deterministic stub standing in for a vision encoder;
-    // the Spark plumbing — binary column, codegen'd expression, long
-    // output — is the real thing) ----
-    "q43_multimodal_features" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("media"))
-        .select(col("doc_id"),
-          posexplode(Multimodal.featurizeStub(col("media"), dim = 8))
-            .as(Seq("pos", "feat")))
-    }),
-
     // ---- uint64 full-range aggregation: DecimalType(20,0) carries the
     // unsigned 64-bit range exactly (Types.scala mapping). Aggregates
     // stay exact decimal; the OUTPUT is the canonical digit string so
@@ -957,19 +945,6 @@ object SparkEntry {
           posexplode(col("projected")).as(Seq("dim", "value")))
     }),
 
-    // ---- corpus vocabulary: top-100 tokens by count (TakeOrdered,
-    // never a global sort) ----
-    "q65_vocab_topk" -> ((s, dir) => {
-      graft.operators.Corpus.vocab(Tables.documents(s, dir), "text", n = 100)
-    }),
-
-    // ---- TF-IDF top terms per document (scores rounded before
-    // ranking: engine-portable ordering) ----
-    "q66_tfidf_topterms" -> ((s, dir) => {
-      graft.operators.Corpus.tfIdfTopTerms(Tables.documents(s, dir),
-        idCol = "doc_id", textCol = "text", topPerDoc = 3)
-    }),
-
     // ---- exact per-class quota downsampling (class balancing) ----
     "q67_class_quota" -> ((s, dir) => {
       graft.operators.Sampling.quotaPerClass(
@@ -980,7 +955,7 @@ object SparkEntry {
     // ---- equal-width histogram: one bounds aggregate broadcast back,
     // one groupBy — no sort, no window ----
     "q68_histogram" -> ((s, dir) => {
-      graft.operators.Corpus.histogram(
+      graft.operators.Profile.histogram(
         Tables.orders(s, dir).select(col("o_totalprice")),
         "o_totalprice", buckets = 20)
     }),
@@ -1084,13 +1059,6 @@ object SparkEntry {
         "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
     }),
 
-    // ---- sliding-window document chunking (64-token chunks, stride
-    // 48): per-row explode, zero shuffle ----
-    "q79_chunks" -> ((s, dir) => {
-      graft.operators.Corpus.chunk(Tables.documents(s, dir),
-        "doc_id", "text", chunkSize = 64, stride = 48)
-    }),
-
     // ---- temperature-based multi-source mixture sampling (quota ∝
     // n^0.5, largest-remainder, integer micro-unit allocation) ----
     "q80_temperature_mix" -> ((s, dir) => {
@@ -1112,23 +1080,6 @@ object SparkEntry {
         valueCol = "value", frameRows = 6)
     }),
 
-    // ---- BM25 keyword retrieval: one corpus scan, window df, tiny
-    // broadcast stats, bounded-heap top-N — the lexical-search twin
-    // of the vector top-K path ----
-    "q82_bm25_search" -> ((s, dir) => {
-      graft.operators.Corpus.bm25Search(Tables.documents(s, dir),
-        idCol = "doc_id", textCol = "text",
-        terms = Seq("hash", "join", "vector"), topN = 20)
-    }),
-
-    // ---- adjacent-token PMI: the co-occurrence statistic phrase /
-    // embedding pipelines are built on (two staged explodes, vocab-
-    // sized downstream) ----
-    "q83_cooccurrence_pmi" -> ((s, dir) => {
-      graft.operators.Corpus.cooccurrencePmi(Tables.documents(s, dir),
-        textCol = "text", minCount = 5)
-    }),
-
     // ---- cross-corpus LSH linkage join: near-dups of a query set
     // inside the corpus (record linkage / entity resolution) — band
     // buckets equi-joined, never a cross join ----
@@ -1137,18 +1088,6 @@ object SparkEntry {
       val queries = docs.filter(col("doc_id") % 5 === 0)
       Dedup.minhashLshLink(docs, queries, n = 3, k = 8, bands = 4,
         threshold = 0.2)
-    }),
-
-    // ---- multimodal: binary column + batch-decoded metadata ----
-    "q31_multimodal_meta" -> ((s, dir) => {
-      val withBin = Tables.documents(s, dir)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("media"))
-      Multimodal.decodeMeta(withBin, "media", batchSize = 32)
-        .select(col("doc_id"),
-          col("media_meta.format").as("format"),
-          col("media_meta.width").as("width"),
-          col("media_meta.height").as("height"),
-          col("media_meta.n_bytes").as("n_bytes"))
     }),
 
     // ---- the streaming incremental-aggregate sink driven end-to-end:
@@ -1233,7 +1172,7 @@ object SparkEntry {
     // pin exists because decode∘encode passes for ANY self-consistent
     // layout — and proto varint decoders accept NON-CANONICAL
     // encodings, so even asymmetric padding bugs survive a pure
-    // roundtrip (the q88/q150 lesson: when the bytes are the
+    // roundtrip (the q88 lesson: when the bytes are the
     // contract, pin the encoded form) ----
     "q89_proto_roundtrip" -> ((s, dir) => {
       import s.implicits._
@@ -1505,25 +1444,6 @@ object SparkEntry {
           (col("event_type") === "click").cast("long").as("label")),
         "value", "label", nBins = 10)),
 
-    // ---- frequency-ranked vocabulary ids (embedding-table prep) ----
-    "q111_vocab_ids" -> ((s, dir) =>
-      graft.operators.Corpus.vocabIds(Tables.documents(s, dir), "text")),
-
-    // ---- vocab-id document encoding with a capped (top-20) vocab:
-    // the tokenize→ids step before sequence packing; OOV -> -1 ----
-    "q112_encode_docs" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val vocab = graft.operators.Corpus.vocabIds(docs, "text")
-        .filter(col("vocab_id") < 20)
-      graft.operators.Corpus.encodeDocs(docs, vocab)
-        // csv-render the id sequence (scalar output for the driver's
-        // comparator); every position is still hash-compared
-        .select(col("doc_id"),
-          concat_ws(",", transform(col("ids"), x => x.cast("string")))
-            .as("ids_csv"),
-          col("n_tokens"), col("n_oov"))
-    }),
-
     // ---- deterministic random walks over the co-visitation graph
     // (DeepWalk-style graph-embedding corpus) ----
     "q113_random_walks" -> ((s, dir) =>
@@ -1536,29 +1456,6 @@ object SparkEntry {
         .select(col("start"),
           concat_ws(",", transform(col("path"), x => x.cast("string")))
             .as("path_csv"))),
-
-    // ---- end-to-end text->tensors pipeline: paragraph keep-first
-    // dedup -> boilerplate-ratio gate -> capped-vocab encoding ->
-    // OOV-ratio gate -> fixed-size training blocks. Every stage is a
-    // previously-oracled operator; this is the composition a
-    // pretraining data pipeline actually runs ----
-    "q114_text_to_tensors" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // pinned: the deduped corpus feeds BOTH the vocabulary build and
-      // the encoding pass — without the pin the whole paragraph-dedup
-      // pipeline (explode + keep-first window + re-assembly) executes
-      // twice (r17, guide §2.4)
-      val clean = Dedup.dedupeParagraphs(docs, paraTokens = 8)
-        .filter(col("n_dropped") * 2 < col("n_paras"))
-        .select(col("doc_id"), col("text_dedup").as("text"))
-        .localCheckpoint()
-      val vocab = graft.operators.Corpus.vocabIds(clean, "text")
-        .filter(col("vocab_id") < 20)
-      val enc = graft.operators.Corpus.encodeDocs(clean, vocab)
-        .filter(col("n_oov") * 2 <= col("n_tokens"))
-      graft.operators.Training.packSequences(enc, "doc_id",
-        col("n_tokens"), blockTokens = 256)
-    }),
 
     // ---- offline eval: tie-aware ROC AUC of `value` against a
     // deterministic pseudo-label, per event_type; plus precision@20 ----
@@ -1656,39 +1553,6 @@ object SparkEntry {
         Tables.events(s, dir).withColumn("skey",
           when(col("event_id") % 10 < 8, lit(0L)).otherwise(col("user_id"))),
         Seq("skey"), "value", col("event_id"), salt = 16)),
-
-    // ---- REAL media-header parsing: PNG/JPEG containers synthesized
-    // byte-exact from doc_id, then parsed back by the codec-free
-    // header expression; the oracle computes the dims analytically ----
-    "q127_media_headers" -> ((s, dir) => {
-      val w = lpad(hex(lit(1) + col("doc_id") % 500), 8, "0")
-      val h = lpad(hex(lit(1) + col("doc_id") % 300), 8, "0")
-      val w16 = substring(w, 5, 4)
-      val h16 = substring(h, 5, 4)
-      val pngHex = concat(lit("89504E470D0A1A0A0000000D49484452"), w, h,
-        lit("08060000001F15C489"))
-      val jpegHex = concat(lit("FFD8FFE000104A46494600010100000100010000"),
-        lit("FFC0001108"), h16, w16, lit("03012200021101031101"))
-      val bin = unhex(when(col("doc_id") % 2 === 0, pngHex)
-        .otherwise(jpegHex))
-      Tables.documents(s, dir).select(col("doc_id"),
-          graft.operators.Multimodal.imageDims(bin).as("m"))
-        .select(col("doc_id"), col("m.format").as("format"),
-          col("m.width").as("width"), col("m.height").as("height"))
-    }),
-
-    // ---- unicode cleanup: control-char strip + NFC composition; the
-    // corpus is salted with combining sequences and control bytes so
-    // the normalization actually fires ----
-    "q128_text_clean" -> ((s, dir) => {
-      // NOTE: Spark's chr() wraps at 256, so the combining acute
-      // (U+0301) and bell ride as direct literals
-      val salted = concat(col("text"), lit(" cafe"), lit("\u0301"),
-        lit("x"), lit("\u0007"), lit("end"))
-      Tables.documents(s, dir).select(col("doc_id"),
-          TextFunctions.cleanText(salted).as("cleaned"))
-        .withColumn("n_chars", length(col("cleaned")))
-    }),
 
     // ---- training/serving skew: features "logged at serving" (acctbal
     // through a lossy fp32 serving encoding) vs recomputed exact.
@@ -2027,29 +1891,6 @@ object SparkEntry {
       graft.operators.Normalize.pavCalibrateCounts(bins, "bin", "pos", "n")
     }),
 
-    // ---- Deflate compression ratio (Gopher/CCNet quality signal).
-    // DuckDB ships no deflate scalar, so the oracle joins PINNED
-    // CPython-zlib compressed sizes (Q150Deflate, independent of the
-    // engine's java.util.zip kernel) against the real parquet text's
-    // byte length; the kernel is additionally pinned by
-    // TextFunctionsSpec golden cases ----
-    // The input unions a LEVEL-PROBE doc (id 9000000001): the r14
-    // kill-test proved all 500 testdata docs compress identically at
-    // java deflate levels 5 and 6, so a level drift was
-    // driver-invisible; this near-periodic text separates levels
-    // (68 bytes at level 6, 87 at level 5 — CPython and the JVM
-    // agree on both) and carries a CPython pin like every real doc.
-    "q150_compression_ratio" -> ((s, dir) => {
-      import s.implicits._
-      val probe = Seq((9000000001L, ("abcdefghij" * 7 + "x") * 120))
-        .toDF("doc_id", "text")
-      Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .unionByName(probe)
-        .select(col("doc_id"),
-          TextFunctions.compressionRatio(col("text"))
-            .as("compression_ratio"))
-    }),
-
     // ---- bulk-keys retrieve (the scoring path): the key set is the
     // full orders key domain with duplicates — too big to broadcast at
     // scale — so broadcastKeys=false routes the shuffled equi-join
@@ -2069,17 +1910,6 @@ object SparkEntry {
       FeatureStore.retrieve(keys, s.table(tbl), Seq("c_custkey"),
         Fixtures.customerProfile, Seq("c_name", "c_acctbal", "c_mktsegment"),
         broadcastKeys = false)
-    }),
-
-    // ---- causal-LM supervision assembly: q112's encoded sequences →
-    // (input_id, label_id) next-token pairs. Array-side 1-shift zip —
-    // a pure projection, no window and no extra shuffle ----
-    "q155_next_token_pairs" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val vocab = graft.operators.Corpus.vocabIds(docs, "text")
-        .filter(col("vocab_id") < 20)
-      graft.operators.Training.nextTokenPairs(
-        graft.operators.Corpus.encodeDocs(docs, vocab))
     }),
 
     // ---- partial-overlap (containment) detection over winnowing
@@ -2249,13 +2079,6 @@ object SparkEntry {
       graft.operators.Dedup.crossSourceShingleOverlap(
         Tables.documents(s, dir))),
 
-    // ---- vocabulary coverage curve: token-occurrence mass covered by
-    // the top-k tokens for each budget k — the tokenizer/vocab-size
-    // decision curve, built on the range-partitioned prefix sum ----
-    "q171_vocab_coverage" -> ((s, dir) =>
-      graft.operators.Corpus.coverageCurve(
-        Tables.documents(s, dir), "text", Seq(10, 50, 100, 500, 1000))),
-
     // ---- winsorized sibling of q167: the tails are CLAMPED to the
     // boundary order statistics instead of dropped (n stays constant);
     // clamped sum exact in longs, one division ----
@@ -2264,19 +2087,6 @@ object SparkEntry {
         Tables.events(s, dir).select(col("event_type"),
           floor(col("value") * 1e6).cast("long").as("vm")),
         "event_type", "vm", alpha = 0.1)),
-
-    // ---- bigram conditional LM table P(w2|w1): adjacent-pair counts
-    // via array 1-shift zip (no window), exact rational division ----
-    "q173_bigram_conditional" -> ((s, dir) =>
-      graft.operators.Corpus.bigramConditional(
-        Tables.documents(s, dir), "text", minCount = 5)),
-
-    // ---- tokenizer fertility per language: subtokens/word and
-    // chars/word ratios per lang — the per-language tokenizer-cost
-    // table ----
-    "q174_tokenizer_fertility" -> ((s, dir) =>
-      graft.operators.Corpus.tokenizerFertility(
-        Tables.documents(s, dir), "text", "lang")),
 
     // ---- q145's position construction -> per-position CTR with
     // Wilson 95% intervals (small-n-safe uncertainty on the
@@ -2294,8 +2104,8 @@ object SparkEntry {
 
     // ---- PSI feature-drift gate: reference = view events, current =
     // click events; equal-frequency bins on the reference (q12's
-    // exact-percentile convention), per-bin (p−q)·ln(p/q) rounded
-    // (q83's ln convention) ----
+    // exact-percentile convention), per-bin (p−q)·ln(p/q) rounded to
+    // 6 dp (ln differs in the last ulps across libm implementations) ----
     "q176_psi_drift" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
       graft.operators.Normalize.psiBins(
@@ -2332,16 +2142,6 @@ object SparkEntry {
         "embedding", k = 5, penalty = 0.5)
     }),
 
-    // ---- per-document NLL under the q173 bigram LM: corpus-fit
-    // quality score (high NLL = out-of-domain/noisy text); per-term
-    // micro-nat rounding keeps the sums integer order-free ----
-    "q179_bigram_nll" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val lm = graft.operators.Corpus.bigramConditional(
-        docs, "text", minCount = 5)
-      graft.operators.Corpus.bigramNll(docs, lm, "doc_id", "text")
-    }),
-
     // ---- ANN recall audit: q38's IVF probe result vs the exact
     // brute-force top-10, per-query overlap — the number probe depth
     // and cell count are tuned against ----
@@ -2375,19 +2175,6 @@ object SparkEntry {
         .centroids
         .select(col("cell_id"),
           posexplode(col("centroid")).as(Seq("idx", "c_val")))
-    }),
-
-    // ---- DSIR-style importance log-ratio: bigram LM of the 'en'
-    // slice (target) vs the full corpus (source); per-doc micro-nat
-    // log ratio ranks documents by target-domain fit ----
-    "q183_importance_ratio" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val target = graft.operators.Corpus.bigramConditional(
-        docs.filter(col("lang") === "en"), "text", minCount = 5)
-      val source = graft.operators.Corpus.bigramConditional(
-        docs, "text", minCount = 5)
-      graft.operators.Corpus.importanceLogRatio(
-        docs, target, source, "doc_id", "text")
     }),
 
     // ---- SemDeDup: pairs compared only within learned k-means cells
@@ -2534,12 +2321,6 @@ object SparkEntry {
           (col("event_type") === "purchase").cast("long").as("label")),
         "value", "label", nBins = 16)),
 
-    // ---- Zipf rank-frequency fit over the top-100 vocabulary:
-    // boilerplate-flood / dedup-damage alarm on the corpus shape ----
-    "q199_zipf_slope" -> ((s, dir) =>
-      graft.operators.Corpus.zipfSlope(
-        Tables.documents(s, dir), "text", topN = 100)),
-
     // ---- count-min collision audit: 16x4 sketch estimates vs exact
     // brand counts (25 keys > 16 counters forces collisions) ----
     "q200_count_min" -> ((s, dir) =>
@@ -2638,12 +2419,6 @@ object SparkEntry {
       SimilaritySearch.knnLabelConsistency(
         Tables.embeddings(s, dir), cells = 8, iters = 2, k = 5)),
 
-    // ---- per-source lexical diversity: TTR + hapax share, the
-    // template/boilerplate detector ----
-    "q213_lexical_diversity" -> ((s, dir) =>
-      graft.operators.Corpus.lexicalDiversity(
-        Tables.documents(s, dir), "source", "text")),
-
     // ---- curation yield report: per-rule standalone and cumulative
     // survivors in one scan ----
     "q214_filter_waterfall" -> ((s, dir) =>
@@ -2653,12 +2428,6 @@ object SparkEntry {
           "known_lang" -> col("lang").isin("en", "zh", "es"),
           "min_tokens" ->
             (size(graft.functions.TextFunctions.words(col("text"))) >= 30)))),
-
-    // ---- tokenizer training stats: top in-token character pairs
-    // (the BPE first-merge table) ----
-    "q215_bpe_pairs" -> ((s, dir) =>
-      graft.operators.Corpus.bpePairStats(
-        Tables.documents(s, dir), "text", topN = 50)),
 
     // ---- imputation fill-value table: mean/median/mode per measure
     // in one unpivot pass ----
@@ -2825,12 +2594,6 @@ object SparkEntry {
     "q236_burstiness" -> ((s, dir) =>
       InteractionStore.interArrivalStats(Tables.events(s, dir))),
 
-    // ---- readability / run-on audit: per-doc sentence count and
-    // word-length stats, fully row-local ----
-    "q237_sentence_stats" -> ((s, dir) =>
-      graft.operators.Corpus.sentenceStats(
-        Tables.documents(s, dir), "doc_id", "text")),
-
     // ---- trending detection: each event type's daily volume scored
     // against ITS OWN trailing week (q202's kernel over q-aggregates) ----
     "q238_trending_zscore" -> ((s, dir) => {
@@ -2985,12 +2748,6 @@ object SparkEntry {
         maxDist = 2, maxBlock = 32)
     }),
 
-    // ---- corpus triage: Flesch reading-ease / grade-level proxies,
-    // pure projection ----
-    "q248_readability" -> ((s, dir) =>
-      graft.operators.Corpus.readability(
-        Tables.documents(s, dir), "doc_id", "text")),
-
     // ---- profile freshness columns from the stream: first/last
     // touch + count per user through the restart-safe min/max
     // incremental state ----
@@ -3031,12 +2788,6 @@ object SparkEntry {
       graft.operators.Profile.joinCardinalityEstimate(
         Tables.events(s, dir), "user_id",
         Tables.orders(s, dir), "o_custkey", mcv = 20)),
-
-    // ---- keyword extraction: PageRank over the word-adjacency
-    // graph (TextRank), integer fixed-point iterations ----
-    "q253_textrank" -> ((s, dir) =>
-      graft.operators.Corpus.textrankKeywords(
-        Tables.documents(s, dir), "text", minCount = 5, iterations = 3)),
 
     // ---- distribution-free uncertainty: split-conformal [p05, p95]
     // bands per event type, held-out coverage audited ----
@@ -4383,13 +4134,6 @@ object SparkEntry {
          |FROM reach GROUP BY id""".stripMargin
     },
 
-    // media bytes are UTF-8 of the text, so md5(blob) == md5(string)
-    "q43_multimodal_features" ->
-      """SELECT doc_id, CAST(t.i AS INT) AS pos,
-        |  CAST(('0x'||substr(md5(text||CAST(t.i AS VARCHAR)), 1, 6))
-        |    AS BIGINT) / 16777215.0 AS feat
-        |FROM documents, generate_series(0, 7) t(i)""".stripMargin,
-
     "q46_feature_materialize" ->
       s"""SELECT user_id,
          |  COUNT(CASE WHEN ts > TIMESTAMP '2024-02-01' - INTERVAL 7 DAY
@@ -4545,30 +4289,6 @@ object SparkEntry {
          |SELECT e.vec_id, CAST(pl.i AS INT) AS dim,
          |  ${sqlDotOf("CAST(e.embedding AS DOUBLE[])", "pl.p")} AS value
          |FROM embeddings e, planes pl""".stripMargin,
-
-    "q65_vocab_topk" ->
-      s"""WITH tok AS (SELECT unnest($sqlWords) AS token FROM documents),
-         |cnts AS (SELECT token, COUNT(*) AS cnt FROM tok
-         |         WHERE token <> '' GROUP BY token)
-         |SELECT token, cnt,
-         |  CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, token ASC) AS INT) AS rank
-         |FROM cnts ORDER BY cnt DESC, token ASC LIMIT 100""".stripMargin,
-
-    "q66_tfidf_topterms" ->
-      s"""WITH terms AS (SELECT doc_id, unnest($sqlWords) AS token FROM documents),
-         |tf AS (SELECT doc_id, token, COUNT(*) AS tf_cnt FROM terms
-         |       WHERE token <> '' GROUP BY doc_id, token),
-         |dl AS (SELECT doc_id, SUM(tf_cnt) AS len FROM tf GROUP BY doc_id),
-         |dfreq AS (SELECT token, COUNT(*) AS dfc FROM tf GROUP BY token),
-         |nd AS (SELECT COUNT(*) AS n FROM documents),
-         |sc AS (SELECT tf.doc_id, tf.token,
-         |    ROUND(CAST(tf.tf_cnt AS DOUBLE) / dl.len *
-         |      ln(CAST(nd.n AS DOUBLE) / dfreq.dfc), 6) AS score
-         |  FROM tf JOIN dl USING (doc_id) JOIN dfreq USING (token), nd)
-         |SELECT doc_id, token, score, rank FROM (
-         |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
-         |    ORDER BY score DESC, token ASC) AS INT) AS rank FROM sc)
-         |WHERE rank <= 3""".stripMargin,
 
     "q67_class_quota" ->
       s"""SELECT vec_id, label FROM (
@@ -4898,20 +4618,6 @@ object SparkEntry {
         |   + CASE WHEN ts_purchase IS NOT NULL THEN 1 ELSE 0 END) AS depth
         |FROM c""".stripMargin,
 
-    "q79_chunks" ->
-      s"""WITH t AS (SELECT doc_id, $sqlWords AS w FROM documents),
-         |s AS (SELECT doc_id, w, greatest(len(w) - 63, 1) AS ls FROM t),
-         |st AS (SELECT doc_id, w, CASE WHEN (ls - 1) % 48 = 0
-         |         THEN generate_series(1, ls, 48)
-         |         ELSE list_append(generate_series(1, ls, 48), ls) END AS starts
-         |       FROM s)
-         |SELECT doc_id,
-         |  CAST((start - 1) // 48
-         |    + CASE WHEN (start - 1) % 48 = 0 THEN 0 ELSE 1 END AS INT) AS chunk_idx,
-         |  array_to_string(list_slice(w, start, start + 63), ' ') AS chunk_text,
-         |  CAST(least(64, len(w) - start + 1) AS INT) AS n_tokens
-         |FROM st, unnest(starts) AS u(start)""".stripMargin,
-
     "q80_temperature_mix" ->
       s"""WITH corpus AS (SELECT doc_id, source, lang FROM documents
          |                WHERE n_chars % 7 < 5),
@@ -4965,52 +4671,6 @@ object SparkEntry {
         |WINDOW f AS (PARTITION BY user_id ORDER BY ts, event_id
         |             ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)""".stripMargin,
 
-    "q82_bm25_search" ->
-      s"""WITH t AS (SELECT doc_id, $sqlWords AS w FROM documents),
-         |stats AS (SELECT COUNT(*) AS N,
-         |  ${sqlAvg("CAST(len(w) AS DOUBLE)")} AS avglen FROM t),
-         |tf AS (SELECT doc_id, dlen, token, COUNT(*) AS tf
-         |       FROM (SELECT doc_id, len(w) AS dlen, unnest(w) AS token FROM t)
-         |       WHERE token IN ('hash', 'join', 'vector')
-         |       GROUP BY doc_id, dlen, token),
-         |sc AS (SELECT doc_id, dlen, token, tf,
-         |         COUNT(*) OVER (PARTITION BY token) AS df FROM tf),
-         |x AS (SELECT doc_id,
-         |        ln(1.0 + (N - df + 0.5) / (df + 0.5))
-         |          * (tf * 2.2)
-         |          / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dlen / avglen))
-         |          AS term_score
-         |      FROM sc, stats)
-         |SELECT doc_id,
-         |  ROUND(${sqlSum("term_score", 8)}, 6) AS score,
-         |  COUNT(*) AS n_terms_hit
-         |FROM x GROUP BY doc_id
-         |ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin,
-
-    "q83_cooccurrence_pmi" ->
-      s"""WITH t AS (SELECT $sqlWords AS w FROM documents),
-         |uni AS (SELECT token, COUNT(*) AS c
-         |        FROM (SELECT unnest(w) AS token FROM t)
-         |        WHERE token <> '' GROUP BY token),
-         |ut AS (SELECT SUM(c) AS tot FROM uni),
-         |pr AS (SELECT pair, COUNT(*) AS c_ab
-         |       FROM (SELECT unnest(list_transform(
-         |               generate_series(1, greatest(len(w)-1, 1)),
-         |               i -> array_to_string(list_slice(w, i, i+1), ' ')))
-         |               AS pair FROM t)
-         |       WHERE len(string_split(pair, ' ')) = 2
-         |       GROUP BY pair HAVING COUNT(*) >= 5),
-         |pt AS (SELECT SUM(len(w) - 1) AS p FROM t WHERE len(w) > 1)
-         |SELECT string_split(pair, ' ')[1] AS tok_a,
-         |       string_split(pair, ' ')[2] AS tok_b,
-         |       c_ab, a.c AS c_a, b.c AS c_b,
-         |       ROUND(ln((CAST(c_ab AS DOUBLE) / pt.p) /
-         |         ((CAST(a.c AS DOUBLE) / ut.tot)
-         |          * (CAST(b.c AS DOUBLE) / ut.tot))), 6) AS pmi
-         |FROM pr
-         |JOIN uni a ON a.token = string_split(pair, ' ')[1]
-         |JOIN uni b ON b.token = string_split(pair, ' ')[2], ut, pt""".stripMargin,
-
     "q84_lsh_linkage" ->
       s"""WITH $sqlMinhashBandCtes,
          |lcand AS (
@@ -5027,15 +4687,6 @@ object SparkEntry {
          |        list_distinct(shb)))) AS DOUBLE) AS jaccard
          |  FROM lcand)
          |WHERE jaccard >= 0.2""".stripMargin,
-
-    "q31_multimodal_meta" ->
-      """SELECT doc_id,
-        |  CASE ascii(substr(text, 1, 1)) % 3 WHEN 0 THEN 'png'
-        |       WHEN 1 THEN 'jpeg' ELSE 'webp' END AS format,
-        |  CAST(1 + ascii(substr(text, 1, 1)) % 64 AS INT) AS width,
-        |  CAST(1 + octet_length(encode(text)) % 64 AS INT) AS height,
-        |  CAST(octet_length(encode(text)) AS INT) AS n_bytes
-        |FROM documents""".stripMargin,
 
     // the streamed state table must equal the one-shot aggregate over
     // all events — merge exactness + replay protection in one check
@@ -5431,34 +5082,6 @@ object SparkEntry {
         |  CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pos_rate
         |FROM b GROUP BY bin""".stripMargin,
 
-    "q111_vocab_ids" ->
-      s"""WITH c AS (SELECT token, COUNT(*) AS cnt FROM (
-         |    SELECT unnest($sqlWords) AS token FROM documents)
-         |  WHERE token <> '' GROUP BY token)
-         |SELECT token, cnt, CAST(ROW_NUMBER() OVER (
-         |  ORDER BY cnt DESC, token ASC) - 1 AS INT) AS vocab_id
-         |FROM c""".stripMargin,
-
-    "q112_encode_docs" ->
-      s"""WITH c AS (SELECT token, COUNT(*) AS cnt FROM (
-         |    SELECT unnest($sqlWords) AS token FROM documents)
-         |  WHERE token <> '' GROUP BY token),
-         |v AS (SELECT token, CAST(ROW_NUMBER() OVER (
-         |    ORDER BY cnt DESC, token ASC) - 1 AS INT) AS vocab_id FROM c),
-         |vv AS (SELECT * FROM v WHERE vocab_id < 20),
-         |tk AS (SELECT doc_id, generate_subscripts(w, 1) AS pos,
-         |         unnest(w) AS token
-         |       FROM (SELECT doc_id, $sqlWords AS w FROM documents)),
-         |e AS (SELECT tk.doc_id, tk.pos,
-         |        COALESCE(vv.vocab_id, -1) AS id, vv.vocab_id AS vid
-         |      FROM tk LEFT JOIN vv USING (token) WHERE tk.token <> '')
-         |SELECT doc_id,
-         |  array_to_string(array_agg(id ORDER BY pos), ',') AS ids_csv,
-         |  COUNT(*) AS n_tokens,
-         |  CAST(SUM(CASE WHEN vid IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_oov
-         |FROM e GROUP BY doc_id""".stripMargin,
-
     // q104's co-visitation CTE -> undirected adjacency -> three argmin-
     // hash steps, exactly the Spark iteration
     "q113_random_walks" -> {
@@ -5495,54 +5118,6 @@ object SparkEntry {
          |SELECT start, array_to_string([start, c1, c2, c3], ',')
          |  AS path_csv FROM s3""".stripMargin
     },
-
-    // q102's dedup CTEs -> ratio gate -> q112's encode counts ->
-    // q63's prefix-sum block packing, chained
-    "q114_text_to_tensors" ->
-      s"""WITH t AS (SELECT doc_id, $sqlWords AS w FROM documents),
-         |p0 AS (SELECT doc_id, list_transform(
-         |         generate_series(1, greatest(len(w), 1), 8),
-         |         i -> array_to_string(list_slice(w, i, i + 7), ' ')) AS ps
-         |       FROM t),
-         |p AS (SELECT doc_id, len(ps) AS n_paras,
-         |        generate_subscripts(ps, 1) - 1 AS pos, unnest(ps) AS para
-         |      FROM p0),
-         |h AS (SELECT *, CAST(('0x'||substr(md5(para), 1, 15)) AS BIGINT)
-         |        AS hh FROM p),
-         |k AS (SELECT * FROM (SELECT *, ROW_NUMBER() OVER (
-         |        PARTITION BY hh ORDER BY doc_id, pos) AS rn FROM h)
-         |      WHERE rn = 1),
-         |clean AS (SELECT doc_id,
-         |    string_agg(para, ' ' ORDER BY pos) AS text
-         |  FROM k GROUP BY doc_id, n_paras
-         |  HAVING (n_paras - COUNT(*)) * 2 < n_paras),
-         |cw AS (SELECT doc_id, $sqlWords AS w FROM clean),
-         |c AS (SELECT token, COUNT(*) AS cnt FROM (
-         |    SELECT unnest(w) AS token FROM cw)
-         |  WHERE token <> '' GROUP BY token),
-         |v AS (SELECT token, CAST(ROW_NUMBER() OVER (
-         |    ORDER BY cnt DESC, token ASC) - 1 AS INT) AS vocab_id FROM c),
-         |vv AS (SELECT * FROM v WHERE vocab_id < 20),
-         |tk AS (SELECT doc_id, unnest(w) AS token FROM cw),
-         |e AS (SELECT tk.doc_id, COUNT(*) AS n_tokens,
-         |        SUM(CASE WHEN vv.vocab_id IS NULL THEN 1 ELSE 0 END)
-         |          AS n_oov
-         |      FROM tk LEFT JOIN vv USING (token) WHERE tk.token <> ''
-         |      GROUP BY tk.doc_id),
-         |keep AS (SELECT doc_id, n_tokens AS tok FROM e
-         |         WHERE n_oov * 2 <= n_tokens AND n_tokens > 0),
-         |cum AS (SELECT doc_id, tok,
-         |    CAST(SUM(tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-         |      AS BIGINT) AS en
-         |  FROM keep),
-         |blocks AS (SELECT doc_id, en - tok AS st, en,
-         |    unnest(generate_series((en - tok) // 256, (en - 1) // 256))
-         |      AS block_id
-         |  FROM cum)
-         |SELECT doc_id, block_id,
-         |  LEAST(en, (block_id + 1) * 256) - GREATEST(st, block_id * 256)
-         |    AS tok_in_block
-         |FROM blocks""".stripMargin,
 
     // Mann-Whitney U with tie-averaged ranks in exact 2x-unit integers
     "q115_group_auc" ->
@@ -5736,14 +5311,6 @@ object SparkEntry {
          |    AS skey,
          |  COUNT(*) AS n, ${sqlSum("value")} AS value_sum
          |FROM events GROUP BY 1""".stripMargin,
-
-    // the parser must recover exactly the dims the bytes encode
-    "q127_media_headers" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format,
-        |  CAST(1 + doc_id % 500 AS INT) AS width,
-        |  CAST(1 + doc_id % 300 AS INT) AS height
-        |FROM documents""".stripMargin,
 
     // fp32 round-trip mirrored; mismatch = IS DISTINCT FROM
     "q129_feature_skew" ->
@@ -6096,15 +5663,6 @@ object SparkEntry {
         |FROM d JOIN supp sa ON d.antecedent = sa.item_id
         |JOIN supp sc ON d.consequent = sc.item_id CROSS JOIN nu""".stripMargin,
 
-    // strip control bytes first, then NFC — same order as cleanText
-    "q128_text_clean" ->
-      """WITH t AS (SELECT doc_id, nfc_normalize(regexp_replace(
-        |    text || ' cafe' || chr(769) || 'x' || chr(7) || 'end',
-        |    '[\x00-\x1f\x7f]', '', 'g')) AS cleaned
-        |  FROM documents)
-        |SELECT doc_id, cleaned, CAST(length(cleaned) AS INT) AS n_chars
-        |FROM t""".stripMargin,
-
     // q113's co-visitation adjacency, then three unrolled iterations of
     // the SAME integral divisions the Spark side performs (// on
     // positive BIGINTs = div = floor); sums of longs are exact, so the
@@ -6199,15 +5757,6 @@ object SparkEntry {
         |  GROUP BY 1, 2)
         |SELECT bin, MAX(m) AS calibrated FROM mn GROUP BY bin""".stripMargin,
 
-    // DuckDB ships no deflate scalar, so the compressed sizes are
-    // PINNED literals computed by CPython's zlib (level-6 deflate of a
-    // fixed input is deterministic; java.util.zip and CPython both
-    // wrap zlib — tools/gen_q150_oracle.py, values in Q150Deflate).
-    // The uncompressed length is the oracle's own octet_length over
-    // the real parquet text, and the ratio is ONE IEEE division of
-    // the same two numbers on both sides.
-    "q150_compression_ratio" -> sqlQ150For(Q150Deflate.sf001),
-
     // q2's retrieve oracle over the bulk key set (orders fan-out keys,
     // duplicates preserved)
     "q151_retrieve_bulk_keys" ->
@@ -6217,29 +5766,6 @@ object SparkEntry {
         |  COALESCE(c.c_mktsegment, 'NONE') AS c_mktsegment
         |FROM orders o LEFT JOIN customer c
         |  ON o.o_custkey = c.c_custkey""".stripMargin,
-
-    // q112's encode CTEs -> LEAD over in-doc position; rn-1 matches
-    // the 0-based posexplode position of the pair array
-    "q155_next_token_pairs" ->
-      s"""WITH c AS (SELECT token, COUNT(*) AS cnt FROM (
-         |    SELECT unnest($sqlWords) AS token FROM documents)
-         |  WHERE token <> '' GROUP BY token),
-         |v AS (SELECT token, CAST(ROW_NUMBER() OVER (
-         |    ORDER BY cnt DESC, token ASC) - 1 AS INT) AS vocab_id FROM c),
-         |vv AS (SELECT * FROM v WHERE vocab_id < 20),
-         |tk AS (SELECT doc_id, generate_subscripts(w, 1) AS pos,
-         |         unnest(w) AS token
-         |       FROM (SELECT doc_id, $sqlWords AS w FROM documents)),
-         |e AS (SELECT tk.doc_id, tk.pos,
-         |        CAST(COALESCE(vv.vocab_id, -1) AS INT) AS id
-         |      FROM tk LEFT JOIN vv USING (token) WHERE tk.token <> ''),
-         |o AS (SELECT doc_id, id,
-         |        LEAD(id) OVER (PARTITION BY doc_id ORDER BY pos) AS nid,
-         |        ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
-         |      FROM e)
-         |SELECT doc_id, CAST(rn - 1 AS INT) AS pos, id AS input_id,
-         |  nid AS label_id
-         |FROM o WHERE nid IS NOT NULL""".stripMargin,
 
     // q41's winnow CTEs -> df cutoff -> inverted-index pairing ->
     // containment over the smaller doc's kept-fingerprint count
@@ -6618,26 +6144,6 @@ object SparkEntry {
          |FROM sh a JOIN sh b ON a.sh = b.sh AND a.source < b.source
          |GROUP BY 1, 2""".stripMargin,
 
-    // frequency-ranked cumulative token mass; covered(k) = the mass at
-    // the largest rank <= k (handles k beyond the vocabulary)
-    "q171_vocab_coverage" ->
-      s"""WITH c AS (SELECT token, COUNT(*) AS cnt FROM (
-         |    SELECT unnest($sqlWords) AS token FROM documents)
-         |  WHERE token <> '' GROUP BY 1),
-         |r AS (SELECT cnt,
-         |    ROW_NUMBER() OVER (ORDER BY cnt DESC, token ASC) AS rnk,
-         |    SUM(cnt) OVER (ORDER BY cnt DESC, token ASC
-         |                   ROWS UNBOUNDED PRECEDING) AS mass FROM c),
-         |t AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM c),
-         |k(k) AS (SELECT unnest([10, 50, 100, 500, 1000]))
-         |SELECT k.k AS k,
-         |  CAST((SELECT MAX(mass) FROM r WHERE rnk <= k.k) AS BIGINT)
-         |    AS covered,
-         |  t.total,
-         |  CAST((SELECT MAX(mass) FROM r WHERE rnk <= k.k) AS DOUBLE)
-         |    / CAST(t.total AS DOUBLE) AS coverage
-         |FROM k, t""".stripMargin,
-
     // q167's rank CTEs; clamped sum = middle + t*v_(t+1) + t*v_(n-t)
     // in exact BIGINTs, one division by n
     "q172_winsorized_mean" ->
@@ -6660,37 +6166,6 @@ object SparkEntry {
         |    / CAST(t.n AS DOUBLE) AS winsorized_mean
         |FROM t JOIN mid USING (event_type) JOIN lo USING (event_type)
         |  JOIN hi USING (event_type)""".stripMargin,
-
-    // in-doc adjacent pairs via the same word split; exact rational p
-    "q173_bigram_conditional" ->
-      s"""WITH w AS (SELECT $sqlWords AS w FROM documents),
-         |pr0 AS (SELECT list_transform(
-         |    generate_series(1, greatest(len(w) - 1, 0)),
-         |    i -> [w[i], w[i+1]]) AS ps FROM w),
-         |pr AS (SELECT p[1] AS w1, p[2] AS w2
-         |       FROM (SELECT unnest(ps) AS p FROM pr0)
-         |       WHERE p[1] <> '' AND p[2] <> ''),
-         |pc AS (SELECT w1, w2, COUNT(*) AS n_pair FROM pr GROUP BY 1, 2),
-         |pf AS (SELECT w1, CAST(SUM(n_pair) AS BIGINT) AS n_prefix
-         |       FROM pc GROUP BY 1)
-         |SELECT pc.w1, pc.w2, pc.n_pair, pf.n_prefix,
-         |  CAST(pc.n_pair AS DOUBLE) / CAST(pf.n_prefix AS DOUBLE) AS p
-         |FROM pc JOIN pf USING (w1) WHERE pf.n_prefix >= 5""".stripMargin,
-
-    // q21's token-count twins aggregated per language; two exact
-    // divisions
-    "q174_tokenizer_fertility" ->
-      s"""SELECT lang, COUNT(*) AS n_docs,
-         |  CAST(SUM(len($sqlWords)) AS BIGINT) AS n_words,
-         |  CAST(SUM(len(regexp_extract_all(lower(text),
-         |    '[a-z]+|[0-9]+|[^a-z0-9\\s]'))) AS BIGINT) AS n_subtokens,
-         |  CAST(SUM(length(text)) AS BIGINT) AS n_chars,
-         |  CAST(SUM(len(regexp_extract_all(lower(text),
-         |      '[a-z]+|[0-9]+|[^a-z0-9\\s]'))) AS DOUBLE)
-         |    / CAST(SUM(len($sqlWords)) AS DOUBLE) AS fertility,
-         |  CAST(SUM(length(text)) AS DOUBLE)
-         |    / CAST(SUM(len($sqlWords)) AS DOUBLE) AS chars_per_word
-         |FROM documents GROUP BY 1""".stripMargin,
 
     // q145's position CTE -> Wilson 95% interval, identical IEEE op
     // order and the same z / z^2 double literals on both sides
@@ -6726,7 +6201,7 @@ object SparkEntry {
         |FROM b""".stripMargin,
 
     // q12's quantile_cont edges on the reference side; strict-> bin
-    // assignment; q83's round(ln, 6) convention for the terms
+    // assignment; round(ln, 6) for the terms (libm-ulp-safe)
     "q176_psi_drift" -> {
       val edges = (1 until 10).map(i =>
         s"CAST(quantile_cont(value, ${i.toDouble / 10}) AS DOUBLE) AS e${i - 1}")
@@ -6825,33 +6300,6 @@ object SparkEntry {
          |SELECT query_id, rank, vec_id, score FROM sel""".stripMargin
     },
 
-    // q173's LM CTEs + per-doc pairs LEFT JOIN the LM; each scored
-    // term rounds ln(p) to micro-nats BEFORE the sum (the PSI
-    // rounded-ln convention) so per-doc totals are order-free
-    "q179_bigram_nll" ->
-      s"""WITH w AS (SELECT doc_id, $sqlWords AS w FROM documents),
-         |pr0 AS (SELECT doc_id, list_transform(
-         |    generate_series(1, greatest(len(w) - 1, 0)),
-         |    i -> [w[i], w[i+1]]) AS ps FROM w),
-         |pr AS (SELECT doc_id, p[1] AS w1, p[2] AS w2
-         |       FROM (SELECT doc_id, unnest(ps) AS p FROM pr0)
-         |       WHERE p[1] <> '' AND p[2] <> ''),
-         |pc AS (SELECT w1, w2, COUNT(*) AS n_pair FROM pr GROUP BY 1, 2),
-         |pf AS (SELECT w1, CAST(SUM(n_pair) AS BIGINT) AS n_prefix
-         |       FROM pc GROUP BY 1),
-         |lm AS (SELECT pc.w1, pc.w2,
-         |         CAST(pc.n_pair AS DOUBLE) / CAST(pf.n_prefix AS DOUBLE) AS p
-         |       FROM pc JOIN pf USING (w1) WHERE pf.n_prefix >= 5),
-         |t AS (SELECT pr.doc_id, lm.p FROM pr
-         |      LEFT JOIN lm ON pr.w1 = lm.w1 AND pr.w2 = lm.w2)
-         |SELECT doc_id, COUNT(*) AS n_bigrams, COUNT(p) AS n_scored,
-         |  -CAST(SUM(CAST(round(ln(p) * 1.0E6) AS BIGINT)) AS BIGINT)
-         |    AS nll_micro,
-         |  CASE WHEN COUNT(p) > 0 THEN
-         |    CAST(-SUM(CAST(round(ln(p) * 1.0E6) AS BIGINT)) AS DOUBLE)
-         |      / 1.0E6 / CAST(COUNT(p) AS DOUBLE) END AS avg_nll
-         |FROM t GROUP BY 1""".stripMargin,
-
     // q38's IVF CTE chain (appx) vs the brute top-10 (brute); per-query
     // full-outer overlap counts, recall = n_common / n_exact exact
     "q180_ann_recall" ->
@@ -6924,56 +6372,6 @@ object SparkEntry {
          |fin AS (SELECT cell_id, generate_subscripts(centroid, 1) AS pp,
          |          unnest(centroid) AS c_val FROM c2)
          |SELECT cell_id, CAST(pp - 1 AS INT) AS idx, c_val FROM fin""".stripMargin,
-
-    // q179's LM CTE chain instantiated twice (target = lang-filtered
-    // docs, source = all docs); per-term micro-nat difference summed
-    // only where BOTH LMs score the pair
-    "q183_importance_ratio" -> {
-      def lmCtes(tag: String, where: String) =
-        s"""${tag}pc AS (SELECT w1, w2, COUNT(*) AS n_pair
-           |  FROM (SELECT p[1] AS w1, p[2] AS w2
-           |        FROM (SELECT unnest(ps) AS p
-           |              FROM (SELECT list_transform(
-           |                  generate_series(1, greatest(len(w) - 1, 0)),
-           |                  i -> [w[i], w[i+1]]) AS ps
-           |                FROM (SELECT $sqlWords AS w FROM documents$where)))
-           |        WHERE p[1] <> '' AND p[2] <> '') GROUP BY 1, 2),
-           |${tag}pf AS (SELECT w1, CAST(SUM(n_pair) AS BIGINT) AS n_prefix
-           |       FROM ${tag}pc GROUP BY 1),
-           |${tag}lm AS (SELECT pc.w1, pc.w2,
-           |         CAST(pc.n_pair AS DOUBLE) / CAST(pf.n_prefix AS DOUBLE) AS p
-           |       FROM ${tag}pc pc JOIN ${tag}pf pf USING (w1)
-           |       WHERE pf.n_prefix >= 5),""".stripMargin
-      s"""WITH w AS (SELECT doc_id, $sqlWords AS w FROM documents),
-         |pr0 AS (SELECT doc_id, list_transform(
-         |    generate_series(1, greatest(len(w) - 1, 0)),
-         |    i -> [w[i], w[i+1]]) AS ps FROM w),
-         |pr AS (SELECT doc_id, p[1] AS w1, p[2] AS w2
-         |       FROM (SELECT doc_id, unnest(ps) AS p FROM pr0)
-         |       WHERE p[1] <> '' AND p[2] <> ''),
-         |${lmCtes("t", " WHERE lang = 'en'")}
-         |${lmCtes("s", "")}
-         |j AS (SELECT pr.doc_id, tlm.p AS pt, slm.p AS ps FROM pr
-         |      LEFT JOIN tlm ON pr.w1 = tlm.w1 AND pr.w2 = tlm.w2
-         |      LEFT JOIN slm ON pr.w1 = slm.w1 AND pr.w2 = slm.w2)
-         |SELECT doc_id, COUNT(*) AS n_bigrams,
-         |  COUNT(CASE WHEN pt IS NOT NULL AND ps IS NOT NULL THEN 1 END)
-         |    AS n_scored,
-         |  CAST(SUM(CASE WHEN pt IS NOT NULL AND ps IS NOT NULL THEN
-         |    CAST(round(ln(pt) * 1.0E6) AS BIGINT)
-         |      - CAST(round(ln(ps) * 1.0E6) AS BIGINT) END) AS BIGINT)
-         |    AS log_ratio_micro,
-         |  CASE WHEN COUNT(CASE WHEN pt IS NOT NULL AND ps IS NOT NULL
-         |      THEN 1 END) > 0 THEN
-         |    CAST(SUM(CASE WHEN pt IS NOT NULL AND ps IS NOT NULL THEN
-         |      CAST(round(ln(pt) * 1.0E6) AS BIGINT)
-         |        - CAST(round(ln(ps) * 1.0E6) AS BIGINT) END) AS DOUBLE)
-         |      / 1.0E6
-         |      / CAST(COUNT(CASE WHEN pt IS NOT NULL AND ps IS NOT NULL
-         |          THEN 1 END) AS DOUBLE)
-         |  END AS avg_log_ratio
-         |FROM j GROUP BY 1""".stripMargin
-    },
 
     // q182's learned cells (a3 = final assignment on c2), then q18's
     // within-block staged-cosine pair scan blocked by cell
@@ -7404,39 +6802,6 @@ object SparkEntry {
         |  CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE) AS pos_rate
         |FROM g""".stripMargin,
 
-    // q65's ranked vocabulary -> micro-rounded OLS moments -> the
-    // identical slope/intercept chain
-    "q199_zipf_slope" ->
-      s"""WITH tok AS (SELECT unnest($sqlWords) AS token FROM documents),
-         |cnts AS (SELECT token, COUNT(*) AS cnt FROM tok
-         |         WHERE token <> '' GROUP BY token),
-         |v AS (SELECT cnt,
-         |    ROW_NUMBER() OVER (ORDER BY cnt DESC, token ASC) AS rank
-         |  FROM cnts ORDER BY cnt DESC, token ASC LIMIT 100),
-         |t AS (SELECT
-         |    CAST(ROUND(LN(CAST(rank AS DOUBLE)) * 1e6) AS BIGINT) AS xm,
-         |    CAST(ROUND(LN(CAST(cnt AS DOUBLE)) * 1e6) AS BIGINT) AS ym,
-         |    CAST(ROUND(LN(CAST(rank AS DOUBLE)) * LN(CAST(rank AS DOUBLE))
-         |      * 1e6) AS BIGINT) AS xxm,
-         |    CAST(ROUND(LN(CAST(rank AS DOUBLE)) * LN(CAST(cnt AS DOUBLE))
-         |      * 1e6) AS BIGINT) AS xym
-         |  FROM v),
-         |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_terms,
-         |    CAST(SUM(xm) AS BIGINT) AS sx, CAST(SUM(ym) AS BIGINT) AS sy,
-         |    CAST(SUM(xxm) AS BIGINT) AS sxx,
-         |    CAST(SUM(xym) AS BIGINT) AS sxy FROM t),
-         |s AS (SELECT n_terms, sx, sy,
-         |    (CAST(n_terms AS DOUBLE) * (CAST(sxy AS DOUBLE) / 1e6)
-         |      - (CAST(sx AS DOUBLE) / 1e6) * (CAST(sy AS DOUBLE) / 1e6))
-         |    / (CAST(n_terms AS DOUBLE) * (CAST(sxx AS DOUBLE) / 1e6)
-         |      - (CAST(sx AS DOUBLE) / 1e6) * (CAST(sx AS DOUBLE) / 1e6))
-         |      AS slope
-         |  FROM m)
-         |SELECT n_terms, slope,
-         |  ((CAST(sy AS DOUBLE) / 1e6) - slope * (CAST(sx AS DOUBLE) / 1e6))
-         |    / CAST(n_terms AS DOUBLE) AS intercept
-         |FROM s""".stripMargin,
-
     // sketch rebuilt in SQL: same "0:d:item" md5 bucket per depth row,
     // estimate = MIN over the 4 probed counters
     "q200_count_min" ->
@@ -7759,21 +7124,6 @@ object SparkEntry {
          |    / CAST(COUNT(*) AS DOUBLE) AS accuracy
          |FROM pred GROUP BY own""".stripMargin,
 
-    // one (source, token) count table carries all five figures
-    "q213_lexical_diversity" ->
-      s"""WITH tok AS (SELECT source, unnest($sqlWords) AS token
-         |             FROM documents),
-         |c AS (SELECT source, token, COUNT(*) AS c FROM tok
-         |      WHERE token <> '' GROUP BY 1, 2)
-         |SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
-         |  COUNT(*) AS n_types,
-         |  CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_hapax,
-         |  CAST(COUNT(*) AS DOUBLE) / CAST(SUM(c) AS DOUBLE) AS ttr,
-         |  CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / CAST(COUNT(*) AS DOUBLE) AS hapax_ratio
-         |FROM c GROUP BY source""".stripMargin,
-
     // standalone + cumulative pass counters in one aggregate
     "q214_filter_waterfall" -> {
       val r0 = "n_chars >= 200"
@@ -7797,19 +7147,6 @@ object SparkEntry {
          |SELECT 3, 'min_tokens', a2, c2,
          |  CAST(c2 AS DOUBLE) / CAST(n AS DOUBLE) FROM a""".stripMargin
     },
-
-    // in-token adjacent char pairs, the BPE merge-candidate table
-    "q215_bpe_pairs" ->
-      s"""WITH tok AS (SELECT unnest($sqlWords) AS token FROM documents),
-         |pr AS (SELECT substr(token, i, 2) AS pair FROM (
-         |    SELECT token,
-         |      unnest(generate_series(1, len(token) - 1)) AS i
-         |    FROM tok WHERE len(token) >= 2)),
-         |c AS (SELECT pair, COUNT(*) AS cnt FROM pr GROUP BY pair)
-         |SELECT pair, cnt,
-         |  CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, pair ASC) AS INT)
-         |    AS rank
-         |FROM c ORDER BY cnt DESC, pair ASC LIMIT 50""".stripMargin,
 
     // one unpivoted (column, micro-value) count table carries mean
     // (exact sum), mode (count-desc/value-asc argmax), lower median
@@ -8304,28 +7641,6 @@ object SparkEntry {
          |FROM a""".stripMargin
     },
 
-    // row-local [.!?]+ segmentation; same words() formula per segment
-    "q237_sentence_stats" ->
-      """WITH segs AS (SELECT doc_id,
-        |    unnest(string_split_regex(text, '[.!?]+')) AS seg
-        |  FROM documents),
-        |sl AS (SELECT doc_id,
-        |    len(string_split(trim(regexp_replace(lower(seg), '\s+', ' ',
-        |      'g')), ' '))
-        |      - CASE WHEN trim(seg) = '' THEN 1 ELSE 0 END AS n
-        |  FROM segs),
-        |f AS (SELECT doc_id, n FROM sl WHERE n > 0),
-        |a AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sentences,
-        |    CAST(SUM(n) AS BIGINT) AS s, CAST(MAX(n) AS BIGINT) AS mx
-        |  FROM f GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  COALESCE(a.n_sentences, 0) AS n_sentences,
-        |  CASE WHEN a.n_sentences > 0 THEN
-        |    ROUND(CAST(a.s AS DOUBLE) / CAST(a.n_sentences AS DOUBLE)
-        |      * 1e6) / 1e6 END AS mean_sentence_words,
-        |  a.mx AS max_sentence_words
-        |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin,
-
     // daily volumes -> q202's decimal-staged rolling z per type
     "q238_trending_zscore" ->
       """WITH dly AS (SELECT event_type,
@@ -8598,27 +7913,6 @@ object SparkEntry {
         |  (dkey = ckey) AS is_correct
         |FROM rk WHERE rn = 1""".stripMargin,
 
-    "q248_readability" ->
-      """WITH c AS (SELECT doc_id,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)
-        |      AS n_words,
-        |    CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
-        |      AS BIGINT) AS n_sentences,
-        |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |      AS BIGINT) AS n_syllables
-        |  FROM documents)
-        |SELECT doc_id, n_words, n_sentences, n_syllables,
-        |  ROUND(206.835E0
-        |    - 1.015E0 * (CAST(n_words AS DOUBLE)
-        |        / CAST(n_sentences AS DOUBLE))
-        |    - 84.6E0 * (CAST(n_syllables AS DOUBLE)
-        |        / CAST(n_words AS DOUBLE)), 6) AS flesch_ease,
-        |  ROUND(0.39E0 * (CAST(n_words AS DOUBLE)
-        |        / CAST(n_sentences AS DOUBLE))
-        |    + 11.8E0 * (CAST(n_syllables AS DOUBLE)
-        |        / CAST(n_words AS DOUBLE)) - 15.59E0, 6) AS grade_level
-        |FROM c WHERE n_words > 0""".stripMargin,
-
     "q249_stream_first_touch" ->
       """SELECT user_id, min(epoch_ms(ts)) AS first_ms,
         |  max(epoch_ms(ts)) AS last_ms,
@@ -8692,45 +7986,6 @@ object SparkEntry {
         |  ROUND(abs(mcv_est - CAST(actual AS DOUBLE))
         |    / CAST(actual AS DOUBLE), 6) AS mcv_rel_err
         |FROM x""".stripMargin,
-
-    "q253_textrank" ->
-      s"""WITH t AS (SELECT $sqlWords AS w FROM documents),
-         |pr0 AS (SELECT unnest(list_transform(generate_series(1, len(w) - 1),
-         |    i -> [w[i], w[i + 1]])) AS pp FROM t WHERE len(w) >= 2),
-         |cov AS (SELECT least(pp[1], pp[2]) AS item_a,
-         |    greatest(pp[1], pp[2]) AS item_b
-         |  FROM pr0 WHERE pp[1] <> pp[2]
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 5),
-         |adj AS (SELECT item_a AS node, item_b AS nbr FROM cov
-         |        UNION SELECT item_b, item_a FROM cov),
-         |deg AS (SELECT node, COUNT(*) AS d FROM adj GROUP BY 1),
-         |n AS (SELECT COUNT(*) AS nn FROM deg),
-         |r0 AS (SELECT deg.node, deg.d, 1000000000000 // n.nn AS r
-         |       FROM deg CROSS JOIN n),
-         |c1 AS (SELECT adj.nbr AS node,
-         |    CAST(SUM((r0.r * 85) // (100 * r0.d)) AS BIGINT) AS infl
-         |  FROM r0 JOIN adj ON r0.node = adj.node GROUP BY 1),
-         |r1 AS (SELECT deg.node, deg.d,
-         |    ((1000000000000 * 15) // (100 * n.nn))
-         |      + COALESCE(c1.infl, 0) AS r
-         |  FROM deg CROSS JOIN n LEFT JOIN c1 ON deg.node = c1.node),
-         |c2 AS (SELECT adj.nbr AS node,
-         |    CAST(SUM((r1.r * 85) // (100 * r1.d)) AS BIGINT) AS infl
-         |  FROM r1 JOIN adj ON r1.node = adj.node GROUP BY 1),
-         |r2 AS (SELECT deg.node, deg.d,
-         |    ((1000000000000 * 15) // (100 * n.nn))
-         |      + COALESCE(c2.infl, 0) AS r
-         |  FROM deg CROSS JOIN n LEFT JOIN c2 ON deg.node = c2.node),
-         |c3 AS (SELECT adj.nbr AS node,
-         |    CAST(SUM((r2.r * 85) // (100 * r2.d)) AS BIGINT) AS infl
-         |  FROM r2 JOIN adj ON r2.node = adj.node GROUP BY 1),
-         |r3 AS (SELECT deg.node, deg.d,
-         |    ((1000000000000 * 15) // (100 * n.nn))
-         |      + COALESCE(c3.infl, 0) AS r
-         |  FROM deg CROSS JOIN n LEFT JOIN c3 ON deg.node = c3.node)
-         |SELECT node, r AS rank_micro,
-         |  CAST(r AS DOUBLE) / 1000000000000.0 AS pagerank
-         |FROM r3""".stripMargin,
 
     "q254_conformal_coverage" -> {
       val probs = Seq(0.05, 0.95)
@@ -9883,43 +9138,20 @@ object SparkEntry {
        |WHERE rank <= 10""".stripMargin
   }
 
-  /** q150's oracle for a given pinned deflate-size table
-    * ([[graft.Q150Deflate]] — one pin per testdata sf), plus the
-    * sf-independent LEVEL-PROBE doc (id 9000000001, CPython zlib level-6
-    * size 68 over the 8520-byte near-periodic text the engine side
-    * unions in — see the q150 query comment / r14 kill-test). */
-  private def sqlQ150For(pins: Seq[(Long, Long)]): String = {
-    val values = (pins :+ (9000000001L, 68L))
-      .map { case (i, n) => s"($i, $n)" }.mkString(", ")
-    s"""WITH v(doc_id, csize) AS (VALUES $values),
-       |docs2 AS (SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT 9000000001, repeat(repeat('abcdefghij', 7) || 'x', 120))
-       |SELECT d.doc_id,
-       |  CASE WHEN octet_length(encode(d.text)) = 0 THEN 1.0
-       |       ELSE CAST(v.csize AS DOUBLE)
-       |         / CAST(octet_length(encode(d.text)) AS DOUBLE) END
-       |    AS compression_ratio
-       |FROM docs2 d JOIN v USING (doc_id)""".stripMargin
-  }
-
-  /** [[oracleSql]] with the two DATA-PINNED oracles (q139's learned
-    * rotation literals, q150's CPython-zlib sizes) swapped for the
-    * pins matching `dir` — so the cross-sf harness gets a live
-    * compare at sf0.001/sf0.01/sf0.1 instead of a known-mismatch.
-    * For a dir with NO pin (exact sf-basename match — sf1, renamed
-    * copies) the two entries are OMITTED entirely: the harness records
-    * a skip, never a false mismatch against another sf's pins.
-    * [[Verify]] dumps this for whatever dir it runs; the driver's
-    * sf0.01 run emits exactly the classic [[oracleSql]] content. */
+  /** [[oracleSql]] with the one DATA-PINNED oracle (q139's learned
+    * rotation literals) swapped for the pin matching `dir` — so the
+    * cross-sf harness gets a live compare at sf0.001/sf0.01/sf0.1
+    * instead of a known-mismatch. For a dir with NO pin (exact
+    * sf-basename match — sf1, renamed copies) the entry is OMITTED
+    * entirely: the harness records a skip, never a false mismatch
+    * against another sf's pin. [[Verify]] dumps this for whatever dir
+    * it runs; at sf0.01 it is exactly the classic [[oracleSql]]
+    * content. */
   def oracleSqlFor(dir: String): Map[String, String] =
-    oracleSql --
-      (if (Q139Rotation.forDir(dir).isEmpty)
-        Seq("q139_ann_opq_rotated", "q150_compression_ratio") else Nil) ++
-      Q139Rotation.forDir(dir).map(p =>
-        "q139_ann_opq_rotated" -> sqlQ139For(p)).toMap ++
-      Q150Deflate.forDir(dir).map(p =>
-        "q150_compression_ratio" -> sqlQ150For(p)).toMap
+    Q139Rotation.forDir(dir) match {
+      case Some(p) => oracleSql + ("q139_ann_opq_rotated" -> sqlQ139For(p))
+      case None => oracleSql - "q139_ann_opq_rotated"
+    }
 
   /** Two exact Lloyd rounds on the q38 stride seed (cells = 8): CTEs
     * `e` (double embeddings), `c0` (seed), per-round `a{i}` (argmin

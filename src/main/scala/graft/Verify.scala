@@ -40,8 +40,8 @@ object Verify {
       case c => c.toString
     } + "\""
     // dir-matched oracle set: identical to SparkEntry.oracleSql for
-    // the driver's sf0.01, but the two data-pinned oracles (q139/q150)
-    // swap to the pins for THIS dir, so cross-sf runs compare live
+    // sf0.01, but the data-pinned oracle (q139) swaps to the pin for
+    // THIS dir, so cross-sf runs compare live
     val json = SparkEntry.oracleSqlFor(sfDir)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -125,4 +125,21 @@ case class SquaredDistance(left: Expression, right: Expression) extends VectorFo
   override protected def term(x: Double, y: Double): Double = (x - y) * (x - y)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SquaredDistance =
     copy(left = l, right = r)
+}
+
+/** Row-local dense mat-vec against a literal row-major d×d matrix
+  * (the broadcast-back step of [[graft.operators.PcaRotate]]). */
+case class MatVecLit(child: Expression, mat: Array[Double], d: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override protected def nullSafeEval(input: Any): Any =
+    VectorKernels.matVec(mat, d, input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("rotmat", mat, "double[]")
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.VectorKernels.matVec($ref, $d, $c)")
+  }
+  override protected def withNewChildInternal(c: Expression): MatVecLit =
+    copy(child = c)
 }

@@ -3,17 +3,14 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import graft.functions.Hashing.{md5Hash32, md5Hash60}
 
 /** Text-analysis column functions for large-scale training-data
   * pipelines: tokenization, shingling, MinHash, SimHash, language ID,
   * quality scoring, fingerprinting. All pure Catalyst column trees
   * (split/transform/aggregate HOFs) — codegen-friendly, no UDFs.
-  *
-  * Two hash families:
-  *  - md5-derived 32-bit hashes (`md5Hash32`): slower, but identical in
-  *    any engine with standard md5 — used by the oracle-checked queries;
-  *  - xxhash64 (`fastHash64`): Spark-native codegen'd hash for the
-  *    production path.
+  * Every hash comes from the engine-portable md5 of [[Hashing]], so the
+  * DuckDB oracles replay it.
   */
 object TextFunctions {
 
@@ -46,19 +43,6 @@ object TextFunctions {
     transform(sequence(lit(1), greatest(size(ws) - (n - 1), lit(1))),
       i => concat_ws(" ", slice(ws, i, lit(n))))
 
-  /** 32-bit engine-portable hash: first 8 hex chars of md5(seed:s). */
-  def md5Hash32(s: Column, seed: Int): Column =
-    conv(substring(md5(concat(lit(s"$seed:"), s)), 1, 8), 16, 10).cast("long")
-
-  /** 60-bit engine-portable hash: first 15 hex chars of md5(s). Wide
-    * enough that corpus-scale window sets (billions) see no birthday
-    * collisions, yet always fits a signed 64-bit int in any engine. */
-  def md5Hash60(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-
-  /** Spark-native 64-bit hash (production path). */
-  def fastHash64(s: Column, seed: Int): Column = xxhash64(lit(seed), s)
-
   // ---- PII scrubbing (the masking pass a curation pipeline runs
   // before releasing or training on scraped text). The three patterns
   // stay inside the Java-regex ∩ RE2 common subset (classes, bounded
@@ -70,23 +54,6 @@ object TextFunctions {
   /** Count of non-overlapping matches of `re` (count first, mask after). */
   def piiCount(text: Column, re: String): Column =
     size(regexp_extract_all(text, lit(re), lit(0)))
-
-  /** Unicode text cleanup: strip control characters, then NFC
-    * canonical composition (combining sequences collapse to their
-    * precomposed forms) — the normalization pass before any hashing or
-    * dedup so visually-identical text fingerprints identically.
-    * Portable: DuckDB's `nfc_normalize` implements the same Unicode
-    * algorithm. */
-  def cleanText(text: Column): Column =
-    ColumnBridge.column(graft.expr.NfcNormalize(ColumnBridge.expression(
-      regexp_replace(text, "[\\x00-\\x1f\\x7f]", ""))))
-
-  /** Deflate compression ratio (Gopher/CCNet quality signal):
-    * repetitive boilerplate compresses far below natural prose.
-    * Codegen'd kernel over the UTF-8 bytes. */
-  def compressionRatio(text: Column): Column =
-    ColumnBridge.column(graft.expr.CompressionRatio(
-      ColumnBridge.expression(text)))
 
   /** Mask emails → `<EMAIL>`, IPv4 → `<IP>`, 10-digit phones →
     * `<PHONE>`. Email first (its local part may contain digits/dots),
@@ -191,7 +158,7 @@ object TextFunctions {
   }
 
   /** Document fingerprint: md5 of whitespace-normalized lowercase text
-    * (rolling-hash alternative: `fastHash64(normalized)`). */
+    * (rolling-hash alternative: `xxhash64` of [[normalized]]). */
   def fingerprint(text: Column): Column =
     md5(concat_ws(" ", words(text)))
 

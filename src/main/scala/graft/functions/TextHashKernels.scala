@@ -1,41 +1,19 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.Hashing.{Zero, digest, hash32}
 
 /** Primitive kernels behind the text-hash expressions — one tight loop
   * per row instead of interpreted HOF lambdas. Called from whole-stage
   * codegen (static forwarders) and from interpreted eval.
   *
-  * `hash32` reproduces the engine-portable column form
-  * `conv(substring(md5(concat(seed, ":", s)), 1, 8), 16, 10)` bit for
-  * bit: the first 8 hex chars of an md5 are its first 4 bytes,
-  * big-endian. The DuckDB oracles use the same construction.
+  * Every kernel hashes with the engine-portable md5 of [[Hashing]]
+  * ([[Hashing.hash32]], or the same digest fed in place), so the
+  * DuckDB oracles replay it.
   */
 object TextHashKernels {
-
-  private val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest =
-      MessageDigest.getInstance("MD5")
-  }
-
-  /** First 32 bits of md5("<seed>:<s>") as an unsigned value in a long.
-    * The digest is fed "<seed>:" and the string's UTF-8 bytes as two
-    * updates — identical bytes, no per-call string concatenation. */
-  def hash32(s: UTF8String, seed: Int): Long = {
-    val d = md5.get()
-    d.reset()
-    d.update((if (seed == 0) Zero else (seed.toString + ":")
-      .getBytes(StandardCharsets.US_ASCII)))
-    d.update(s.getBytes)
-    val h = d.digest()
-    ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
-      ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
-  }
-
-  private val Zero = "0:".getBytes(StandardCharsets.US_ASCII)
 
   /** SimHash of a word array: bit b set iff Σ_words (±1 per word-hash
     * bit b) ≥ 0. Null words vote -1 on every bit (the HOF two-valued
@@ -79,7 +57,7 @@ object TextHashKernels {
       // ASCII fast path: char i == byte i, so each gram hashes as a
       // zero-copy slice of the shared byte array (same bytes as the
       // substring path — bit-identical hashes)
-      val d = md5.get()
+      val d = digest.get()
       var i = 0
       while (i < g) {
         d.reset()
@@ -149,7 +127,7 @@ object TextHashKernels {
     ends(t) = bytes.length
     val g = nTokens - l + 1
     val out = new Array[Long](g)
-    val d = md5.get()
+    val d = digest.get()
     var w = 0
     while (w < g) {
       val from = starts(w)
@@ -187,7 +165,7 @@ object TextHashKernels {
     val buf = new Array[Int](len - w + 1)
     var m = 0
     val bytes = text.getBytes
-    val d = md5.get()
+    val d = digest.get()
     if (bytes.length == len) {
       var i = w
       while (i <= len) {

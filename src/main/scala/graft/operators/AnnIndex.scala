@@ -33,7 +33,7 @@ object AnnIndex {
   private[operators] def hyperplanes(n: Int, dim: Int, seed: Long): Seq[Seq[Double]] =
     Seq.tabulate(n) { i =>
       Seq.tabulate(dim) { j =>
-        val h = graft.functions.TextHashKernels.hash32(
+        val h = graft.functions.Hashing.hash32(
           org.apache.spark.unsafe.types.UTF8String.fromString(s"$i:$j"), seed.toInt)
         h / 4294967296.0 * 2 - 1
       }

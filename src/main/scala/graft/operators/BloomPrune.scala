@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
+import graft.functions.Hashing
 
 /** Bloom-filter semi-join pruning: filter a huge probe table by a
   * predicate on a small build table WITHOUT shuffling the probe side.
@@ -23,7 +23,7 @@ import graft.functions.TextFunctions
   * avoidance, online-feature-store/internal/caching — SURVEY §2.1).
   *
   * Determinism: positions come from the engine-portable md5 hash
-  * ([[TextFunctions.md5Hash32]]), so a DuckDB oracle rebuilds the
+  * ([[Hashing.md5Hash32]]), so a DuckDB oracle rebuilds the
   * identical filter relationally and the audit counts match exactly.
   */
 object BloomPrune {
@@ -35,7 +35,7 @@ object BloomPrune {
 
   /** Bit position of hash function `i` for a key, in [0, mBits). */
   private def hashPos(key: Column, i: Int, mBits: Int): Column =
-    TextFunctions.md5Hash32(key.cast("string"), i) % mBits
+    Hashing.md5Hash32(key.cast("string"), i) % mBits
 
   /** Build the filter: `mBits/32` bit-packed words (each stored in a
     * long, low 32 bits used — see [[WordBits]]) over the DISTINCT

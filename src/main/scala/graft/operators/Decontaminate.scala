@@ -13,7 +13,7 @@ import graft.functions.TextFunctions
   * The benchmark side is tiny relative to the corpus (eval suites are
   * MBs; the corpus is TBs), so its distinct gram set is broadcast and
   * the corpus-side probe is a map-side hash semi-join — the 100 TB scan
-  * never shuffles. Corpus grams are deduped per document BEFORE the
+  * never shuffles. The corpus grams are deduped per document BEFORE the
   * join (`array_distinct` inside the row) so a document repeating a
   * contaminated gram doesn't inflate the probe. When the benchmark side
   * outgrows broadcast, the same plan degrades gracefully: Spark's

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.functions.Hashing.md5Hash60
 
 /** Document deduplication for training-data pipelines: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard (embedding-cosine near-dup
@@ -765,7 +766,7 @@ object Dedup {
     * container ships no binary corpora — byte semantics identical).
     *
     * Boundaries depend only on their own w-char window
-    * ([[graft.functions.TextFunctions.md5Hash60]] convention: engine-
+    * ([[graft.functions.Hashing.md5Hash60]] convention: engine-
     * portable md5 arithmetic), so the cut set is a pure per-row
     * function — no sequential state, fully SQL-replayable, and the
     * whole pass is ONE row-local projection (HOF over char positions,
@@ -805,7 +806,7 @@ object Dedup {
           .as("chunk_h"))
   }
 
-  /** Corpus-level CDC dedup accounting over [[cdcChunks]] output: total
+  /** Whole-corpus CDC dedup accounting over [[cdcChunks]] output: total
     * vs distinct chunk counts and chars — the storage-savings figure a
     * blob store gets from content-addressed chunks. One hash-grouped
     * pass (map-side combine); `dedup_ratio` = distinct/total chars. */

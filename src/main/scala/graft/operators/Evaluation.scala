@@ -768,7 +768,7 @@ object Evaluation {
       .select(col(idCol).cast("string").as("__id"),
         round(col(valueCol).cast("double") * 1e6).cast("long").as("__xm"))
     val aggs = (0 until reps).flatMap { b =>
-      val u = graft.functions.TextFunctions
+      val u = graft.functions.Hashing
         .md5Hash32(col("__id"), seedBase + b)
         .cast("double") / lit(4294967296.0)
       val w = PoissonCdf.map(c => when(u >= lit(c), 1L).otherwise(0L))
@@ -849,7 +849,7 @@ object Evaluation {
       seed: Int = 21): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     val folded = df.withColumn("fold",
-      graft.functions.TextFunctions
+      graft.functions.Hashing
         .md5Hash32(col(entityCol).cast("string"), seed) % k)
     groupAuc(folded, Seq("fold"), scoreCol, labelCol)
   }
@@ -918,7 +918,7 @@ object Evaluation {
       seed: Int = 51): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     val counts = df
-      .select((graft.functions.TextFunctions
+      .select((graft.functions.Hashing
         .md5Hash32(col(idCol).cast("string"), seed) % buckets)
         .as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("n_obs"))
@@ -955,7 +955,7 @@ object Evaluation {
     require(fractions.nonEmpty &&
       fractions.forall(f => f > 0.0 && f <= 1.0),
       s"fractions must be in (0, 1], got $fractions")
-    val u = graft.functions.TextFunctions
+    val u = graft.functions.Hashing
       .md5Hash32(col(idCol).cast("string"), seed)
       .cast("double") / lit(4294967296.0)
     val fanned = df
@@ -1213,9 +1213,9 @@ object Evaluation {
   def conformalCoverage(df: DataFrame, keyCol: String, valueCol: String,
       idCol: String, seed: Int = 13, trainPct: Int = 80,
       loProb: Double = 0.05, hiProb: Double = 0.95): DataFrame = {
-    import graft.functions.TextFunctions
+    import graft.functions.Hashing
     val staged = df.select(col(keyCol), col(valueCol),
-      (TextFunctions.md5Hash32(col(idCol).cast("string"), seed) % 100)
+      (Hashing.md5Hash32(col(idCol).cast("string"), seed) % 100)
         .as("__h"))
     val bounds = Normalize.quantilesBy(
         staged.filter(col("__h") < trainPct), keyCol, valueCol,

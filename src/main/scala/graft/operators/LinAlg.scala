@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.expr.{GramMatrix, VectorSumCount}
 
-/** Corpus-level linear algebra over embedding columns: the exact
+/** Dataset-level linear algebra over embedding columns: the exact
   * fixed-point Gram matrix Xᵀ·X (and the covariance that derives from
   * it) — the statistics PCA/whitening/OPQ rotations are fit from.
   *

@@ -432,10 +432,9 @@ object Normalize {
     * reference (exact percentile edges, the q12 convention); each
     * dataset assigns bins row-locally against the broadcast edge row;
     * per-bin terms are `(p−q)·ln(p/q)` rounded to `scale` dp (ln
-    * differs in the last ulps across libm implementations — the
-    * [[Corpus.cooccurrencePmi]] convention), null when either side's
-    * bin is empty (callers sum non-null terms). Output: one row per
-    * bin, `(bin, ref_n, cur_n, psi_term)`.
+    * differs in the last ulps across libm implementations), null when
+    * either side's bin is empty (callers sum non-null terms). Output:
+    * one row per bin, `(bin, ref_n, cur_n, psi_term)`.
     *
     * == Scale ==
     * One percentile aggregate over the reference (broadcast back as a

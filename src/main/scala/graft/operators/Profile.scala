@@ -50,6 +50,27 @@ object Profile {
     one.select(explode(rows).as("__r")).select(col("__r.*"))
   }
 
+  /** Equal-width histogram of a numeric column: `buckets` bins spanning
+    * [min, max], the max value clamped into the last bin. Bin edges ride
+    * along so the result is self-describing. One aggregate for the
+    * bounds (broadcast back) + one groupBy — no sort, no window.
+    * Output: `(bucket, n, lo, hi)`. */
+  def histogram(df: DataFrame, c: String, buckets: Int): DataFrame = {
+    val bounds = df.agg(min(col(c)).as("__mn"), max(col(c)).as("__mx"))
+    df.crossJoin(broadcast(bounds))
+      .select(least(
+        floor((col(c) - col("__mn")) / (col("__mx") - col("__mn")) * buckets),
+        lit(buckets - 1L)).cast("long").as("bucket"),
+        col("__mn"), col("__mx"))
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("n"),
+        // per-group constants: edges derive from the global bounds
+        (first(col("__mn")) + col("bucket") *
+          (first(col("__mx")) - first(col("__mn"))) / buckets).as("lo"),
+        (first(col("__mn")) + (col("bucket") + 1) *
+          (first(col("__mx")) - first(col("__mn"))) / buckets).as("hi"))
+  }
+
   /** Shannon entropy (nats) of each categorical column's value
     * distribution — the cardinality-collapse / constant-column alarm a
     * profiling pass raises (entropy ≈ 0 = the column stopped carrying

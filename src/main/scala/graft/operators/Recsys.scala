@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions.md5Hash32
+import graft.functions.Hashing.md5Hash32
 
 /** Recommender-training data preparation over the interaction log —
   * the feature/label assembly a BharatML-style stack feeds its ranking
@@ -356,8 +356,7 @@ object Recsys {
     * a checkpointed LogicalRDD loses its size stats, so without the
     * hint the planner falls back to sort-merge even on an item-graph
     * the old lineage-stat path happily broadcast. 2M edges ≈ tens of
-    * MB framed — the [[graft.operators.Corpus.cooccurrencePmi]] census
-    * convention; past the cap the join degrades to the plain shuffle
+    * MB framed; past the cap the join degrades to the plain shuffle
     * join a web-scale graph needs anyway. */
   private[operators] val BroadcastAdjCap = 2000000L
 

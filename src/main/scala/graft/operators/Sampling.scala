@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
+import graft.functions.{Hashing, TextFunctions}
 
 /** Deterministic sampling for training-data pipelines.
   *
@@ -21,7 +21,7 @@ object Sampling {
   /** Hash bucket in [0, 1e6) for a key column — membership tests are
     * `bucket < rate * 1e6`. */
   def hashBucket(key: Column, seed: Int = 7): Column =
-    TextFunctions.md5Hash32(key.cast("string"), seed) % Bucket
+    Hashing.md5Hash32(key.cast("string"), seed) % Bucket
 
   /** Keep each row iff its key hashes under `rate`. */
   def byHash(df: DataFrame, keyCol: String, rate: Double, seed: Int = 7): DataFrame =
@@ -280,7 +280,7 @@ object Sampling {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
     df
-      .withColumn("__h", TextFunctions.md5Hash32(col(keyCol).cast("string"), seed))
+      .withColumn("__h", Hashing.md5Hash32(col(keyCol).cast("string"), seed))
       .withColumn("sample_rank", row_number().over(
         Window.partitionBy(col(groupCol))
           .orderBy(col("__h").asc, col(keyCol).asc)))

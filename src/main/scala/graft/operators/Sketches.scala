@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.expr.{KmvSketch, MisraGries}
-import graft.functions.TextFunctions
+import graft.functions.Hashing
 
 /** Mergeable distinct-count sketches (KMV) as first-class aggregation
   * columns. The reference has no sketch surface (SURVEY §2.4 notes "no
@@ -80,7 +80,7 @@ object Sketches {
     // needs a reviewed allowance). Scale table: graft.ScaleProfile.
     val sk0 = df
       .select(col(segmentCol),
-        TextFunctions.md5Hash32(col(userCol).cast("string"), seed).as("__h"))
+        Hashing.md5Hash32(col(userCol).cast("string"), seed).as("__h"))
       .groupBy(col(segmentCol))
       .agg(kmvMinima(col("__h"), k).as("__mins"))
     val sk =
@@ -109,7 +109,7 @@ object Sketches {
 
   /** Per-group approximate distinct count of `valueCol` next to the
     * exact count: one aggregation pass, the engine-portable md5 hash
-    * (swap for `fastHash64` + hashBits=64 in production). */
+    * (swap for `xxhash64` + hashBits=64 in production). */
   def distinctByGroup(
       df: DataFrame,
       groupCol: String,
@@ -118,7 +118,7 @@ object Sketches {
       seed: Int = 7): DataFrame = {
     val hashed = df.select(col(groupCol),
       col(valueCol),
-      TextFunctions.md5Hash32(col(valueCol).cast("string"), seed).as("__h"))
+      Hashing.md5Hash32(col(valueCol).cast("string"), seed).as("__h"))
     hashed.groupBy(col(groupCol))
       .agg(
         countDistinct(col(valueCol)).as("exact_distinct"),
@@ -159,7 +159,7 @@ object Sketches {
     import org.apache.spark.sql.expressions.Window
     val sample = df
       .select(col(valueCol).cast("double").as("__v"),
-        TextFunctions.md5Hash32(col(idCol).cast("string"), seed).as("__h"))
+        Hashing.md5Hash32(col(idCol).cast("string"), seed).as("__h"))
       .orderBy(col("__h").asc, col("__v").asc)
       .limit(k)
     // single-partition windows are fine HERE: the sample is ≤ k rows
@@ -227,7 +227,7 @@ object Sketches {
     * sketch: the engine-portable md5 hash of `"d:v"` mod `width` —
     * each depth row is an independent hash function. */
   private def cmBucket(d: Column, v: Column, width: Int): Column =
-    TextFunctions.md5Hash32(concat_ws(":", d, v), 0) % width
+    Hashing.md5Hash32(concat_ws(":", d, v), 0) % width
 
   /** Count-min sketch table (Cormode & Muthukrishnan, J. Algorithms
     * 2005): `depth` independent hash rows of `width` counters; each

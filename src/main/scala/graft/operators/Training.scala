@@ -209,7 +209,7 @@ object Training {
     * corpus size. */
   def shard(df: DataFrame, idCol: String, rowsPerShard: Long): DataFrame = {
     require(rowsPerShard > 0, "rowsPerShard must be positive")
-    val h = pmod(graft.functions.TextFunctions
+    val h = pmod(graft.functions.Hashing
       .md5Hash32(col(idCol).cast("string"), 0), lit(2147483648L))
     val rn = col("__rank") - 1
     PrefixSum.inclusiveBy(
@@ -222,7 +222,7 @@ object Training {
 
   /** Next-token training pairs from encoded id sequences (the
     * `(input_id, label_id)` supervision a causal-LM data pipeline
-    * emits after [[graft.operators.Corpus.encodeDocs]]): position `p`
+    * emits from vocab-id sequences): position `p`
     * pairs `ids[p]` with `ids[p+1]`; the final token has no label and
     * emits nothing. Output: `(idCol, pos, input_id, label_id)` with
     * `pos` 0-based.

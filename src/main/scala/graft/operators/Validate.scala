@@ -304,7 +304,7 @@ object Validate {
       valueCols: Seq[String]): DataFrame = {
     def hashed(df: DataFrame, tag: String): DataFrame =
       df.select(keyCols.map(col) :+
-        graft.functions.TextFunctions.md5Hash60(concat_ws("|",
+        graft.functions.Hashing.md5Hash60(concat_ws("|",
           valueCols.map(c => coalesce(col(c).cast("string"), lit(" "))): _*))
           .as(s"__h$tag"): _*)
     hashed(v1, "1").join(hashed(v2, "2"), keyCols, "full_outer")
@@ -318,7 +318,7 @@ object Validate {
   def tableFingerprint(df: DataFrame, cols: Seq[String]): DataFrame = {
     val rendered = concat_ws("|",
       cols.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*)
-    df.select(graft.functions.TextFunctions.md5Hash60(rendered).as("__h"))
+    df.select(graft.functions.Hashing.md5Hash60(rendered).as("__h"))
       .agg(count(lit(1)).as("n_rows"),
         // decimal carrier: a plain long sum of 60-bit values overflows
         // after a handful of rows; the exact decimal sum reduced mod

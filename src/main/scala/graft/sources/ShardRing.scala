@@ -26,7 +26,7 @@ object ShardRing {
 
   /** First 8 hex chars of md5(s) as a long — the JVM twin of the
     * `conv(substring(md5(s), 1, 8), 16, 10)` expression convention
-    * ([[graft.functions.TextFunctions.md5Hash32]] without the seed
+    * ([[graft.functions.Hashing.md5Hash32]] without the seed
     * prefix; the ring seed lives in the hashed string itself). */
   private[graft] def md5Prefix32(s: String): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")

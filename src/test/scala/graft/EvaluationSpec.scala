@@ -916,7 +916,7 @@ class EvaluationSpec extends AnyFunSuite with SparkSuite {
         md.take(4).map(x => f"$x%02x").mkString, 16) % k
     }
     val withFold = df.withColumn("fold",
-      graft.functions.TextFunctions.md5Hash32(col("ent").cast("string"), 21)
+      graft.functions.Hashing.md5Hash32(col("ent").cast("string"), 21)
         % k)
     val pairs = withFold.select("ent", "fold").distinct()
       .as[(Long, Long)].collect()

@@ -967,17 +967,4 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
       assert(conf.getOption(check) === Some("true"), "a set value is restored")
     } finally conf.unset(check)
   }
-
-  test("readability scores a hand-computed fixture") {
-    val docs = Seq((1L, "The cat sat. It ran!"),
-      (2L, "no punctuation here")).toDF("doc_id", "text")
-    val got = graft.operators.Corpus.readability(docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    // doc 1: words [the,cat,sat,it,ran]=5, sentences [., !]=2,
-    // vowel groups: e,a,a,i,a = 5
-    assert(got(1L) === ((5L, 2L, 5L)))
-    // doc 2: 3 words, floor 1 sentence, o,u,ua,io,e,e = 6 groups
-    assert(got(2L) === ((3L, 1L, 6L)))
-  }
 }

@@ -3,11 +3,11 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Corpus, Decontaminate, Funnel, Incremental, LinAlg, Sampling, Training}
+import graft.operators.{Decontaminate, Funnel, Incremental, LinAlg, Sampling, Training}
 
 /** Round-3 pipeline operators: Gram matrix, decontamination,
-  * incremental aggregate maintenance, funnel, chunking, temperature
-  * mixing, rolling-frame features. */
+  * incremental aggregate maintenance, funnel, temperature mixing,
+  * rolling-frame features. */
 class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
@@ -174,46 +174,6 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
     assert(got === Map(1L -> 3, 2L -> 2, 3L -> 0))
   }
 
-  test("chunk: stride windows, short doc yields one chunk") {
-    val docs = Seq(
-      (1L, "a b c d e f g"), // 7 tokens, size 3 stride 2 → starts 1,3,5
-      (2L, "x y")            // shorter than size → one chunk
-    ).toDF("doc_id", "text")
-    val got = Corpus.chunk(docs, "doc_id", "text", chunkSize = 3, stride = 2)
-      .orderBy("doc_id", "chunk_idx")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getInt(3)))
-    assert(got.toSeq === Seq(
-      (1L, 0, "a b c", 3), (1L, 1, "c d e", 3), (1L, 2, "e f g", 3),
-      (2L, 0, "x y", 2)))
-  }
-
-  test("chunk: anchored tail — every token of every doc is in >=1 chunk") {
-    // 8 tokens, size 3 stride 2: stride starts 1,3,5 cover a..g only —
-    // the anchored tail start 6 (len-size+1) picks up token 8
-    val docs = Seq(
-      (1L, "a b c d e f g h"),
-      (2L, "a b c d"),         // starts 1 + tail 2
-      (3L, "a b c")            // exact fit, no tail
-    ).toDF("doc_id", "text")
-    val got = Corpus.chunk(docs, "doc_id", "text", chunkSize = 3, stride = 2)
-      .orderBy("doc_id", "chunk_idx")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getInt(3)))
-    assert(got.toSeq === Seq(
-      (1L, 0, "a b c", 3), (1L, 1, "c d e", 3), (1L, 2, "e f g", 3),
-      (1L, 3, "f g h", 3),   // anchored tail, full-size
-      (2L, 0, "a b c", 3), (2L, 1, "b c d", 3),
-      (3L, 0, "a b c", 3)))
-    // coverage property across a spread of shapes
-    for (len <- 1 to 12; size <- Seq(3, 4); stride <- Seq(2, 3)) {
-      val text = (1 to len).map(i => s"t$i").mkString(" ")
-      val chunks = Corpus.chunk(Seq((1L, text)).toDF("doc_id", "text"),
-          "doc_id", "text", size, stride)
-        .collect().flatMap(_.getString(2).split(" ")).toSet
-      assert((1 to len).forall(i => chunks.contains(s"t$i")),
-        s"len=$len size=$size stride=$stride missing tokens")
-    }
-  }
-
   test("temperatureMix: quotas sum to total, stable under repartition") {
     val df = (1 to 300).map { i =>
       val src = if (i <= 200) "big" else if (i <= 280) "mid" else "small"
@@ -253,65 +213,6 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
     val small = (1L to 5L).map(i => (i, if (i < 3) "a" else "b")).toDF("id", "src")
     assert(Sampling.temperatureMix(small, "id", "src", alpha = 0.5,
       total = 50).count() === 5L)
-  }
-
-  test("bm25: term saturation and length normalization rank as expected") {
-    val docs = Seq(
-      (1L, "cat cat cat cat dog"),          // high tf(cat), short
-      (2L, "cat mouse bird fish lion bear wolf deer"), // one cat, long
-      (3L, "dog dog dog"),                  // no query term
-      (4L, "cat cat")                       // 2x cat, shortest
-    ).toDF("doc_id", "text")
-    val got = Corpus.bm25Search(docs, "doc_id", "text",
-        terms = Seq("cat"), topN = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-    // doc 3 absent; doc 4 beats doc 2 (shorter, more hits); scores > 0
-    assert(got.map(_._1).toSet === Set(1L, 2L, 4L))
-    assert(got.forall(_._3 === 1L))
-    val score = got.map(t => t._1 -> t._2).toMap
-    assert(score(4L) > score(2L))
-    assert(got.forall(_._2 > 0))
-  }
-
-  test("cooccurrencePmi: frequent collocation scores above independence") {
-    // "new york" always adjacent; "aa"/"bb" frequent but never adjacent
-    val rows = (1 to 10).map(i => (i.toLong, "new york aa bb")) ++
-      Seq((11L, "bb aa"), (12L, "aa"), (13L, "bb"))
-    val got = Corpus.cooccurrencePmi(rows.toDF("doc_id", "text"), "text",
-        minCount = 5)
-      .collect().map(r => ((r.getString(0), r.getString(1)),
-        (r.getLong(2), r.getDouble(5)))).toMap
-    val (nyCount, nyPmi) = got(("new", "york"))
-    assert(nyCount === 10L)
-    assert(nyPmi > 0) // collocated far above chance
-    // adjacent pair "york aa" exists 10 times too but its PMI is lower
-    // than the perfect collocation (york follows new exclusively)
-    assert(got(("york", "aa"))._2 <= nyPmi)
-  }
-
-  test("cooccurrencePmi: degrade path (vocab over the broadcast census) " +
-      "is multiset-identical and broadcasts no vocab side") {
-    // the bench corpus itself, so the identity is proven on the data
-    // the green q83 row is graded on (the cappedFanJoin spec pattern)
-    val docs = Tables.documents(spark, sf)
-    val bcast = Corpus.cooccurrencePmi(docs, "text", minCount = 5)
-    // cap 0 forces the over-census path: shuffle-hash vocab joins +
-    // the same one-row totals crossJoin
-    val degraded = Corpus.cooccurrencePmi(docs, "text", minCount = 5,
-      broadcastVocabCap = 0L)
-    assert(degraded.exceptAll(bcast).isEmpty &&
-      bcast.exceptAll(degraded).isEmpty)
-    assert(degraded.count() === bcast.count())
-    // plan shape: the degraded path's vocab joins must be shuffled
-    // hash joins — the only broadcast left is the bounded one-row
-    // totals crossJoin (BroadcastNestedLoopJoin, never a
-    // BroadcastHashJoin keyed on the vocab)
-    val dplan = degraded.queryExecution.executedPlan.toString
-    assert(!dplan.contains("BroadcastHashJoin"), dplan.take(2000))
-    assert(dplan.contains("ShuffledHashJoin"), dplan.take(2000))
-    // and the default path DOES broadcast (small vocab, the fast shape)
-    val bplan = bcast.queryExecution.executedPlan.toString
-    assert(bplan.contains("BroadcastHashJoin"), bplan.take(2000))
   }
 
   test("plan shapes: decontaminate broadcasts, gram matrix partial-aggregates") {

@@ -16,7 +16,7 @@ class PlanLintSpec extends AnyFunSuite with SparkSuite {
     // same reviewed `!bnlj` allowances the sf0.1 audit uses
     val baseline = PlanAudit.readBaseline(
       java.nio.file.Paths.get(PlanAudit.BaselineFile))
-    // The 294 queries are independent jobs on a shared session: run
+    // The corpus queries are independent jobs on a shared session: run
     // them from a small thread pool (guide §2.6 — actions are only
     // sequential because the driver calls them sequentially) so the
     // next query's tiny sf0.001 jobs back-fill the executor threads
@@ -81,15 +81,36 @@ class PlanLintSpec extends AnyFunSuite with SparkSuite {
     val os = SparkEntry.oracleSql.keySet
     assert((os -- qs).isEmpty,
       s"oracles without queries: ${(os -- qs).mkString(", ")}")
-    // round 7 closed the last two gaps (q139 via the materialized
-    // learned rotation, q150 via pinned CPython-zlib deflate sizes)
+    // round 7 closed the last gap (q139 via the materialized learned
+    // rotation)
     assert((qs -- os).isEmpty,
       s"queries without oracles: ${(qs -- os).mkString(", ")}")
   }
 
+  test("every exchange-baseline key names a live query") {
+    val baseline = PlanAudit.readBaseline(
+      java.nio.file.Paths.get(PlanAudit.BaselineFile))
+    assert(baseline.nonEmpty)
+    val stale = baseline.keySet.map(_.stripSuffix("!bnlj")) --
+      SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"baseline keys without a query: ${stale.mkString(", ")}")
+  }
+
+  test("mergeBaseline drops the entries of queries that no longer exist") {
+    val baseline = Map("q1_kept" -> 3, "q2_audited" -> 5,
+      "q2_audited!bnlj" -> 2, "q3_gone" -> 4, "q3_gone!bnlj" -> 1)
+    val shapes = Map("q2_audited" -> PlanAudit.Shape(4, 0, 1))
+    val merged = PlanAudit.mergeBaseline(baseline, shapes,
+      live = Set("q1_kept", "q2_audited"))
+    // unaudited live entries carry over; audited ones take the observed
+    // counts (the allowance ratchets down); dead ones leave with their twin
+    assert(merged === Map("q1_kept" -> 3, "q2_audited" -> 4,
+      "q2_audited!bnlj" -> 1))
+  }
+
   test("oracleSqlFor: pinned dirs get their per-sf oracle, unpinned " +
-      "dirs OMIT q139/q150 (skip, never a false mismatch)") {
-    val pinned = Set("q139_ann_opq_rotated", "q150_compression_ratio")
+      "dirs OMIT q139 (skip, never a false mismatch)") {
+    val pinned = Set("q139_ann_opq_rotated")
     for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1", "/root/testdata/sf0.1/")) {
       val m = SparkEntry.oracleSqlFor(d)

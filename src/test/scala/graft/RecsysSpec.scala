@@ -158,31 +158,6 @@ class RecsysSpec extends AnyFunSuite with SparkSuite {
     assert(got(8)._3 === 80.0)
   }
 
-  test("vocabIds: contiguous frequency-ranked ids, partition-invariant") {
-    val docs = Seq((1L, "b b b a a c"), (2L, "a c d"), (3L, "c")).toDF("doc_id", "text")
-    // counts: a=3, b=3, c=3, d=1 -> order (cnt desc, token asc)
-    def run(parts: Int) = graft.operators.Corpus
-      .vocabIds(docs.repartition(parts), "text")
-      .select($"token", $"cnt", $"vocab_id")
-      .as[(String, Long, Int)].collect().sortBy(_._3)
-    val got = run(1)
-    assert(got.toSeq === Seq(("a", 3L, 0), ("b", 3L, 1), ("c", 3L, 2),
-      ("d", 1L, 3)))
-    assert(run(5).toSeq === got.toSeq)
-  }
-
-  test("encodeDocs: ordered ids, OOV -> -1, counts consistent") {
-    val docs = Seq((1L, "b a d b"), (2L, "a a c")).toDF("doc_id", "text")
-    // vocab: a=0 (cnt 3), b=1 (cnt 2); c and d OOV
-    val vocab = graft.operators.Corpus.vocabIds(docs, "text")
-      .filter($"vocab_id" < 2)
-    val got = graft.operators.Corpus.encodeDocs(docs, vocab)
-      .select($"doc_id", $"ids", $"n_tokens", $"n_oov")
-      .as[(Long, Seq[Int], Long, Long)].collect().sortBy(_._1)
-    assert(got(0) === ((1L, Seq(1, 0, -1, 1), 4L, 1L)))
-    assert(got(1) === ((2L, Seq(0, 0, -1), 3L, 1L)))
-  }
-
   test("randomWalks: valid edges, deterministic, one walk per node") {
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 1L))
       .toDF("item_a", "item_b")

@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Corpus, Evaluation}
+import graft.operators.Evaluation
 import graft.sources.ShardRing
 
-/** Consistent-hash routing, TextRank, conformal coverage. */
+/** Consistent-hash routing, conformal coverage. */
 class RoutingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
@@ -36,22 +36,6 @@ class RoutingSpec extends AnyFunSuite with SparkSuite {
     assert(a.values.forall(s => s >= 0 && s < 16))
     // all 16 shards own something at 500 keys x 50 vnodes
     assert(a.values.toSet.size === 16)
-  }
-
-  test("textrank ranks a bridging word above an equally-frequent leaf") {
-    // hub appears with many distinct neighbors; leaf repeats with one
-    val docs = (Seq.fill(6)("leaf anchor") ++
-      Seq("hub n1", "hub n2", "hub n3", "hub n4", "hub n5", "hub n6"))
-      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
-    val ranks = Corpus.textrankKeywords(docs, "text",
-        minCount = 1, iterations = 3)
-      .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-    assert(ranks("hub") > ranks("leaf"),
-      s"hub ${ranks("hub")} must outrank leaf ${ranks("leaf")}")
-    // total probability mass stays ~1 (integer fixed-point dust only)
-    val total = ranks.values.sum
-    assert(math.abs(total - 1.0) < 0.01, s"mass $total")
   }
 
   test("conformal coverage near nominal on a smooth distribution") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.TextFunctions
+import graft.functions.Hashing
 import graft.operators.Sketches
 
 /** KMV distinct-count sketch: exactness below capacity, estimation
@@ -15,7 +15,7 @@ class SketchSpec extends AnyFunSuite with SparkSuite {
   private def hashed(n: Int, parts: Int = 8) =
     (1 to n).map(i => s"v$i").toDF("v")
       .repartition(parts)
-      .select(TextFunctions.md5Hash32(col("v"), 7).as("h"))
+      .select(Hashing.md5Hash32(col("v"), 7).as("h"))
 
   test("exact below capacity: sketch of n < k distinct values IS the distinct hash set") {
     val df = hashed(40).union(hashed(40)) // duplicates must not count
@@ -46,7 +46,7 @@ class SketchSpec extends AnyFunSuite with SparkSuite {
   test("union law: kmvUnion of two group sketches == sketch of the union") {
     val a = hashed(300)
     val b = (200 to 450).map(i => s"v$i").toDF("v") // overlaps a
-      .select(TextFunctions.md5Hash32(col("v"), 7).as("h"))
+      .select(Hashing.md5Hash32(col("v"), 7).as("h"))
     val k = 32
     val sa = a.agg(Sketches.kmvMinima(col("h"), k).as("m")).select("m")
     val sb = b.agg(Sketches.kmvMinima(col("h"), k).as("m")).select("m")
@@ -112,7 +112,7 @@ class SketchSpec extends AnyFunSuite with SparkSuite {
     // halves unioned (the sample, not just the estimate, merges)
     val bottom = (half: org.apache.spark.sql.DataFrame) =>
       half.select($"id", $"v",
-          graft.functions.TextFunctions.md5Hash32($"id".cast("string"), 7)
+          graft.functions.Hashing.md5Hash32($"id".cast("string"), 7)
             .as("h"))
         .orderBy($"h".asc, $"v".asc).limit(100)
     val merged = bottom(df.filter($"id" % 2 === 0))

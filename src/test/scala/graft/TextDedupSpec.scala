@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.functions.Hashing.{md5Hash32, md5Hash60}
 import graft.operators.Dedup
 
 class TextDedupSpec extends AnyFunSuite with SparkSuite {

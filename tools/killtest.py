@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Oracle kill-test: prove every gate class can go RED.
 
-With a 294-green corpus the residual correctness risk is a gate that
-CANNOT fail (a tautological oracle). This harness applies deliberate
+With an all-green query corpus the residual correctness risk is a gate
+that CANNOT fail (a tautological oracle). This harness applies deliberate
 single-point mutations to the ENGINE source, recompiles, reruns the
 driver-style compare (graft.Verify -> tools/check_oracle.py) on the
 mutated tree, and asserts the gate reads RED. A mutation that survives
@@ -91,21 +91,6 @@ MUTATIONS = [
         "queries": ["q139_ann_opq_rotated"],
         "expect": "red",
         "mechanism": "asymmetric mean correction -> wrong covariance -> rotation off the pin",
-    },
-    {
-        # (d2) data-pinned oracle q150: engine deflate level vs pinned
-        # CPython-zlib(level 6) sizes
-        "name": "q150_deflate_level",
-        "file": "src/main/scala/graft/functions/MediaHeaders.scala",
-        "old": "    val d = new java.util.zip.Deflater(6, false)",
-        "new": "    val d = new java.util.zip.Deflater(5, false)",
-        "queries": ["q150_compression_ratio"],
-        "expect": "red",
-        "mechanism": "level-5 compressed sizes differ from the level-6 pins. "
-                     "First run SURVIVED: all 500 testdata docs compress "
-                     "identically at levels 5 and 6; q150 now unions a "
-                     "level-probe doc (68 bytes at L6, 87 at L5) so level "
-                     "drift is driver-visible",
     },
     {
         # (e) shared-literal IEEE oracle q175: the oracle carries its
@@ -475,33 +460,6 @@ MUTATIONS = [
                      "a phantom split label",
     },
     {
-        # (z) ranking-function constant class: BM25's idf smoothing
-        # 0.5 drifts to 1.0 (the classic Lucene-vs-textbook variant
-        # confusion). Scores are micro-rounded on both sides, so the
-        # drift is well above the rounding floor.
-        "name": "bm25_idf_smoothing",
-        "file": "src/main/scala/graft/operators/Corpus.scala",
-        "old": '        log(lit(1.0) + (col("__N") - col("__df") + 0.5) / (col("__df") + 0.5)))',
-        "new": '        log(lit(1.0) + (col("__N") - col("__df") + 1.0) / (col("__df") + 1.0)))',
-        "queries": ["q82_bm25_search"],
-        "expect": "red",
-        "mechanism": "every term idf shifts -> rounded term scores and the "
-                     "top-N cut drift off the oracle's 0.5-smoothed twin",
-    },
-    {
-        # (z2) same family, TF-IDF: document count gains a +1 Laplace
-        # term the oracle's log(N/df) twin does not have. The additive
-        # log((N+1)/N) idf shift lands ~2e-5 on scores rounded at 1e-6.
-        "name": "tfidf_idf_smooth",
-        "file": "src/main/scala/graft/operators/Corpus.scala",
-        "old": '          log(col("__n").cast("double") / col("__df")), scale))',
-        "new": '          log((col("__n").cast("double") + 1.0) / col("__df")), scale))',
-        "queries": ["q66_tfidf_topterms"],
-        "expect": "red",
-        "mechanism": "idf = log((N+1)/df) vs the oracle's log(N/df): every "
-                     "emitted 6-decimal score shifts by tf/len * log((N+1)/N)",
-    },
-    {
         # (aa) normalization class: min-max loses its min anchor
         # (x/max instead of (x-min)/(max-min)) — correct only when
         # min == 0.
@@ -596,7 +554,7 @@ MUTATIONS = [
         # column maximum computes bucket index == buckets and lands in
         # a phantom 21st bucket.
         "name": "histogram_edge_clamp",
-        "file": "src/main/scala/graft/operators/Corpus.scala",
+        "file": "src/main/scala/graft/operators/Profile.scala",
         "old": '      .select(least(\n'
                '        floor((col(c) - col("__mn")) / (col("__mx") - col("__mn")) * buckets),\n'
                '        lit(buckets - 1L)).cast("long").as("bucket"),',
@@ -952,13 +910,15 @@ def main():
         # (replace re-run mutations by name, keep the rest; seeded
         # from the newest prior round when this round's file doesn't
         # exist yet) so a targeted re-check never silently shrinks
-        # the recorded corpus
+        # the recorded corpus; a prior result whose mutation is no
+        # longer in MUTATIONS is dropped, never carried forward
         prev = json.load(open(seed)).get("mutations", [])
-        names = {r["mutation"] for r in results}
-        merged = [r for r in prev if r["mutation"] not in names]
         order = {m["name"]: i for i, m in enumerate(MUTATIONS)}
+        names = {r["mutation"] for r in results}
+        merged = [r for r in prev
+                  if r["mutation"] in order and r["mutation"] not in names]
         results = sorted(merged + results,
-                         key=lambda r: order.get(r["mutation"], 99))
+                         key=lambda r: order[r["mutation"]])
     ok = all(r.get("ok") for r in results)
     art = {"sf": SF, "all_expected": ok, "mutations": results}
     with open(art_path, "w") as f:
