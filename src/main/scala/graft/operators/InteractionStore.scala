@@ -20,12 +20,23 @@ import org.apache.spark.sql.types.DateType
   * window ranking + retention predicates.
   *
   * == Scale design ==
-  * Retention and retrieval shuffle once on (user, week) / user — the
-  * store's natural key. Event tables at 100 TB should be written
-  * partitioned by week (`partitionBy(weekCol)`), which turns the time-
-  * range predicate into partition pruning; the per-user rank never sees
-  * more than `cap × weeks` rows per user after pushdown. Skewed hot
-  * users re-split via AQE skew-join/partition handling.
+  * Time-range reads are a two-tier cascade, as point retrieves are in
+  * [[FeatureStore]]:
+  *  - A read for a pinned set of users over an event table small enough
+  *    for the driver is answered by [[RangeTier]] from a per-user index
+  *    of events pre-sorted newest first, built once per table version
+  *    and shared by every user set: a bisection to `end`, a walk with an
+  *    early limit, no Spark job — the reference's read of one user's
+  *    pre-sorted buckets.
+  *  - Everything else — no user filter, a table above
+  *    `spark.sql.autoBroadcastJoinThreshold`, non-constant bounds — is
+  *    the scan path. Retention and retrieval shuffle once on
+  *    (user, week) / user, the store's natural key. Event tables at
+  *    100 TB should be written partitioned by week
+  *    (`partitionBy(weekCol)`), which turns the time-range predicate
+  *    into partition pruning; the per-user rank never sees more than
+  *    `cap × weeks` rows per user after pushdown. Skewed hot users
+  *    re-split via AQE skew-join/partition handling.
   */
 object InteractionStore {
 
@@ -121,16 +132,29 @@ object InteractionStore {
   }
 
   /** Time-range retrieval: filter to [start, end], newest-first per
-    * user, at most `limit` events each (W1/O1/O3/P6). `types` narrows
-    * event types (click/order twin services, J5).
+    * user (`ts` desc, then `tieBreak` asc), at most `limit` events each
+    * (W1/O1/O3/P6), numbered by a 1-based `rank`. `types` narrows event
+    * types (click/order twin services, J5).
     *
-    * When `events` scans a file relation partitioned by a date-typed
-    * `week` column (the [[graft.sources.Layout.writeWeekPartitionedEvents]]
+    * Driver tier: when `events` filters one file relation or local data
+    * by a conjunct pinning `userCol` to constants (`isin` or `===`),
+    * `start` and `end` are foldable, every filter is deterministic and
+    * evaluable, and the table passes [[SnapshotCache.fitsDriver]],
+    * [[RangeTier]] answers from its per-user index with a
+    * `LocalRelation` of the same output attributes, so collecting the
+    * answer launches no job. Every filter — the caller's, the range,
+    * `types` and the week bound — is evaluated on the driver as
+    * analyzed, so residual conditions keep their exact semantics.
+    *
+    * Scan path (anything else, e.g. a read with no user filter): when
+    * `events` scans a file relation partitioned by a date-typed `week`
+    * column (the [[graft.sources.Layout.writeWeekPartitionedEvents]]
     * layout), the range also bounds `week`, so only the touched week
     * directories are listed and read. The bound is widened by one week
     * on each side: week buckets are cut in the WRITER's session time
     * zone and `start`/`end` are truncated in the reader's, and two time
-    * zones place an instant at most one week boundary apart.
+    * zones place an instant at most one week boundary apart. One
+    * `row_number` window over `userCol` ranks the survivors.
     */
   def retrieveRange(
       events: DataFrame,
@@ -147,10 +171,12 @@ object InteractionStore {
     val ranged = pruned.filter(col(tsCol).between(start, end))
     val typed = if (types.isEmpty) ranged
                 else ranged.filter(col("event_type").isin(types: _*))
-    val w = Window.partitionBy(col(userCol))
-      .orderBy(col(tsCol).desc, col(tieBreak).asc)
-    typed.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= capped)
+    RangeTier.retrieve(typed, capped, userCol, tsCol, tieBreak).getOrElse {
+      val w = Window.partitionBy(col(userCol))
+        .orderBy(col(tsCol).desc, col(tieBreak).asc)
+      typed.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= capped)
+    }
   }
 
   /** `events`' `week` column when it is a date-typed partition column

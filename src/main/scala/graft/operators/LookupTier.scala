@@ -146,7 +146,7 @@ private[graft] object LookupTier {
   /** The attributes `names` resolve to in `output` (session resolver);
     * `None` when one is missing or ambiguous, left to the scan path's
     * analyzer to report. */
-  private def attrs(output: Seq[Attribute], names: Seq[String]): Option[Seq[Attribute]] = {
+  private[operators] def attrs(output: Seq[Attribute], names: Seq[String]): Option[Seq[Attribute]] = {
     val resolver = org.apache.spark.sql.internal.SQLConf.get.resolver
     val found = names.map(n => output.filter(a => resolver(a.name, n)))
     Option.when(found.forall(_.size == 1))(found.map(_.head))

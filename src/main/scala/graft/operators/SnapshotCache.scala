@@ -9,15 +9,20 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Driver-side cache of values derived from table snapshots — the one
-  * mechanism behind the operator tiers that answer on the driver
-  * ([[LookupTier]], [[IvfTier]]).
+  * mechanism behind the three operator tiers that answer on the driver:
+  * [[LookupTier]] (point retrieve and stitch), [[IvfTier]] (int8 IVF
+  * top-k) and [[RangeTier]] (per-user time-range reads).
   *
   * A snapshot is keyed by the canonicalized optimized plans of its
   * sources plus their input-file sets, so a rewrite (an
-  * `Ingest.upsertBatch` swap, an index re-written at the same path)
-  * yields a new key and a stale value is never served. At most
-  * `maxEntries` values are held, least recently used evicted first;
-  * concurrent callers of one snapshot wait for a single build.
+  * `Ingest.upsertBatch` swap, an index re-written at the same path, a
+  * rewritten events directory) yields a new key and a stale value is
+  * never served. A tier that organizes a value by columns its caller
+  * names (the range tier's user and sort columns) puts them in the key
+  * too, so two callers that index one table differently never share a
+  * value. At most `maxEntries` values are held, least recently used
+  * evicted first; concurrent callers of one snapshot wait for a single
+  * build.
   *
   * Counters (tests and callers read them; one increment per call):
   * [[builds]], [[hits]], [[evictions]], and each held entry's
@@ -83,8 +88,9 @@ private[graft] object SnapshotCache {
   val MaxEntries = 8
 
   /** One snapshot of `sources`: their canonicalized optimized plans and
-    * input-file sets, in order. */
-  final case class Key(plans: Seq[LogicalPlan], files: Seq[Set[String]])
+    * input-file sets, in order, and the columns the value is organized
+    * by. */
+  final case class Key(plans: Seq[LogicalPlan], files: Seq[Set[String]], by: Seq[String] = Nil)
 
   def key(sources: DataFrame*): Key =
     Key(sources.map(_.queryExecution.optimizedPlan.canonicalized),

@@ -220,34 +220,6 @@ object Training {
       .drop("__h", "__one", "__rank")
   }
 
-  /** Next-token training pairs from encoded id sequences (the
-    * `(input_id, label_id)` supervision a causal-LM data pipeline
-    * emits from vocab-id sequences): position `p`
-    * pairs `ids[p]` with `ids[p+1]`; the final token has no label and
-    * emits nothing. Output: `(idCol, pos, input_id, label_id)` with
-    * `pos` 0-based.
-    *
-    * Array-side zip of the sequence with its own 1-shift — a pure
-    * per-row projection, NO window and NO shuffle (the lead() trick
-    * would re-shuffle the corpus on `idCol` for values that are
-    * already adjacent in the array). */
-  def nextTokenPairs(
-      encoded: DataFrame,
-      idCol: String = "doc_id",
-      idsCol: String = "ids"): DataFrame = {
-    val n1 = greatest(size(col(idsCol)) - 1, lit(0))
-    encoded
-      .select(col(idCol),
-        posexplode(zip_with(
-          slice(col(idsCol), lit(1), n1),
-          slice(col(idsCol), lit(2), n1),
-          (a, b) => struct(a.as("input_id"), b.as("label_id"))))
-          .as(Seq("pos", "__p")))
-      .select(col(idCol), col("pos"),
-        col("__p.input_id").as("input_id"),
-        col("__p.label_id").as("label_id"))
-  }
-
   /** Equal-width feature histogram with per-bin label statistics — the
     * split-finding summary a gradient-boosting trainer consumes
     * (LightGBM's histogram algorithm, Ke et al. NeurIPS'17): bin

@@ -61,12 +61,13 @@ import graft.operators.InteractionStore
 
 /** Seeded randomized Spark-side properties (SURVEY §5 plan items:
   * "RPN compiler vs direct eval on random expressions", "merge-sort-cap
-  * invariants"). Uses a fixed-seed generator and a bounded case count
-  * so runs are deterministic and fast. */
+  * invariants"). Each test draws from its own fixed-seed generator, so
+  * its inputs do not depend on which tests run before it, and keeps a
+  * bounded case count, so runs are deterministic and fast. */
 class RandomizedSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  private val rnd = new scala.util.Random(42)
+  private def seeded() = new scala.util.Random(42)
 
   /** Reference stack interpreter for RPN over a row of named values —
     * independent of the Column compiler under test. */
@@ -85,7 +86,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
     require(stack.size == 1); stack.pop()
   }
 
-  private def randomRpn(depth: Int): String = {
+  private def randomRpn(rnd: scala.util.Random, depth: Int): String = {
     val bin = Seq("+", "-", "*", "min", "max")
     def gen(d: Int): Seq[String] =
       if (d == 0) Seq(rnd.shuffle(Seq("a", "b", "c",
@@ -99,11 +100,12 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("RPN compiler matches an independent stack interpreter (30 random exprs)") {
+    val rnd = seeded()
     val rows = Seq.fill(20)((rnd.nextDouble() * 20 - 10,
       rnd.nextDouble() * 20 - 10, rnd.nextDouble() * 20 - 10))
     val df = rows.toDF("a", "b", "c")
     (1 to 30).foreach { _ =>
-      val e = randomRpn(2 + rnd.nextInt(2))
+      val e = randomRpn(rnd, 2 + rnd.nextInt(2))
       val got = Rpn(df, e, "out").select("out").as[Double].collect()
       val want = rows.map { case (a, b, c) =>
         interp(e, Map("a" -> a, "b" -> b, "c" -> c)) }
@@ -113,6 +115,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("mergeCap invariants + salted two-phase equivalence (random event sets)") {
+    val rnd = seeded()
     val events = Seq.fill(800)((
       rnd.nextInt(5).toLong,
       java.sql.Timestamp.valueOf(
@@ -138,6 +141,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
 
   test("winnowing: docs sharing a substring of length >= k+w-1 share a fingerprint") {
     import graft.functions.TextFunctions
+    val rnd = seeded()
     val (k, w) = (5, 4)
     def randStr(len: Int) =
       Seq.fill(len)(('a' + rnd.nextInt(26)).toChar).mkString
@@ -156,6 +160,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
 
   test("connectedComponents equals brute-force union-find (random graphs)") {
     import graft.operators.Dedup
+    val rnd = seeded()
     (1 to 3).foreach { _ =>
       val n = 30
       val edges = Seq.fill(35)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
@@ -203,6 +208,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("constrainedRerank invariant under 1/4/32-partition shuffles") {
+    val rnd = seeded()
     // few distinct scores → heavy ties; the event-id tie-break must
     // make the slate identical under any physical row order
     val rows = Seq.fill(600)((
@@ -220,6 +226,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("position-bias session ranking invariant under 1/4/32-partition shuffles") {
+    val rnd = seeded()
     // q145's window shape: row_number over (user, day) ordered by
     // (ts, event_id); duplicated ts values stress the tie-break
     val rows = Seq.fill(500)((
@@ -246,6 +253,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("resampleHourlyFill invariant under 1/4/32-partition shuffles") {
+    val rnd = seeded()
     // ragged event stream with multi-event hours and gap hours; the
     // forward-fill carry must be identical under any physical order
     val rows = Seq.fill(400)((
@@ -265,6 +273,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("hashSampleQuantiles invariant under 1/4/32-partition shuffles") {
+    val rnd = seeded()
     // heavy value ties stress the (value, hash) tie rule in both the
     // bottom-k membership and the rank index
     val rows = (1 to 500).map(i => (i.toLong, rnd.nextInt(8) * 1.5))
@@ -280,6 +289,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("IPS-weighted clicks invariant under 1/4/32-partition shuffles") {
+    val rnd = seeded()
     // q164's full composition: position assignment via the (user, day)
     // window with the (ts, event_id) tie-break, then ipsItemClicks —
     // duplicated timestamps stress the tie rule, tied propensity terms

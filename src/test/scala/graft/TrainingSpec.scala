@@ -146,33 +146,6 @@ class TrainingSpec extends AnyFunSuite with SparkSuite {
     assert(got === Map(200L -> Some(50.0), 201L -> None))
   }
 
-  test("nextTokenPairs: adjacent id pairs, short docs emit nothing") {
-    val df = Seq(
-      (1L, Seq(3, 1, 2)), // (0,3,1), (1,1,2)
-      (2L, Seq(5)),       // single token: no label
-      (3L, Seq.empty[Int])
-    ).toDF("doc_id", "ids")
-    val got = Training.nextTokenPairs(df)
-      .as[(Long, Int, Int, Int)].collect().sortBy(r => (r._1, r._2))
-    assert(got === Array((1L, 0, 3, 1), (1L, 1, 1, 2)))
-  }
-
-  test("nextTokenPairs matches sliding(2) on random sequences, any partitioning") {
-    val rnd = new scala.util.Random(17)
-    val docs = (1 to 60).map(i =>
-      (i.toLong, Seq.fill(rnd.nextInt(10))(rnd.nextInt(30) - 1)))
-    val expected = docs.flatMap { case (id, ids) =>
-      ids.sliding(2).filter(_.size == 2).zipWithIndex.map {
-        case (Seq(a, b), p) => (id, p, a, b) }
-    }.sorted
-    for (parts <- Seq(1, 7)) {
-      val got = Training.nextTokenPairs(
-          docs.toDF("doc_id", "ids").repartition(parts))
-        .as[(Long, Int, Int, Int)].collect().sorted.toSeq
-      assert(got === expected, s"parts=$parts")
-    }
-  }
-
   test("featureHistogram: bins tile the range, max closes into the top " +
       "bin, constant features collapse to bin 0, stats match naive") {
     import spark.implicits._

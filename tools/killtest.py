@@ -31,6 +31,7 @@ mutation can never ride into a commit.
 """
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -729,6 +730,22 @@ MUTATIONS = [
                      "forever -> memoryUsedBytes second-half mean "
                      "grows far past the 10% flatness tolerance",
     },
+    {
+        # (ar) driver-tier ordering class: the range tier's per-user
+        # snapshot sorts ts ties by event_id DESCENDING instead of the
+        # scan path's ascending tie-break, so a limit that cuts through
+        # a tie keeps other events and ranks them differently. Only the
+        # tier-vs-scan equivalence spec sees it: no query pins users.
+        "name": "range_tier_tiebreak_flip",
+        "file": "src/main/scala/graft/operators/RangeTier.scala",
+        "old": "SortOrder(tie, Ascending)",
+        "new": "SortOrder(tie, Descending)",
+        "queries": ["graft.RangeTierSpec"],
+        "gate": "spec",
+        "expect": "red",
+        "mechanism": "tied timestamps rank event_id desc on the tier and "
+                     "asc on the scan path -> row and rank mismatches",
+    },
 ]
 
 
@@ -745,16 +762,21 @@ def spec_color(m):
     """Run a ScalaTest suite (optionally filtered) as the gate;
     RED = the suite fails — for plan-shape contracts no driver-scale
     data can exercise (e.g. broadcast hints Spark's own thresholds
-    mask at gate scale)."""
+    mask at gate scale). ERROR = the run passed without running a
+    test: sbt exits 0 on "No tests to run" when the suite name matches
+    no class, and ScalaTest on "No tests were executed" when the filter
+    matches no test, so a misnamed gate would otherwise read GREEN."""
     suite = m["queries"][0]
     filt = m.get("spec_filter")
     cmd = f"testOnly {suite}" + (f' -- -z "{filt}"' if filt else "")
     r = subprocess.run(["sbt", "-batch", cmd],
                        cwd=REPO, capture_output=True, text=True)
     failed = r.returncode != 0 or "*** FAILED ***" in r.stdout
+    ran = sum(int(n) for n in re.findall(r"Total number of tests run: (\d+)", r.stdout))
     tail = [l for l in r.stdout.splitlines()
-            if "FAILED" in l or "Tests:" in l][-4:]
-    return ("red" if failed else "green"), {"spec": cmd, "tail": tail}
+            if "FAILED" in l or "Tests:" in l or "No tests" in l][-4:]
+    color = "red" if failed else "green" if ran else "error"
+    return color, {"spec": cmd, "tests_run": ran, "tail": tail}
 
 
 def skew_identity_color(tag):
@@ -889,7 +911,7 @@ def main():
                     color, detail = soak_color(m["name"])
                 else:
                     color, detail = gate_color(m["queries"], m["name"])
-                verdict = ("KILLED" if color == "red" else "SURVIVED")
+                verdict = {"red": "KILLED", "green": "SURVIVED"}.get(color, "HARNESS-ERROR")
                 print(f"   gate={color} ({verdict}; expected {m['expect']})")
                 results.append({
                     "mutation": m["name"], "file": m["file"],
