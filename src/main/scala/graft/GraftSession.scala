@@ -22,9 +22,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       // InferFiltersFromGenerate duplicates the generator input into a
       // pre-Generate filter; for expensive array expressions (regex
-      // shingling, md5 minhash) that re-evaluates the whole interpreted
-      // HOF chain per row for a filter that never rejects anything
-      // (measured 10x on the dedup inverted-index explode).
+      // shingling) that re-evaluates the whole interpreted HOF chain
+      // per row for a filter that never rejects anything (measured 10x
+      // on an inverted-index shingle explode).
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       // test events table carries TIMESTAMP(NANOS); see Tables.events

@@ -18,8 +18,8 @@ package graft
   * property that motivated the sharing in the first place.
   *
   * (Deliberately NOT pinned, unchanged from r14 NOTES:
-  * `TextFunctions.MinhashA/B` and `stopwords` are free config with no
-  * formula semantics — any values define a valid operator — and
+  * `TextFunctions.stopwords` is free config with no formula
+  * semantics — any values define a valid operator — and
   * q178's MMR oracle is an independent loop-unrolled derivation.)
   *
   * PLATFORM/LIBM ASSUMPTION (r14 ADVICE): pins that pass through

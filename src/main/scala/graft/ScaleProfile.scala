@@ -108,9 +108,9 @@ package graft
   *    `semanticNearDupPairs`); `maxComponent` (gate 4096) bounds
   *    per-task fold memory LOUDLY — a component past ~10⁴ means the
   *    threshold glues the corpus into one blob (raise the threshold,
-  *    not the cap). `Dedup.connectedComponents(maxIters)` (gate 25)
-  *    needs no scale retune: pointer jumping from round 3 makes
-  *    rounds O(log diameter), and exhaustion fails loudly.
+  *    not the cap). `EpisodeGraph.connectedComponents(maxIters)`
+  *    (gate 25) needs no scale retune: pointer jumping from round 3
+  *    makes rounds O(log diameter), and exhaustion fails loudly.
   *
   * == Streaming state caps ==
   *

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.OracleMath._
 import graft.expr.Rpn
 import graft.functions.{Decode, Similarity, TextFunctions}
-import graft.operators.{ChangeCapture, Dedup, FeatureStore, Filters, InteractionStore, Normalize, Pipeline, SimilaritySearch, Sketches}
+import graft.operators.{ChangeCapture, FeatureStore, Filters, InteractionStore, Normalize, Pipeline, SimilaritySearch, Sketches}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, each with a DuckDB-equivalent SQL oracle where the
@@ -376,24 +376,6 @@ object SparkEntry {
         numPlanes = 12, bands = 6)
     }),
 
-    // ---- exact dedup by normalized-text fingerprint ----
-    // The input unions a DUPLICATE-PAIR probe (ids 9000000001/9000000002, one
-    // shared text): the r14 kill-test found the testdata has no exact
-    // duplicates at sf0.01, so the keep-FIRST tie-break was
-    // driver-invisible (keep-last read identical). The probe pins
-    // which survivor wins — flipping the tie-break reads RED.
-    "q20_dedup_exact" -> ((s, dir) => {
-      import s.implicits._
-      val probe = Seq(
-        (9000000001L, "the quick brown fox", "probe", 19L),
-        (9000000002L, "the quick brown fox", "probe", 19L))
-        .toDF("doc_id", "text", "source", "n_chars")
-      Dedup.exact(Tables.documents(s, dir)
-          .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-          .unionByName(probe))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
     // ---- token counting: whitespace + BPE-ish sub-tokens ----
     "q21_token_stats" -> ((s, dir) => {
       Tables.documents(s, dir).select(col("doc_id"),
@@ -423,36 +405,6 @@ object SparkEntry {
           .as("stopword_ratio"),
         TextFunctions.langIdFromHits(col("__hde"), col("__hen"),
           col("__hes"), col("__hfr")).as("lang_pred"))
-    }),
-
-    // ---- MinHash + LSH near-dup pairs, jaccard-verified ----
-    // The input unions a BAND-STRUCTURE probe pair (ids 9000000011/12):
-    // jaccard 0.25 but their signatures agree at entries 2 and 5 ONLY
-    // (never both entries of an aligned 2-entry band), so correct
-    // banding excludes the pair on both sides while ANY single-entry
-    // banding — either parity — co-buckets it and reads RED. The r14
-    // kill-test proved the raw corpus can't see band width: 1-entry
-    // bands produced the identical verified pair set at sf0.01
-    // (every real jaccard>=0.2 pair already co-buckets under 2-entry
-    // bands, and the looser candidates all fail the verify filter).
-    "q23_minhash_pairs" -> ((s, dir) => {
-      import s.implicits._
-      Dedup.minhashLshPairs(
-        Tables.documents(s, dir).select(col("doc_id"), col("text"))
-          .unionByName(bandProbeDocs.toDF("doc_id", "text")),
-        n = 3, k = 8, bands = 4, threshold = 0.2)
-    }),
-
-    // ---- SimHash near-dup pairs (hamming ≤ 6 of 32 bits) ----
-    "q24_simhash_pairs" -> ((s, dir) => {
-      Dedup.simhashPairs(Tables.documents(s, dir),
-        maxDist = 3, bits = 32, blocks = 4)
-    }),
-
-    // ---- blocked pairwise n-gram Jaccard ----
-    "q25_ngram_jaccard" -> ((s, dir) => {
-      Dedup.ngramJaccardPairs(Tables.documents(s, dir),
-        blockCol = "source", n = 3, threshold = 0.08)
     }),
 
     // ---- context ⊗ targets expansion (J7, inferflow FeatureInit) ----
@@ -637,32 +589,6 @@ object SparkEntry {
           Similarity.dot(col("embedding"), col("embedding")).as("l2sq"))
     }),
 
-    // ---- winnowing document fingerprints (SWA SIGMOD'03): char-gram
-    // hashes -> sliding-window minima -> distinct local fingerprints ----
-    "q41_fingerprint_winnow" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        explode(TextFunctions.winnowFingerprint(col("text"), k = 8, w = 4))
-          .as("fp"))
-    }),
-
-    // ---- near-dup clusters: minhash pairs -> connected components ->
-    // canonical representative per cluster (cluster-level dedup) ----
-    // The input unions the 6-doc CHAIN probe (ccChainProbe, ids
-    // 9000000021..26): its pair graph is a 5-edge path, so the CC loop
-    // must propagate labels across 5 hops — the raw corpus's
-    // near-clique components converge in ONE round (r14 kill-test:
-    // a premature-fixpoint mutation survived GREEN pre-probe), so the
-    // chain is what pins multi-round convergence driver-side.
-    "q42_dedup_components" -> ((s, dir) => {
-      import s.implicits._
-      val pairs = Dedup.minhashLshPairs(
-        Tables.documents(s, dir).select(col("doc_id"), col("text"))
-          .unionByName(ccChainProbe.toDF("doc_id", "text")),
-        n = 3, k = 8, bands = 4, threshold = 0.2)
-      Dedup.connectedComponents(pairs)
-        .withColumn("is_canonical", col("doc_id") === col("component"))
-    }),
-
     // ---- uint64 full-range aggregation: DecimalType(20,0) carries the
     // unsigned 64-bit range exactly (Types.scala mapping). Aggregates
     // stay exact decimal; the OUTPUT is the canonical digit string so
@@ -795,29 +721,6 @@ object SparkEntry {
           col("window.end").as("w_end"), col("n"), col("value_sum"))
     }),
 
-    // ---- training-data curation pipeline: quality gate -> language
-    // filter -> exact dedup -> deterministic sample (the north-star
-    // ops composed end to end) ----
-    "q54_curation_pipeline" -> ((s, dir) => {
-      val staged = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"), col("text"),
-          TextFunctions.words(col("text")).as("__w"))
-        .select(col("doc_id"), col("source"), col("text"), col("__w"),
-          size(col("__w")).cast("double").as("n_tokens"),
-          (size(regexp_extract_all(col("text"), lit("[^A-Za-z0-9\\s]"), lit(0)))
-            .cast("double") / length(col("text")).cast("double")).as("punct_ratio"),
-          TextFunctions.langIdFromHits(
-            TextFunctions.stopwordHitsFromWords(col("__w"), "de"),
-            TextFunctions.stopwordHitsFromWords(col("__w"), "en"),
-            TextFunctions.stopwordHitsFromWords(col("__w"), "es"),
-            TextFunctions.stopwordHitsFromWords(col("__w"), "fr")).as("lang_pred"))
-      val gated = staged.filter(col("lang_pred") === "en" &&
-        col("n_tokens") >= 5 && col("punct_ratio") < 0.2)
-      val deduped = Dedup.exact(gated)
-      graft.operators.Sampling.byHash(deduped, "doc_id", rate = 0.5)
-        .select(col("doc_id"), col("source"), col("n_tokens"))
-    }),
-
     // ---- rollup + distinct aggregation (beyond the reference's
     // surface; table stakes for the analytics side) ----
     "q55_rollup_distinct" -> ((s, dir) => {
@@ -905,16 +808,6 @@ object SparkEntry {
       graft.operators.Sampling.systematicByWeight(
         Tables.orders(s, dir).select(col("o_orderkey"), col("o_totalprice")),
         keyCol = "o_orderkey", weightCol = "o_totalprice", n = 50)
-    }),
-
-    // ---- deduped corpus: near-dup pairs -> components -> keep only
-    // canonical representatives (the final dedup pipeline step) ----
-    "q61_dedup_prune" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.minhashLshPairs(docs, n = 3, k = 8, bands = 4,
-        threshold = 0.2)
-      Dedup.pruneByComponents(docs, Dedup.connectedComponents(pairs))
-        .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 
     // ---- deterministic train/val/test split: hash-bucket assignment,
@@ -1078,16 +971,6 @@ object SparkEntry {
           .select(col("user_id"), col("ts"), col("event_id"), col("value")),
         keys = Seq("user_id"), tsCol = "ts", tieCol = "event_id",
         valueCol = "value", frameRows = 6)
-    }),
-
-    // ---- cross-corpus LSH linkage join: near-dups of a query set
-    // inside the corpus (record linkage / entity resolution) — band
-    // buckets equi-joined, never a cross join ----
-    "q84_lsh_linkage" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val queries = docs.filter(col("doc_id") % 5 === 0)
-      Dedup.minhashLshLink(docs, queries, n = 3, k = 8, bands = 4,
-        threshold = 0.2)
     }),
 
     // ---- the streaming incremental-aggregate sink driven end-to-end:
@@ -1355,13 +1238,6 @@ object SparkEntry {
           posexplode(col("mean_embedding")).as(Seq("idx", "mean_val")))
     }),
 
-    // ---- exact substring-duplicate spans (Lee et al. 2022): token
-    // windows of length 5 occurring >=2x corpus-wide, merged into
-    // maximal per-doc spans. The dedup pass a pretraining pipeline
-    // runs BEFORE tokenization ----
-    "q99_duplicate_spans" -> ((s, dir) =>
-      Dedup.duplicateSpans(Tables.documents(s, dir), l = 5)),
-
     // ---- embedding-centroid outlier ranking (SemDeDup-style quality
     // signal): exact fixed-point label centroid, broadcast back,
     // 20 least-similar members per label ----
@@ -1384,11 +1260,6 @@ object SparkEntry {
         TextFunctions.piiCount(col("__t"), TextFunctions.PhoneRe).as("n_phones"),
         TextFunctions.maskPii(col("__t")).as("masked"))
     }),
-
-    // ---- paragraph-level exact dedup, keep-first corpus-wide
-    // (8-token blocks stand in for crawl paragraphs) ----
-    "q102_para_dedup" -> ((s, dir) =>
-      Dedup.dedupeParagraphs(Tables.documents(s, dir), paraTokens = 8)),
 
     // ---- deterministic global shuffle + fixed-size training shards
     // (range-partitioned prefix-sum rank — no single-partition window) ----
@@ -1753,18 +1624,6 @@ object SparkEntry {
       graft.operators.Recsys.churnLabels(Tables.events(s, dir),
         labelDays = 7)),
 
-    // ---- dedup cluster-size histogram: the reporting artifact a
-    // dedup run publishes (how much of the corpus collapses, and into
-    // how big clusters) ----
-    "q146_cluster_sizes" -> ((s, dir) => {
-      val pairs = Dedup.minhashLshPairs(Tables.documents(s, dir),
-        n = 3, k = 8, bands = 4, threshold = 0.2)
-      Dedup.connectedComponents(pairs)
-        .groupBy(col("component")).agg(count(lit(1)).as("__sz"))
-        .groupBy(col("__sz").as("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))
-    }),
-
     // ---- Pearson correlation matrix of lineitem's numeric features.
     // The columns carry <=2dp, so cents-integer staging keeps every
     // moment exact with LONG per-row math (a decimal conversion only
@@ -1911,15 +1770,6 @@ object SparkEntry {
         Fixtures.customerProfile, Seq("c_name", "c_acctbal", "c_mktsegment"),
         broadcastKeys = false)
     }),
-
-    // ---- partial-overlap (containment) detection over winnowing
-    // fingerprints (q41's scheme): catches a document quoted inside a
-    // larger one, which symmetric Jaccard dilutes. Inverted-index
-    // pairing with a document-frequency cutoff on boilerplate
-    // fingerprints ----
-    "q156_fp_containment" -> ((s, dir) =>
-      Dedup.fingerprintContainment(Tables.documents(s, dir),
-        k = 8, w = 4, threshold = 0.5, maxDocFreq = 50)),
 
     // ---- deterministic per-group bottom-k-by-hash sample (the
     // mergeable per-class "reservoir"; KMV property per group) ----
@@ -2072,13 +1922,6 @@ object SparkEntry {
         .reconstructionError(emb)
     }),
 
-    // ---- cross-source n-gram contamination matrix: distinct shared
-    // 3-shingles per source pair — the provenance audit run before
-    // mixing training sources or trusting a held-out split ----
-    "q170_cross_source_overlap" -> ((s, dir) =>
-      graft.operators.Dedup.crossSourceShingleOverlap(
-        Tables.documents(s, dir))),
-
     // ---- winsorized sibling of q167: the tails are CLAMPED to the
     // boundary order statistics instead of dropped (n stays constant);
     // clamped sum exact in longs, one division ----
@@ -2222,19 +2065,6 @@ object SparkEntry {
       graft.operators.Evaluation.reciprocalRankFusion(Seq(cos, dot))
     }),
 
-    // ---- content-defined chunking (LBFS/FastCDC rule): cut where the
-    // trailing 16-char window hash ≡ 0 mod 64 — boundaries move with
-    // content; one row-local pass, no sequential state ----
-    "q186_cdc_chunks" -> ((s, dir) =>
-      Dedup.cdcChunks(
-        Tables.documents(s, dir).filter(col("doc_id") % 10 === 0))),
-
-    // ---- CDC storage accounting: distinct/total chunk chars — the
-    // blob-store savings from content-addressed chunks ----
-    "q187_cdc_dedup" -> ((s, dir) =>
-      Dedup.cdcDedupStats(Dedup.cdcChunks(
-        Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)))),
-
     // ---- distinct-audience overlap per segment pair: KMV theta-
     // intersection read off the q72 sketches alone, next to the exact
     // figure ----
@@ -2255,12 +2085,6 @@ object SparkEntry {
       graft.operators.Profile.mutualInformation(
         Tables.documents(s, dir), "lang", "source"))
     ,
-
-    // ---- the REMOVAL half of q99: excise every corpus-duplicated
-    // span and rejoin the survivors (Lee et al. 2022 delete the
-    // repeat, not the document) ----
-    "q191_span_removal" -> ((s, dir) =>
-      Dedup.removeDuplicateSpans(Tables.documents(s, dir), l = 5)),
 
     // ---- leakage-safe target encoding: each event's user-level click
     // mean excludes its own label; smoothed variant shrinks rare users
@@ -2436,11 +2260,6 @@ object SparkEntry {
         Tables.lineitem(s, dir),
         Seq("l_quantity", "l_discount", "l_tax"))),
 
-    // ---- templated-intro detector: docs sharing their first 8
-    // tokens exactly ----
-    "q217_prefix_duplicates" -> ((s, dir) =>
-      Dedup.prefixDuplicates(Tables.documents(s, dir), nTokens = 8)),
-
     // ---- right-censoring-aware retention: Kaplan-Meier survival of
     // user lifetimes (active-at-close users censored) ----
     "q218_kaplan_meier" -> ((s, dir) => {
@@ -2480,11 +2299,6 @@ object SparkEntry {
         Tables.events(s, dir).select(col("event_id"), col("value"),
           (col("user_id") % 5 === 0).cast("long").as("label")),
         "event_id", "value", "label", Seq(0.1, 0.25, 0.5, 1.0))),
-
-    // ---- sketch calibration: minhash Jaccard estimate vs exact,
-    // per LSH candidate pair ----
-    "q222_minhash_audit" -> ((s, dir) =>
-      Dedup.minhashEstimateAudit(Tables.documents(s, dir))),
 
     // ---- memorization risk: per-test-doc share of 3-gram shingles
     // never seen in the train split ----
@@ -2578,17 +2392,6 @@ object SparkEntry {
         s.read.parquet(s"$base/state"), Seq("d", "bucket"))
     }),
 
-    // ---- dedup keeps the BEST copy: near-dup clusters resolved by
-    // quality (longest doc), not smallest id ----
-    "q235_prune_by_quality" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val comps = Dedup.connectedComponents(
-        Dedup.minhashLshPairs(docs, n = 3, k = 8, bands = 4,
-          threshold = 0.2))
-      Dedup.pruneByQuality(docs.select(col("doc_id"), col("n_chars")),
-        comps, "n_chars")
-    }),
-
     // ---- bot/human separator: inter-arrival burstiness per user
     // (Goh-Barabasi coefficient) ----
     "q236_burstiness" -> ((s, dir) =>
@@ -2605,20 +2408,6 @@ object SparkEntry {
           "day_epoch", "cnt", window = 7)
         .select(col("event_type"), col("day_epoch"), col("cnt"),
           col("roll_mean"), col("z"), col("is_anomaly"))
-    }),
-
-    // ---- daily-crawl dedup: new docs against the accumulated
-    // fingerprint index, batch-internal first-wins ----
-    "q233_incremental_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val index = docs.filter(col("doc_id") < 100)
-        .select(graft.functions.TextFunctions.fingerprint(col("text"))
-          .as("fingerprint"))
-      Dedup.dedupAgainstIndex(
-        docs.filter(col("doc_id") >= 100)
-          .select(col("doc_id"), col("n_chars"), col("text")),
-        index)
-        .select(col("fingerprint"), col("doc_id"), col("n_chars"))
     }),
 
     // ---- shuffle-free fact pruning: bloom filter over the predicate
@@ -2974,17 +2763,6 @@ object SparkEntry {
           round(col("__z"), 6).as("z"),
           when(col("__z").isNotNull, (abs(col("__z")) > 3.0).cast("int"))
             .as("is_anomaly"))
-    }),
-
-    // ---- self-tuning dedup: score (bands, rows) splits of a 16-hash
-    // minhash signature against the sampled similarity histogram ----
-    "q268_lsh_plan" -> ((s, dir) => {
-      val sample = Tables.documents(s, dir)
-        .filter(col("doc_id") % 10 === 0).withColumn("__one", lit(1))
-      val pairs = Dedup.ngramJaccardPairs(sample, "__one", n = 3,
-        threshold = 0.0)
-      Dedup.lshParameterPlan(pairs, simThreshold = 0.5,
-        grid = Seq((2, 8), (4, 4), (8, 2), (16, 1)))
     }),
 
     // ---- offline policy check without a new experiment: replay
@@ -3761,19 +3539,6 @@ object SparkEntry {
          |    ORDER BY score DESC, vec_id ASC) AS INT) AS rank FROM scored)
          |WHERE rank <= 10""".stripMargin,
 
-    // duplicate-pair probe rows mirror the engine side (r14 kill-test:
-    // no exact duplicates exist in the raw testdata, so the keep-first
-    // tie-break needed a pinned-survivor probe to be driver-visible)
-    "q20_dedup_exact" ->
-      s"""SELECT doc_id, source, n_chars FROM (
-         |  SELECT doc_id, source, n_chars, ROW_NUMBER() OVER (
-         |    PARTITION BY md5(array_to_string($sqlWords, ' '))
-         |    ORDER BY doc_id) AS rn
-         |  FROM (SELECT doc_id, text, source, n_chars FROM documents
-         |    UNION ALL SELECT 9000000001, 'the quick brown fox', 'probe', 19
-         |    UNION ALL SELECT 9000000002, 'the quick brown fox', 'probe', 19))
-         |WHERE rn = 1""".stripMargin,
-
     "q21_token_stats" ->
       s"""SELECT doc_id,
          |  len($sqlWords) AS n_tokens,
@@ -3800,43 +3565,6 @@ object SparkEntry {
          |       WHEN h_en >= h_es AND h_en >= h_fr THEN 'en'
          |       WHEN h_es >= h_fr THEN 'es' ELSE 'fr' END AS lang_pred
          |FROM h""".stripMargin,
-
-    "q23_minhash_pairs" ->
-      s"""WITH $sqlMinhashPairCtes
-         |SELECT id_a, id_b, jaccard FROM mh_pairs""".stripMargin,
-
-    "q24_simhash_pairs" ->
-      s"""WITH h AS (
-         |  SELECT doc_id,
-         |    list_sum(list_transform(generate_series(0, 31), b ->
-         |      CASE WHEN list_sum(list_transform(
-         |        list_transform($sqlWords, x -> ${sqlHash32(0, "x")}),
-         |        hv -> ((hv >> b) & 1)*2 - 1)) >= 0
-         |      THEN (1::BIGINT << b) ELSE 0 END)) AS sh
-         |  FROM documents),
-         |blocked AS (
-         |  SELECT doc_id, sh, b.block_idx,
-         |    (sh >> (b.block_idx * 8)) & 255 AS block
-         |  FROM h, (SELECT unnest([0,1,2,3]) AS block_idx) b),
-         |cand AS (
-         |  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
-         |         l.sh AS sa, r.sh AS sb
-         |  FROM blocked l JOIN blocked r
-         |    ON l.block_idx = r.block_idx AND l.block = r.block
-         |   AND l.doc_id < r.doc_id)
-         |SELECT id_a, id_b, bit_count(xor(sa, sb)) AS hamming_dist
-         |FROM cand WHERE bit_count(xor(sa, sb)) <= 3""".stripMargin,
-
-    "q25_ngram_jaccard" ->
-      s"""WITH sh AS (SELECT doc_id, source, list_distinct($sqlShingles) AS sh
-         |            FROM (SELECT doc_id, source, $sqlWords AS w FROM documents)),
-         |pairs AS (
-         |  SELECT l.doc_id AS id_a, r.doc_id AS id_b,
-         |    CAST(len(list_intersect(l.sh, r.sh)) AS DOUBLE)
-         |    / CAST(len(list_distinct(list_concat(l.sh, r.sh))) AS DOUBLE)
-         |      AS jaccard
-         |  FROM sh l JOIN sh r ON l.source = r.source AND l.doc_id < r.doc_id)
-         |SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.08""".stripMargin,
 
     "q26_context_targets" ->
       s"""WITH ctx AS (SELECT ${sqlAvg("c_acctbal")} AS avg_acctbal,
@@ -4087,53 +3815,6 @@ object SparkEntry {
         |    ORDER BY score DESC, vec_id ASC) AS INT) AS rank FROM scored)
         |WHERE rank <= 10""".stripMargin,
 
-    "q41_fingerprint_winnow" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    list_transform(generate_series(1, greatest(length(nt) - 7, 1)),
-        |      i -> CAST(('0x'||substr(md5('0:'||substr(nt, i, 8)), 1, 8))
-        |             AS BIGINT)) AS hs
-        |  FROM t),
-        |wm AS (
-        |  SELECT doc_id,
-        |    list_sort(list_distinct(
-        |      list_transform(generate_series(1, greatest(len(hs) - 3, 1)),
-        |        j -> list_min(list_slice(hs, j, j + 3))))) AS fps
-        |  FROM g)
-        |SELECT doc_id, unnest(fps) AS fp FROM wm""".stripMargin,
-
-    // transitive closure by recursive min-label reachability — the
-    // declarative twin of the iterative label propagation
-    // docs42 = documents + the chain probe (same fixture rows the
-    // engine unions in); banding/verify/closure all recomputed by SQL
-    "q42_dedup_components" -> {
-      // single quotes escaped on the way into the VALUES literal —
-      // today's probe texts are [a-z0-9 ] words (ProbeFixturesSpec
-      // locks that), but a re-derived fixture with punctuation must
-      // not silently corrupt the oracle SQL (r14 ADVICE)
-      val vals = ccChainProbe
-        .map { case (i, t) => s"($i, '${t.replace("'", "''")}')" }
-        .mkString(", ")
-      s"""WITH RECURSIVE docs42(doc_id, text) AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $vals) v(doc_id, text)),
-         |${sqlMinhashPairCtesOver("docs42")},
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs),
-         |reach(id, lbl) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id)
-         |SELECT id AS doc_id, min(lbl) AS component,
-         |       min(lbl) = id AS is_canonical
-         |FROM reach GROUP BY id""".stripMargin
-    },
-
     "q46_feature_materialize" ->
       s"""SELECT user_id,
          |  COUNT(CASE WHEN ts > TIMESTAMP '2024-02-01' - INTERVAL 7 DAY
@@ -4339,29 +4020,6 @@ object SparkEntry {
          |  COUNT(*) AS n, ${sqlSum("value")} AS value_sum
          |FROM x GROUP BY 1, 2, 3""".stripMargin,
 
-    "q54_curation_pipeline" ->
-      s"""WITH t AS (SELECT doc_id, source, text, $sqlWords AS w FROM documents),
-         |h AS (SELECT doc_id, source, text, w,
-         |  CAST(len(w) AS DOUBLE) AS n_tokens,
-         |  CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS DOUBLE)
-         |    / CAST(length(text) AS DOUBLE) AS punct_ratio,
-         |  ${sqlHits("de")} AS h_de, ${sqlHits("en")} AS h_en,
-         |  ${sqlHits("es")} AS h_es, ${sqlHits("fr")} AS h_fr
-         |  FROM t),
-         |gated AS (
-         |  SELECT doc_id, source, n_tokens, w FROM h
-         |  WHERE h_en > 0 AND h_en >= h_de AND h_en >= h_es AND h_en >= h_fr
-         |    AND NOT (h_de >= h_en AND h_de >= h_es AND h_de >= h_fr)
-         |    AND n_tokens >= 5 AND punct_ratio < 0.2),
-         |deduped AS (
-         |  SELECT doc_id, source, n_tokens FROM (
-         |    SELECT doc_id, source, n_tokens, ROW_NUMBER() OVER (
-         |      PARTITION BY md5(array_to_string(w, ' '))
-         |      ORDER BY doc_id) AS rn
-         |    FROM gated) WHERE rn = 1)
-         |SELECT doc_id, source, n_tokens FROM deduped
-         |WHERE ${sqlHash32(7, "CAST(doc_id AS VARCHAR)")} % 1000000 < 500000""".stripMargin,
-
     "q55_rollup_distinct" ->
       s"""SELECT event_type, CAST(date_trunc('week', ts) AS DATE) AS week,
          |  COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users,
@@ -4563,19 +4221,6 @@ object SparkEntry {
         |SELECT o_orderkey, o_totalprice FROM c
         |WHERE (cum * 50) // total > ((cum - wi) * 50) // total""".stripMargin,
 
-    "q61_dedup_prune" ->
-      s"""WITH RECURSIVE $sqlMinhashPairCtes,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs),
-         |reach(id, lbl) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id),
-         |comp AS (SELECT id, min(lbl) AS lbl FROM reach GROUP BY id)
-         |SELECT doc_id, source, n_chars FROM documents
-         |WHERE doc_id NOT IN (SELECT id FROM comp WHERE lbl <> id)""".stripMargin,
-
     "q75_gram_matrix" ->
       """WITH e AS (SELECT list_transform(embedding,
         |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS v
@@ -4670,23 +4315,6 @@ object SparkEntry {
         |FROM events
         |WINDOW f AS (PARTITION BY user_id ORDER BY ts, event_id
         |             ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q84_lsh_linkage" ->
-      s"""WITH $sqlMinhashBandCtes,
-         |lcand AS (
-         |  SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id,
-         |         l.sh AS sha, r.sh AS shb
-         |  FROM banded l JOIN banded r
-         |    ON l.band_idx = r.band_idx AND l.bucket = r.bucket
-         |   AND r.doc_id % 5 = 0 AND l.doc_id <> r.doc_id)
-         |SELECT left_id, right_id, jaccard FROM (
-         |  SELECT left_id, right_id,
-         |    CAST(len(list_intersect(list_distinct(sha), list_distinct(shb)))
-         |      AS DOUBLE)
-         |    / CAST(len(list_distinct(list_concat(list_distinct(sha),
-         |        list_distinct(shb)))) AS DOUBLE) AS jaccard
-         |  FROM lcand)
-         |WHERE jaccard >= 0.2""".stripMargin,
 
     // the streamed state table must equal the one-shot aggregate over
     // all events — merge exactness + replay protection in one check
@@ -4876,14 +4504,6 @@ object SparkEntry {
         |  CAST(s AS DOUBLE) / (CAST(c AS DOUBLE) * 1000000.0) AS mean_val
         |FROM a""".stripMargin,
 
-    // token windows hashed exactly as the Spark side (15-hex-char md5
-    // prefix = 60-bit), duplicates corpus-wide, gaps-and-islands merge
-    "q99_duplicate_spans" ->
-      s"""WITH $sqlDupSpanZCtes
-         |SELECT doc_id, CAST(MIN(pos) AS INT) AS span_start,
-         |  CAST(MAX(pos) + 4 AS INT) AS span_end, COUNT(*) AS n_windows
-         |FROM z GROUP BY doc_id, isl""".stripMargin,
-
     // centroid = q98's exact micro-unit mean; cosine is the same
     // ascending-index double fold both engines use everywhere else
     "q100_centroid_outliers" ->
@@ -4930,27 +4550,6 @@ object SparkEntry {
          |    '$phone', '<PHONE>', 'g') AS masked
          |FROM t""".stripMargin
     },
-
-    // 8-token blocks, 60-bit hash, keep-first by (doc_id, pos)
-    "q102_para_dedup" ->
-      s"""WITH t AS (SELECT doc_id, $sqlWords AS w FROM documents),
-         |p0 AS (SELECT doc_id, list_transform(
-         |         generate_series(1, greatest(len(w), 1), 8),
-         |         i -> array_to_string(list_slice(w, i, i + 7), ' ')) AS ps
-         |       FROM t),
-         |p AS (SELECT doc_id, len(ps) AS n_paras,
-         |        generate_subscripts(ps, 1) - 1 AS pos, unnest(ps) AS para
-         |      FROM p0),
-         |h AS (SELECT *, CAST(('0x'||substr(md5(para), 1, 15)) AS BIGINT)
-         |        AS hh FROM p),
-         |k AS (SELECT * FROM (SELECT *, ROW_NUMBER() OVER (
-         |        PARTITION BY hh ORDER BY doc_id, pos) AS rn FROM h)
-         |      WHERE rn = 1)
-         |SELECT doc_id, CAST(n_paras AS INT) AS n_paras,
-         |  string_agg(para, ' ' ORDER BY pos) AS text_dedup,
-         |  COUNT(*) AS n_kept,
-         |  CAST(n_paras - COUNT(*) AS BIGINT) AS n_dropped
-         |FROM k GROUP BY doc_id, n_paras""".stripMargin,
 
     // order key = (md5_32(doc_id) mod 2^31)·2^32 + doc_id, exactly as
     // Training.shard builds it
@@ -5554,20 +5153,6 @@ object SparkEntry {
          |WHERE i <> j AND abs(i - j) <= 2 GROUP BY 1, 2""".stripMargin
     },
 
-    "q146_cluster_sizes" ->
-      s"""WITH RECURSIVE $sqlMinhashPairCtes,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs),
-         |reach(id, lbl) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id),
-         |comp AS (SELECT id, min(lbl) AS component FROM reach GROUP BY id),
-         |sz AS (SELECT component, COUNT(*) AS csz FROM comp GROUP BY 1)
-         |SELECT csz AS cluster_size, COUNT(*) AS n_clusters
-         |FROM sz GROUP BY 1""".stripMargin,
-
     "q147_feature_corr" -> {
       val cols2 = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
       def cc(c: String) = s"CAST(round_even($c * 100, 0) AS BIGINT)"
@@ -5766,39 +5351,6 @@ object SparkEntry {
         |  COALESCE(c.c_mktsegment, 'NONE') AS c_mktsegment
         |FROM orders o LEFT JOIN customer c
         |  ON o.o_custkey = c.c_custkey""".stripMargin,
-
-    // q41's winnow CTEs -> df cutoff -> inverted-index pairing ->
-    // containment over the smaller doc's kept-fingerprint count
-    "q156_fp_containment" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    list_transform(generate_series(1, greatest(length(nt) - 7, 1)),
-        |      i -> CAST(('0x'||substr(md5('0:'||substr(nt, i, 8)), 1, 8))
-        |             AS BIGINT)) AS hs
-        |  FROM t),
-        |wm AS (
-        |  SELECT doc_id,
-        |    list_sort(list_distinct(
-        |      list_transform(generate_series(1, greatest(len(hs) - 3, 1)),
-        |        j -> list_min(list_slice(hs, j, j + 3))))) AS fps
-        |  FROM g),
-        |fp AS (SELECT doc_id, unnest(fps) AS fp FROM wm),
-        |keep AS (SELECT fp FROM fp GROUP BY fp HAVING COUNT(*) <= 50),
-        |kf AS (SELECT fp.doc_id, fp.fp FROM fp JOIN keep USING (fp)),
-        |sz AS (SELECT doc_id, COUNT(*) AS sz FROM kf GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
-        |  FROM kf a JOIN kf b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT p.id_a, p.id_b, CAST(p.shared AS BIGINT) AS shared,
-        |  CAST(p.shared AS DOUBLE) / least(sa.sz, sb.sz) AS containment
-        |FROM pairs p JOIN sz sa ON p.id_a = sa.doc_id
-        |  JOIN sz sb ON p.id_b = sb.doc_id
-        |WHERE CAST(p.shared AS DOUBLE) / least(sa.sz, sb.sz) >= 0.5""".stripMargin,
 
     "q157_group_sample" ->
       s"""SELECT event_type, event_id, user_id, CAST(rn AS INT) AS sample_rank
@@ -6132,17 +5684,6 @@ object SparkEntry {
          |  CAST(floor(($eSum) * 1e6) AS BIGINT) AS recon_err_micro
          |FROM pv""".stripMargin
     },
-
-    // distinct (source, shingle) -> inverted-index pair join, the q23
-    // shingle fragment shared verbatim
-    "q170_cross_source_overlap" ->
-      s"""WITH sh0 AS (SELECT source, unnest($sqlShingles) AS sh
-         |            FROM (SELECT source, $sqlWords AS w FROM documents)),
-         |sh AS (SELECT DISTINCT source, sh FROM sh0)
-         |SELECT a.source AS source_a, b.source AS source_b,
-         |  COUNT(*) AS n_shared
-         |FROM sh a JOIN sh b ON a.sh = b.sh AND a.source < b.source
-         |GROUP BY 1, 2""".stripMargin,
 
     // q167's rank CTEs; clamped sum = middle + t*v_(t+1) + t*v_(n-t)
     // in exact BIGINTs, one division by n
@@ -6514,32 +6055,6 @@ object SparkEntry {
          |    ORDER BY rrf_score DESC, vec_id ASC) AS fused_rank FROM f)
          |WHERE fused_rank <= 10""".stripMargin,
 
-    // every position's trailing-window hash tested independently (the
-    // same md5-arithmetic as Spark), cut list folded into aligned
-    // (start, end) slices per doc
-    "q186_cdc_chunks" -> (sqlCdcChunkCtes +
-      """
-        |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-        |  CAST(st AS BIGINT) AS start, CAST(en - st AS BIGINT) AS len,
-        |  CAST(('0x'||substr(md5(substr(text, CAST(st + 1 AS INT),
-        |    CAST(en - st AS INT))), 1, 15)) AS BIGINT) AS chunk_h
-        |FROM z""".stripMargin),
-
-    // q186's chunk table grouped by content hash; exact char accounting
-    "q187_cdc_dedup" -> (sqlCdcChunkCtes + "," +
-      """
-        |ch2 AS (SELECT CAST(('0x'||substr(md5(substr(text,
-        |    CAST(st + 1 AS INT), CAST(en - st AS INT))), 1, 15)) AS BIGINT)
-        |    AS chunk_h, en - st AS len FROM z),
-        |g AS (SELECT chunk_h, COUNT(*) AS n, MAX(len) AS l
-        |      FROM ch2 GROUP BY 1)
-        |SELECT CAST(SUM(n) AS BIGINT) AS n_chunks,
-        |  CAST(COUNT(*) AS BIGINT) AS n_distinct,
-        |  CAST(SUM(n * l) AS BIGINT) AS total_chars,
-        |  CAST(SUM(l) AS BIGINT) AS distinct_chars,
-        |  CAST(SUM(l) AS DOUBLE) / CAST(SUM(n * l) AS DOUBLE) AS dedup_ratio
-        |FROM g""".stripMargin),
-
     // q72's sketch CTEs paired; theta-intersection arithmetic matches
     // kmvIntersectEstimate term for term; exact leg from the distinct
     // (segment, user) self-join
@@ -6626,26 +6141,6 @@ object SparkEntry {
         |  CAST(SUM(term) AS BIGINT) AS mi_micro,
         |  CAST(SUM(term) AS DOUBLE) / 1.0E6 AS mi
         |FROM m""".stripMargin,
-
-    // q99's span CTEs -> per-doc span list -> row-local index filter
-    // (nested-lambda capture) -> rejoin survivors
-    "q191_span_removal" ->
-      s"""WITH $sqlDupSpanZCtes,
-         |spans AS (SELECT doc_id, MIN(pos) AS s, MAX(pos) + 4 AS e
-         |          FROM z GROUP BY doc_id, isl),
-         |sp AS (SELECT doc_id, list([s, e]) AS sps FROM spans GROUP BY 1),
-         |c AS (SELECT t.doc_id, t.tk, coalesce(sp.sps, []) AS sps
-         |      FROM t LEFT JOIN sp USING (doc_id)),
-         |k AS (SELECT doc_id, tk,
-         |        list_filter(generate_series(1, len(tk)),
-         |          i -> len(list_filter(sps,
-         |            s -> i - 1 >= s[1] AND i - 1 <= s[2])) = 0) AS kept
-         |      FROM c)
-         |SELECT doc_id, CAST(len(tk) AS INT) AS n_tokens,
-         |  CAST(len(tk) - len(kept) AS INT) AS n_removed,
-         |  coalesce(array_to_string(list_transform(kept, i -> tk[i]), ' '),
-         |    '') AS cleaned_text
-         |FROM k""".stripMargin,
 
     // per-user window sums; LOO = (sum - own)/(n-1); smoothing prior
     // = alpha * exact global mean, identical IEEE order
@@ -7177,17 +6672,6 @@ object SparkEntry {
         .stripMargin
     },
 
-    // 60-bit portable hash of the 8-token head; clusters only
-    "q217_prefix_duplicates" ->
-      s"""WITH h AS (SELECT doc_id,
-         |    CAST(('0x'||substr(md5(array_to_string(
-         |      list_slice($sqlWords, 1, 8), ' ')), 1, 15)) AS BIGINT)
-         |      AS prefix_hash
-         |  FROM documents)
-         |SELECT prefix_hash, COUNT(*) AS n_docs,
-         |  CAST(MIN(doc_id) AS BIGINT) AS min_doc_id
-         |FROM h GROUP BY 1 HAVING COUNT(*) >= 2""".stripMargin,
-
     // at-risk from one prefix sum; micro-nat log factors cumsum; a
     // full-death time pins survival to 0 from there on
     "q218_kaplan_meier" ->
@@ -7297,25 +6781,6 @@ object SparkEntry {
         |    ELSE CAST(s2 - n_pos * (n_pos + 1) AS DOUBLE)
         |      / (2.0 * CAST(n_pos * n_neg AS DOUBLE)) END AS auc
         |FROM a""".stripMargin,
-
-    // q23's band CTEs; estimate = matching signature components / k
-    "q222_minhash_audit" -> {
-      val est = "CAST(len(list_filter(list_zip(sa, sb), " +
-        "p -> p[1] = p[2])) AS DOUBLE) / 8.0E0"
-      val exact = "CAST(len(list_intersect(sha, shb)) AS DOUBLE) / " +
-        "CAST(len(list_distinct(list_concat(sha, shb))) AS DOUBLE)"
-      s"""WITH $sqlMinhashBandCtes,
-         |cand AS (SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-         |  FROM banded l JOIN banded r ON l.band_idx = r.band_idx
-         |    AND l.bucket = r.bucket AND l.doc_id < r.doc_id),
-         |x AS (SELECT c.id_a, c.id_b, a.sig AS sa, b.sig AS sb,
-         |    list_distinct(a.sh) AS sha, list_distinct(b.sh) AS shb
-         |  FROM cand c JOIN sig a ON a.doc_id = c.id_a
-         |  JOIN sig b ON b.doc_id = c.id_b)
-         |SELECT id_a, id_b, $est AS est_jaccard, $exact AS jaccard,
-         |  ABS($est - ($exact)) AS abs_err
-         |FROM x""".stripMargin
-    },
 
     // distinct train grams once; per-test-doc distinct-gram join
     "q223_novelty_score" ->
@@ -7562,22 +7027,6 @@ object SparkEntry {
          |  AND w.hi - w.cnt < k.kk AND k.kk <= w.hi""".stripMargin
     },
 
-    // index anti-join + batch-internal first-wins
-    "q233_incremental_dedup" ->
-      s"""WITH idx AS (SELECT DISTINCT
-         |    md5(array_to_string($sqlWords, ' ')) AS fp
-         |  FROM documents WHERE doc_id < 100),
-         |b AS (SELECT doc_id, n_chars,
-         |    md5(array_to_string($sqlWords, ' ')) AS fingerprint
-         |  FROM documents WHERE doc_id >= 100),
-         |fresh AS (SELECT * FROM b WHERE NOT EXISTS (
-         |    SELECT 1 FROM idx WHERE idx.fp = b.fingerprint)),
-         |w AS (SELECT fingerprint, MIN(doc_id) AS doc_id
-         |      FROM fresh GROUP BY 1)
-         |SELECT f.fingerprint, f.doc_id, f.n_chars FROM fresh f
-         |JOIN w ON w.fingerprint = f.fingerprint
-         |  AND w.doc_id = f.doc_id""".stripMargin,
-
     // the streamed state must equal the batch sketch: q200's counter
     // table with the incremental-agg finish columns (unit weights ->
     // val_sum = cnt, val_avg = 1)
@@ -7592,30 +7041,6 @@ object SparkEntry {
         |  CAST(COUNT(*) AS DOUBLE) AS val_sum,
         |  CAST(COUNT(*) AS DOUBLE) / COUNT(*) AS val_avg
         |FROM v, dd GROUP BY 1, 2""".stripMargin,
-
-    // q42's recursive components; per-cluster winner by (n_chars
-    // desc, id asc); unclustered docs pass through
-    "q235_prune_by_quality" ->
-      s"""WITH RECURSIVE $sqlMinhashPairCtes,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs),
-         |reach(id, lbl) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id),
-         |comp AS (SELECT id AS doc_id, min(lbl) AS component
-         |         FROM reach GROUP BY id),
-         |wins AS (SELECT doc_id FROM (
-         |    SELECT c.component, c.doc_id, ROW_NUMBER() OVER (
-         |      PARTITION BY c.component
-         |      ORDER BY d.n_chars DESC, c.doc_id ASC) AS rn
-         |    FROM comp c JOIN documents d USING (doc_id)) WHERE rn = 1)
-         |SELECT d.doc_id, d.n_chars FROM documents d
-         |WHERE NOT EXISTS (SELECT 1 FROM comp WHERE comp.doc_id = d.doc_id)
-         |UNION ALL
-         |SELECT d.doc_id, d.n_chars FROM documents d
-         |JOIN wins ON wins.doc_id = d.doc_id""".stripMargin,
 
     // integer-second gaps; decimal-staged squares; one IEEE chain
     "q236_burstiness" -> {
@@ -8375,44 +7800,6 @@ object SparkEntry {
         |       THEN CAST(ABS(zr) > 3.0E0 AS INT) END AS is_anomaly
         |FROM z""".stripMargin,
 
-    "q268_lsh_plan" -> {
-      def chain(x: String, e: Int) = Seq.fill(e)(x).mkString("(", " * ", ")")
-      val grid = Seq((2, 8), (4, 4), (8, 2), (16, 1))
-      val arms = grid.map { case (b, r) =>
-        val p = s"1.0E0 - ${chain(s"(1.0E0 - ${chain("mid", r)})", b)}"
-        s"""  SELECT $b AS bands, $r AS rows_per_band, cnt, mid,
-           |    ($p) AS pv FROM hm""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH sh AS (SELECT doc_id, list_distinct($sqlShingles) AS sh
-         |    FROM (SELECT doc_id, $sqlWords AS w FROM documents
-         |          WHERE doc_id % 10 = 0)),
-         |p AS (SELECT CAST(len(list_intersect(l.sh, r.sh)) AS DOUBLE)
-         |      / CAST(len(list_distinct(list_concat(l.sh, r.sh)))
-         |          AS DOUBLE) AS j
-         |  FROM sh l JOIN sh r ON l.doc_id < r.doc_id
-         |  WHERE len(list_intersect(l.sh, r.sh)) > 0),
-         |h AS (SELECT LEAST(CAST(floor(j * 20) AS INT), 19) AS bin,
-         |    CAST(COUNT(*) AS BIGINT) AS cnt FROM p GROUP BY 1),
-         |hm AS (SELECT bin, cnt,
-         |    (CAST(bin AS DOUBLE) + 0.5E0) / 20 AS mid FROM h),
-         |u AS (
-         |$arms),
-         |g AS (SELECT bands, rows_per_band, cnt, mid,
-         |    CAST(round(pv * 1.0E6) AS BIGINT) AS pm FROM u),
-         |t AS (SELECT bands, rows_per_band,
-         |    CAST(SUM(cnt) AS BIGINT) AS n_pairs,
-         |    CAST(SUM(CASE WHEN mid < 0.5E0 THEN cnt * pm ELSE 0 END)
-         |      AS BIGINT) AS fp_micro,
-         |    CAST(SUM(CASE WHEN mid >= 0.5E0 THEN cnt * (1000000 - pm)
-         |      ELSE 0 END) AS BIGINT) AS fn_micro
-         |  FROM g GROUP BY 1, 2),
-         |tc AS (SELECT *, fp_micro + fn_micro AS cost_micro FROM t),
-         |mn AS (SELECT min(cost_micro) AS best FROM tc)
-         |SELECT bands, rows_per_band, n_pairs, fp_micro, fn_micro,
-         |  cost_micro, (cost_micro = best) AS is_best
-         |FROM tc, mn""".stripMargin
-    },
-
     "q269_replay_eval" ->
       """WITH it AS (SELECT user_id,
         |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id,
@@ -9000,86 +8387,6 @@ object SparkEntry {
     }
   )
 
-  /** MinHash+LSH candidate-pair CTE chain shared by q23 (pairs) and
-    * q42 (connected components over the pairs). Ends with `mh_pairs`
-    * (id_a, id_b, jaccard ≥ 0.2). */
-  /** MinHash banding CTE prefix (shingles → signatures → band
-    * buckets), shared by the within-corpus pair chain and the q84
-    * cross-corpus linkage oracle. Ends with `banded`. */
-  /** q42's CHAIN probe: six 12-word docs sliding (stride 4) over one
-    * 32-salt-word sequence, so adjacent docs share 8 words (jaccard
-    * 6/14 ≈ 0.43) and skip-one docs share 4 (jaccard 2/18 ≈ 0.11 <
-    * the 0.2 verify threshold). The salt seed is pinned to 7 — one of
-    * the seeds (7/20/54 found) where every adjacent pair ALSO
-    * co-buckets under the engine's 2-entry minhash bands, so the pair
-    * graph is exactly a 5-edge PATH: a diameter-5 component. The raw
-    * corpus's dup components are near-cliques that converge in one
-    * propagation round (proven by the r14 kill-test: cc_converge_early
-    * survived GREEN pre-probe), so only this chain makes multi-round
-    * label propagation driver-visible — under a premature fixpoint,
-    * nodes ≥ 3 hops from the min id keep phantom labels and read RED.
-    * Input fixture shared verbatim with the oracle's `docs42` VALUES
-    * (input sharing, not formula sharing — the oracle still bands,
-    * verifies, and closes the chain with its own SQL). */
-  private[graft] val ccChainProbe: Seq[(Long, String)] = (0 until 6).map { i =>
-    (9000000021L + i, (0 until 12).map(j => s"p7w${4 * i + j}").mkString(" "))
-  }
-
-  /** q23's BAND-STRUCTURE probe pair (ids 9000000011/12): jaccard
-    * 0.25 (≥ the 0.2 verify cut) but minhash signatures that agree at
-    * entries 2 and 5 ONLY — never both entries of an aligned 2-entry
-    * band — so correct 2-entry banding excludes the pair while ANY
-    * single-entry banding co-buckets it and reads RED (kill-test
-    * lsh_band_rows). Like [[ccChainProbe]], the kill-power lives in a
-    * structure property of the CURRENT minhash params —
-    * ProbeFixturesSpec locks both properties so a k/bands/hash change
-    * cannot silently disarm the gates. */
-  private[graft] val bandProbeDocs: Seq[(Long, String)] = Seq(
-    (9000000011L,
-      "alpha bravo charlie delta echo foxtrot golf hotel india " +
-        "juliet kilo lima"),
-    (9000000012L,
-      "quebec985 bravo charlie delta echo foxtrot golf victor651 " +
-        "india romeo717 mike21 lima"))
-
-  private def sqlMinhashBandCtes: String = sqlMinhashBandCtesOver("documents")
-
-  /** [[sqlMinhashBandCtes]] over an arbitrary docs relation — q42's
-    * oracle threads a probe-extended `docs42` CTE through the same
-    * banding SQL (the chain fixture must be banded on BOTH sides). */
-  private def sqlMinhashBandCtesOver(rel: String): String =
-    s"""sh AS (SELECT doc_id, $sqlShingles AS sh
-       |            FROM (SELECT doc_id, $sqlWords AS w FROM $rel)),
-       |hs AS (SELECT doc_id, sh,
-       |         list_transform(sh, s -> ${sqlHash32(0, "s")}) AS hs FROM sh),
-       |sig AS (SELECT doc_id, sh, [${(0 until 8).map(i =>
-                  s"list_min(list_transform(hs, h -> (h*${TextFunctions.MinhashA(i)} + ${TextFunctions.MinhashB(i)}) % 4294967296))")
-                  .mkString(", ")}] AS sig FROM hs),
-       |banded AS (
-       |  SELECT doc_id, sh, b.band_idx,
-       |    array_to_string(list_slice(sig, b.band_idx*2+1, b.band_idx*2+2), ',')
-       |      AS bucket
-       |  FROM sig, (SELECT unnest([0,1,2,3]) AS band_idx) b)""".stripMargin
-
-  private def sqlMinhashPairCtes: String = sqlMinhashPairCtesOver("documents")
-
-  private def sqlMinhashPairCtesOver(rel: String): String =
-    s"""${sqlMinhashBandCtesOver(rel)},
-       |cand AS (
-       |  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
-       |         l.sh AS sha, r.sh AS shb
-       |  FROM banded l JOIN banded r
-       |    ON l.band_idx = r.band_idx AND l.bucket = r.bucket
-       |   AND l.doc_id < r.doc_id),
-       |mh_pairs AS (
-       |  SELECT id_a, id_b, jaccard FROM (
-       |    SELECT id_a, id_b,
-       |      CAST(len(list_intersect(list_distinct(sha), list_distinct(shb))) AS DOUBLE)
-       |      / CAST(len(list_distinct(list_concat(list_distinct(sha),
-       |          list_distinct(shb)))) AS DOUBLE) AS jaccard
-       |    FROM cand)
-       |  WHERE jaccard >= 0.2)""".stripMargin
-
   /** q139's oracle for a given pinned rotation matrix (the engine
     * LEARNS the same matrix deterministically from the sf's data —
     * [[graft.Q139Rotation]] holds one pin per testdata sf so
@@ -9381,56 +8688,6 @@ object SparkEntry {
        |    ELSE (CASE WHEN xv < 0 THEN -1.0 ELSE 1.0 END) * ($r)
        |  END AS FLOAT)""".stripMargin
   }
-
-  /** Duplicate-span detection CTE chain (l=5 token windows duplicated
-    * corpus-wide, merged into per-doc islands) shared by the q99 span
-    * report and the q191 span-removal oracle. Ends with
-    * `z (doc_id, pos, isl)` plus `t (doc_id, tk)`; no trailing
-    * comma. */
-  private def sqlDupSpanZCtes: String =
-    s"""t AS (SELECT doc_id, $sqlWords AS tk FROM documents),
-       |w0 AS (SELECT doc_id, list_transform(generate_series(1, len(tk) - 4),
-       |         i -> CAST(('0x'||substr(md5(
-       |           array_to_string(list_slice(tk, i, i + 4), ' ')), 1, 15))
-       |           AS BIGINT)) AS hs
-       |       FROM t WHERE len(tk) >= 5),
-       |w AS (SELECT doc_id, generate_subscripts(hs, 1) - 1 AS pos,
-       |        unnest(hs) AS h FROM w0),
-       |d AS (SELECT h FROM w GROUP BY h HAVING count(*) > 1),
-       |m AS (SELECT w.doc_id, w.pos FROM w JOIN d USING (h)),
-       |x AS (SELECT doc_id, pos,
-       |        max(pos + 4) OVER (PARTITION BY doc_id ORDER BY pos
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-       |      FROM m),
-       |y AS (SELECT doc_id, pos, CASE WHEN prev_end IS NULL
-       |        OR pos > prev_end + 1 THEN 1 ELSE 0 END AS f FROM x),
-       |z AS (SELECT doc_id, pos,
-       |        SUM(f) OVER (PARTITION BY doc_id ORDER BY pos) AS isl FROM y)""".stripMargin
-
-  /** CDC chunk CTE chain for q186/q187 (w=16, divisor=64, seed=7,
-    * doc_id % 10 slice — [[graft.operators.Dedup.cdcChunks]]'s
-    * defaults): ends with `z` = one row per chunk carrying
-    * `(doc_id, text, chunk_idx 0-based, st, en)`. No trailing comma. */
-  private def sqlCdcChunkCtes: String =
-    """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-      |pos AS (SELECT doc_id, text,
-      |          unnest(generate_series(16, length(text))) AS i
-      |        FROM d WHERE length(text) >= 16),
-      |cuts AS (SELECT doc_id, i FROM pos
-      |  WHERE CAST(('0x'||substr(md5('7:'||substr(text,
-      |      CAST(i - 15 AS INT), 16)), 1, 8)) AS BIGINT) % 64 = 0),
-      |cs AS (SELECT doc_id, list(i ORDER BY i) AS cs FROM cuts GROUP BY 1),
-      |cl AS (SELECT d.doc_id, d.text, length(d.text) AS n,
-      |         coalesce(cs.cs, []) AS cs
-      |       FROM d LEFT JOIN cs USING (doc_id)),
-      |bs AS (SELECT doc_id, text,
-      |         list_sort(list_distinct(list_concat(list_concat([0], cs), [n]))) AS bs
-      |       FROM cl),
-      |ch AS (SELECT doc_id, text,
-      |         list_slice(bs, 1, len(bs) - 1) AS ss,
-      |         list_slice(bs, 2, len(bs)) AS es FROM bs),
-      |z AS (SELECT doc_id, text, generate_subscripts(ss, 1) - 1 AS chunk_idx,
-      |        unnest(ss) AS st, unnest(es) AS en FROM ch)""".stripMargin
 
   // --- shared DuckDB SQL fragments for the text oracles ---
   private val sqlWords =

@@ -64,15 +64,6 @@ object GraftExtensions {
     (FunctionIdentifier("graft_quantize_fp8e5m2"),
       info("graft_quantize_fp8e5m2", "round-trip through fp8 E5M2"),
       { case Seq(c) => QuantizeFp8E5M2(Cast(c, DoubleType)) }: Seq[Expression] => Expression),
-    (FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "32-bit simhash of a word array"),
-      { case Seq(c) => SimHashText(c, 32) }: Seq[Expression] => Expression),
-    (FunctionIdentifier("graft_minhash"),
-      info("graft_minhash", "8-seed minhash signature of a shingle array"),
-      { case Seq(c) => MinHashSignature(c, 8) }: Seq[Expression] => Expression),
-    (FunctionIdentifier("graft_winnow"),
-      info("graft_winnow", "winnowing fingerprints (k=8, w=4) of normalized text"),
-      { case Seq(c) => WinnowText(c, 8, 4) }: Seq[Expression] => Expression),
     (FunctionIdentifier("graft_pack_bools"),
       info("graft_pack_bools", "bit-pack array<boolean>, 8 per byte LSB-first"),
       { case Seq(c) => graft.functions.PackBools(c) }: Seq[Expression] => Expression),

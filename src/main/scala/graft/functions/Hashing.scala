@@ -28,9 +28,8 @@ object Hashing {
   def md5Hash60(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
-  /** One MD5 digest per thread, shared with the text-hash kernels,
-    * which feed it byte slices in place. */
-  private[functions] val digest = new ThreadLocal[MessageDigest] {
+  /** One MD5 digest per thread. */
+  private val digest = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest =
       MessageDigest.getInstance("MD5")
   }
@@ -50,5 +49,5 @@ object Hashing {
   }
 
   /** The digest prefix of seed 0, precomputed: most callers hash with it. */
-  private[functions] val Zero = "0:".getBytes(StandardCharsets.US_ASCII)
+  private val Zero = "0:".getBytes(StandardCharsets.US_ASCII)
 }

@@ -2,15 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import graft.functions.Hashing.{md5Hash32, md5Hash60}
 
-/** Text-analysis column functions for large-scale training-data
-  * pipelines: tokenization, shingling, MinHash, SimHash, language ID,
-  * quality scoring, fingerprinting. All pure Catalyst column trees
-  * (split/transform/aggregate HOFs) — codegen-friendly, no UDFs.
-  * Every hash comes from the engine-portable md5 of [[Hashing]], so the
-  * DuckDB oracles replay it.
+/** Text-analysis column functions: tokenization, shingling, PII
+  * masking, language ID and quality scoring. All pure Catalyst column
+  * trees (split/transform/aggregate HOFs) — codegen-friendly, no UDFs.
   */
 object TextFunctions {
 
@@ -62,175 +57,6 @@ object TextFunctions {
   def maskPii(text: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(text,
       EmailRe, "<EMAIL>"), Ipv4Re, "<IP>"), PhoneRe, "<PHONE>")
-
-  /** Universal-hash constants for MinHash: fixed odd multipliers
-    * a < 2^31 and addends b < 2^31, so `a*h + b` for a 32-bit `h` stays
-    * inside a signed 64-bit long in every engine (no wraparound —
-    * DuckDB BIGINT errors on overflow where JVM longs wrap). */
-  val MinhashA: Seq[Long] = Seq(
-    1222233431L, 1949673569L, 2038074743L, 1561403177L,
-    1291735313L, 1678349045L, 1117984489L, 2147418083L,
-    1823958401L, 1990744609L, 1234567891L, 1853125581L,
-    1431655765L, 1973594693L, 1111181111L, 2046916619L)
-  val MinhashB: Seq[Long] = Seq(
-    376438541L, 981939193L, 557722239L, 1046527479L,
-    124338077L, 1903763717L, 633395103L, 287984159L,
-    1734205871L, 447362207L, 1092548707L, 814627339L,
-    1569814297L, 230498837L, 1987654321L, 55555333L)
-
-  /** `k` MinHash minima from ONE base-hash array: per seed `i`, the
-    * minimum over shingles of `(a_i*h + b_i) mod 2^32` — classic affine
-    * universal hashing, so the expensive md5 runs once per shingle
-    * instead of once per (shingle, seed). Column-HOF form kept for
-    * cross-checking the codegen kernel. */
-  def minhashFromHashes(hashes: Column, k: Int): Column = {
-    require(k <= MinhashA.length, s"k must be <= ${MinhashA.length}")
-    array((0 until k).map { i =>
-      array_min(transform(hashes,
-        h => (h * lit(MinhashA(i)) + lit(MinhashB(i))) % lit(4294967296L)))
-    }: _*)
-  }
-
-  /** MinHash signature straight from a shingle array — codegen'd kernel
-    * ([[graft.expr.MinHashSignature]]): md5 + k affine minima in one
-    * primitive loop per row. */
-  def minhashOfShingles(shingleArr: Column, k: Int): Column = {
-    require(k <= MinhashA.length, s"k must be <= ${MinhashA.length}")
-    ColumnBridge.column(graft.expr.MinHashSignature(
-      ColumnBridge.expression(shingleArr), k))
-  }
-
-  /** MinHash signature over word `n`-gram shingles: array of `k`
-    * minima. Convenience single-column form; [[operators.Dedup]] stages
-    * the word/shingle arrays in separate projections so each is
-    * computed once per row. */
-  def minhashSignature(text: Column, n: Int, k: Int,
-      hash: (Column, Int) => Column = md5Hash32): Column =
-    minhashOfShingles(shingles(text, n), k)
-
-  /** LSH band keys from a minhash signature: `bands` strings of
-    * `k/bands` signature entries each. */
-  def bandKeys(signature: Column, k: Int, bands: Int): Column = {
-    require(k % bands == 0, "k must divide into bands")
-    val rows = k / bands
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band_idx"),
-        concat_ws(",", transform(slice(signature, b * rows + 1, rows),
-          _.cast("string"))).as("bucket"))
-    }: _*)
-  }
-
-  /** SimHash over word hashes: bit b is set iff Σ_w (±1 per word's bit
-    * b) ≥ 0. `bits` ≤ 32 with the portable hash. Single pass over the
-    * word hashes: one aggregate carries all `bits` vote counters as an
-    * array accumulator (vs. the naive form that re-walks the words —
-    * and recomputes their md5s — once per bit). */
-  def simhashFromHashes(hashes: Column, bits: Int): Column = {
-    val masks = array((0 until bits).map(b => lit(1L << b)): _*)
-    val votes = aggregate(hashes, array_repeat(lit(0L), bits),
-      (acc, h) => zip_with(acc, masks,
-        (a, m) => a + when(h.bitwiseAND(m) =!= 0L, lit(1L)).otherwise(lit(-1L))))
-    aggregate(
-      zip_with(votes, masks,
-        (v, m) => when(v >= 0L, m).otherwise(lit(0L))),
-      lit(0L), _ + _)
-  }
-
-  /** SimHash straight from a word array — codegen'd kernel
-    * ([[graft.expr.SimHashText]]): md5 + bit votes in one primitive
-    * loop per row. */
-  def simhashOfWords(wordArr: Column, bits: Int = 32): Column =
-    ColumnBridge.column(graft.expr.SimHashText(
-      ColumnBridge.expression(wordArr), bits))
-
-  def simhash(text: Column, bits: Int = 32,
-      hash: (Column, Int) => Column = md5Hash32): Column =
-    simhashOfWords(words(text), bits)
-
-  /** Hamming distance between two simhashes. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** Exact word-set Jaccard similarity of two texts' n-gram sets. */
-  def jaccardShingles(a: Column, b: Column): Column = {
-    val (sa, sb) = (array_distinct(a), array_distinct(b))
-    size(array_intersect(sa, sb)).cast("double") /
-      size(array_union(sa, sb)).cast("double")
-  }
-
-  /** Document fingerprint: md5 of whitespace-normalized lowercase text
-    * (rolling-hash alternative: `xxhash64` of [[normalized]]). */
-  def fingerprint(text: Column): Column =
-    md5(concat_ws(" ", words(text)))
-
-  /** Normalized text: lowercased, whitespace collapsed to single
-    * spaces, trimmed — the base string for char-gram fingerprints. */
-  def normalized(text: Column): Column =
-    trim(regexp_replace(lower(text), "\\s+", " "))
-
-  /** Character `k`-gram hashes of ALREADY-normalized text ([[normalized]]
-    * staged as its own attribute — inlining it here would re-run the
-    * normalization regex per element): position i → 32-bit portable hash
-    * of the k chars starting at i (the hash sequence a rolling
-    * Rabin-Karp hash would produce, in engine-portable form). */
-  def charGramHashes(norm: Column, k: Int): Column =
-    transform(sequence(lit(1), greatest(length(norm) - (k - 1), lit(1))),
-      i => md5Hash32(norm.substr(i, lit(k)), 0))
-
-  /** 60-bit hashes of every `l`-token window (the substring-dedup
-    * inner loop): codegen'd single-digest-per-window kernel
-    * ([[graft.expr.WordWindowHash60]]); values identical to
-    * `md5Hash60(concat_ws(" ", slice(words, i, l)))`. */
-  def wordWindowHashes(text: Column, l: Int): Column =
-    ColumnBridge.column(graft.expr.WordWindowHash60(
-      ColumnBridge.expression(normalized(text)), l))
-
-  /** Column-HOF twin of [[wordWindowHashes]] for cross-checking the
-    * kernel (and as the form any md5-capable engine can replay). */
-  def wordWindowHashesHof(ws: Column, l: Int): Column =
-    when(size(ws) < l, array().cast("array<bigint>")).otherwise(
-      transform(sequence(lit(1), size(ws) - (l - 1)),
-        i => md5Hash60(concat_ws(" ", slice(ws, i, lit(l))))))
-
-  /** Content-defined-chunking cut positions (the [[operators.Dedup.cdcChunks]]
-    * inner loop): codegen'd single-digest-per-window kernel
-    * ([[graft.expr.CdcCuts]]); values identical to [[cdcCutsHof]]. */
-  def cdcCutPositions(text: Column, w: Int, divisor: Int, seed: Int): Column =
-    ColumnBridge.column(graft.expr.CdcCuts(
-      ColumnBridge.expression(text), w, divisor, seed))
-
-  /** Column-HOF twin of [[cdcCutPositions]] for cross-checking the
-    * kernel (and the form any md5-capable engine can replay): every
-    * position whose trailing `w`-char window hashes to 0 mod
-    * `divisor`. */
-  def cdcCutsHof(text: Column, w: Int, divisor: Int, seed: Int): Column = {
-    val n = length(text)
-    when(n >= w,
-      filter(sequence(lit(w), n), i =>
-        pmod(md5Hash32(text.substr(i - lit(w - 1), lit(w)), seed),
-          lit(divisor)) === 0))
-      .otherwise(array().cast("array<int>"))
-  }
-
-  /** Winnowing document fingerprint (Schleimer, Wilkerson & Aiken,
-    * SIGMOD'03): slide a window of `w` over the char `k`-gram hashes,
-    * keep each window's minimum, dedupe + sort. Guarantees any shared
-    * substring of length ≥ k+w-1 yields a shared fingerprint — the
-    * standard local-fingerprint scheme for partial-overlap detection at
-    * corpus scale (pairs meet through fingerprint buckets, never an
-    * unblocked self-join). Codegen'd deque kernel
-    * ([[graft.expr.WinnowText]]), O(chars) per row. */
-  def winnowFingerprint(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(graft.expr.WinnowText(
-      ColumnBridge.expression(normalized(text)), k, w))
-
-  /** Column-HOF twin of [[winnowFingerprint]] for cross-checking the
-    * kernel — pass the normalized text attribute. */
-  def winnowFingerprintHof(norm: Column, k: Int, w: Int): Column = {
-    val hs = charGramHashes(norm, k)
-    array_sort(array_distinct(
-      transform(sequence(lit(1), greatest(size(hs) - (w - 1), lit(1))),
-        j => array_min(slice(hs, j, lit(w))))))
-  }
 
   // --- language ID + quality -------------------------------------------
 

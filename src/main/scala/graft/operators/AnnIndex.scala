@@ -112,7 +112,7 @@ object AnnIndex {
       numPlanes: Int = 16,
       bands: Int = 4,
       seed: Long = 42L): DataFrame = {
-    // r18: pinned (the minhashLshPairs convention) — the hyperplane
+    // r18: pinned, like every self-join input — the hyperplane
     // bucket kernel fed both self-join sides and only the SMJ regime's
     // ReuseExchange deduplicated them. (id, band, bucket) rows only —
     // the embeddings stay out of the pin.

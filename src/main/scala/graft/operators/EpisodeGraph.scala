@@ -394,7 +394,7 @@ object EpisodeGraph {
     // components = min reachable id over the threshold edges. Facts
     // with no edge are their own singleton component (left join,
     // coalesce to own id).
-    val comps = Dedup.connectedComponents(pairs,
+    val comps = connectedComponents(pairs,
       aCol = "id_a", bCol = "id_b", outId = "__fid")
     val thr = mergeThreshold
     val maxC = maxComponent
@@ -428,5 +428,125 @@ object EpisodeGraph {
         greedyFold(sorted, thr).iterator
       }
       .toDF(idCol, "leader_id", "is_new")
+  }
+
+  /** First round that adds the pointer-jump shortcut to
+    * [[connectedComponents]]'s label propagation: the first rounds
+    * stay single-shuffle because near-clique graphs converge in 2–3
+    * and must not pay the jump join. */
+  private[operators] val JumpFrom = 3
+
+  /** Connected components over an undirected pair list →
+    * `(outId, component)` with component = minimum reachable id (the
+    * canonical representative: [[mergeFactsClustered]] folds each
+    * component of its similarity edges on its own).
+    *
+    * Iterative min-label propagation (the star-contraction family,
+    * cf. Kiveris et al., "Connected Components in MapReduce"): each
+    * round every node adopts the minimum label over its closed
+    * neighborhood — one shuffle per round, rounds bounded by component
+    * diameter (similarity clusters are near-cliques, so 2–3 in practice).
+    * `localCheckpoint` truncates lineage between rounds so the plan
+    * stays O(1) regardless of iteration count — the shape that holds on
+    * a billion-edge pair list.
+    *
+    * == Deep components: pointer jumping ==
+    * Edge propagation alone moves a label ONE hop per round, so a
+    * chain-shaped component (smeared arcs of near-duplicates) needs
+    * diameter rounds. From round [[JumpFrom]] on, each round
+    * also SHORTCUTS through the label table itself — `L(v) ←
+    * min(L(v), L(L(v)))`, the classic pointer-jumping step (labels
+    * are node ids, and a label's own label is a strictly-better bound
+    * in the same component) — which doubles the covered distance per
+    * round: total rounds O(JumpFrom + log₂ diameter), so the default
+    * budget of 25 covers components millions of hops deep. The first
+    * [[JumpFrom]] rounds stay single-shuffle because near-clique
+    * graphs (the overwhelmingly common case) converge there and
+    * should not pay the jump join's second shuffle. Exhausting
+    * `maxIters` without the fixpoint still fails loudly — unconverged
+    * labels split phantom components and under-merge silently.
+    */
+  def connectedComponents(
+      pairs: DataFrame,
+      maxIters: Int = 25,
+      aCol: String = "id_a",
+      bCol: String = "id_b",
+      outId: String = "doc_id"): DataFrame = {
+    // no distinct: min-label propagation is idempotent under duplicate
+    // edges, so the distinct shuffle would be pure cost.
+    // (Tried and reverted, r12: pre-partitioning edges by dst before
+    // the checkpoint to spare the per-round join exchange — the
+    // LogicalRDD that localCheckpoint plans does NOT surface the
+    // partitioning to the join (both sides still Exchange+Sort in the
+    // explain), and the sweep measured zero change. The per-round
+    // edge shuffle is the price of the loop on this engine.)
+    // pin the DIRECTED pair list once and derive both orientations
+    // from the pinned table: a union-then-checkpoint runs the whole
+    // upstream pair pipeline once per union leg wherever exchange
+    // reuse doesn't cover it (AQE's broadcast rewrites defeat
+    // ReuseExchange at small scale), and materializes 2|E| rows where
+    // |E| suffice
+    val directed = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .transform(Pins.heavy)
+    val edges = directed.unionByName(
+      directed.select(col("dst").as("src"), col("src").as("dst")))
+    // round 0 fused into initialization: every node starts at the min
+    // of its closed neighborhood (one aggregation, no convergence probe)
+    var labels = edges
+      .groupBy(col("src").as(outId))
+      .agg(least(col(outId), min(col("dst"))).as("component"))
+      .localCheckpoint()
+    var iter = 0
+    var converged = false
+    while (iter < maxIters && !converged) {
+      val viaEdges = edges
+        .join(labels.withColumnRenamed(outId, "dst"), "dst")
+        .select(col("src").as(outId), col("component"),
+          lit(null).cast(labels.schema("component").dataType).as("__old"))
+      // carry the previous label through the same aggregation so the
+      // convergence test is a scan of the checkpointed result — no
+      // extra join-with-previous job per round
+      val next = labels
+        .select(col(outId), col("component"), col("component").as("__old"))
+        .unionByName(viaEdges)
+        .groupBy(outId)
+        .agg(min("component").as("component"), min("__old").as("__old"))
+        .localCheckpoint()
+      // pointer jumping from round JumpFrom on (scaladoc): every label
+      // is itself a node id of the same component, so shortcutting
+      // through the label's OWN label halves the remaining distance
+      // per round. `__old` still holds the PREVIOUS round's label, so
+      // a jump-only improvement correctly reads as progress below.
+      val stepped =
+        if (iter < JumpFrom) next
+        else {
+          val parent = next.select(col(outId).as("__pid"),
+            col("component").as("__pcomp"))
+          next.join(parent, col("component") === col("__pid"), "left")
+            .select(col(outId),
+              least(col("component"),
+                coalesce(col("__pcomp"), col("component")))
+                .as("component"),
+              col("__old"))
+            .localCheckpoint()
+        }
+      // labels only ever decrease; fixpoint when no strict decrease
+      converged = stepped.filter(col("component") < col("__old")).isEmpty
+      labels = stepped.select(col(outId), col("component"))
+      iter += 1
+    }
+    // Unconverged labels are SILENTLY WRONG downstream (a chain-shaped
+    // component whose min id sits > maxIters hops from the far end
+    // splits into phantom components — mergeFactsClustered's
+    // global-equality claim breaks) — so exhaustion fails the job
+    // instead of returning them. Components
+    // that deep mean maxIters is undersized for the graph's diameter:
+    // raise it deliberately (rounds are one shuffle each; the typical
+    // similarity cluster is dense and converges in a handful).
+    require(converged,
+      s"connectedComponents did not converge in maxIters=$maxIters " +
+        s"rounds — a component's min-id node is deeper than that; " +
+        s"raise maxIters (cost: one shuffle per round)")
+    labels
   }
 }

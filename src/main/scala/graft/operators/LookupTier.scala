@@ -39,7 +39,9 @@ import org.apache.spark.sql.types._
   * The index of one table snapshot lives in a [[SnapshotCache]] (keyed
   * by the canonicalized optimized plan plus its input-file set, so a
   * rewrite — an `Ingest.upsertBatch` swap, a re-saved bucketed table —
-  * is never served stale). At most [[MaxSnapshots]] indexes are held,
+  * is never served stale, and by the key columns it is grouped by, so
+  * two retrieves that project the same table under different pks
+  * never share an index). At most [[MaxSnapshots]] indexes are held,
   * least recently used evicted first; concurrent callers of one
   * snapshot wait for a single build.
   */
@@ -176,7 +178,7 @@ private[graft] object LookupTier {
 
   private def snapshotIndex(table: DataFrame, plan: LogicalPlan,
       key: Seq[Attribute]): Map[Any, Seq[InternalRow]] =
-    cache.get(SnapshotCache.key(table), plan.stats.sizeInBytes) {
+    cache.get(SnapshotCache.key(table).copy(by = key.map(_.name)), plan.stats.sizeInBytes) {
       val keyOf = keyFn(plan.output, key)
       PlanBridge.collectInternal(table).toSeq.groupBy(keyOf) - null
     }

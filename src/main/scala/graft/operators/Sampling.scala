@@ -23,10 +23,6 @@ object Sampling {
   def hashBucket(key: Column, seed: Int = 7): Column =
     Hashing.md5Hash32(key.cast("string"), seed) % Bucket
 
-  /** Keep each row iff its key hashes under `rate`. */
-  def byHash(df: DataFrame, keyCol: String, rate: Double, seed: Int = 7): DataFrame =
-    df.filter(hashBucket(col(keyCol), seed) < (rate * Bucket).toLong)
-
   /** Deterministic weight-proportional systematic sampling: rows are
     * laid on the cumulative-weight axis in `keyCol` order and one row
     * is taken wherever the axis crosses a multiple of total/n.

@@ -270,7 +270,7 @@ object SimilaritySearch {
       threshold: Double,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    // r18: pinned (the minhashLshPairs convention) — "identical join
+    // r18: pinned, like every self-join input — "identical join
     // sides → ReuseExchange" only held in the SMJ regime; under AQE's
     // broadcast rewrite each side re-executed the upstream (for the
     // IVF callers that is the whole k-means assignment join; q18's

@@ -927,9 +927,8 @@ object Ingest {
         col("n_events"))
 
   /** Streaming exact dedup with hard-bounded state:
-    * `dropDuplicatesWithinWatermark` holds a key's fingerprint only
-    * until the watermark passes its event time — the streaming twin of
-    * [[graft.operators.Dedup.exact]] for at-least-once sources (Kafka
+    * `dropDuplicatesWithinWatermark` holds a key only until the
+    * watermark passes its event time, for at-least-once sources (Kafka
     * redeliveries, consumer seek-back replays like the reference's
     * panic-seek in kafka.go:136-147). Duplicates arriving within the
     * delay window are dropped; state is evicted after it. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{FeatureDef, FeatureGroupDef, FeatureType}
 import graft.functions.{Similarity, TextFunctions}
-import graft.operators.{Dedup, FeatureStore, InteractionStore, SimilaritySearch, Training}
+import graft.operators.{EpisodeGraph, FeatureStore, InteractionStore, SimilaritySearch, Training}
 
 /** Degenerate-input hardening: every operator must behave on empty
   * inputs, empty strings and zero vectors — the shapes a 100 TB
@@ -37,7 +37,7 @@ class EdgeCaseSpec extends AnyFunSuite with SparkSuite {
 
   test("connectedComponents on an empty pair list") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.connectedComponents(empty).count() === 0)
+    assert(EpisodeGraph.connectedComponents(empty).count() === 0)
   }
 
   test("similarity on zero vectors: cosine null-safe via int8 scale guard") {
@@ -56,13 +56,11 @@ class EdgeCaseSpec extends AnyFunSuite with SparkSuite {
     val df = Seq("", "   ", "\t\n").toDF("text")
     val rows = df.select(
       TextFunctions.tokenCount($"text").as("n"),
-      TextFunctions.langId($"text").as("l"),
-      size(TextFunctions.winnowFingerprint($"text", 8, 4)).as("w"))
-      .as[(Int, String, Int)].collect()
-    rows.foreach { case (n, l, w) =>
+      TextFunctions.langId($"text").as("l"))
+      .as[(Int, String)].collect()
+    rows.foreach { case (n, l) =>
       assert(n <= 1)        // split of "" yields [""]
       assert(l === "und")
-      assert(w === 1)       // one short-gram fingerprint, never a crash
     }
   }
 
@@ -180,19 +178,6 @@ class EdgeCaseSpec extends AnyFunSuite with SparkSuite {
     assert(base(2).getAs[Double]("dup_word_frac") === 0.75)
     assert(base(2).getAs[String]("top_bigram") === "x x")
     assert(base(2).getAs[Long]("top_bigram_cnt") === 3L)
-  }
-
-  test("duplicateSpans/dedupeParagraphs on empty and degenerate corpora") {
-    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(Dedup.duplicateSpans(empty, l = 5).count() === 0)
-    assert(Dedup.dedupeParagraphs(empty).count() === 0)
-    // empty-string docs: both collapse to one empty paragraph, dedup
-    // keeps the first doc's; no duplicate spans (0 tokens < l)
-    val blank = Seq((1L, ""), (2L, "")).toDF("doc_id", "text")
-    assert(Dedup.duplicateSpans(blank, l = 5).count() === 0)
-    val paras = Dedup.dedupeParagraphs(blank, paraTokens = 2)
-      .select($"doc_id", $"n_kept").as[(Long, Long)].collect().toSet
-    assert(paras === Set((1L, 1L)))
   }
 
   test("round-11 episodic operators on empty and single-row inputs") {

@@ -21,19 +21,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkSuite {
     val viaApi = spark.range(1)
       .select(Quantize.fp16(lit(1.0) / 3.0)).as[Float].head()
     assert(viaSql === viaApi)
-    val sim = spark.sql(
-      "SELECT graft_simhash(array('a','b')) AS s").as[Long].head()
-    val simApi = Seq("a b").toDF("t")
-      .select(graft.functions.TextFunctions.simhash($"t")).as[Long].head()
-    assert(sim === simApi)
-    assert(spark.sql("SELECT size(graft_minhash(array('x y z'))) AS n")
-      .as[Int].head() === 8)
-    val wn = spark.sql("SELECT graft_winnow('the quick brown fox') AS f")
-      .as[Seq[Long]].head()
-    val wnApi = Seq("the quick brown fox").toDF("t")
-      .select(graft.functions.TextFunctions.winnowFingerprint($"t", 8, 4))
-      .as[Seq[Long]].head()
-    assert(wn === wnApi)
     assert(spark.sql(
       "SELECT graft_unpack_bools(graft_pack_bools(array(true,false,true)), 3) AS b")
       .as[Seq[Boolean]].head() === Seq(true, false, true))

@@ -545,50 +545,6 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("lsh planner: closed-form costs on a two-spike histogram") {
-    import graft.operators.Dedup
-    // 100 pairs at jaccard ~0.125 (bin 2, mid 0.125), 10 at ~0.925
-    // (bin 18, mid 0.925); threshold 0.5
-    val pairs = (Seq.fill(100)(0.125) ++ Seq.fill(10)(0.925))
-      .toDF("jaccard")
-    val got = Dedup.lshParameterPlan(pairs, 0.5,
-      Seq((4, 4), (16, 1))).collect()
-      .map(r => (r.getInt(0), r.getInt(1)) ->
-        ((r.getLong(3), r.getLong(4), r.getBoolean(6)))).toMap
-    def p(s: Double, r: Int, b: Int) =
-      1.0 - math.pow(1.0 - math.pow(s, r), b)
-    def micro(x: Double) = math.rint(x * 1e6).toLong
-    val fp44 = 100L * micro(p(0.125, 4, 4))
-    val fn44 = 10L * (1000000L - micro(p(0.925, 4, 4)))
-    assert(got((4, 4)) === ((fp44, fn44, got((4, 4))._3)))
-    val fp161 = 100L * micro(p(0.125, 1, 16))
-    val fn161 = 10L * (1000000L - micro(p(0.925, 1, 16)))
-    assert(got((16, 1)) === ((fp161, fn161, got((16, 1))._3)))
-    // b=16,r=1 is the high-recall/low-precision arm: more FP, less FN
-    assert(fp161 > fp44)
-    assert(fn161 < fn44)
-    // exactly one best
-    assert(got.values.count(_._3) === 1)
-  }
-
-  test("lsh planner: jaccard == 1.0 clamps into the top bin") {
-    import graft.operators.Dedup
-    // exact-duplicate pairs: floor(1.0 * 20) = bin 20 would evaluate
-    // the S-curve at mid 1.025 where (1 - s^r) goes negative; the
-    // clamp folds them into bin 19 (mid 0.975) like the oracle's
-    // LEAST(floor(j*20), 19)
-    val pairs = (Seq.fill(5)(1.0) ++ Seq.fill(3)(0.975)).toDF("jaccard")
-    val got = Dedup.lshParameterPlan(pairs, 0.5, Seq((4, 4)))
-      .collect().map(r =>
-        (r.getLong(2), r.getLong(3), r.getLong(4))).head
-    def p(s: Double, r: Int, b: Int) =
-      1.0 - math.pow(1.0 - math.pow(s, r), b)
-    val micro975 = math.rint(p(0.975, 4, 4) * 1e6).toLong
-    // all 8 pairs land in bin 19 -> one hist row of cnt 8, fn uses
-    // mid 0.975, and the candidate probability stays within [0, 1]
-    assert(got === ((8L, 0L, 8L * (1000000L - micro975))))
-  }
-
   test("replay eval matches a naive fixture") {
     import graft.operators.Evaluation
     val train = Seq((1L, 10L), (1L, 10L), (1L, 11L), (2L, 20L))

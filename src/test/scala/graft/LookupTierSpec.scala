@@ -84,6 +84,19 @@ class LookupTierSpec extends AnyFunSuite with SparkSuite {
       fg.copy(features = Seq(FeatureDef("v", FeatureType.FP64, default = -1.0))), Seq("v")))
   }
 
+  test("retrieve: two pks over one projected table each get their own index") {
+    // pk a with features (b, v), then pk (a, b) with feature v: both
+    // project the table to (a, b, v), so only the key the index is
+    // grouped by tells the two apart
+    val t = parquet(Seq((1L, "x", 5.0), (1L, "y", 6.0), (2L, "x", 7.0)).toDF("a", "b", "v"))
+    val vDef = FeatureDef("v", FeatureType.FP64, default = -1.0)
+    assertSamePaths(Seq(1L, 2L, 3L).toDF("a"))(FeatureStore.retrieve(_, t, Seq("a"),
+      fg.copy(features = Seq(FeatureDef("b", FeatureType.Str, default = "D"), vDef)),
+      Seq("b", "v")))
+    assertSamePaths(Seq((1L, "y"), (2L, "x"), (2L, "y")).toDF("a", "b"))(
+      FeatureStore.retrieve(_, t, Seq("a", "b"), fg.copy(features = Seq(vDef)), Seq("v")))
+  }
+
   test("retrieve: TTL with a fixed asOf agrees across paths") {
     val t = parquet(Seq(
       (1L, 10.0, "a", Timestamp.valueOf("2024-01-01 00:00:00")),

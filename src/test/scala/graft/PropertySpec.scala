@@ -139,34 +139,15 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
     events.unpersist()
   }
 
-  test("winnowing: docs sharing a substring of length >= k+w-1 share a fingerprint") {
-    import graft.functions.TextFunctions
-    val rnd = seeded()
-    val (k, w) = (5, 4)
-    def randStr(len: Int) =
-      Seq.fill(len)(('a' + rnd.nextInt(26)).toChar).mkString
-    (1 to 10).foreach { _ =>
-      // SWA guarantee: a shared substring of >= k+w-1 chars contains a
-      // full window of k-grams, whose minimum lands in both sets
-      val shared = randStr(k + w - 1 + rnd.nextInt(10))
-      val d1 = randStr(rnd.nextInt(30)) + shared + randStr(rnd.nextInt(30))
-      val d2 = randStr(rnd.nextInt(30)) + shared + randStr(rnd.nextInt(30))
-      val fps = Seq(d1, d2).toDF("text")
-        .select(TextFunctions.winnowFingerprint($"text", k, w).as("f"))
-        .as[Seq[Long]].collect()
-      assert(fps(0).toSet.intersect(fps(1).toSet).nonEmpty, s"$d1 | $d2")
-    }
-  }
-
   test("connectedComponents equals brute-force union-find (random graphs)") {
-    import graft.operators.Dedup
+    import graft.operators.EpisodeGraph
     val rnd = seeded()
     (1 to 3).foreach { _ =>
       val n = 30
       val edges = Seq.fill(35)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
         .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-      val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+      val got = EpisodeGraph.connectedComponents(edges.toDF("id_a", "id_b"))
         .as[(Long, Long)].collect().toMap
       // union-find with union-by-min: each root ends as its component min
       val parent = Array.tabulate(n)(identity)
@@ -185,15 +166,15 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
   test("connectedComponents: pointer jumping converges a 400-hop " +
       "chain within the default budget; an exhausted budget still " +
       "fails loudly instead of returning unconverged labels") {
-    import graft.operators.Dedup
+    import graft.operators.EpisodeGraph
     // a 401-node path 0-1-...-400: edge propagation alone needs 400
     // rounds (one hop each); pointer jumping from round JumpFrom
     // doubles coverage per round, so the default 25-round budget
     // converges with a wide margin — the chain-shaped components
-    // (CDC-chunk chains, smeared arcs) that used to be a documented
+    // (smeared arcs of near-duplicates) that used to be a documented
     // loud failure are now just another graph
     val chain = (0L until 400L).map(i => (i, i + 1L))
-    val got = Dedup.connectedComponents(chain.toDF("id_a", "id_b"))
+    val got = EpisodeGraph.connectedComponents(chain.toDF("id_a", "id_b"))
       .as[(Long, Long)].collect().toMap
     assert(got.size === 401 && got.values.forall(_ === 0L))
     // a budget too small for even the jumped walk (maxIters = 3 is
@@ -201,7 +182,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
     // labels would silently under-merge downstream (phantom split
     // components), so the operator must refuse instead of returning
     val err = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(chain.toDF("id_a", "id_b"),
+      EpisodeGraph.connectedComponents(chain.toDF("id_a", "id_b"),
         maxIters = 3).count()
     }
     assert(err.getMessage.contains("converge"))

@@ -137,19 +137,6 @@ MUTATIONS = [
                      "o_totalprice leaks where the oracle reads the default",
     },
     {
-        # (i) deterministic tie-break: exact dedup keep-FIRST flipped to
-        # keep-last. The raw testdata has no exact duplicates at sf0.01
-        # (this mutation was invisible until q20 gained its
-        # duplicate-pair probe: ids 9000000001/9000000002 share one text).
-        "name": "dedup_keepfirst_flip",
-        "file": "src/main/scala/graft/operators/Dedup.scala",
-        "old": '    val w = Window.partitionBy(col("__fp")).orderBy(col(idCol).asc)',
-        "new": '    val w = Window.partitionBy(col("__fp")).orderBy(col(idCol).desc)',
-        "queries": ["q20_dedup_exact"],
-        "expect": "red",
-        "mechanism": "probe survivor flips 9000000001 -> 9000000002 -> value mismatch",
-    },
-    {
         # (n) PLAN-AUDIT gate class (not the DuckDB compare): dropping
         # the retrieve path's broadcast hint changes the query's
         # exchange count away from its pinned bench_exchange_baseline
@@ -335,41 +322,6 @@ MUTATIONS = [
                      "oracle's LEAST(GREATEST(...)) twin",
     },
     {
-        # (t) LSH-structure class: each band keys on ONE signature
-        # entry instead of k/bands=2 — a strictly looser candidate
-        # blocking. The oracle's banding is its own SQL
-        # (list_slice(sig, b*2+1, b*2+2) literals), so extra
-        # jaccard>=0.2 pairs the 2-row bands never co-bucket must
-        # appear on the engine side only.
-        "name": "lsh_band_rows",
-        "file": "src/main/scala/graft/functions/TextFunctions.scala",
-        "old": "concat_ws(\",\", transform(slice(signature, b * rows + 1, rows),",
-        "new": "concat_ws(\",\", transform(slice(signature, b * rows + 1, 1),",
-        "queries": ["q23_minhash_pairs"],
-        "expect": "red",
-        "mechanism": "1-entry band buckets admit candidate pairs the oracle's "
-                     "2-entry bands never co-bucket -> extra verified pairs",
-    },
-    {
-        # (u) similarity-definition class: the Jaccard denominator
-        # becomes |A| (containment) — every emitted jaccard value with
-        # |A∪B| > |A| inflates.
-        "name": "jaccard_containment",
-        "file": "src/main/scala/graft/operators/Dedup.scala",
-        "old": '      .join(sh.select(col(idCol).as("id_b"), col("__shd").as("__shb")), "id_b")\n'
-               '      .withColumn("jaccard",\n'
-               '        size(array_intersect(col("__sha"), col("__shb"))).cast("double") /\n'
-               '          size(array_union(col("__sha"), col("__shb"))).cast("double"))',
-        "new": '      .join(sh.select(col(idCol).as("id_b"), col("__shd").as("__shb")), "id_b")\n'
-               '      .withColumn("jaccard",\n'
-               '        size(array_intersect(col("__sha"), col("__shb"))).cast("double") /\n'
-               '          size(col("__sha")).cast("double"))',
-        "queries": ["q23_minhash_pairs"],
-        "expect": "red",
-        "mechanism": "containment >= jaccard: emitted values inflate and "
-                     "near-threshold pairs flip into the output",
-    },
-    {
         # (v) retention-boundary class: the horizon filter keeps one
         # extra week (`<` -> `<=`); the oracle's own `mw - w < 2`
         # drops it.
@@ -449,12 +401,15 @@ MUTATIONS = [
         # to a vacuous predicate (labels only decrease, so `>` never
         # matches) — the loop exits 'converged' after ONE propagation
         # round with no loud error (`require(converged)` passes).
-        # Components of diameter > 2 under-merge silently.
+        # Components of diameter > 2 under-merge silently. The spec
+        # gate's 400-hop chain and random graphs see it.
         "name": "cc_converge_early",
-        "file": "src/main/scala/graft/operators/Dedup.scala",
+        "file": "src/main/scala/graft/operators/EpisodeGraph.scala",
         "old": '      converged = stepped.filter(col("component") < col("__old")).isEmpty',
         "new": '      converged = stepped.filter(col("component") > col("__old")).isEmpty',
-        "queries": ["q42_dedup_components"],
+        "queries": ["graft.RandomizedSpec"],
+        "gate": "spec",
+        "spec_filter": "connectedComponents",
         "expect": "red",
         "mechanism": "premature fixpoint after round 1: any component whose "
                      "min-id is > 2 propagation hops from some member keeps "
@@ -472,20 +427,6 @@ MUTATIONS = [
         "expect": "red",
         "mechanism": "normalized values keep the min offset -> off the "
                      "oracle's (x-min)/(max-min) at every row with min != 0",
-    },
-    {
-        # (ab) sliding-window kernel class: the winnow deque evicts one
-        # index early — an effective window of w-1 k-grams. Different
-        # per-window minima -> different fingerprint sets.
-        "name": "winnow_window_shrink",
-        "file": "src/main/scala/graft/functions/TextHashKernels.scala",
-        "old": "      if (deque(head) <= j - w) head += 1",
-        "new": "      if (deque(head) <= j - w + 1) head += 1",
-        "queries": ["q41_fingerprint_winnow"],
-        "expect": "red",
-        "mechanism": "window-(w-1) minima differ from the oracle's "
-                     "list_slice(.., w) window minima -> fingerprint rows "
-                     "appear/disappear",
     },
     {
         # (ac) interval-clipping class: packSequences' per-block token
@@ -611,21 +552,6 @@ MUTATIONS = [
         "mechanism": "plane entries in [0,1) instead of [-1,1) -> all "
                      "projected values differ from the oracle's unrolled "
                      "mat-vec",
-    },
-    {
-        # (al) content-defined-chunking class: the cut kernel's
-        # rolling window drops its last character on the single-byte
-        # text path — every cut position shifts, so chunk boundaries,
-        # lengths, and hashes all move.
-        "name": "cdc_window_anchor",
-        "file": "src/main/scala/graft/functions/TextHashKernels.scala",
-        "old": "        d.update(bytes, i - w, w)\n",
-        "new": "        d.update(bytes, i - w, w - 1)\n",
-        "queries": ["q186_cdc_chunks", "q187_cdc_dedup"],
-        "expect": "red",
-        "mechanism": "cut test hashes chars (i-w+1..i-1) instead of "
-                     "(i-w+1..i) -> boundary set shifts, chunk rows and "
-                     "dedup stats drift",
     },
     {
         # (am) distributed-prefix-sum class: the cross-partition offset
