@@ -17,10 +17,8 @@ package graft
   * still consume bit-identical doubles/longs — the IEEE-exactness
   * property that motivated the sharing in the first place.
   *
-  * (Deliberately NOT pinned, unchanged from r14 NOTES:
-  * `TextFunctions.stopwords` is free config with no formula
-  * semantics — any values define a valid operator — and
-  * q178's MMR oracle is an independent loop-unrolled derivation.)
+  * (Deliberately NOT pinned, unchanged from r14 NOTES: q178's MMR
+  * oracle is an independent loop-unrolled derivation.)
   *
   * PLATFORM/LIBM ASSUMPTION (r14 ADVICE): pins that pass through
   * transcendental functions (`Math.log10`, `Math.exp`) are exact only

@@ -376,37 +376,6 @@ object SparkEntry {
         numPlanes = 12, bands = 6)
     }),
 
-    // ---- token counting: whitespace + BPE-ish sub-tokens ----
-    "q21_token_stats" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("n_tokens"),
-        TextFunctions.subTokenCount(col("text")).as("n_subtokens"),
-        length(col("text")).as("n_chars_actual"))
-    }),
-
-    // ---- quality scoring + heuristic language ID (word split and
-    // per-language hits staged once per row) ----
-    "q22_quality_langid" -> ((s, dir) => {
-      val h = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"),
-          TextFunctions.words(col("text")).as("__w"))
-        .select(col("doc_id"), col("text"), col("__w"),
-          TextFunctions.stopwordHitsFromWords(col("__w"), "de").as("__hde"),
-          TextFunctions.stopwordHitsFromWords(col("__w"), "en").as("__hen"),
-          TextFunctions.stopwordHitsFromWords(col("__w"), "es").as("__hes"),
-          TextFunctions.stopwordHitsFromWords(col("__w"), "fr").as("__hfr"))
-      h.select(col("doc_id"),
-        size(col("__w")).cast("double").as("n_tokens"),
-        (length(concat_ws("", col("__w"))).cast("double") /
-          size(col("__w")).cast("double")).as("mean_word_len"),
-        (size(regexp_extract_all(col("text"), lit("[^A-Za-z0-9\\s]"), lit(0)))
-          .cast("double") / length(col("text")).cast("double")).as("punct_ratio"),
-        (col("__hen").cast("double") / size(col("__w")).cast("double"))
-          .as("stopword_ratio"),
-        TextFunctions.langIdFromHits(col("__hde"), col("__hen"),
-          col("__hes"), col("__hfr")).as("lang_pred"))
-    }),
-
     // ---- context ⊗ targets expansion (J7, inferflow FeatureInit) ----
     "q26_context_targets" -> ((s, dir) => {
       val context = Tables.customer(s, dir)
@@ -666,21 +635,6 @@ object SparkEntry {
         .searchInt8(queries, k = 10, nProbe = 2)
     }),
 
-    // ---- language-ID evaluation against the corpus ground truth
-    // (confusion counts; 'zh' has no stopword list -> 'und') ----
-    "q49_langid_eval" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("lang"), TextFunctions.words(col("text")).as("__w"))
-        .select(col("lang"),
-          TextFunctions.langIdFromHits(
-            TextFunctions.stopwordHitsFromWords(col("__w"), "de"),
-            TextFunctions.stopwordHitsFromWords(col("__w"), "en"),
-            TextFunctions.stopwordHitsFromWords(col("__w"), "es"),
-            TextFunctions.stopwordHitsFromWords(col("__w"), "fr")).as("lang_pred"))
-        .groupBy(col("lang"), col("lang_pred"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
     // ---- JSON payload decode on the real events stream (F14) ----
     "q50_props_decode" -> ((s, dir) => {
       import org.apache.spark.sql.types._
@@ -819,15 +773,6 @@ object SparkEntry {
         splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
     }),
 
-    // ---- concat-and-chunk sequence packing: documents onto one token
-    // axis, cut into 256-token training blocks (prefix sum + explode,
-    // no sequential scan) ----
-    "q63_pack_sequences" -> ((s, dir) => {
-      graft.operators.Training.packSequences(
-        Tables.documents(s, dir), orderCol = "doc_id",
-        tokens = TextFunctions.tokenCount(col("text")), blockTokens = 256)
-    }),
-
     // ---- JL random projection to 8 dims via md5-derived hyperplanes
     // (deterministic -> SQL oracle rebuilds every component) ----
     "q64_random_projection" -> ((s, dir) => {
@@ -890,25 +835,6 @@ object SparkEntry {
       Sketches.distinctByGroup(Tables.events(s, dir),
         "event_type", "user_id", k = 64)),
 
-    // ---- Gopher-family repetition quality: duplicate-word fraction
-    // and top-bigram character coverage, keep flag on the rounded
-    // metrics; all signals row-local (no shuffle) over staged
-    // word/bigram/top attributes ----
-    "q73_repetition_quality" -> ((s, dir) => {
-      val base = Tables.documents(s, dir)
-        .select(col("doc_id"), TextFunctions.words(col("text")).as("__w"))
-      val bg = base.select(col("doc_id"), col("__w"),
-        TextFunctions.shinglesFromWords(col("__w"), 2).as("__bg"))
-      val top = bg.select(col("doc_id"), col("__w"),
-        TextFunctions.topGram(col("__bg")).as("__top"))
-      top
-        .select(col("doc_id"),
-          TextFunctions.repetitionFeatures(col("__w"), col("__top")).as("__r"))
-        .select(col("doc_id"), col("__r.*"))
-        .withColumn("keep",
-          col("dup_word_frac") <= 0.4 && col("top_bigram_char_frac") <= 0.2)
-    }),
-
     // ---- exact fixed-point Gram matrix X^T.X over the embedding
     // corpus (custom TypedImperativeAggregate: d(d+1)/2-long triangle
     // state per task, one buffer across the shuffle — no d^2 row
@@ -917,19 +843,6 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
         .select(graft.operators.LinAlg.microVec(col("embedding")).as("__m"))
       graft.operators.LinAlg.gramUpper(emb, col("__m"))
-    }),
-
-    // ---- benchmark decontamination: corpus docs sharing any word
-    // 3-gram with the (broadcast) benchmark set — the pretraining
-    // hygiene sweep (real suites use 8-13-grams; 3 fits the short
-    // synthetic docs); map-side semi-join, the corpus never
-    // shuffles ----
-    "q76_decontaminate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val bench = docs.filter(col("doc_id") % 41 === 0)
-      val corpus = docs.filter(col("doc_id") % 41 =!= 0)
-      graft.operators.Decontaminate.overlapReport(
-        corpus, bench, "doc_id", "text", n = 3)
     }),
 
     // ---- incremental aggregate maintenance: history state + delta
@@ -950,16 +863,6 @@ object SparkEntry {
     "q78_funnel_reach" -> ((s, dir) => {
       graft.operators.Funnel.reach(Tables.events(s, dir),
         "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
-    }),
-
-    // ---- temperature-based multi-source mixture sampling (quota ∝
-    // n^0.5, largest-remainder, integer micro-unit allocation) ----
-    "q80_temperature_mix" -> ((s, dir) => {
-      val corpus = Tables.documents(s, dir)
-        .filter(col("n_chars") % 7 < 5)
-        .select(col("doc_id"), col("source"), col("lang"))
-      graft.operators.Sampling.temperatureMix(corpus,
-        keyCol = "doc_id", sourceCol = "source", alpha = 0.5, total = 100)
     }),
 
     // ---- rolling-frame sequence features + next-event label (the
@@ -1245,22 +1148,6 @@ object SparkEntry {
       graft.operators.LinAlg.centroidOutliers(Tables.embeddings(s, dir),
         Seq("label"), "embedding", "vec_id", k = 20)),
 
-    // ---- PII scrubbing: the corpus has no real PII, so each doc is
-    // salted with a deterministic email/IP/phone derived from doc_id
-    // (identically in the oracle), then counted and masked ----
-    "q101_pii_mask" -> ((s, dir) => {
-      val salted = Tables.documents(s, dir).select(col("doc_id"),
-        concat(col("text"), lit(" contact user"), col("doc_id"),
-          lit("@example.com or 10.0."), col("doc_id") % 256, lit("."),
-          col("doc_id") % 40, lit(" phone "),
-          lit(1000000000L) + col("doc_id") * 7).as("__t"))
-      salted.select(col("doc_id"),
-        TextFunctions.piiCount(col("__t"), TextFunctions.EmailRe).as("n_emails"),
-        TextFunctions.piiCount(col("__t"), TextFunctions.Ipv4Re).as("n_ipv4"),
-        TextFunctions.piiCount(col("__t"), TextFunctions.PhoneRe).as("n_phones"),
-        TextFunctions.maskPii(col("__t")).as("masked"))
-    }),
-
     // ---- deterministic global shuffle + fixed-size training shards
     // (range-partitioned prefix-sum rank — no single-partition window) ----
     "q103_shard_assign" -> ((s, dir) =>
@@ -1501,21 +1388,6 @@ object SparkEntry {
         .filter(col("rank") <= 10)
     }),
 
-    // ---- length-bucketed batching stats: pad-to-16 buckets with
-    // exact padding-waste accounting (inference batching prep) ----
-    "q135_length_buckets" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(TextFunctions.tokenCount(col("text")).as("nt"))
-        .withColumn("bucket",
-          (ceil(col("nt").cast("double") / 16.0) * 16).cast("int"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("nt").cast("long")).as("total_tokens"))
-        .withColumn("padded", col("bucket").cast("long") * col("n_docs"))
-        .withColumn("waste_rate",
-          (col("padded") - col("total_tokens")).cast("double") /
-            col("padded").cast("double"))),
-
     // ---- referential integrity: event users vs the customer table ----
     "q136_ref_integrity" -> ((s, dir) =>
       graft.operators.Validate.refIntegrity(
@@ -1550,53 +1422,6 @@ object SparkEntry {
         col("embedding").as("query_embedding"))
       graft.operators.PqIndex.build(rotated, m = 8, k = 16)
         .searchDot(q, kResults = 10)
-    }),
-
-    // ---- language-agnostic stopword induction: tokens present in
-    // most documents are function words ----
-    "q140_stopword_induction" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val n = docs.agg(count_distinct(col("doc_id")).as("__nd"))
-      docs.select(col("doc_id"),
-          explode(array_distinct(TextFunctions.words(col("text"))))
-            .as("token"))
-        .filter(col("token") =!= "")
-        .groupBy(col("token")).agg(count(lit(1)).as("doc_freq"))
-        .crossJoin(broadcast(n))
-        .withColumn("df_ratio",
-          col("doc_freq").cast("double") / col("__nd").cast("double"))
-        .withColumn("is_stopword", col("df_ratio") > 0.6)
-        .select(col("token"), col("doc_freq"), col("df_ratio"),
-          col("is_stopword"))
-    }),
-
-    // ---- mixed-language detection: langid per 8-token block, per-doc
-    // majority language + consistency ratio ----
-    "q141_lang_consistency" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = col("__w")
-      val chunks = transform(
-        sequence(lit(1), greatest(size(w), lit(1)), lit(8)),
-        i => slice(w, i, lit(8)))
-      val clang = TextFunctions.langIdFromHits(
-        TextFunctions.stopwordHitsFromWords(col("cw"), "de"),
-        TextFunctions.stopwordHitsFromWords(col("cw"), "en"),
-        TextFunctions.stopwordHitsFromWords(col("cw"), "es"),
-        TextFunctions.stopwordHitsFromWords(col("cw"), "fr"))
-      val byDoc = Window.partitionBy(col("doc_id"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TextFunctions.words(col("text")).as("__w"))
-        .select(col("doc_id"), explode(chunks).as("cw"))
-        .select(col("doc_id"), clang.as("clang"))
-        .groupBy(col("doc_id"), col("clang")).agg(count(lit(1)).as("n"))
-        .withColumn("n_chunks", sum(col("n")).over(byDoc))
-        .withColumn("__rn", row_number().over(
-          byDoc.orderBy(col("n").desc, col("clang").asc)))
-        .filter(col("__rn") === 1)
-        .select(col("doc_id"), col("clang").as("major_lang"),
-          col("n_chunks"), col("n").as("n_major"),
-          (col("n").cast("double") / col("n_chunks").cast("double"))
-            .as("consistency"))
     }),
 
     // ---- weight-sensitive random walks over co-visitation edges ----
@@ -1787,22 +1612,6 @@ object SparkEntry {
       graft.operators.InteractionStore.resampleHourlyFill(
         Tables.events(s, dir).filter(col("user_id") % 5 === 0))),
 
-    // ---- Cohen's kappa between the stored language label and the
-    // stopword-hit language ID (q49's predictor): annotator-agreement
-    // analytics in one exact-count pass ----
-    "q159_cohen_kappa" -> ((s, dir) => {
-      val pred = Tables.documents(s, dir)
-        .select(col("lang"), TextFunctions.words(col("text")).as("__w"))
-        .select(col("lang"),
-          TextFunctions.langIdFromHits(
-            TextFunctions.stopwordHitsFromWords(col("__w"), "de"),
-            TextFunctions.stopwordHitsFromWords(col("__w"), "en"),
-            TextFunctions.stopwordHitsFromWords(col("__w"), "es"),
-            TextFunctions.stopwordHitsFromWords(col("__w"), "fr"))
-            .as("lang_pred"))
-      graft.operators.Evaluation.cohenKappa(pred, "lang", "lang_pred")
-    }),
-
     // ---- per-segment isotonic calibration (q149 grouped): an
     // independent exact-integer PAV fit per user segment — one global
     // map under-corrects any segment whose score distribution shifts ----
@@ -1817,18 +1626,6 @@ object SparkEntry {
         .agg(sum(col("__y")).as("pos"), count(lit(1)).as("n"))
       graft.operators.Normalize.pavCalibrateCountsBy(
         bins, "seg", "bin", "pos", "n")
-    }),
-
-    // ---- token-budget mixture (q80's waterfill with the budget in
-    // TOKENS — the unit pretraining mixes are specified in): source
-    // token quotas ∝ (Σtokens)^0.5, lowest-hash docs fill each quota
-    // in hash order, first-crossing doc included ----
-    "q161_token_budget_mix" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"), col("lang"),
-          TextFunctions.tokenCount(col("text")).as("n_tokens"))
-      graft.operators.Sampling.tokenBudgetMix(docs, "doc_id", "source",
-        "n_tokens", alpha = 0.5, totalTokens = 20000L)
     }),
 
     // ---- robust per-group location/scale: EXACT lower median + MAD
@@ -2201,12 +1998,6 @@ object SparkEntry {
           (col("event_type") === "purchase").cast("long").as("label")),
         "value", "label", "event_id", nBins = 16)),
 
-    // ---- temperature-scaled pretraining mix: source weights
-    // proportional to tokens^0.5 ----
-    "q207_source_mixing" -> ((s, dir) =>
-      graft.operators.Sampling.sourceMixingWeights(
-        Tables.documents(s, dir), "source", "text", alpha = 0.5)),
-
     // ---- user-grouped 5-fold AUC: the variance behind q115's
     // headline number, leakage-safe fold assignment ----
     "q208_kfold_auc" -> ((s, dir) =>
@@ -2299,16 +2090,6 @@ object SparkEntry {
         Tables.events(s, dir).select(col("event_id"), col("value"),
           (col("user_id") % 5 === 0).cast("long").as("label")),
         "event_id", "value", "label", Seq(0.1, 0.25, 0.5, 1.0))),
-
-    // ---- memorization risk: per-test-doc share of 3-gram shingles
-    // never seen in the train split ----
-    "q223_novelty_score" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.operators.Decontaminate.noveltyScore(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", n = 3)
-    }),
 
     // ---- experiment health: sample-ratio-mismatch chi2 over an
     // 8-way user hash bucketing ----
@@ -2851,12 +2632,6 @@ object SparkEntry {
           .select((col("value") / lit(500.0)).as("score"),
             (col("user_id") % 5 === 0).cast("long").as("label")),
         "score", "label", nBins = 10)),
-
-    // ---- what length-bucketing buys: padded-token waste of arrival
-    // vs length-sorted batching ----
-    "q276_padding_waste" -> ((s, dir) =>
-      graft.operators.Training.paddingWasteAudit(
-        Tables.documents(s, dir), "doc_id", "text", batchSize = 8)),
 
     // ---- per-key mean/variance straight off the STREAM: moments
     // state through the restart-safe sink, finished to baselines ----
@@ -3539,33 +3314,6 @@ object SparkEntry {
          |    ORDER BY score DESC, vec_id ASC) AS INT) AS rank FROM scored)
          |WHERE rank <= 10""".stripMargin,
 
-    "q21_token_stats" ->
-      s"""SELECT doc_id,
-         |  len($sqlWords) AS n_tokens,
-         |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))
-         |    AS n_subtokens,
-         |  length(text) AS n_chars_actual
-         |FROM documents""".stripMargin,
-
-    "q22_quality_langid" ->
-      s"""WITH t AS (SELECT doc_id, text, $sqlWords AS w FROM documents),
-         |h AS (SELECT doc_id, text, w,
-         |  CAST(len(w) AS DOUBLE) AS n_tokens,
-         |  ${sqlHits("de")} AS h_de, ${sqlHits("en")} AS h_en,
-         |  ${sqlHits("es")} AS h_es, ${sqlHits("fr")} AS h_fr
-         |  FROM t)
-         |SELECT doc_id, n_tokens,
-         |  CAST(length(array_to_string(w, '')) AS DOUBLE) / n_tokens
-         |    AS mean_word_len,
-         |  CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS DOUBLE)
-         |    / CAST(length(text) AS DOUBLE) AS punct_ratio,
-         |  CAST(h_en AS DOUBLE) / n_tokens AS stopword_ratio,
-         |  CASE WHEN greatest(h_de, h_en, h_es, h_fr) = 0 THEN 'und'
-         |       WHEN h_de >= h_en AND h_de >= h_es AND h_de >= h_fr THEN 'de'
-         |       WHEN h_en >= h_es AND h_en >= h_fr THEN 'en'
-         |       WHEN h_es >= h_fr THEN 'es' ELSE 'fr' END AS lang_pred
-         |FROM h""".stripMargin,
-
     "q26_context_targets" ->
       s"""WITH ctx AS (SELECT ${sqlAvg("c_acctbal")} AS avg_acctbal,
          |                    COUNT(*) AS n_customers FROM customer)
@@ -3844,19 +3592,6 @@ object SparkEntry {
         |  COUNT(*) AS n
         |FROM orders GROUP BY o_orderpriority""".stripMargin,
 
-    "q49_langid_eval" ->
-      s"""WITH lt AS (SELECT doc_id, lang, $sqlWords AS w FROM documents),
-         |lh AS (SELECT doc_id, lang,
-         |  ${sqlHits("de")} AS h_de, ${sqlHits("en")} AS h_en,
-         |  ${sqlHits("es")} AS h_es, ${sqlHits("fr")} AS h_fr FROM lt),
-         |lp AS (SELECT doc_id, lang,
-         |  CASE WHEN greatest(h_de, h_en, h_es, h_fr) = 0 THEN 'und'
-         |       WHEN h_de >= h_en AND h_de >= h_es AND h_de >= h_fr THEN 'de'
-         |       WHEN h_en >= h_es AND h_en >= h_fr THEN 'en'
-         |       WHEN h_es >= h_fr THEN 'es' ELSE 'fr' END AS lang_pred
-         |  FROM lh)
-         |SELECT lang, lang_pred, COUNT(*) AS n FROM lp GROUP BY 1, 2""".stripMargin,
-
     "q50_props_decode" ->
       """SELECT event_type, COUNT(*) AS n,
         |  CAST(SUM(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
@@ -3910,32 +3645,6 @@ object SparkEntry {
          |SELECT ex.event_type, ex.exact_distinct, est.kmv_distinct
          |FROM ex JOIN est USING (event_type)""".stripMargin,
 
-    "q73_repetition_quality" ->
-      s"""WITH w0 AS (SELECT doc_id, $sqlWords AS w FROM documents),
-         |bg AS (SELECT doc_id, w,
-         |    list_transform(generate_series(1, greatest(len(w)-1, 1)),
-         |      i -> array_to_string(list_slice(w, i, i+1), ' ')) AS bg
-         |  FROM w0),
-         |cnt AS (SELECT doc_id, g, count(*) AS c
-         |  FROM (SELECT doc_id, unnest(bg) AS g FROM bg) GROUP BY doc_id, g),
-         |top AS (SELECT doc_id, g, c FROM (
-         |    SELECT doc_id, g, c, row_number() OVER
-         |      (PARTITION BY doc_id ORDER BY c DESC, g DESC) AS rn FROM cnt)
-         |  WHERE rn = 1),
-         |m AS (SELECT b.doc_id,
-         |    CAST(len(b.w) AS BIGINT) AS n_words,
-         |    ROUND(1.0 - CAST(len(list_distinct(b.w)) AS DOUBLE) /
-         |      CAST(len(b.w) AS DOUBLE), 6) AS dup_word_frac,
-         |    t.g AS top_bigram,
-         |    CAST(t.c AS BIGINT) AS top_bigram_cnt,
-         |    ROUND(CAST(t.c * len(t.g) AS DOUBLE) /
-         |      CAST(len(array_to_string(b.w, '')) AS DOUBLE), 6)
-         |      AS top_bigram_char_frac
-         |  FROM bg b JOIN top t USING (doc_id))
-         |SELECT *, (dup_word_frac <= 0.4 AND top_bigram_char_frac <= 0.2)
-         |  AS keep
-         |FROM m""".stripMargin,
-
     "q62_hash_split" ->
       s"""SELECT doc_id, lang,
          |  CASE WHEN h < 800000 THEN 'train'
@@ -3943,20 +3652,6 @@ object SparkEntry {
          |FROM (SELECT doc_id, lang,
          |  ${sqlHash32(7, "CAST(doc_id AS VARCHAR)")} % 1000000 AS h
          |  FROM documents)""".stripMargin,
-
-    "q63_pack_sequences" ->
-      s"""WITH toks AS (SELECT doc_id, len($sqlWords) AS tok FROM documents),
-         |cum AS (SELECT doc_id, tok,
-         |    CAST(SUM(tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-         |      AS BIGINT) AS e
-         |  FROM toks WHERE tok > 0),
-         |blocks AS (SELECT doc_id, e - tok AS st, e,
-         |    unnest(generate_series((e - tok) // 256, (e - 1) // 256)) AS block_id
-         |  FROM cum)
-         |SELECT doc_id, block_id,
-         |  LEAST(e, (block_id + 1) * 256) - GREATEST(st, block_id * 256)
-         |    AS tok_in_block
-         |FROM blocks""".stripMargin,
 
     "q64_random_projection" ->
       s"""WITH planes AS (
@@ -4231,16 +3926,6 @@ object SparkEntry {
         |WHERE s2.j >= s1.i
         |GROUP BY s1.i, s2.j""".stripMargin,
 
-    "q76_decontaminate" ->
-      s"""WITH t AS (SELECT doc_id, $sqlWords AS w FROM documents),
-         |g AS (SELECT doc_id, unnest(list_distinct($sqlShingles)) AS gram
-         |      FROM t),
-         |b AS (SELECT DISTINCT gram FROM g WHERE doc_id % 41 = 0)
-         |SELECT c.doc_id, COUNT(*) AS n_hit_grams
-         |FROM (SELECT * FROM g WHERE doc_id % 41 <> 0) c
-         |JOIN b USING (gram)
-         |GROUP BY c.doc_id""".stripMargin,
-
     "q77_incremental_agg" ->
       s"""SELECT user_id, event_type, COUNT(value) AS cnt,
          |  ${sqlSum("value")} AS val_sum,
@@ -4262,46 +3947,6 @@ object SparkEntry {
         |   + CASE WHEN ts_click IS NOT NULL THEN 1 ELSE 0 END
         |   + CASE WHEN ts_purchase IS NOT NULL THEN 1 ELSE 0 END) AS depth
         |FROM c""".stripMargin,
-
-    "q80_temperature_mix" ->
-      s"""WITH corpus AS (SELECT doc_id, source, lang FROM documents
-         |                WHERE n_chars % 7 < 5),
-         |cnt AS (SELECT source, COUNT(*) AS n FROM corpus GROUP BY source),
-         |w AS (SELECT source,
-         |        CAST(floor(pow(CAST(n AS DOUBLE), 0.5) * 1000000) AS BIGINT)
-         |          AS wm FROM cnt),
-         |a AS (SELECT cnt.source, n, wm, SUM(wm) OVER () AS tw,
-         |        COALESCE(SUM(n) OVER pre, 0) AS cumnp,
-         |        COALESCE(SUM(wm) OVER pre, 0) AS cumwp
-         |      FROM w JOIN cnt USING (source)
-         |      WINDOW pre AS (ORDER BY CAST(n AS DOUBLE) / wm ASC, source ASC
-         |                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-         |s AS (SELECT *, MIN(CASE WHEN wm * (100 - cumnp) >= n * (tw - cumwp)
-         |                         THEN 1 ELSE 0 END)
-         |        OVER (ORDER BY CAST(n AS DOUBLE) / wm ASC, source ASC
-         |              ROWS UNBOUNDED PRECEDING) = 1 AS sat FROM a),
-         |u AS (SELECT *,
-         |        100 - COALESCE(SUM(CASE WHEN sat THEN n END) OVER (), 0) AS rr,
-         |        COALESCE(SUM(CASE WHEN NOT sat THEN wm END) OVER (), 0) AS uw
-         |      FROM s),
-         |b AS (SELECT *,
-         |        CASE WHEN sat OR uw = 0 THEN 0 ELSE (wm * rr) // uw END AS base,
-         |        CASE WHEN sat OR uw = 0 THEN -1 ELSE (wm * rr) % uw END AS rem
-         |      FROM u),
-         |c AS (SELECT *, rr - SUM(base) OVER () AS leftover,
-         |        ROW_NUMBER() OVER (ORDER BY rem DESC, source ASC) AS rk
-         |      FROM b),
-         |q AS (SELECT source,
-         |        CAST(CASE WHEN sat THEN n ELSE least(
-         |          base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END, n) END
-         |          AS BIGINT) AS quota FROM c),
-         |r AS (SELECT corpus.*,
-         |        ROW_NUMBER() OVER (PARTITION BY source
-         |          ORDER BY ${sqlHash32(7, "CAST(doc_id AS VARCHAR)")} % 1000000
-         |            ASC, doc_id ASC) AS rr
-         |      FROM corpus)
-         |SELECT doc_id, source, lang
-         |FROM r JOIN q USING (source) WHERE rr <= quota""".stripMargin,
 
     "q81_rolling_features" ->
       """SELECT user_id, ts, event_id, value,
@@ -4527,29 +4172,6 @@ object SparkEntry {
          |    ORDER BY cos_centroid ASC, vec_id ASC) AS INT) AS rank
          |  FROM scored)
          |WHERE rank <= 20""".stripMargin,
-
-    // same salting expression; patterns are in the Java-regex ∩ RE2
-    // common subset so they apply verbatim ('g' = replace-all, Spark's
-    // default)
-    "q101_pii_mask" -> {
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val ipv4 = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
-      val phone = "\\b\\d{10}\\b"
-      s"""WITH t AS (SELECT doc_id,
-         |    text || ' contact user' || CAST(doc_id AS VARCHAR)
-         |      || '@example.com or 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-         |      || '.' || CAST(doc_id % 40 AS VARCHAR)
-         |      || ' phone ' || CAST(1000000000 + doc_id * 7 AS VARCHAR) AS tt
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(tt, '$email')) AS INT) AS n_emails,
-         |  CAST(len(regexp_extract_all(tt, '$ipv4')) AS INT) AS n_ipv4,
-         |  CAST(len(regexp_extract_all(tt, '$phone')) AS INT) AS n_phones,
-         |  regexp_replace(regexp_replace(regexp_replace(tt,
-         |    '$email', '<EMAIL>', 'g'), '$ipv4', '<IP>', 'g'),
-         |    '$phone', '<PHONE>', 'g') AS masked
-         |FROM t""".stripMargin
-    },
 
     // order key = (md5_32(doc_id) mod 2^31)·2^32 + doc_id, exactly as
     // Training.shard builds it
@@ -4986,19 +4608,6 @@ object SparkEntry {
          |    ORDER BY score DESC, vec_id ASC) AS INT) AS rank FROM scored)
          |WHERE rank <= 10""".stripMargin,
 
-    "q135_length_buckets" ->
-      s"""WITH t AS (SELECT len($sqlWords) AS nt FROM documents),
-         |b AS (SELECT CAST(ceil(CAST(nt AS DOUBLE) / 16.0) * 16 AS INT)
-         |        AS bucket,
-         |      COUNT(*) AS n_docs, CAST(SUM(nt) AS BIGINT) AS total_tokens
-         |  FROM t GROUP BY 1)
-         |SELECT bucket, n_docs, total_tokens,
-         |  CAST(bucket AS BIGINT) * n_docs AS padded,
-         |  CAST(CAST(bucket AS BIGINT) * n_docs - total_tokens AS DOUBLE)
-         |    / CAST(CAST(bucket AS BIGINT) * n_docs AS DOUBLE)
-         |    AS waste_rate
-         |FROM b""".stripMargin,
-
     "q136_ref_integrity" ->
       """WITH p AS (SELECT DISTINCT c_custkey FROM customer),
         |j AS (SELECT e.user_id, p.c_custkey FROM events e
@@ -5038,44 +4647,6 @@ object SparkEntry {
     // rotated coordinates are bit-identical before the (independently
     // SQL-expressed) PQ assign/score side.
     "q139_ann_opq_rotated" -> sqlQ139For(Q139Rotation.sf001),
-
-    "q140_stopword_induction" ->
-      s"""WITH n AS (SELECT COUNT(DISTINCT doc_id) AS nd FROM documents),
-         |tk AS (SELECT doc_id, unnest(list_distinct($sqlWords)) AS token
-         |       FROM documents),
-         |c AS (SELECT token, COUNT(*) AS doc_freq FROM tk
-         |      WHERE token <> '' GROUP BY token)
-         |SELECT c.token, c.doc_freq,
-         |  CAST(c.doc_freq AS DOUBLE) / CAST(n.nd AS DOUBLE) AS df_ratio,
-         |  CAST(c.doc_freq AS DOUBLE) / CAST(n.nd AS DOUBLE) > 0.6
-         |    AS is_stopword
-         |FROM c CROSS JOIN n""".stripMargin,
-
-    "q141_lang_consistency" ->
-      s"""WITH t AS (SELECT doc_id, $sqlWords AS w0 FROM documents),
-         |c0 AS (SELECT doc_id, list_transform(
-         |         generate_series(1, greatest(len(w0), 1), 8),
-         |         i -> list_slice(w0, i, i + 7)) AS cs FROM t),
-         |c AS (SELECT doc_id, unnest(cs) AS w FROM c0),
-         |lh AS (SELECT doc_id,
-         |  ${sqlHits("de")} AS h_de, ${sqlHits("en")} AS h_en,
-         |  ${sqlHits("es")} AS h_es, ${sqlHits("fr")} AS h_fr FROM c),
-         |lp AS (SELECT doc_id,
-         |  CASE WHEN greatest(h_de, h_en, h_es, h_fr) = 0 THEN 'und'
-         |       WHEN h_de >= h_en AND h_de >= h_es AND h_de >= h_fr THEN 'de'
-         |       WHEN h_en >= h_es AND h_en >= h_fr THEN 'en'
-         |       WHEN h_es >= h_fr THEN 'es' ELSE 'fr' END AS clang
-         |  FROM lh),
-         |g AS (SELECT doc_id, clang, COUNT(*) AS n FROM lp GROUP BY 1, 2),
-         |m AS (SELECT * FROM (SELECT *,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id
-         |      ORDER BY n DESC, clang ASC) AS rn,
-         |    SUM(n) OVER (PARTITION BY doc_id) AS tot FROM g)
-         |  WHERE rn = 1)
-         |SELECT doc_id, clang AS major_lang, CAST(tot AS BIGINT)
-         |    AS n_chunks, n AS n_major,
-         |  CAST(n AS DOUBLE) / CAST(tot AS DOUBLE) AS consistency
-         |FROM m""".stripMargin,
 
     // q113's walk chain with hash/weight keys on the weighted adjacency
     "q142_weighted_walks" -> {
@@ -5381,39 +4952,6 @@ object SparkEntry {
         |    AS value_micro_filled
         |FROM j""".stripMargin,
 
-    // q49's predictor CTEs -> contingency counts -> kappa from exact
-    // marginal products (integer-valued doubles; sums < 2^53 => every
-    // division sees identical operands in both engines)
-    "q159_cohen_kappa" ->
-      s"""WITH lt AS (SELECT doc_id, lang, $sqlWords AS w FROM documents),
-         |lh AS (SELECT doc_id, lang,
-         |  ${sqlHits("de")} AS h_de, ${sqlHits("en")} AS h_en,
-         |  ${sqlHits("es")} AS h_es, ${sqlHits("fr")} AS h_fr FROM lt),
-         |lp AS (SELECT doc_id, lang,
-         |  CASE WHEN greatest(h_de, h_en, h_es, h_fr) = 0 THEN 'und'
-         |       WHEN h_de >= h_en AND h_de >= h_es AND h_de >= h_fr THEN 'de'
-         |       WHEN h_en >= h_es AND h_en >= h_fr THEN 'en'
-         |       WHEN h_es >= h_fr THEN 'es' ELSE 'fr' END AS lang_pred
-         |  FROM lh),
-         |cells AS (SELECT lang AS a, lang_pred AS b, COUNT(*) AS o
-         |  FROM lp GROUP BY 1, 2),
-         |tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n,
-         |    CAST(COALESCE(SUM(CASE WHEN a = b THEN o END), 0) AS BIGINT)
-         |      AS agree
-         |  FROM cells),
-         |ra AS (SELECT a, SUM(o) AS ra FROM cells GROUP BY 1),
-         |rb AS (SELECT b, SUM(o) AS rb FROM cells GROUP BY 1),
-         |pe AS (SELECT COALESCE(SUM(CAST(ra.ra AS DOUBLE)
-         |    * CAST(rb.rb AS DOUBLE)), 0.0) AS pen
-         |  FROM ra JOIN rb ON ra.a = rb.b)
-         |SELECT n, agree, po, pe,
-         |  CASE WHEN pe = 1.0 THEN 1.0 ELSE (po - pe) / (1.0 - pe) END
-         |    AS kappa
-         |FROM (SELECT tot.n, tot.agree,
-         |    CAST(tot.agree AS DOUBLE) / CAST(tot.n AS DOUBLE) AS po,
-         |    pe.pen / (CAST(tot.n AS DOUBLE) * CAST(tot.n AS DOUBLE)) AS pe
-         |  FROM tot, pe)""".stripMargin,
-
     // q149's minimax characterization, grouped: every join carries the
     // segment key, so each segment fits independently
     "q160_isotonic_by_segment" ->
@@ -5433,52 +4971,6 @@ object SparkEntry {
         |    AND sg.j <= i.bin AND sg.k >= i.bin
         |  GROUP BY 1, 2, 3)
         |SELECT seg, bin, MAX(m) AS calibrated FROM mn GROUP BY seg, bin""".stripMargin,
-
-    // q80's waterfill CTEs with token sums; selection keeps a doc iff
-    // its source's cumulative tokens BEFORE it are inside the quota
-    "q161_token_budget_mix" ->
-      s"""WITH corpus AS (SELECT doc_id, source, lang,
-         |                  CAST(len($sqlWords) AS INT) AS n_tokens
-         |                FROM documents),
-         |cnt AS (SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS n
-         |        FROM corpus GROUP BY source),
-         |w AS (SELECT source,
-         |        CAST(floor(pow(CAST(n AS DOUBLE), 0.5) * 1000000) AS BIGINT)
-         |          AS wm FROM cnt),
-         |a AS (SELECT cnt.source, n, wm, SUM(wm) OVER () AS tw,
-         |        COALESCE(SUM(n) OVER pre, 0) AS cumnp,
-         |        COALESCE(SUM(wm) OVER pre, 0) AS cumwp
-         |      FROM w JOIN cnt USING (source)
-         |      WINDOW pre AS (ORDER BY CAST(n AS DOUBLE) / wm ASC, source ASC
-         |                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-         |s AS (SELECT *, MIN(CASE WHEN wm * (20000 - cumnp) >= n * (tw - cumwp)
-         |                         THEN 1 ELSE 0 END)
-         |        OVER (ORDER BY CAST(n AS DOUBLE) / wm ASC, source ASC
-         |              ROWS UNBOUNDED PRECEDING) = 1 AS sat FROM a),
-         |u AS (SELECT *,
-         |        20000 - COALESCE(SUM(CASE WHEN sat THEN n END) OVER (), 0) AS rr,
-         |        COALESCE(SUM(CASE WHEN NOT sat THEN wm END) OVER (), 0) AS uw
-         |      FROM s),
-         |b AS (SELECT *,
-         |        CASE WHEN sat OR uw = 0 THEN 0 ELSE (wm * rr) // uw END AS base,
-         |        CASE WHEN sat OR uw = 0 THEN -1 ELSE (wm * rr) % uw END AS rem
-         |      FROM u),
-         |c AS (SELECT *, rr - SUM(base) OVER () AS leftover,
-         |        ROW_NUMBER() OVER (ORDER BY rem DESC, source ASC) AS rk
-         |      FROM b),
-         |q AS (SELECT source,
-         |        CAST(CASE WHEN sat THEN n ELSE least(
-         |          base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END, n) END
-         |          AS BIGINT) AS quota FROM c),
-         |r AS (SELECT corpus.*,
-         |        COALESCE(SUM(n_tokens) OVER (PARTITION BY source
-         |          ORDER BY ${sqlHash32(7, "CAST(doc_id AS VARCHAR)")} % 1000000
-         |            ASC, doc_id ASC
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |          AS cumpre
-         |      FROM corpus)
-         |SELECT doc_id, source, lang, n_tokens
-         |FROM r JOIN q USING (source) WHERE cumpre < quota""".stripMargin,
 
     // exact lower-median / MAD by rank pick — ROW_NUMBER is unique, so
     // rn = (n+1)//2 selects exactly one row per group
@@ -6471,23 +5963,6 @@ object SparkEntry {
         |  CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pos_rate
         |FROM r, t GROUP BY 1""".stripMargin,
 
-    // per-source token mass -> micro-rounded tokens^alpha -> exact
-    // normalization
-    "q207_source_mixing" ->
-      s"""WITH d AS (SELECT source, len($sqlWords) AS tk FROM documents),
-         |g AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |    CAST(SUM(tk) AS BIGINT) AS n_tokens FROM d GROUP BY 1),
-         |w AS (SELECT source, n_docs, n_tokens,
-         |    CAST(ROUND(POWER(CAST(n_tokens AS DOUBLE), 0.5E0) * 1e6)
-         |      AS BIGINT) AS wm FROM g),
-         |t AS (SELECT CAST(SUM(wm) AS BIGINT) AS wt,
-         |    CAST(SUM(n_tokens) AS BIGINT) AS tt FROM w)
-         |SELECT source, n_docs, n_tokens,
-         |  CAST(wm AS DOUBLE) / CAST(t.wt AS DOUBLE) AS weight,
-         |  CAST(wm AS DOUBLE) / CAST(t.wt AS DOUBLE)
-         |    * CAST(t.tt AS DOUBLE) AS expected_tokens
-         |FROM w, t""".stripMargin,
-
     // q115's tie-aware rank AUC per md5-assigned user fold
     "q208_kfold_auc" ->
       """WITH s AS (SELECT
@@ -6781,26 +6256,6 @@ object SparkEntry {
         |    ELSE CAST(s2 - n_pos * (n_pos + 1) AS DOUBLE)
         |      / (2.0 * CAST(n_pos * n_neg AS DOUBLE)) END AS auc
         |FROM a""".stripMargin,
-
-    // distinct train grams once; per-test-doc distinct-gram join
-    "q223_novelty_score" ->
-      s"""WITH tr AS (SELECT $sqlWords AS w FROM documents
-         |            WHERE doc_id % 10 <> 0),
-         |te AS (SELECT doc_id, $sqlWords AS w FROM documents
-         |       WHERE doc_id % 10 = 0),
-         |tg AS (SELECT DISTINCT unnest($sqlShingles) AS gram FROM tr),
-         |tgf AS (SELECT gram FROM tg WHERE gram <> ''),
-         |teg AS (SELECT doc_id, unnest(list_distinct($sqlShingles))
-         |          AS gram FROM te),
-         |j AS (SELECT t.doc_id,
-         |    CASE WHEN g.gram IS NOT NULL THEN 1 ELSE 0 END AS seen
-         |  FROM (SELECT doc_id, gram FROM teg WHERE gram <> '') t
-         |  LEFT JOIN tgf g ON g.gram = t.gram)
-         |SELECT doc_id, COUNT(*) AS n_grams,
-         |  CAST(SUM(seen) AS BIGINT) AS n_seen,
-         |  1.0E0 - CAST(SUM(seen) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-         |    AS novelty
-         |FROM j GROUP BY doc_id""".stripMargin,
 
     // uniform expectation over the distinct-user md5 bucketing
     "q224_srm_check" ->
@@ -8012,27 +7467,6 @@ object SparkEntry {
         |    AS decomp_gap
         |FROM r""".stripMargin,
 
-    "q276_padding_waste" -> {
-      def arm(name: String, order: String) =
-        s"""(SELECT '$name' AS strategy,
-           |    CAST(COUNT(*) AS BIGINT) AS n_batches,
-           |    CAST(SUM(tok) AS BIGINT) AS total_tokens,
-           |    CAST(SUM(nb * mx) AS BIGINT) AS padded_tokens
-           |  FROM (SELECT b, COUNT(*) AS nb, max(ln) AS mx,
-           |      SUM(ln) AS tok
-           |    FROM (SELECT ln, (ROW_NUMBER() OVER (ORDER BY $order) - 1)
-           |        // 8 AS b FROM l) t
-           |    GROUP BY 1) bb)""".stripMargin
-      s"""WITH l AS (SELECT doc_id, CAST(len($sqlWords) AS BIGINT) AS ln
-         |  FROM documents)
-         |SELECT strategy, n_batches, total_tokens, padded_tokens,
-         |  padded_tokens - total_tokens AS waste_tokens,
-         |  ROUND(CAST(padded_tokens - total_tokens AS DOUBLE)
-         |    / CAST(padded_tokens AS DOUBLE), 6) AS waste_frac
-         |FROM (${arm("arrival", "doc_id")}
-         |      UNION ALL ${arm("length_sorted", "ln, doc_id")}) u""".stripMargin
-    },
-
     "q277_stream_moments" ->
       """SELECT event_type, CAST(COUNT(value) AS BIGINT) AS cnt,
         |  ROUND(CAST(SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6)))
@@ -8692,13 +8126,6 @@ object SparkEntry {
   // --- shared DuckDB SQL fragments for the text oracles ---
   private val sqlWords =
     "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
-  private val sqlShingles =
-    "list_transform(generate_series(1, greatest(len(w)-2, 1)), " +
-      "i -> array_to_string(list_slice(w, i, i+2), ' '))"
   private def sqlHash32(seed: Int, v: String): String =
     s"CAST(('0x'||substr(md5('$seed:'||$v), 1, 8)) AS BIGINT)"
-  private def sqlHits(lang: String): String = {
-    val list = TextFunctions.stopwords(lang).map(w => s"'$w'").mkString(", ")
-    s"len(list_intersect(w, [$list]))"
-  }
 }

@@ -213,44 +213,6 @@ object Evaluation {
         sum(col("__term_micro")).as("ips_clicks_micro"))
   }
 
-  /** Cohen's kappa between two categorical labelings of the same rows
-    * (annotator agreement / model-vs-heuristic consistency):
-    * `κ = (p_o − p_e) / (1 − p_e)` with observed agreement `p_o` and
-    * the chance agreement `p_e = Σ_c rowShare_c · colShare_c`. Output:
-    * one row `(n, agree, po, pe, kappa)`.
-    *
-    * Everything reduces to exact long counts on the |A|×|B|
-    * contingency cells (one shuffle over the category pair, map-side
-    * partial agg); `p_e`'s marginal products are a broadcast join on
-    * label-cardinality-sized tables and the two final divisions are
-    * the only float ops — deterministic across engines and
-    * partitionings at any row count (counts stay < 2^62 past 100 TB;
-    * the pe numerator is a sum of |C| products each ≤ n², staged as
-    * doubles only at the final division). */
-  def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df.groupBy(col(aCol), col(bCol)).agg(count(lit(1)).as("__o"))
-    val aTot = cells.groupBy(col(aCol)).agg(sum(col("__o")).as("__ra"))
-    val bTot = cells.groupBy(col(bCol)).agg(sum(col("__o")).as("__rb"))
-    // chance agreement pairs each label's two marginals — an equi-join
-    // on the label value, label-cardinality-sized
-    val peNum = aTot
-      .join(bTot, col(aCol) === col(bCol))
-      .agg(coalesce(sum(col("__ra").cast("double") * col("__rb").cast("double")),
-        lit(0.0)).as("__pe_num"))
-    cells
-      .agg(sum(col("__o")).as("n"),
-        coalesce(sum(when(col(aCol) === col(bCol), col("__o"))), lit(0L))
-          .as("agree"))
-      .crossJoin(broadcast(peNum))
-      .withColumn("po", col("agree").cast("double") / col("n").cast("double"))
-      .withColumn("pe",
-        col("__pe_num") / (col("n").cast("double") * col("n").cast("double")))
-      .withColumn("kappa",
-        when(col("pe") === 1.0, lit(1.0))
-          .otherwise((col("po") - col("pe")) / (lit(1.0) - col("pe"))))
-      .select(col("n"), col("agree"), col("po"), col("pe"), col("kappa"))
-  }
-
   /** Exposure Gini coefficient over item interaction counts (the
     * popularity-concentration diagnostic for a recommender's catalog):
     * with counts `c` ranked ascending (ties by item id),

@@ -126,42 +126,6 @@ object Training {
     events.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Concat-and-chunk sequence packing — the pretraining data layout
-    * that concatenates documents on one token axis and cuts the axis
-    * into fixed `blockTokens` training sequences. A document spans every
-    * block its token interval `[start, start+len)` touches; emits one
-    * row per (document, block) with the tokens that document
-    * contributes to that block (`block_id`, `tok_in_block`).
-    *
-    * == Scale ==
-    * The only global coordination is the prefix sum of token counts in
-    * `orderCol` order — [[PrefixSum.inclusive]], one range shuffle, no
-    * single-partition window, no sequential scan. Block assignment is
-    * then pure per-row arithmetic + an explode whose fan-out is
-    * `ceil(len / blockTokens) + 1` (documents rarely straddle more than
-    * two blocks). Works unchanged at any corpus size.
-    */
-  def packSequences(
-      docs: DataFrame,
-      orderCol: String,
-      tokens: Column,
-      blockTokens: Int): DataFrame = {
-    require(blockTokens > 0, "blockTokens must be positive")
-    val staged = docs.select(col(orderCol), tokens.cast("long").as("__tok"))
-      .filter(col("__tok") > 0)
-    val cum = PrefixSum.inclusive(staged, orderCol, "__tok", "__end")
-      .withColumn("__start", col("__end") - col("__tok"))
-    // `div` keeps the block math in exact integer arithmetic (a double
-    // division would round above 2^53 total tokens)
-    cum.select(col(orderCol), col("__tok"), col("__start"), col("__end"),
-        explode(sequence(expr(s"__start div $blockTokens"),
-          expr(s"(__end - 1) div $blockTokens"))).as("block_id"))
-      .select(col(orderCol), col("block_id"),
-        (least(col("__end"), (col("block_id") + 1) * blockTokens) -
-          greatest(col("__start"), col("block_id") * blockTokens))
-          .as("tok_in_block"))
-  }
-
   /** Rolling-frame sequence features per entity: for each event, the
     * trailing `frameRows`-event count/sum/mean of `valueCol` (frame
     * `ROWS BETWEEN frameRows-1 PRECEDING AND CURRENT ROW` in
@@ -341,41 +305,4 @@ object Training {
         col("lo"), col("hi"), col("woe"), col("iv_term"))
   }
 
-  /** Padding-waste audit for fixed-size training batches: compare
-    * arrival-order batching against length-sorted batching on the
-    * SAME documents — per strategy, total real tokens vs padded
-    * tokens (`batch_size · batch_max`, ragged tail at actual count)
-    * and the waste fraction. The measured version of "length
-    * bucketing buys you X% step throughput".
-    *
-    * Ranks come from [[PrefixSum.inclusiveBy]] over ones (the
-    * range-partitioned global rank — no single-partition window), so
-    * batch assignment `rank div batchSize` scales; everything after
-    * is a per-batch aggregate. */
-  def paddingWasteAudit(docs: DataFrame, idCol: String, textCol: String,
-      batchSize: Int): DataFrame = {
-    import graft.functions.TextFunctions
-    val lens = docs.select(col(idCol).as("__id"),
-      TextFunctions.tokenCount(col(textCol)).cast("long").as("__len"))
-      .withColumn("__one", lit(1L))
-      .localCheckpoint() // feeds both strategy lineages
-    def strategy(name: String, order: Seq[org.apache.spark.sql.Column])
-        : DataFrame =
-      PrefixSum.inclusiveBy(lens, order, "__one", "__rank")
-        .withColumn("__batch", expr(s"(__rank - 1) div $batchSize"))
-        .groupBy(col("__batch"))
-        .agg(count(lit(1)).as("__nb"), max(col("__len")).as("__mx"),
-          sum(col("__len")).as("__tok"))
-        .agg(count(lit(1)).as("n_batches"),
-          sum(col("__tok")).as("total_tokens"),
-          sum(col("__nb") * col("__mx")).as("padded_tokens"))
-        .select(lit(name).as("strategy"), col("n_batches"),
-          col("total_tokens"), col("padded_tokens"),
-          (col("padded_tokens") - col("total_tokens")).as("waste_tokens"),
-          round((col("padded_tokens") - col("total_tokens")).cast("double")
-            / col("padded_tokens").cast("double"), 6).as("waste_frac"))
-    strategy("arrival", Seq(col("__id").asc))
-      .unionByName(strategy("length_sorted",
-        Seq(col("__len").asc, col("__id").asc)))
-  }
 }

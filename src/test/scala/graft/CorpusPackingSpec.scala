@@ -2,11 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{AnnIndex, PrefixSum, Profile, Sampling, Training}
+import graft.operators.{AnnIndex, PrefixSum, Profile, Sampling}
 
-/** Round-3 training-data operators: prefix sums, sequence packing,
-  * histogram and profile statistics, split/quota sampling, random
-  * projection. */
+/** Round-3 training-data operators: prefix sums, histogram and
+  * profile statistics, split/quota sampling, random projection. */
 class CorpusPackingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
@@ -64,47 +63,6 @@ class CorpusPackingSpec extends AnyFunSuite with SparkSuite {
         assert(fused(k) === ((cv(k), cw(k))), s"key $k")
       }
     }
-  }
-
-  test("packSequences: blocks tile the token axis exactly") {
-    val rnd = new scala.util.Random(5)
-    val docs = (1 to 200).map(i => (i.toLong, rnd.nextInt(600) + 1))
-      .toDF("doc_id", "n_tok")
-    val cap = 128
-    val out = Training.packSequences(docs, "doc_id", col("n_tok"), cap)
-      .as[(Long, Long, Long)].collect()
-    val totalTok = docs.agg(sum("n_tok")).as[Long].head()
-    // per-doc contributions reassemble each document
-    val perDoc = out.groupBy(_._1).map { case (d, rs) => d -> rs.map(_._3).sum }
-    docs.as[(Long, Int)].collect().foreach { case (d, n) =>
-      assert(perDoc(d) === n.toLong, s"doc $d")
-    }
-    // every block except the last holds exactly `cap` tokens
-    val perBlock = out.groupBy(_._2).map { case (b, rs) => b -> rs.map(_._3).sum }
-    val lastBlock = (totalTok - 1) / cap
-    perBlock.foreach { case (b, t) =>
-      if (b < lastBlock) assert(t === cap.toLong, s"block $b")
-      else assert(t === totalTok - lastBlock * cap)
-    }
-    assert(perBlock.keys.max === lastBlock)
-    // matches the naive sequential packer
-    var cum = 0L
-    docs.as[(Long, Int)].collect().sortBy(_._1).foreach { case (d, n) =>
-      val (st, en) = (cum, cum + n)
-      val want = (st / cap to (en - 1) / cap).map { b =>
-        (d, b, math.min(en, (b + 1) * cap) - math.max(st, b * cap))
-      }.toSet
-      assert(out.filter(_._1 == d).toSet === want, s"doc $d spans")
-      cum = en
-    }
-  }
-
-  test("packSequences drops zero-token docs and survives repartitioning") {
-    val docs = Seq((1L, 5), (2L, 0), (3L, 7)).toDF("doc_id", "n_tok")
-    val out = Training.packSequences(docs.repartition(7), "doc_id",
-        col("n_tok"), 8)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(out === Set((1L, 0L, 5L), (3L, 0L, 3L), (3L, 1L, 4L)))
   }
 
   test("Profile.histogram: counts cover all rows, values land in their bin") {

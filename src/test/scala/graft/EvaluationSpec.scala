@@ -296,26 +296,6 @@ class EvaluationSpec extends AnyFunSuite with SparkSuite {
     assert(got === ((3L, 2.0 / 3.0)))
   }
 
-  test("cohenKappa matches the hand computation; edge cases guarded") {
-    // cells: (a,a)x2 (a,b)x1 (b,b)x3 → n=6 agree=5 po=5/6
-    // marginals: row a=3 b=3; col a=2 b=4 → pe=(3·2+3·4)/36=1/2 → κ=2/3
-    val df = Seq(("a", "a"), ("a", "a"), ("a", "b"),
-      ("b", "b"), ("b", "b"), ("b", "b")).toDF("r1", "r2")
-    val got = Evaluation.cohenKappa(df, "r1", "r2")
-      .as[(Long, Long, Double, Double, Double)].head()
-    assert(got === ((6L, 5L, 5.0 / 6.0, 0.5, (5.0 / 6.0 - 0.5) / 0.5)))
-    // disjoint label sets: agreement 0, pe 0 → kappa = po = 0
-    val disj = Seq(("x", "y"), ("x", "y")).toDF("r1", "r2")
-    val d = Evaluation.cohenKappa(disj, "r1", "r2")
-      .as[(Long, Long, Double, Double, Double)].head()
-    assert(d === ((2L, 0L, 0.0, 0.0, 0.0)))
-    // constant identical labels: pe = 1 → guarded κ = 1
-    val const = Seq(("x", "x"), ("x", "x")).toDF("r1", "r2")
-    val c = Evaluation.cohenKappa(const, "r1", "r2")
-      .as[(Long, Long, Double, Double, Double)].head()
-    assert(c === ((2L, 2L, 1.0, 1.0, 1.0)))
-  }
-
   test("pavCalibrateCountsBy fits each group exactly like the global " +
       "fit applied per group") {
     val bins = Seq(

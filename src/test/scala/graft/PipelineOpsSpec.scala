@@ -3,11 +3,10 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Decontaminate, Funnel, Incremental, LinAlg, Sampling, Training}
+import graft.operators.{Funnel, Incremental, LinAlg, Sampling, Training}
 
-/** Round-3 pipeline operators: Gram matrix, decontamination,
-  * incremental aggregate maintenance, funnel, temperature mixing,
-  * rolling-frame features. */
+/** Round-3 pipeline operators: Gram matrix, incremental aggregate
+  * maintenance, funnel, rolling-frame features. */
 class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
@@ -123,21 +122,6 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("decontaminate: overlapReport finds shared n-grams, clean drops them") {
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps"),     // shares "quick brown fox"
-      (2L, "totally unrelated text here"),
-      (3L, "quick brown fox again appears")  // shares too
-    ).toDF("doc_id", "text")
-    val bench = Seq((100L, "a quick brown fox ran")).toDF("doc_id", "text")
-    val report = Decontaminate.overlapReport(corpus, bench, "doc_id", "text", 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(report === Map(1L -> 1L, 3L -> 1L))
-    val clean = Decontaminate.clean(corpus, bench, "doc_id", "text", 3)
-      .select("doc_id").as[Long].collect().sorted
-    assert(clean.toSeq === Seq(2L))
-  }
-
   test("incremental: merged shard states equal the full recompute") {
     val full = Seq(
       ("a", 1.25), ("a", 2.5), ("a", -0.75), ("b", 10.0), ("b", 0.125),
@@ -174,56 +158,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
     assert(got === Map(1L -> 3, 2L -> 2, 3L -> 0))
   }
 
-  test("temperatureMix: quotas sum to total, stable under repartition") {
-    val df = (1 to 300).map { i =>
-      val src = if (i <= 200) "big" else if (i <= 280) "mid" else "small"
-      (i.toLong, src)
-    }.toDF("id", "src")
-    val a = Sampling.temperatureMix(df, "id", "src", alpha = 0.5, total = 50)
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(a.size === 50)
-    val b = Sampling.temperatureMix(df.repartition(7), "id", "src",
-      alpha = 0.5, total = 50).select("id").as[Long].collect().sorted.toSeq
-    assert(a === b)
-    // alpha=0.5 flattens: small source gets MORE than its proportional
-    // share (proportional would be 50*20/300 ≈ 3)
-    val bySrc = Sampling.temperatureMix(df, "id", "src", alpha = 0.5, total = 50)
-      .groupBy("src").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(bySrc("small") >= 5)
-    assert(bySrc.values.sum === 50L)
-  }
-
-  test("temperatureMix: a source smaller than its quota saturates, " +
-      "surplus re-allocates, total still met") {
-    // alpha=0.1 flattens hard: "tiny" (3 rows) would be allocated ~1/3
-    // of total=60 — far more rows than it has. Waterfill caps it at 3
-    // and re-allocates the surplus, so the sample still has 60 rows.
-    val df = ((1L to 3L).map(i => (i, "tiny")) ++
-      (100L to 299L).map(i => (i, "mid")) ++
-      (1000L to 1999L).map(i => (i, "big"))).toDF("id", "src")
-    val got = Sampling.temperatureMix(df, "id", "src", alpha = 0.1, total = 60)
-      .groupBy("src").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got("tiny") === 3L)                 // capped at source size
-    assert(got.values.sum === 60L)             // surplus redistributed
-    assert(got("mid") > 0L && got("big") > 0L)
-    // degenerate: total larger than the corpus → the whole corpus,
-    // shortfall documented (sampling without replacement)
-    val small = (1L to 5L).map(i => (i, if (i < 3) "a" else "b")).toDF("id", "src")
-    assert(Sampling.temperatureMix(small, "id", "src", alpha = 0.5,
-      total = 50).count() === 5L)
-  }
-
-  test("plan shapes: decontaminate broadcasts, gram matrix partial-aggregates") {
-    val docs = Tables.documents(spark, sf)
-    val decon = Decontaminate.overlapReport(
-      docs.filter(col("doc_id") % 41 =!= 0),
-      docs.filter(col("doc_id") % 41 === 0), "doc_id", "text", 3)
-    val dplan = decon.queryExecution.executedPlan.toString
-    // the corpus side must probe a broadcast gram set, never sort-merge
-    assert(dplan.contains("BroadcastHashJoin"), dplan.take(2000))
-    assert(!dplan.contains("SortMergeJoin"), dplan.take(2000))
+  test("plan shape: gram matrix partial-aggregates") {
     val gram = LinAlg.gramUpper(
       Tables.embeddings(spark, sf)
         .select(LinAlg.microVec(col("embedding")).as("m")), col("m"))
@@ -276,39 +211,6 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
       .select("grp", "id", "sample_rank")
       .as[(String, Long, Int)].collect().sorted.toSeq
     assert(merged === full)
-  }
-
-  test("tokenBudgetMix: per-source token spend stays within quota + one " +
-      "doc; saturated sources ship whole; deterministic") {
-    val rnd = new scala.util.Random(43)
-    val df = (1 to 300).map { i =>
-      val src = if (i <= 200) "big" else if (i <= 280) "mid" else "tiny"
-      (i.toLong, src, 50 + rnd.nextInt(150))
-    }.toDF("id", "src", "tok")
-    val budget = 8000L
-    val got = Sampling.tokenBudgetMix(df, "id", "src", "tok",
-        alpha = 0.5, totalTokens = budget)
-      .select("id", "src", "tok").as[(Long, String, Int)].collect()
-    val spend = got.groupBy(_._2).view.mapValues(_.map(_._3.toLong).sum).toMap
-    val maxTok = got.map(_._3).max.toLong
-    // every source spends, and the total overshoot is bounded by one
-    // doc per source
-    assert(spend.keySet === Set("big", "mid", "tiny"))
-    assert(spend.values.sum <= budget + 3 * maxTok)
-    // alpha=0.5 flattens: tiny source exceeds its proportional share
-    val tinyTotal = df.filter($"src" === "tiny")
-      .agg(sum($"tok")).as[Long].head()
-    assert(spend("tiny") > budget * tinyTotal /
-      df.agg(sum($"tok")).as[Long].head())
-    val again = Sampling.tokenBudgetMix(df.repartition(11), "id", "src",
-        "tok", alpha = 0.5, totalTokens = budget)
-      .select("id", "src", "tok").as[(Long, String, Int)].collect()
-    assert(got.sortBy(_._1).toSeq === again.sortBy(_._1).toSeq)
-    // a budget above the corpus total saturates every source: the full
-    // corpus ships, exactly once
-    val all = Sampling.tokenBudgetMix(df, "id", "src", "tok",
-      alpha = 0.5, totalTokens = 10000000L)
-    assert(all.count() === 300)
   }
 
   test("targetEncodeLoo: own label never leaks, singletons get the " +
@@ -426,34 +328,6 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
     // 2..4 within the pool)
     assert(trimmed.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap ===
       topByScore.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap)
-  }
-
-  test("sourceMixingWeights: weights normalize to 1, alpha=1 recovers " +
-      "raw token proportions, alpha<1 upweights small sources") {
-    import spark.implicits._
-    // source A: 10 docs x 8 tokens; source B: 2 docs x 4 tokens
-    val docs = ((0 until 10).map(i => ("A", "w " * 7 + "w")) ++
-      (0 until 2).map(i => ("B", "w w w w"))).toDF("source", "text")
-    def run(alpha: Double): Map[String, (Long, Long, Double, Double)] =
-      graft.operators.Sampling.sourceMixingWeights(
-          docs, "source", "text", alpha)
-        .as[(String, Long, Long, Double, Double)].collect()
-        .map(t => t._1 -> ((t._2, t._3, t._4, t._5))).toMap
-    val raw = run(1.0)
-    assert(raw("A")._1 === 10L && raw("A")._2 === 80L)
-    assert(raw("B")._1 === 2L && raw("B")._2 === 8L)
-    assert(math.abs(raw("A")._3 - 80.0 / 88.0) < 1e-6)
-    assert(math.abs(raw("A")._3 + raw("B")._3 - 1.0) < 1e-9)
-    // expected_tokens redistributes the 88-token budget by weight
-    assert(math.abs(raw("A")._4 + raw("B")._4 - 88.0) < 1e-6)
-    val cooled = run(0.5)
-    assert(cooled("B")._3 > raw("B")._3) // small source upweighted
-    assert(math.abs(cooled("A")._3 + cooled("B")._3 - 1.0) < 1e-9)
-    // naive: micro-rounded pow(x, 0.5) weights (pow, not sqrt — the
-    // operator uses pow and the two can differ in the last ulp)
-    val wa = math.round(math.pow(80.0, 0.5) * 1e6)
-    val wb = math.round(math.pow(8.0, 0.5) * 1e6)
-    assert(cooled("A")._3 === wa.toDouble / (wa + wb))
   }
 
   test("expandViaGraph: neighbors of top-seedK join the pool damped, " +

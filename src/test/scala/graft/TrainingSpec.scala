@@ -217,27 +217,4 @@ class TrainingSpec extends AnyFunSuite with SparkSuite {
         assert(got(b.toLong)._4 <= got((b + 1).toLong)._3 + 1e-12))
     }
   }
-
-  test("padding waste: length-sorting eliminates waste on a ladder") {
-    import spark.implicits._
-    // lengths 1..16 interleaved so arrival order mixes long and short;
-    // sorted batching (size 4) packs equal-ish lengths together
-    val docs = Seq(1, 16, 2, 15, 3, 14, 4, 13, 5, 12, 6, 11, 7, 10, 8, 9)
-      .zipWithIndex.map { case (len, i) =>
-        (i.toLong, Seq.fill(len)("w").mkString(" ")) }
-      .toDF("doc_id", "text")
-    val got = Training.paddingWasteAudit(docs, "doc_id", "text", 4)
-      .collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    val total = (1 to 16).sum.toLong
-    assert(got("arrival")._2 === total)
-    assert(got("length_sorted")._2 === total)
-    assert(got("arrival")._1 === 4L)
-    // sorted batches: (1,2,3,4)(5,6,7,8)(9,10,11,12)(13,14,15,16) ->
-    // padded = 4*(4+8+12+16) = 160, waste = 160-136 = 24
-    assert(got("length_sorted")._3 === 160L)
-    assert(got("length_sorted")._4 === 24L)
-    // arrival interleaving pads much more
-    assert(got("arrival")._4 > got("length_sorted")._4 * 2)
-  }
 }

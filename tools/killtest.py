@@ -428,23 +428,6 @@ MUTATIONS = [
         "mechanism": "normalized values keep the min offset -> off the "
                      "oracle's (x-min)/(max-min) at every row with min != 0",
     },
-    {
-        # (ac) interval-clipping class: packSequences' per-block token
-        # contribution forgets to clip at the document's own start —
-        # any document that enters a block mid-way (start > block
-        # boundary) inflates its first block's tok_in_block.
-        "name": "pack_clip_start_drop",
-        "file": "src/main/scala/graft/operators/Training.scala",
-        "old": '        (least(col("__end"), (col("block_id") + 1) * blockTokens) -\n'
-               '          greatest(col("__start"), col("block_id") * blockTokens))',
-        "new": '        (least(col("__end"), (col("block_id") + 1) * blockTokens) -\n'
-               '          col("block_id") * blockTokens)',
-        "queries": ["q63_pack_sequences"],
-        "expect": "red",
-        "mechanism": "first-block contributions count tokens from the block "
-                     "start instead of the document start -> tok_in_block "
-                     "inflates for every non-aligned document",
-    },
     # ---- batch 4: the families NOTES listed as sharing kernels ----
     {
         # (ae) ANN probe-config class: the shared search probe (search,
@@ -557,32 +540,19 @@ MUTATIONS = [
         # (am) distributed-prefix-sum class: the cross-partition offset
         # window includes the CURRENT partition's total (-1 -> 0) —
         # every row's cumulative sum double-counts its own partition.
-        # PrefixSum is the one prefix-sum kernel, so packSequences and
-        # percentRank both go red.
+        # PrefixSum is the one prefix-sum kernel, so ksStatistic (the
+        # plain `inclusive` form) and percentRank (`inclusiveWithTotal`)
+        # both go red.
         "name": "prefix_sum_offset",
         "file": "src/main/scala/graft/operators/PrefixSum.scala",
         "old": "      .rowsBetween(Window.unboundedPreceding, -1) // one row per partition",
         "new": "      .rowsBetween(Window.unboundedPreceding, 0) // one row per partition",
-        "queries": ["q63_pack_sequences", "q13_percentile_rank"],
+        "queries": ["q196_ks_drift", "q13_percentile_rank"],
         "expect": "red",
-        "mechanism": "offsets include the own-partition total -> token "
-                     "intervals shift by a partition's worth, blocks "
-                     "misassign corpus-wide; percent ranks past the "
-                     "first range partition inflate",
-    },
-    {
-        # (ad) set-semantics class: decontamination's benchmark gram
-        # set loses its distinct — a gram shared by multiple benchmark
-        # docs joins (and counts) once per duplicate.
-        "name": "decon_bench_dedup_drop",
-        "file": "src/main/scala/graft/operators/Decontaminate.scala",
-        "old": '        TextFunctions.shinglesFromWords(col("__w"), n))).as("gram"))\n'
-               '      .distinct()',
-        "new": '        TextFunctions.shinglesFromWords(col("__w"), n))).as("gram"))',
-        "queries": ["q76_decontaminate"],
-        "expect": "red",
-        "mechanism": "cross-bench duplicate grams multiply-count overlap "
-                     "hits -> per-doc contamination counts inflate",
+        "mechanism": "offsets include the own-partition total -> the "
+                     "KS cumulative CDF gap shifts by a partition's "
+                     "worth, so its max (ks_num, ks) moves; percent "
+                     "ranks past the first range partition inflate",
     },
     # ---- batch 6: the r15 gate machinery (skew tier + state soak) ----
     {
