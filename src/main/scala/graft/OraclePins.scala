@@ -1,24 +1,20 @@
 package graft
 
-/** PINNED shared-literal oracle constants (the [[Q281Weights]]
-  * methodology, applied corpus-wide).
+/** PINNED shared-literal oracle constants.
   *
   * Four oracles used to call their ENGINE formula at SQL-construction
   * time — q107 (`Recsys.timeDecayLambda`), q117
   * (`Evaluation.dcgDiscountsMicro`), q201 (`Evaluation.PoissonCdf`),
   * q203 (`Validate.BenfordP`). That shape is a tautology: a mutation
   * in the generation formula changes BOTH sides identically and the
-  * driver compare stays GREEN (demonstrated live for q281 by
-  * tools/killtest.py before its pin landed; these four share its
-  * structure exactly). Each constant below is the formula's output
+  * driver compare stays GREEN (demonstrated live by
+  * tools/killtest.py on a weight-table oracle of the same structure
+  * before its pin landed). Each constant below is the formula's output
   * FROZEN as source literals; the oracle plants the pin, the engine
   * keeps computing live, and OraclePinsSpec locks `pin == formula` so
   * a conscious formula change must regenerate the pin. Both sides
   * still consume bit-identical doubles/longs — the IEEE-exactness
   * property that motivated the sharing in the first place.
-  *
-  * (Deliberately NOT pinned, unchanged from r14 NOTES: q178's MMR
-  * oracle is an independent loop-unrolled derivation.)
   *
   * PLATFORM/LIBM ASSUMPTION (r14 ADVICE): pins that pass through
   * transcendental functions (`Math.log10`, `Math.exp`) are exact only
@@ -30,8 +26,8 @@ package graft
   * last ulp differently, an OraclePinsSpec lock failure (and the
   * q107/q201/q203 driver compares) means "regenerate the pins on this
   * platform", NOT "the formula regressed" — the spec failure messages
-  * say so. Integer-carrier pins (q117 micro-discounts, q281 weights)
-  * are platform-independent once generated. */
+  * say so. Integer-carrier pins (q117 micro-discounts) are
+  * platform-independent once generated. */
 private[graft] object OraclePins {
 
   /** q107: half-life decay rate `ln 2 / 24h` (Recsys.timeDecayLambda). */

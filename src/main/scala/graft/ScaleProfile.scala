@@ -36,25 +36,13 @@ package graft
   *    itself the product to rethink, not the cap.
   *  - `Sketches.audienceOverlap(maxSegments)` — gate: default 1024.
   *    100×: unchanged; segment-pair output is quadratic in segments.
-  *  - `EpisodeGraph.mergeFacts(maxFacts)` — gate: default 4096. The
-  *    greedy merge is sequentially dependent (each decision conditions
-  *    on every prior survivor), so it is a bounded DRIVER-SIDE fold by
-  *    design; the cap fails loudly, never truncates. 100×: switch to
-  *    `EpisodeGraph.mergeFactsClustered` (q291) — thresholded
-  *    near-dup pairs → connected components → the SAME greedy kernel
-  *    per component on the executors, `maxComponent`-bounded per
-  *    group instead of globally. With exact blocking (cells = 1, the
-  *    gate config) its output EQUALS the global fold; with k-means
-  *    blocking every emitted merge is still threshold-sound (never a
-  *    below-threshold merge — spec-pinned), but leader structure can
-  *    drift from global wherever a threshold edge crosses cells.
   *
   * == Blocking-granularity knobs (the scale-coupled ones) ==
   *
-  * The three sub-split caps (`maxBlock`, `maxBin`, `maxStateBlock`)
-  * all run [[graft.operators.Skew.cappedFanJoin]] — one shared
-  * census-adaptive kernel, so a fix or tuning change lands in all
-  * three operators at once.
+  * The two sub-split caps (`maxBlock`, `maxBin`) both run
+  * [[graft.operators.Skew.cappedFanJoin]] — one shared
+  * census-adaptive kernel, so a fix or tuning change lands in both
+  * operators at once.
   *
   *  - `SimilaritySearch.semanticNearDupPairs(cells, targetCellSize,
   *    maxCellsPerLevel)` — gate: q184 pins `cells = 8`
@@ -90,50 +78,16 @@ package graft
   *    data, 845.7 s vs the sweep-line's 16.6 s at the same sf), so
   *    at 100× the pair join is only for pair-list OUTPUT, never for
   *    counts.
-  *  - `EpisodeGraph.autoLink(maxStateBlock)` — gate: q284 runs 0 (a
-  *    few hundred episodes per state). 100×: same rule as maxBlock —
-  *    set to the per-task failed-row budget when one state dominates.
   *  - `Recsys.userOverlapJaccard(maxItemPop)` — gate: q229 runs 80. 100×:
   *    the super-node cut; pair fan-out ≤ maxItemPop·|interactions|.
   *    Keep it at the head of the item-popularity distribution you can
   *    afford to drop pairs THROUGH (popular items carry little
   *    similarity signal anyway — the standard co-occurrence cut).
   *
-  *  - `EpisodeGraph.mergeFactsClustered(cells, targetCellSize,
-  *    maxComponent)` — gates: q291 runs the EXACT config (cells = 1,
-  *    output provably equals the driver fold), q293 the BLOCKED path
-  *    (cells = 3 over a provably-separated corpus — still
-  *    global-equal). 100×: drive blocking with `targetCellSize` like
-  *    any SemDeDup caller (the pair generator IS
-  *    `semanticNearDupPairs`); `maxComponent` (gate 4096) bounds
-  *    per-task fold memory LOUDLY — a component past ~10⁴ means the
-  *    threshold glues the corpus into one blob (raise the threshold,
-  *    not the cap). `EpisodeGraph.connectedComponents(maxIters)`
-  *    (gate 25) needs no scale retune: pointer jumping from round 3
-  *    makes rounds O(log diameter), and exhaustion fails loudly.
-  *
-  * == Streaming state caps ==
-  *
-  *  - `Ingest.streamingEpisodes(maxPending)` — gate: q292/q294 run
-  *    1 << 16 because a SINGLE-key fixture buffers the whole corpus
-  *    through the first micro-batch. 100×: per-key pending ≈ event
-  *    rate × watermark delay; size to that (the default 8192 fits
-  *    ~2 min at ~70 events/s/key) — the cap is loud, never a trim.
-  *  - `Ingest.streamingContinuations` — no knob: per-key state is
-  *    O(1) (the last closed episode), edges final on emission.
-  *
   * == Bounded-work knobs (bigger = more work, not more risk) ==
   *
-  *  - `Pipeline.mmrRerank(poolSize)` — gate: 500. Per-group state is
-  *    poolSize·dim doubles in one task; size to executor memory.
-  *  - `Pipeline.expandViaGraph(seedK, depth)` — gate: q279 depth 1,
-  *    q284 depth 2. Fan-out ≤ seedK·outDegree^depth; depth ≤ 16 is a
-  *    hard require, each hop is one join pass.
   *  - `Evaluation.kendallTauB(topN)` — gate: q278 runs 50. Pairwise
   *    in topN; 10³ is still only ~5·10⁵ pairs.
-  *  - `Pipeline.reinforcementScores(horizon, maxRank)` — gate: 16/32.
-  *    Weight-table literals = horizon·maxRank longs planted in the
-  *    plan AND the oracle; keep ≤ a few thousand.
   *  - `PrefixSum` range partitions — derived from the session's
   *    `spark.sql.shuffle.partitions` (gate: 32, = local cores). 100×:
   *    O(total cores); the offset table materializes that many

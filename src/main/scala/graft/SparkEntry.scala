@@ -55,7 +55,7 @@ object SparkEntry {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, SparkSession]())
 
-  private[graft] def streamSession(s: SparkSession): SparkSession =
+  private def streamSession(s: SparkSession): SparkSession =
     // ONE clone per parent session, cached (r18, verdict item 8):
     // every clone that starts a stream lazily attaches a
     // StreamingQueryListenerBus to the shared SparkContext
@@ -64,8 +64,9 @@ object SparkEntry {
     // listeners for the JVM's life — each new one re-processing every
     // "streams"-queue event. Over a full bench (8 stream fixtures ×
     // warmup + 3 timed passes) that read as streaming queries running
-    // ~2-3x slower IN-SUITE than warm-isolated (q292: 6.3 s in-suite
-    // vs 1.9 s isolated at 32c) while batch queries were unaffected.
+    // ~2-3x slower IN-SUITE than warm-isolated (one stream gate:
+    // 6.3 s in-suite vs 1.9 s isolated at 32c) while batch queries
+    // were unaffected.
     // The clone carries no per-query state — only the stream-scoped
     // shuffle-partitions conf — so sharing it is pure harness hygiene:
     // every stream still stages, plans, and computes from scratch.
@@ -92,59 +93,6 @@ object SparkEntry {
       }
       .start().awaitTermination()
     df.sparkSession.read.parquet(out)
-  }
-
-  /** The q286-derived streaming timeline fixture shared by the q292/
-    * q294 gates: the embeddings-derived entries (+1 ts offset — the
-    * derived timeline starts at ts 0, which the initial watermark's
-    * late filter would eat; sqlEpisodeBoundaries doc) plus the two
-    * flush sentinels, staged to parquet and opened as a file-source
-    * stream on a [[streamSession]] clone.
-    *
-    * Sentinels: s1 (boundary-forcing — state differing from any real
-    * state AND the negated last embedding, so whichever score term
-    * the last real entry supports fires) closes the final real
-    * episode ON THE DATA PATH; s2 only pushes the watermark past s1
-    * so s1 gets sealed and folded. s1's own episode stays open in
-    * state (never emitted); s2 stays buffered (never sealed). The
-    * last real entry by the fold's (ts, id) order is what s1 scores
-    * against: its state is '' only when label = 0 (embedding present
-    * -> the negated-embedding term gives shift 1, score 0.4 >= 0.38)
-    * and its embedding null only when label = 9 (state non-empty ->
-    * the flip term gives 0.6) — either way s1 is a boundary. */
-  private def stagedTimelineFixture(s: SparkSession, dir: String,
-      tag: String): (DataFrame, String) = {
-    val emb = Tables.embeddings(s, dir)
-    val arrT = emb.schema("embedding").dataType
-    val entries = emb.select(
-      col("vec_id").as("entry_id"),
-      ((col("vec_id") % 64) * 1000 + col("vec_id") + 1).as("ts"),
-      when(col("label") === 0, "")
-        .otherwise(concat(lit("s"), (col("label") % 5).cast("string")))
-        .as("state"),
-      when(col("label") === 9, lit(null).cast(arrT))
-        .otherwise(col("embedding")).as("embedding"),
-      concat(lit("doc "), col("vec_id").cast("string")).as("content"))
-    val dayMs = 86400000L
-    val lastE = entries.orderBy(col("ts").desc, col("entry_id").desc)
-      .limit(1)
-    val s1 = lastE.select(lit(-1L).as("entry_id"),
-      (col("ts") + 10L * dayMs).as("ts"),
-      lit("zzflush").as("state"),
-      transform(col("embedding"), x => -x).as("embedding"),
-      lit("sentinel").as("content"))
-    val s2 = lastE.select(lit(-2L).as("entry_id"),
-      (col("ts") + 11L * dayMs).as("ts"), lit("").as("state"),
-      lit(null).cast(arrT).as("embedding"),
-      lit("sentinel").as("content"))
-    val staged = entries.unionByName(s1).unionByName(s2)
-      .withColumn("key", lit(0L))
-    val base = java.nio.file.Files
-      .createTempDirectory(s"graft-$tag").toString
-    val in = s"$base/in"
-    staged.coalesce(1).write.parquet(in)
-    (graft.streaming.Ingest.fileSource(streamSession(s), in,
-      staged.schema), base)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1764,24 +1712,6 @@ object SparkEntry {
             (col("event_type") === "click").cast("long").as("y")),
         "score", "y", thresholds = Seq(10.0, 50.0, 100.0, 250.0, 500.0))),
 
-    // ---- MMR diversified top-K: greedy slate selection over the
-    // top-20 cosine pool, re-scoring each slot by
-    // score·(1 − λ·max_sim_to_selected) — the reference's
-    // episodic-memory retriever selection ----
-    "q178_mmr_rerank" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val queries = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("query_embedding"))
-      val pool = SimilaritySearch.topK(emb, queries, k = 20,
-        metric = SimilaritySearch.Cosine, excludeSelf = true)
-        .select(col("query_id"), col("vec_id"), col("score"))
-      val cand = pool.join(
-        emb.select(col("vec_id"), col("embedding")), "vec_id")
-      Pipeline.mmrRerank(cand, Seq("query_id"), "vec_id", "score",
-        "embedding", k = 5, penalty = 0.5)
-    }),
-
     // ---- ANN recall audit: q38's IVF probe result vs the exact
     // brute-force top-10, per-query overlap — the number probe depth
     // and cell count are tuned against ----
@@ -2673,52 +2603,6 @@ object SparkEntry {
         "item_id", "n_events", "value_micro",
         topN = 50, rankBy = "n_events")),
 
-    // ---- episodic-memory retrieval: 1-hop graph expansion of the
-    // candidate pool through temporal-adjacency links before rerank;
-    // newcomers score at 0.8 x their own query cosine ----
-    "q279_graph_expand" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      // .limit(8) is a no-op on the 8-row filter but plants an
-      // explicit bound the plan audit can PROVE on the broadcast leg
-      val queries = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("query_embedding"))
-        .orderBy(col("query_id")).limit(8)
-      val pool = SimilaritySearch.topK(emb, queries, k = 10,
-        metric = SimilaritySearch.Cosine, excludeSelf = true)
-        .select(col("query_id"), col("vec_id"), col("score"))
-      // next-episode links (i -> i+1), kept only where both ends exist
-      val edges = emb.select(col("vec_id").as("src"),
-          (col("vec_id") + 1).as("dst"))
-        .join(emb.select(col("vec_id").as("dst")), Seq("dst"))
-      Pipeline.expandViaGraph(pool, edges, queries, emb,
-        Seq("query_id"), "vec_id", "score", "src", "dst",
-        "query_embedding", "embedding", seedK = 3, dampen = 0.8)
-    }),
-
-    // ---- episodic-memory retrieval: slate counter-example guarantee
-    // (>=1 'success' row per slate whenever the pool has one) ----
-    "q280_counter_example" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val queries = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("query_embedding"))
-        .orderBy(col("query_id")).limit(8) // audit-provable bound on the broadcast leg
-      val pool = SimilaritySearch.topK(emb, queries, k = 20,
-          metric = SimilaritySearch.Cosine, excludeSelf = true)
-        .select(col("query_id"), col("vec_id"), col("score"))
-        .join(emb.select(col("vec_id"),
-          when(col("label") % 7 === 0, "success").otherwise("failure")
-            .as("outcome")), "vec_id")
-      val byGroup = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("vec_id").asc)
-      val slate = pool.withColumn("rank", row_number().over(byGroup))
-        .filter(col("rank") <= 5)
-      Pipeline.ensureCounterExample(slate, pool, Seq("query_id"),
-        "vec_id", "score", "rank", "outcome", "success")
-    }),
-
     // ---- streaming session windows: flatMapGroupsWithState with
     // EventTimeTimeout, O(1) state per user; a single far-future
     // sentinel event per user (shared global timestamp, 3x the gap
@@ -2761,285 +2645,6 @@ object SparkEntry {
       runStreamTo(
         Ingest.streamingSessionize(ev, gapMs = 21600000000L).toDF(),
         base)
-    }),
-
-    // ---- episodic-memory graph: auto-inferred CONTINUATION +
-    // RETRY_OF links (graph.py auto_link) feeding a DEPTH-2 BFS pool
-    // expansion (graph.py traverse via retriever) — the edges come
-    // from the operator, not synthesized in the gate. The episode
-    // framing derives deterministically from the embeddings table:
-    // label-keyed states (label 0 = stateless, breaking adjacency),
-    // vec_id-keyed times with a mixed-sign gap pattern, label-9 rows
-    // embedding-less (exercising every auto_link skip rule) ----
-    "q284_graph_autolink" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val arrT = emb.schema("embedding").dataType
-      val episodes = emb.select(
-        col("vec_id").as("episode_id"),
-        when(col("label") === 0, "")
-          .otherwise(concat(lit("s"), (col("label") % 5).cast("string")))
-          .as("state"),
-        (col("vec_id") * 10).as("start_ts"),
-        (col("vec_id") * 10 + (col("vec_id") % 7) * 2).as("end_ts"),
-        when(col("label") % 3 === 0, "success").otherwise("failure")
-          .as("outcome"),
-        when(col("label") === 9, lit(null).cast(arrT))
-          .otherwise(col("embedding")).as("embedding"))
-      // 0.3 (not the reference's 0.55 default) because the synthetic
-      // embedding space tops out at within-state cosine 0.47 — at 0.3
-      // the gate carries 61 continuation + 101 retry edges, and depth
-      // 2 reaches 6 nodes depth 1 cannot (non-vacuous on every leg)
-      val edges = graft.operators.EpisodeGraph.autoLink(
-        episodes, simThreshold = 0.3, maxGap = 6L)
-      val queries = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("query_embedding"))
-        .orderBy(col("query_id")).limit(8) // audit-provable broadcast bound
-      val pool = SimilaritySearch.topK(emb, queries, k = 10,
-        metric = SimilaritySearch.Cosine, excludeSelf = true)
-        .select(col("query_id"), col("vec_id"), col("score"))
-      Pipeline.expandViaGraph(pool,
-        edges.select(col("src"), col("dst")), queries, emb,
-        Seq("query_id"), "vec_id", "score", "src", "dst",
-        "query_embedding", "embedding", seedK = 3, dampen = 0.8,
-        depth = 2)
-    }),
-
-    // ---- episode boundary detection (episodes.py:49-103): boundary
-    // score 0.6·state-flip + 0.4·(1 − max(cos, 0)) over consecutive
-    // (ts, id)-ordered entries; boundary-flag prefix sums segment the
-    // timeline into Episode rows. The ts mapping (vec_id % 64 leading)
-    // deliberately REORDERS entries away from id order so the (ts, id)
-    // total order is genuinely exercised. Threshold 0.38 (not the
-    // reference's 0.5 default) because with the reference weights the
-    // synthetic space's ~0 cosines cap the semantic term at 0.4 — at
-    // 0.38 BOTH terms decide (flip pairs always split; same-state
-    // pairs split iff cos <= 0.05), so neither leg is vacuous ----
-    "q286_episode_boundaries" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val arrT = emb.schema("embedding").dataType
-      val entries = emb.select(
-        col("vec_id").as("entry_id"),
-        ((col("vec_id") % 64) * 1000 + col("vec_id")).as("ts"),
-        when(col("label") === 0, "")
-          .otherwise(concat(lit("s"), (col("label") % 5).cast("string")))
-          .as("state"),
-        when(col("label") === 9, lit(null).cast(arrT))
-          .otherwise(col("embedding")).as("embedding"),
-        concat(lit("doc "), col("vec_id").cast("string")).as("content"))
-      graft.operators.EpisodeGraph.detectEpisodes(entries,
-        threshold = 0.38, contentCol = "content")
-    }),
-
-    // ---- the STREAMING episode detector over the same q286-derived
-    // timeline, through a real file-source graph (the q283 pattern):
-    // the reorder-buffer FMGWS operator must reproduce the batch
-    // detector's rows exactly. Two appended sentinels flush the
-    // finite fixture: s1 (boundary-forcing — state differing from any
-    // real state AND the negated last embedding, so whichever score
-    // term the last real entry supports fires) closes the final real
-    // episode ON THE DATA PATH; s2 only pushes the watermark past s1
-    // so s1 gets sealed and folded. s1's own episode stays open in
-    // state (never emitted); s2 stays buffered (never sealed) ----
-    "q292_stream_episodes" -> ((s, dir) => {
-      val (raw, base) = stagedTimelineFixture(s, dir, "q292")
-      // maxPending sized to the fixture: a SINGLE-key fixture buffers
-      // the whole corpus through the first micro-batch (watermark 0);
-      // a real deployment keys per agent and sizes this to
-      // rate x watermark-delay
-      runStreamTo(graft.streaming.Ingest.streamingEpisodes(raw,
-          threshold = 0.38, maxPending = 1 << 16).toDF(), base)
-        .select(col("episode_idx"), col("start_ts"), col("end_ts"),
-          col("entry_start"), col("entry_end"), col("n_entries"),
-          col("state"), col("summary"))
-    }),
-
-    // ---- the episodic chain's streaming FRONT completed: episodes
-    // stream -> CONTINUATION-edges stream, two chained stateful
-    // operators in ONE append query (both FMGWS in Append mode — the
-    // combination Spark's unsupported-operations checker allows), over
-    // the same staged q286-derived timeline. Oracle: the batch
-    // detector's episode rows joined to their chronological successor
-    // under the autoLink gap/state rule — maxGap 500 accepts 51 edges
-    // and REJECTS the 10 same-state pairs whose gap is 553/617 at
-    // sf0.01, so both legs of the predicate gate. RETRY_OF stays
-    // batch-only (needs all-history pairs, not adjacency) ----
-    "q294_stream_episode_links" -> ((s, dir) => {
-      import graft.streaming.Ingest
-      val (raw, base) = stagedTimelineFixture(s, dir, "q294")
-      // Spark's chained-stateful checker guards ONE risk: an upstream
-      // stateful op emitting rows below the global watermark that a
-      // DOWNSTREAM late filter then silently discards. It cannot
-      // happen in this chain — streamingContinuations carries no
-      // event-time column, no watermark, no timeout, so no late
-      // filter exists to discard anything; every episode row is
-      // final-on-emission by streamingEpisodes' contract. Set on the
-      // stream session clone (streamSession) for this gate's run only,
-      // then restored, so the other stream gates keep the check.
-      val check = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-      val conf = raw.sparkSession.conf
-      val prev = conf.getAll.get(check) // explicitly set values only
-      conf.set(check, "false")
-      try {
-        val eps = Ingest.streamingEpisodes(raw, threshold = 0.38,
-          maxPending = 1 << 16)
-        runStreamTo(Ingest.streamingContinuations(eps, maxGap = 500L)
-            .toDF(), base)
-          .select(col("key"), col("src"), col("dst"), col("link_type"),
-            col("strength"))
-      } finally prev.fold(conf.unset(check))(conf.set(check, _))
-    }),
-
-    // ---- retrieval boost scoring + causal narrative
-    // (retriever.py:91-101 _episode_score, 227-237 _build_narrative):
-    // cosine boosted ×1.25 for failures then ×1.5 on state match,
-    // top-5 slate per query, and the slate rendered as the " → "
-    // narrative (summary[:60] with id fallback, state/outcome tags) ----
-    "q289_retrieval_narrative" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val emb = Tables.embeddings(s, dir)
-      val arrT = emb.schema("embedding").dataType
-      val queries = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").cast("array<double>").as("__qe"),
-          concat(lit("s"), (col("label") % 5).cast("string")).as("__cur"))
-        .orderBy(col("query_id")).limit(8)
-      val eps = emb.select(col("vec_id"),
-        when(col("label") === 9, lit(null).cast(arrT))
-          .otherwise(col("embedding")).as("__e"),
-        when(col("label") === 0, "")
-          .otherwise(concat(lit("s"), (col("label") % 5).cast("string")))
-          .as("state"),
-        when(col("label") % 3 === 0, "success").otherwise("failure")
-          .as("outcome"),
-        when(col("vec_id") % 11 === 0, "")
-          .otherwise(concat(lit("episode "), col("vec_id").cast("string")))
-          .as("summary"))
-      val base = coalesce(graft.functions.Similarity.cosine(
-        col("__e").cast("array<double>"), col("__qe")), lit(0.0))
-      val scored = eps.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), col("state"),
-          col("outcome"), col("summary"),
-          Pipeline.episodeBoostScore(base, col("outcome"), col("state"),
-            col("__cur")).as("score"))
-      val slate = scored.withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("score").desc, col("vec_id").asc)))
-        .filter(col("rank") <= 5)
-      val narr = Pipeline.buildNarrative(slate, Seq("query_id"),
-        "vec_id", "rank", "summary", "state", "outcome")
-      slate.select(col("query_id"), col("rank"), col("vec_id"),
-          col("score"))
-        .join(broadcast(narr), "query_id")
-    }),
-
-    // ---- state-preferred fact fetch (retriever.py:214-223): per
-    // query, top-3 of the state-applicable facts inside the top-6
-    // pool, falling back to the overall top-3 when nothing matches;
-    // query 3 has the empty state (preference skipped), queries ≡ 2
-    // (mod 3) carry a state no fact names — those groups fall back
-    // wherever their top-6 lacks a universal fact ----
-    "q290_state_facts" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val queries = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").cast("array<double>").as("__qe"),
-          when(col("vec_id") === 3, "")
-            .when(col("vec_id") % 3 === 2, "zz")
-            .otherwise(concat(lit("s"), (col("label") % 5).cast("string")))
-            .as("__cur"))
-        .orderBy(col("query_id")).limit(8)
-      val facts = emb.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("__fe"),
-        when(col("vec_id") % 7 === 3, array().cast("array<string>"))
-          .otherwise(array(concat(lit("s"),
-            (col("label") % 5).cast("string")))).as("applicable"))
-      val scored = facts.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), col("applicable"),
-          col("__cur").as("cur_state"),
-          graft.functions.Similarity.cosine(col("__fe"), col("__qe"))
-            .as("score"))
-      Pipeline.preferStateApplicable(scored, Seq("query_id"), "vec_id",
-          "score", "applicable", "cur_state", k = 3)
-        .select(col("query_id"), col("vec_id"), col("score"),
-          col("matched"))
-    }),
-
-    // ---- fact-corpus embedding merge (facts.py:124-147): greedy
-    // fold in fact-id order, each fact merging into the earliest
-    // surviving fact within the cosine threshold, else appending.
-    // Threshold 0.25 (not the reference's 0.80 default) because the
-    // synthetic embedding space tops out near cosine 0.47 — at 0.25
-    // the gate carries real merge structure (111 leaders / 389 merges
-    // at sf0.01) ----
-    "q288_fact_merge" -> ((s, dir) =>
-      graft.operators.EpisodeGraph.mergeFacts(
-        Tables.embeddings(s, dir)
-          .select(col("vec_id").as("fact_id"), col("embedding")),
-        mergeThreshold = 0.25)),
-
-    // ---- the same merge PAST the driver-side cap: pre-cluster into
-    // threshold components, greedy-fold per component on the
-    // executors. Gate runs cells = 1 (exact edge set) so the output
-    // is PROVABLY identical to the global fold — the q288 recursion
-    // is the oracle for both. Production runs cells/targetCellSize
-    // like any SemDeDup caller (ScaleProfile) ----
-    "q291_fact_merge_clustered" -> ((s, dir) =>
-      graft.operators.EpisodeGraph.mergeFactsClustered(
-        Tables.embeddings(s, dir)
-          .select(col("vec_id").as("fact_id"), col("embedding")),
-        mergeThreshold = 0.25, cells = 1, iters = 1)),
-
-    // ---- the LOSSY-blocking mode of the clustered merge, driver-
-    // oracled: cells = 3 over a corpus DERIVED from the embeddings
-    // ids whose three clusters PROVABLY separate at the threshold, so
-    // the blocked path (k-means cells -> within-cell pairs -> CC ->
-    // per-component fold) must reproduce the global fold exactly and
-    // the q288 recursion gates it. Geometry (rational arithmetic only,
-    // engine-exact): cluster c = min(vec_id div stride, 2) with
-    // stride = max(n/3, 1) — the SAME integer the k-means seeder
-    // derives from count(*), so the rank-stride seeds land one per
-    // cluster and Lloyd provably isolates them (anchors 4·e_c in
-    // disjoint axis planes; cross-cluster cosine <= 0.648, within-cell
-    // structure: two sub-cones at tangent 0 and 3 whose cross pairs
-    // top out at cosine 0.856 < 0.9 <= all within-cone pairs >= 0.995
-    // — six components, none crossing a cell). Any mis-clustering
-    // that cuts a threshold edge deviates from the global recursion
-    // and reads RED — the gate is strict, not decorative ----
-    "q293_fact_merge_blocked" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val n = emb.count()
-      val st = math.max(n / 3L, 1L)
-      def dim(d: Int) =
-        when(col("__cl") === d, lit(4.0))
-          .when((col("__cl") + 1) % 3 === d, col("__tg"))
-          .otherwise(lit(0.0))
-      val facts = emb
-        .select(col("vec_id"), expr(s"least(vec_id DIV $st, 2)").as("__cl"))
-        .withColumn("__j", col("vec_id") - col("__cl") * st)
-        .withColumn("__tg",
-          (col("__j") % 2).cast("double") * lit(3.0) +
-            (col("__j") % 5).cast("double") * lit(0.1))
-        .select(col("vec_id").as("fact_id"),
-          array(dim(0), dim(1), dim(2)).as("embedding"))
-      graft.operators.EpisodeGraph.mergeFactsClustered(
-        facts, mergeThreshold = 0.9, cells = 3, iters = 2)
-    }),
-
-    // ---- episodic-memory feedback: reinforcement/recency-decayed
-    // outcome scores replayed over the event log in one scan ----
-    "q281_reinforce_decay" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("item_id",
-          graft.operators.Recsys.itemOf(col("props")))
-        .filter(col("item_id").isNotNull)
-        .withColumn("slate_rank", (col("event_id") % 5 + 1).cast("int"))
-        .withColumn("v", when(col("event_type") === "purchase", 1)
-          .when(col("event_type") === "error", -1).otherwise(0))
-      Pipeline.reinforcementScores(ev, "item_id", "ts", "event_id",
-        "slate_rank", "v")
     })
   )
 
@@ -4247,9 +3852,10 @@ object SparkEntry {
     // recency_micro: encoder.py's half-life weight exp(-λ·Δh) at the
     // user's latest event; λ is the PINNED double (OraclePins —
     // planting a live timeDecayLambda call here would make a
-    // decay-formula mutation invisible, the q281 tautology), Δhours
-    // from exact epoch-ms longs, and the weight micro-rounds before
-    // compare so libm exp's last ulp can't flip the hash
+    // decay-formula mutation invisible, the tautology OraclePins
+    // describes), Δhours from exact epoch-ms longs, and the weight
+    // micro-rounds before compare so libm exp's last ulp can't flip
+    // the hash
     "q107_decayed_engagement" -> {
       val lam = OraclePins.q107Lambda24
       s"""WITH a AS (SELECT MAX(CAST(ts AS DATE)) AS anchor,
@@ -4370,7 +3976,8 @@ object SparkEntry {
     // PINNED micro-unit discount literals (OraclePins): the engine's
     // ndcgAtK derives them live from 1/log2(r+1), so a discount-formula
     // mutation drifts the engine off this pin and reads RED (planting a
-    // live dcgDiscountsMicro call here was the q281 tautology shape)
+    // live dcgDiscountsMicro call here is the tautology OraclePins
+    // describes)
     "q117_ndcg" -> {
       val disc = OraclePins.q117DiscountsMicro
         .mkString("[", ", ", "]")
@@ -5287,54 +4894,6 @@ object SparkEntry {
         |    CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END AS recall
         |FROM c""".stripMargin,
 
-    // greedy MMR unrolled for k=5: s1 = raw argmax; each later slot is
-    // a per-query argmax of score*(1E0 - 0.5E0*greatest(0, cos to each
-    // selected)) over the pool minus the selected set. Tie order (mmr
-    // DESC, score DESC, vec_id DESC) matches the kernel's
-    // first-in-(score,item)-descending-order rule; cosines are the
-    // same staged dot/(na*nb) fold, so the argmax compares identical
-    // doubles. All literals carry exponents (DuckDB DECIMAL gotcha).
-    "q178_mmr_rerank" -> {
-      val steps = (2 to 5).map { n =>
-        val prev = (1 until n)
-        val sims = prev.map(j => sqlCosOf("p.emb", s"s$j.emb")).mkString(", ")
-        val joins = prev.map(j =>
-          s"JOIN s$j ON p.query_id = s$j.query_id").mkString(" ")
-        val excl = prev.map(j => s"p.vec_id <> s$j.vec_id").mkString(" AND ")
-        s"""c$n AS (SELECT p.query_id, p.vec_id, p.score, p.emb,
-           |    p.score * (1E0 - 0.5E0 * greatest(0E0, $sims)) AS mmr
-           |  FROM pool p $joins WHERE $excl),
-           |s$n AS (SELECT query_id, vec_id, score, emb FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           |      ORDER BY mmr DESC, score DESC, vec_id DESC) AS rn
-           |    FROM c$n) WHERE rn = 1),""".stripMargin
-      }.mkString("\n")
-      val union = (1 to 5).map(n =>
-        s"SELECT query_id, $n AS rank, vec_id, score FROM s$n")
-        .mkString("\nUNION ALL ")
-      s"""WITH q AS (SELECT vec_id AS query_id,
-         |            CAST(embedding AS DOUBLE[]) AS qe
-         |          FROM embeddings WHERE vec_id < 8),
-         |scored AS (
-         |  SELECT q.query_id, e.vec_id,
-         |    ${sqlCosOf("CAST(e.embedding AS DOUBLE[])", "q.qe")} AS score,
-         |    CAST(e.embedding AS DOUBLE[]) AS emb
-         |  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-         |pool AS (SELECT query_id, vec_id, score, emb FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, vec_id ASC) AS rn
-         |    FROM scored) WHERE rn <= 20),
-         |s1 AS (SELECT query_id, vec_id, score, emb FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, vec_id DESC) AS rn
-         |    FROM pool) WHERE rn = 1),
-         |$steps
-         |sel AS ($union)
-         |SELECT query_id, rank, vec_id, score FROM sel""".stripMargin
-    },
-
-    // q38's IVF CTE chain (appx) vs the brute top-10 (brute); per-query
-    // full-outer overlap counts, recall = n_common / n_exact exact
     "q180_ann_recall" ->
       s"""WITH p AS (SELECT greatest(count(*) // 8, 1) AS stride FROM embeddings),
          |cent AS (SELECT e.vec_id // p.stride AS cell_id,
@@ -5813,7 +5372,8 @@ object SparkEntry {
     // per-(replicate, row) Poisson weight from the same "b:id" md5;
     // PINNED CDF threshold literals (OraclePins) — the engine derives
     // its thresholds live from the e^-1 series, so a CDF-generation
-    // mutation drifts it off this pin (live-call = q281 tautology)
+    // mutation drifts it off this pin (a live call here is the
+    // tautology OraclePins describes)
     "q201_poisson_bootstrap" -> {
       // E0 suffix: parse as DOUBLE, not DECIMAL (decimal->double
       // conversion can land 1 ulp off the text->double parse)
@@ -7508,317 +7068,7 @@ object SparkEntry {
         |    THEN CAST(concordant - discordant AS DOUBLE)
         |      / sqrt(CAST(n0 - ties_x AS DOUBLE)
         |          * CAST(n0 - ties_y AS DOUBLE)) END, 6) AS tau_b
-        |FROM c""".stripMargin,
-
-    "q279_graph_expand" ->
-      s"""WITH q AS (SELECT vec_id AS query_id,
-         |    CAST(embedding AS DOUBLE[]) AS qe
-         |  FROM embeddings WHERE vec_id < 8),
-         |sc AS (SELECT q.query_id, e.vec_id,
-         |    ${sqlCosOf("q.qe", "CAST(e.embedding AS DOUBLE[])")} AS score
-         |  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-         |pool AS (SELECT query_id, vec_id, score FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, vec_id ASC) AS rnk FROM sc)
-         |  WHERE rnk <= 10),
-         |seeds AS (SELECT query_id, vec_id FROM (
-         |    SELECT query_id, vec_id, ROW_NUMBER() OVER (
-         |      PARTITION BY query_id
-         |      ORDER BY score DESC, vec_id ASC) AS rnk FROM pool)
-         |  WHERE rnk <= 3),
-         |ed AS (SELECT a.vec_id AS src, a.vec_id + 1 AS dst
-         |  FROM embeddings a
-         |  JOIN embeddings b ON b.vec_id = a.vec_id + 1),
-         |nbr AS (SELECT DISTINCT s.query_id, e2.dst AS vec_id
-         |  FROM seeds s JOIN ed e2 ON s.vec_id = e2.src),
-         |fresh AS (SELECT n.query_id, n.vec_id FROM nbr n
-         |  LEFT JOIN pool p
-         |    ON p.query_id = n.query_id AND p.vec_id = n.vec_id
-         |  WHERE p.vec_id IS NULL),
-         |nw AS (SELECT f.query_id, f.vec_id,
-         |    0.8E0 * (${sqlCosOf("q.qe", "CAST(e.embedding AS DOUBLE[])")})
-         |      AS score,
-         |    TRUE AS expanded
-         |  FROM fresh f JOIN q ON q.query_id = f.query_id
-         |  JOIN embeddings e ON e.vec_id = f.vec_id)
-         |SELECT query_id, vec_id, score, FALSE AS expanded FROM pool
-         |UNION ALL
-         |SELECT query_id, vec_id, score, expanded FROM nw""".stripMargin,
-
-    // auto_link edges (adjacency-rank CONTINUATION + state-blocked
-    // cosine RETRY_OF) then a 2-hop BFS: reached = h1 UNION h2 — the
-    // set equals the frontier-BFS because a seed reached from another
-    // seed only re-offers neighbors h1 already holds, and the
-    // pool-minus step subsumes the seed-minus (seeds are pool rows)
-    "q284_graph_autolink" ->
-      s"""WITH q AS (SELECT vec_id AS query_id,
-         |    CAST(embedding AS DOUBLE[]) AS qe
-         |  FROM embeddings WHERE vec_id < 8),
-         |sc AS (SELECT q.query_id, e.vec_id,
-         |    ${sqlCosOf("q.qe", "CAST(e.embedding AS DOUBLE[])")} AS score
-         |  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-         |pool AS (SELECT query_id, vec_id, score FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, vec_id ASC) AS rnk FROM sc)
-         |  WHERE rnk <= 10),
-         |seeds AS (SELECT query_id, vec_id FROM (
-         |    SELECT query_id, vec_id, ROW_NUMBER() OVER (
-         |      PARTITION BY query_id
-         |      ORDER BY score DESC, vec_id ASC) AS rnk FROM pool)
-         |  WHERE rnk <= 3),
-         |ep AS (SELECT vec_id AS id,
-         |    CASE WHEN label = 0 THEN ''
-         |      ELSE 's' || CAST(label % 5 AS VARCHAR) END AS state,
-         |    vec_id * 10 AS st,
-         |    vec_id * 10 + (vec_id % 7) * 2 AS en,
-         |    CASE WHEN label % 3 = 0 THEN 'success'
-         |      ELSE 'failure' END AS outcome,
-         |    CASE WHEN label = 9 THEN NULL
-         |      ELSE CAST(embedding AS DOUBLE[]) END AS emb
-         |  FROM embeddings),
-         |rk AS (SELECT *, ROW_NUMBER() OVER (ORDER BY st, id) AS rk
-         |  FROM ep),
-         |cont AS (SELECT p.id AS src, c.id AS dst
-         |  FROM rk p JOIN rk c ON c.rk = p.rk + 1
-         |  WHERE p.state <> '' AND c.state <> '' AND p.state = c.state
-         |    AND c.st - p.en <= 6),
-         |retry AS (SELECT c.id AS src, f.id AS dst
-         |  FROM ep c JOIN ep f ON f.state = c.state
-         |  WHERE c.state <> '' AND f.outcome = 'failure'
-         |    AND c.emb IS NOT NULL AND f.emb IS NOT NULL
-         |    AND (f.st < c.st OR (f.st = c.st AND f.id < c.id))
-         |    AND ${sqlCosOf("c.emb", "f.emb")} >= 0.3E0),
-         |ed AS (SELECT src, dst FROM cont
-         |  UNION ALL SELECT src, dst FROM retry),
-         |h1 AS (SELECT DISTINCT s.query_id, e2.dst AS vec_id
-         |  FROM seeds s JOIN ed e2 ON s.vec_id = e2.src),
-         |h2 AS (SELECT DISTINCT h.query_id, e2.dst AS vec_id
-         |  FROM h1 h JOIN ed e2 ON h.vec_id = e2.src),
-         |reached AS (SELECT query_id, vec_id FROM h1
-         |  UNION SELECT query_id, vec_id FROM h2),
-         |fresh AS (SELECT n.query_id, n.vec_id FROM reached n
-         |  LEFT JOIN pool p
-         |    ON p.query_id = n.query_id AND p.vec_id = n.vec_id
-         |  WHERE p.vec_id IS NULL),
-         |nw AS (SELECT f.query_id, f.vec_id,
-         |    0.8E0 * (${sqlCosOf("q.qe", "CAST(e.embedding AS DOUBLE[])")})
-         |      AS score,
-         |    TRUE AS expanded
-         |  FROM fresh f JOIN q ON q.query_id = f.query_id
-         |  JOIN embeddings e ON e.vec_id = f.vec_id)
-         |SELECT query_id, vec_id, score, FALSE AS expanded FROM pool
-         |UNION ALL
-         |SELECT query_id, vec_id, score, expanded FROM nw""".stripMargin,
-
-    // boost chain written structurally identically to
-    // Pipeline.episodeBoostScore (coalesced base, ×1.25E0 on failure,
-    // then ×1.5E0 on state match); narrative via ordered string_agg
-    "q289_retrieval_narrative" -> {
-      val cosQE = sqlCosOf("e.emb", "q.qe")
-      s"""WITH q AS (SELECT vec_id AS query_id,
-         |    CAST(embedding AS DOUBLE[]) AS qe,
-         |    's' || CAST(label % 5 AS VARCHAR) AS cur
-         |  FROM embeddings WHERE vec_id < 8),
-         |ep AS (SELECT vec_id,
-         |    CASE WHEN label = 9 THEN NULL
-         |      ELSE CAST(embedding AS DOUBLE[]) END AS emb,
-         |    CASE WHEN label = 0 THEN ''
-         |      ELSE 's' || CAST(label % 5 AS VARCHAR) END AS state,
-         |    CASE WHEN label % 3 = 0 THEN 'success'
-         |      ELSE 'failure' END AS outcome,
-         |    CASE WHEN vec_id % 11 = 0 THEN ''
-         |      ELSE 'episode ' || CAST(vec_id AS VARCHAR) END AS summary
-         |  FROM embeddings),
-         |sc AS (SELECT q.query_id, e.vec_id, e.state, e.outcome,
-         |    e.summary,
-         |    (CASE WHEN q.cur <> '' AND e.state = q.cur
-         |       THEN (CASE WHEN e.outcome = 'failure'
-         |               THEN coalesce($cosQE, 0E0) * 1.25E0
-         |               ELSE coalesce($cosQE, 0E0) END) * 1.5E0
-         |       ELSE (CASE WHEN e.outcome = 'failure'
-         |               THEN coalesce($cosQE, 0E0) * 1.25E0
-         |               ELSE coalesce($cosQE, 0E0) END) END) AS score
-         |  FROM ep e, q WHERE e.vec_id <> q.query_id),
-         |slate AS (SELECT query_id, vec_id, state, outcome, summary,
-         |    score, CAST(rnk AS INT) AS rank FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, vec_id ASC) AS rnk FROM sc)
-         |  WHERE rnk <= 5),
-         |lb AS (SELECT query_id, vec_id, score, rank,
-         |    (CASE WHEN summary <> '' THEN substr(summary, 1, 60)
-         |       ELSE CAST(vec_id AS VARCHAR) END)
-         |    || (CASE WHEN state <> '' THEN ' [' || state || ']'
-         |          ELSE '' END)
-         |    || (CASE WHEN outcome <> '' THEN ', outcome=' || outcome
-         |          ELSE '' END) AS label
-         |  FROM slate),
-         |narr AS (SELECT query_id,
-         |    string_agg(label, ' → ' ORDER BY rank) AS narrative
-         |  FROM lb GROUP BY 1)
-         |SELECT s.query_id, s.rank, s.vec_id, s.score, n.narrative
-         |FROM slate s JOIN narr n ON n.query_id = s.query_id"""
-        .stripMargin
-    },
-
-    // the same pool/flag/rank windows as preferStateApplicable; empty
-    // list means universally applicable, query 3 skips the preference
-    "q290_state_facts" ->
-      s"""WITH q AS (SELECT vec_id AS query_id,
-         |    CAST(embedding AS DOUBLE[]) AS qe,
-         |    CASE WHEN vec_id = 3 THEN ''
-         |      WHEN vec_id % 3 = 2 THEN 'zz'
-         |      ELSE 's' || CAST(label % 5 AS VARCHAR) END AS cur
-         |  FROM embeddings WHERE vec_id < 8),
-         |f AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-         |    CASE WHEN vec_id % 7 = 3 THEN CAST([] AS VARCHAR[])
-         |      ELSE ['s' || CAST(label % 5 AS VARCHAR)] END AS app
-         |  FROM embeddings),
-         |sc AS (SELECT q.query_id, f.vec_id, f.app, q.cur,
-         |    ${sqlCosOf("f.emb", "q.qe")} AS score
-         |  FROM f, q WHERE f.vec_id <> q.query_id),
-         |pool AS (SELECT * FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, vec_id ASC) AS pr FROM sc)
-         |  WHERE pr <= 6),
-         |fl AS (SELECT *, cur <> '' AND (len(app) = 0
-         |    OR list_contains(app, cur)) AS m FROM pool),
-         |wh AS (SELECT *, MAX(CASE WHEN m THEN 1 ELSE 0 END)
-         |    OVER (PARTITION BY query_id) AS has FROM fl),
-         |mr AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id, m
-         |    ORDER BY pr) AS mrk FROM wh)
-         |SELECT query_id, vec_id, score,
-         |  (cur <> '' AND m) AS matched
-         |FROM mr
-         |WHERE (cur <> '' AND has = 1 AND m AND mrk <= 3)
-         |   OR ((cur = '' OR has = 0) AND pr <= 3)""".stripMargin,
-
-    // the global greedy fold — shape and gotchas documented on
-    // [[sqlFactMergeGreedy]]
-    "q288_fact_merge" -> sqlFactMergeGreedy,
-
-    // the SAME global-greedy recursion gates q291: with the exact
-    // edge set (cells = 1, every pair examined), the per-component
-    // fold provably equals the global fold (EpisodeGraph
-    // .mergeFactsClustered scaladoc), so the distributed composition
-    // is held to the sequential reference semantics, not to a looser
-    // "same leaders somewhere" contract
-    "q291_fact_merge_clustered" -> sqlFactMergeGreedy,
-
-    // q293 runs the clustered merge's BLOCKED path (cells = 3); the
-    // oracle is the GLOBAL greedy recursion over the same derived
-    // corpus — equal exactly because the construction guarantees no
-    // threshold edge crosses the k-means cells (see the query's
-    // comment). The oracle derives the same stride from count(*) (the
-    // q287 k1-derivation precedent), so the fixture geometry — and
-    // with it the separation proof — reproduces at any sf.
-    "q293_fact_merge_blocked" -> sqlFactMergeGreedyOver(
-      """SELECT vec_id AS id,
-        |  [CASE WHEN cl = 0 THEN 4E0
-        |        WHEN (cl+1)%3 = 0 THEN tg ELSE 0E0 END,
-        |   CASE WHEN cl = 1 THEN 4E0
-        |        WHEN (cl+1)%3 = 1 THEN tg ELSE 0E0 END,
-        |   CASE WHEN cl = 2 THEN 4E0
-        |        WHEN (cl+1)%3 = 2 THEN tg ELSE 0E0 END] AS emb
-        |FROM (SELECT vec_id, cl,
-        |    CAST((vec_id - cl*st) % 2 AS DOUBLE) * 3E0
-        |      + CAST((vec_id - cl*st) % 5 AS DOUBLE) * 0.1E0 AS tg
-        |  FROM (SELECT vec_id, LEAST(vec_id // st, 2) AS cl, st
-        |    FROM embeddings,
-        |      (SELECT GREATEST(COUNT(*) // 3, 1) AS st
-        |       FROM embeddings)))""".stripMargin, "0.9E0"),
-
-    "q286_episode_boundaries" -> sqlEpisodeBoundaries(),
-
-    // the STREAMING twin is held to the same batch rule: every real
-    // episode (including the final one, which the gate's boundary
-    // sentinel closes on the data path) must equal the batch
-    // detector's row exactly — sentinels themselves never emit. The
-    // +1 ts offset dodges the initial-watermark epoch-0 drop (see
-    // sqlEpisodeBoundaries scaladoc).
-    "q292_stream_episodes" -> sqlEpisodeBoundaries(tsOff = 1L),
-
-    // q294: the batch episode rows (q292's oracle as a subquery)
-    // joined to their chronological successor under the autoLink
-    // CONTINUATION rule — equal states, both non-empty, gap <= 500.
-    // The streaming side derives the same edges from its per-key
-    // last-closed-episode state; single-key fixture, so per-key
-    // adjacency IS the batch global order.
-    // (concatenated, not interpolated into a stripMargin block: the
-    // embedded oracle text contains `||` at line starts, whose first
-    // pipe stripMargin would eat)
-    "q294_stream_episode_links" ->
-      ("WITH ep AS (" + sqlEpisodeBoundaries(tsOff = 1L) + "),\n" +
-        """r AS (SELECT *, ROW_NUMBER() OVER
-          |    (ORDER BY start_ts, episode_idx) AS rk FROM ep)
-          |SELECT CAST(0 AS BIGINT) AS key, a.episode_idx AS src,
-          |  b.episode_idx AS dst, 'continuation' AS link_type,
-          |  1E0 AS strength
-          |FROM r a JOIN r b ON b.rk = a.rk + 1
-          |WHERE a.state = b.state AND a.state <> ''
-          |  AND b.start_ts - a.end_ts <= 500""".stripMargin),
-    "q280_counter_example" ->
-      s"""WITH q AS (SELECT vec_id AS query_id,
-         |    CAST(embedding AS DOUBLE[]) AS qe
-         |  FROM embeddings WHERE vec_id < 8),
-         |sc AS (SELECT q.query_id, e.vec_id,
-         |    ${sqlCosOf("q.qe", "CAST(e.embedding AS DOUBLE[])")} AS score,
-         |    CASE WHEN e.label % 7 = 0 THEN 'success' ELSE 'failure' END
-         |      AS outcome
-         |  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-         |pool AS (SELECT query_id, vec_id, score, outcome FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, vec_id ASC) AS rnk FROM sc)
-         |  WHERE rnk <= 20),
-         |slate AS (SELECT query_id, vec_id, score, outcome,
-         |    CAST(rnk AS INT) AS rank FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, vec_id ASC) AS rnk FROM pool)
-         |  WHERE rnk <= 5),
-         |census AS (SELECT query_id,
-         |    MAX(CASE WHEN outcome = 'success' THEN 1 ELSE 0 END) AS has,
-         |    MAX(rank) AS mr
-         |  FROM slate GROUP BY 1),
-         |appended AS (SELECT p.query_id, p.vec_id, p.score, p.outcome,
-         |    CAST(c.mr + 1 AS INT) AS rank FROM (
-         |    SELECT pl.query_id, pl.vec_id, pl.score, pl.outcome,
-         |      ROW_NUMBER() OVER (PARTITION BY pl.query_id
-         |        ORDER BY pl.score DESC, pl.vec_id ASC) AS brn
-         |    FROM pool pl LEFT JOIN slate sl
-         |      ON sl.query_id = pl.query_id AND sl.vec_id = pl.vec_id
-         |    WHERE pl.outcome = 'success' AND sl.vec_id IS NULL) p
-         |  JOIN census c ON c.query_id = p.query_id
-         |  WHERE p.brn = 1 AND c.has = 0)
-         |SELECT query_id, vec_id, score, outcome, rank FROM slate
-         |UNION ALL
-         |SELECT query_id, vec_id, score, outcome, rank FROM appended"""
-        .stripMargin,
-
-    "q281_reinforce_decay" -> {
-      // PINNED table (Q281Weights), not a live weightTableMicro call:
-      // the r14 kill-test proved the echoed-function shape tautological
-      // (a generation-formula mutation survived the driver gate).
-      // PipelineOpsSpec locks the pin to the engine function.
-      val wtab = Q281Weights.microTable.mkString("[", ", ", "]")
-      s"""WITH ev AS (SELECT
-         |    CAST(json_extract(props, '$$.k') AS BIGINT) AS item_id,
-         |    ts, event_id,
-         |    CAST(event_id % 5 + 1 AS INT) AS r,
-         |    CASE WHEN event_type = 'purchase' THEN 1
-         |      WHEN event_type = 'error' THEN -1 ELSE 0 END AS v
-         |  FROM events WHERE json_extract(props, '$$.k') IS NOT NULL),
-         |o AS (SELECT item_id, v, r,
-         |    ROW_NUMBER() OVER (PARTITION BY item_id
-         |      ORDER BY ts DESC, event_id DESC) - 1 AS later
-         |  FROM ev),
-         |w AS (SELECT item_id, v,
-         |    list_extract($wtab,
-         |      CAST(later * 32 + GREATEST(LEAST(r - 1, 31), 0) + 1 AS INT)) AS wm
-         |  FROM o WHERE later < 16)
-         |SELECT item_id, CAST(COUNT(*) AS BIGINT) AS n_events_used,
-         |  CAST(CAST(SUM(v * wm) AS BIGINT) AS DOUBLE) / 1.0E6
-         |    AS outcome_score
-         |FROM w GROUP BY 1""".stripMargin
-    }
+        |FROM c""".stripMargin
   )
 
   /** q139's oracle for a given pinned rotation matrix (the engine
@@ -7971,121 +7221,6 @@ object SparkEntry {
       |       FROM sp LEFT JOIN ov o USING (user_id, session_idx))
       |SELECT n_concurrent, CAST(COUNT(*) AS BIGINT) AS n_sessions
       |FROM pc GROUP BY 1""".stripMargin
-
-  /** The q288/q291 oracle: the greedy fact merge as a recursive CTE
-    * whose ANCHOR row carries the whole thresholded candidate table
-    * (per-item sorted earlier-id lists): the recursive term references
-    * nothing but the working row, so the expensive pair join evaluates
-    * exactly once. (DuckDB 1.0 re-inlines multiply-referenced CTEs
-    * into each recursion step — and its MATERIALIZED hint is
-    * unreliable inside recursion — so carrying the state IS the only
-    * single-statement shape that runs in O(pairs).) Survivor set =
-    * greedy leader clustering; the final mapping needs no recursion
-    * once the survivors are known: leader(i) = min matching survivor
-    * id < i. f's IS NOT NULL mirrors mergeFacts' embCol.isNotNull
-    * skip (facts.py's summary-less-episode skip) — the fixtures carry
-    * no nulls today, but both sides must implement the same drop or a
-    * null-bearing fixture would read as a false mismatch. */
-  private def sqlFactMergeGreedy: String =
-    sqlFactMergeGreedyOver(
-      """SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS emb
-        |      FROM embeddings
-        |      WHERE embedding IS NOT NULL""".stripMargin, "0.25E0")
-
-  /** [[sqlFactMergeGreedy]] parameterized over the fact corpus and
-    * threshold: `factsBody` is a SELECT yielding `(id, emb)`; the
-    * global greedy recursion is unchanged. q293 points it at the
-    * derived separated-cluster corpus (its blocked Spark twin equals
-    * the global fold exactly because no threshold edge crosses the
-    * construction's clusters). */
-  private def sqlFactMergeGreedyOver(
-      factsBody: String, threshold: String): String = {
-    val cosPr = s"CASE WHEN ${sqlL2Of("a.emb")} * ${sqlL2Of("b.emb")} = 0E0 " +
-      s"THEN 0E0 ELSE ${sqlDotOf("a.emb", "b.emb")} " +
-      s"/ (${sqlL2Of("a.emb")} * ${sqlL2Of("b.emb")}) END"
-    s"""WITH RECURSIVE
-       |f AS ($factsBody),
-       |it AS (SELECT id, emb, ROW_NUMBER() OVER (ORDER BY id) AS r
-       |       FROM f),
-       |pr AS (SELECT a.id AS ia, b.id AS ib
-       |       FROM it a JOIN it b ON b.id < a.id
-       |       WHERE $cosPr >= $threshold),
-       |itc AS (SELECT it.id, it.r, coalesce(pc.cands, []) AS cands
-       |        FROM it LEFT JOIN (SELECT ia, list(ib ORDER BY ib)
-       |            AS cands FROM pr GROUP BY ia) pc ON pc.ia = it.id),
-       |st AS (
-       |  SELECT CAST(1 AS BIGINT) AS r,
-       |    [(SELECT id FROM itc WHERE r = 1)] AS s,
-       |    (SELECT list(struct_pack(id := id, cands := cands)
-       |       ORDER BY r) FROM itc) AS ac
-       |  UNION ALL
-       |  SELECT st.r + 1,
-       |    CASE WHEN list_has_any(st.s, struct_extract(
-       |        list_extract(st.ac, CAST(st.r + 1 AS INT)), 'cands'))
-       |      THEN st.s
-       |      ELSE list_append(st.s, struct_extract(
-       |        list_extract(st.ac, CAST(st.r + 1 AS INT)), 'id')) END,
-       |    st.ac
-       |  FROM st WHERE st.r < len(st.ac)),
-       |sv AS (SELECT s FROM st ORDER BY r DESC LIMIT 1),
-       |ld AS (SELECT itc.id, min(c) AS cand
-       |       FROM itc, unnest(itc.cands) AS t(c), sv
-       |       WHERE list_contains(sv.s, c) GROUP BY itc.id)
-       |SELECT itc.id AS fact_id, coalesce(ld.cand, itc.id) AS leader_id,
-       |       ld.cand IS NULL AS is_new
-       |FROM itc LEFT JOIN ld ON ld.id = itc.id""".stripMargin
-  }
-
-  /** The q286/q292 oracle: the reference boundary rule over the
-    * embeddings-derived timeline — per consecutive (ts, id)-ordered
-    * pair, flag when 0.6·flip + 0.4·(1 − max(cos, 0)) >= 0.38 (flip
-    * needs both states non-empty, the semantic term both embeddings;
-    * zero-norm cosine reads 0), episode ids = running flag sum, one
-    * aggregated row per episode. q292 runs the STREAMING detector
-    * over the same derivation and must reproduce every row — with a
-    * +1 ts offset on BOTH sides: entry 0's derived ts is 0, and
-    * Spark's stateful-operator late filter at the INITIAL watermark 0
-    * eats event-time-0 rows before the handler (the q292 gate found
-    * this live; epoch-0 timestamps only exist in synthetic fixtures,
-    * but the offset keeps the gate honest instead of silently
-    * one-short). */
-  private def sqlEpisodeBoundaries(tsOff: Long = 0L): String = {
-    val l2p = sqlL2Of("p.pemb")
-    val l2e = sqlL2Of("p.emb")
-    val cosCase = s"CASE WHEN $l2p * $l2e = 0E0 THEN 0E0 " +
-      s"ELSE ${sqlDotOf("p.pemb", "p.emb")} / ($l2p * $l2e) END"
-    s"""WITH en AS (SELECT vec_id AS id,
-       |    (vec_id % 64) * 1000 + vec_id + $tsOff AS ts,
-       |    CASE WHEN label = 0 THEN ''
-       |      ELSE 's' || CAST(label % 5 AS VARCHAR) END AS state,
-       |    CASE WHEN label = 9 THEN NULL
-       |      ELSE CAST(embedding AS DOUBLE[]) END AS emb,
-       |    'doc ' || CAST(vec_id AS VARCHAR) AS content
-       |  FROM embeddings),
-       |rk AS (SELECT *, ROW_NUMBER() OVER (ORDER BY ts, id) AS rk
-       |  FROM en),
-       |p AS (SELECT c.id, c.ts, c.state, c.emb, c.content, c.rk,
-       |    pr.state AS pstate, pr.emb AS pemb
-       |  FROM rk c LEFT JOIN rk pr ON pr.rk = c.rk - 1),
-       |f AS (SELECT id, ts, state, content, rk,
-       |    CASE WHEN pstate IS NOT NULL AND
-       |        0.6E0 * (CASE WHEN pstate <> state AND pstate <> ''
-       |                   AND state <> '' THEN 1E0 ELSE 0E0 END)
-       |      + 0.4E0 * (CASE WHEN pemb IS NOT NULL AND emb IS NOT NULL
-       |                   THEN 1E0 - greatest($cosCase, 0E0)
-       |                   ELSE 0E0 END)
-       |      >= 0.38E0 THEN 1 ELSE 0 END AS flag
-       |  FROM p),
-       |s AS (SELECT *, CAST(SUM(flag) OVER (ORDER BY rk
-       |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS episode_idx FROM f)
-       |SELECT episode_idx, MIN(ts) AS start_ts, MAX(ts) AS end_ts,
-       |  arg_min(id, rk) AS entry_start, arg_max(id, rk) AS entry_end,
-       |  CAST(COUNT(*) AS BIGINT) AS n_entries,
-       |  arg_min(state, rk) AS state,
-       |  CAST(COUNT(*) AS VARCHAR) || ' entries: '
-       |    || substr(arg_min(content, rk), 1, 80) || '…' AS summary
-       |FROM s GROUP BY 1""".stripMargin
-  }
 
   private def sqlDotOf(a: String, b: String): String =
     s"list_reduce(list_transform(list_zip($a, $b), x -> x[1]*x[2]), (p,q) -> p+q)"

@@ -28,7 +28,7 @@ import graft.core.FeatureGroupDef
   *    uses too) — keyed by the table's canonicalized optimized plan
   *    plus its input-file set, so a rewrite (an `Ingest.upsertBatch`
   *    swap, a refreshed file index) gives a new key and a stale snapshot
-  *    is never served — and the last [[LookupTier.MaxSnapshots]]
+  *    is never served — and the last [[SnapshotCache.MaxEntries]]
   *    snapshots stay cached. The answer
   *    is a `LocalRelation`: the feature projection folds into it and
   *    collecting it runs no Spark job. [[stitch]] over parts that are

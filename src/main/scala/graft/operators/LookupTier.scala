@@ -41,22 +41,15 @@ import org.apache.spark.sql.types._
   * rewrite — an `Ingest.upsertBatch` swap, a re-saved bucketed table —
   * is never served stale, and by the key columns it is grouped by, so
   * two retrieves that project the same table under different pks
-  * never share an index). At most [[MaxSnapshots]] indexes are held,
-  * least recently used evicted first; concurrent callers of one
-  * snapshot wait for a single build.
+  * never share an index). At most [[SnapshotCache.MaxEntries]] indexes
+  * are held, least recently used evicted first; concurrent callers of
+  * one snapshot wait for a single build.
   */
 private[graft] object LookupTier {
 
-  val MaxSnapshots: Int = SnapshotCache.MaxEntries
-
   /** One snapshot's index: non-null key → its table rows. */
-  private val cache = new SnapshotCache[Map[Any, Seq[InternalRow]]](MaxSnapshots)
-
-  /** Indexes built so far (tests observe reuse and eviction with it). */
-  def indexBuilds: Long = cache.builds
-
-  /** Snapshots currently indexed. */
-  def cachedSnapshots: Int = cache.size
+  private[graft] val cache =
+    new SnapshotCache[Map[Any, Seq[InternalRow]]](SnapshotCache.MaxEntries)
 
   /** `keys ⋈left features-of(dedup(keys))`, projected by `resolve`, for
     * a local key set against an eligible `table` (pk + feature columns);

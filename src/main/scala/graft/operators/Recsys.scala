@@ -286,9 +286,8 @@ object Recsys {
       .select(col("user_id"), col("item_id"))
       .transform(Pins.heavy)
     // pinned: both `directed` orientations derive from the one
-    // materialized pair table (the EpisodeGraph.connectedComponents
-    // convention) — support-filtered, so it is the small end of the
-    // pipeline
+    // materialized pair table — support-filtered, so it is the small
+    // end of the pipeline
     val pairs = capped.as("a").join(capped.as("b"),
         col("a.user_id") === col("b.user_id") &&
         col("a.item_id") < col("b.item_id"))
@@ -347,8 +346,7 @@ object Recsys {
   /** Shared frontier loop for the walk operators: `walkLen` rounds of
     * (frontier ⋈ adjacency + per-start argmin window on `stepKey(t)`).
     * Each round appends one join+window to the logical plan, so every
-    * 4th round the frontier `localCheckpoint`s (the
-    * [[EpisodeGraph.connectedComponents]] convention) — analysis and
+    * 4th round the frontier `localCheckpoint`s — analysis and
     * optimization cost stays bounded at ANY walk length instead of
     * growing linearly with it, and the materialized frontier is only
     * one row per start node. */

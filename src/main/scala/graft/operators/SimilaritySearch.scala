@@ -68,12 +68,6 @@ object SimilaritySearch {
 
   /** Brute-force exact top-K per query.
     *
-    * Also the mapping for the episode graph's `find_similar_by_state`
-    * (`experiments/episodic-memory-prototype/memory/graph.py:148-164`):
-    * pass `filters = col("state") === lit(s) && col(embCol).isNotNull`
-    * — state equality and the missing-embedding skip are plain
-    * pushed-down predicates, the cosine ranking is this operator.
-    *
     * @param corpus   candidate table: `idCol`, `embCol`, payload columns
     * @param queries  query table: `queryIdCol`, `queryEmbCol` — small,
     *                 broadcast. The "small" is ENFORCED: the query leg

@@ -60,9 +60,8 @@ object Skew {
   }
 
   /** Census-adaptive hot-key sub-split for a pairwise equi-join — the
-    * one kernel behind `EntityResolution.blockedBestMatch(maxBlock)`,
-    * `RangeJoin.sessionConcurrency(maxBin)` and
-    * `EpisodeGraph.autoLink(maxStateBlock)`.
+    * one kernel behind `EntityResolution.blockedBestMatch(maxBlock)`
+    * and `RangeJoin.sessionConcurrency(maxBin)`.
     *
     * Unlike [[saltedJoin]]'s fixed global width, the fan width here is
     * PER KEY: a census of `splitSide` sets `fan(k) =

@@ -40,53 +40,6 @@ final case class OpenSession(startMs: Long, lastMs: Long, n: Long,
 final case class TimedEvent(user_id: Long, event_id: Long, ts: Long,
     event_time: java.sql.Timestamp)
 
-/** One timeline entry for [[Ingest.streamingEpisodes]] — `key` is the
-  * per-stream identity (one agent's memory timeline; the whole point
-  * of keying is that DIFFERENT agents' chains never interleave).
-  * `embedding` None = the reference's missing-embedding suppression. */
-final case class TimelineEntry(key: Long, entry_id: Long, ts: Long,
-    state: String, embedding: Option[Seq[Double]], content: String,
-    event_time: java.sql.Timestamp)
-
-/** A buffered not-yet-sealed entry ([[Ingest.streamingEpisodes]]). */
-final case class PendingEntry(entryId: Long, ts: Long, state: String,
-    emb: Option[Seq[Double]], content: String)
-
-/** The open (unclosed) episode of one key's chain: the running
-  * aggregate of [[graft.operators.EpisodeGraph.detectEpisodes]]'s
-  * per-episode row plus the LAST entry's state/embedding (the operand
-  * of the next boundary score). */
-final case class OpenEpisode(idx: Long, startTs: Long, endTs: Long,
-    entryStart: Long, entryEnd: Long, n: Long, state: String,
-    firstContent: String, prevState: String,
-    prevEmb: Option[Seq[Double]])
-
-/** Per-key state for [[Ingest.streamingEpisodes]]: the reorder buffer
-  * of entries the watermark has not sealed yet, the open episode, the
-  * next episode index, and the high-water mark the fold has already
-  * sealed past (`sealedWm` — the key's own eviction clock; see the
-  * chained-stateful note on the operator). */
-final case class EpisodeBuffer(pending: Seq[PendingEntry],
-    open: Option[OpenEpisode], nextIdx: Long, sealedWm: Long)
-
-/** One CLOSED episode emitted by [[Ingest.streamingEpisodes]] — field
-  * shape matches the batch twin
-  * ([[graft.operators.EpisodeGraph.detectEpisodes]]) plus `key`. */
-final case class EpisodeRow(key: Long, episode_idx: Long,
-    start_ts: Long, end_ts: Long, entry_start: Long, entry_end: Long,
-    n_entries: Long, state: String, summary: String)
-
-/** Per-key state for [[Ingest.streamingContinuations]]: the highest-
-  * indexed closed episode seen so far — the chronological predecessor
-  * the next arrival links against. */
-final case class LastEpisode(idx: Long, endTs: Long, state: String)
-
-/** One CONTINUATION edge emitted by [[Ingest.streamingContinuations]]
-  * — field shape matches the batch twin
-  * ([[graft.operators.EpisodeGraph.autoLink]]) plus `key`. */
-final case class EpisodeLinkRow(key: Long, src: Long, dst: Long,
-    link_type: String, strength: Double)
-
 /** Streaming ingestion with upsert semantics (SURVEY §2.9, §3.2).
   *
   * The reference consumes Kafka in polled batches with manual commits
@@ -598,232 +551,6 @@ object Ingest {
     * keeping indexes batch-equal across any quiet period shorter than
     * `IdxRetentionGaps · gap`. */
   private val IdxRetentionGaps = 64L
-
-  /** Streaming episode-boundary detection — the incremental front end
-    * of the episodic chain, emitting the SAME rows as the batch
-    * [[graft.operators.EpisodeGraph.detectEpisodes]] as the watermark
-    * seals them (q292 proves it against the q286 batch oracle).
-    *
-    * The boundary chain is strictly SEQUENTIAL (each score conditions
-    * on the immediately preceding entry), so unlike
-    * [[streamingSessionize]] — whose span-widen absorbs in-window
-    * disorder — this operator cannot process an entry until no
-    * earlier entry can still arrive. Each key therefore keeps a
-    * REORDER BUFFER: incoming entries wait in `pending`, and only the
-    * prefix the watermark has sealed (`ts < watermark` — a
-    * same-or-earlier `(ts, id)` straggler at `ts >= watermark` could
-    * still arrive, one below it is dropped by Spark's own late filter
-    * before the handler) is sorted by `(ts, entry_id)` and folded
-    * through the scoring chain. Entries above the watermark stay
-    * buffered across batches; an event-time timeout armed at the
-    * earliest pending entry re-drives the fold when the watermark
-    * advances without new data for the key.
-    *
-    * A boundary (`stateWeight·flip + semanticWeight·shift >=
-    * threshold`, the exact batch arithmetic — flip only when both
-    * states non-empty, shift only when both embeddings present,
-    * zero-norm cosine reads 0) CLOSES the open episode and emits it.
-    * There is NO timeout-close: the final, still-open episode is not
-    * emitted until an observed boundary proves it closed — every
-    * emitted row is final under any continuation of the stream, which
-    * is the only append-mode contract that can never contradict the
-    * batch twin. A finite fixture flushes it by appending one
-    * boundary-forcing sentinel entry past the corpus (plus one
-    * further watermark-pusher the sentinel's own open episode waits
-    * on, never emitted) — the q283 sentinel pattern, one step
-    * stronger.
-    *
-    * `maxPending` bounds per-key state LOUDLY (pending is rate ×
-    * watermark-delay in steady state; a single-key fixture buffers
-    * the whole corpus through the first batch, so gates size it to
-    * the fixture). Input columns: `(key, entry_id, ts, state,
-    * embedding, content)`, `ts` epoch millis.
-    *
-    * == Chained-stateful guard ==
-    * In a single-stateful-operator pipeline Spark's late filter and
-    * the handler's `getCurrentWatermarkMs` share one clock; CHAINED
-    * stateful operators make the late filter lag a batch, so an entry
-    * can be admitted BELOW a cut this fold already sealed past —
-    * folding it would corrupt the chain order silently. The state
-    * therefore pins its own `sealedWm` (max cut ever folded); an
-    * incoming entry below it is dropped — the same
-    * eviction-watermark-is-the-one-clock contract
-    * [[streamingSessionize]] documents for its re-filter.
-    *
-    * == State retention ==
-    * Per-key steady state is O(1) + one embedding (the open
-    * episode's scoring operand) plus the unsealed buffer. Idle keys
-    * persist BY DESIGN — an agent may resume its timeline after any
-    * pause, and the open episode must be there to continue (there is
-    * no timeout-close to leak-proof it away). Deployments retiring
-    * agents evict upstream (stop sending the key) and accept the one
-    * resident OpenEpisode per retired key, or run a periodic batch
-    * compaction with [[graft.operators.EpisodeGraph.detectEpisodes]].
-    */
-  def streamingEpisodes(
-      entries: DataFrame,
-      threshold: Double = 0.5,
-      stateWeight: Double = 0.6,
-      semanticWeight: Double = 0.4,
-      watermarkDelay: String = "1 minute",
-      maxPending: Int = 8192): Dataset[EpisodeRow] = {
-    val spark = entries.sparkSession
-    import spark.implicits._
-
-    // the batch twin's per-pair arithmetic, executor-side: ascending-
-    // index fold for dot and the squared norms (graft.expr.DotProduct's
-    // eval order), sqrt·sqrt denominator — IEEE-identical, so the
-    // decision boundary reproduces bit-for-bit against detectEpisodes
-    def dot(a: Seq[Double], b: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    def score(pState: String, pEmb: Option[Seq[Double]],
-        state: String, emb: Option[Seq[Double]]): Double = {
-      val flip = if (pState != state && pState.nonEmpty &&
-        state.nonEmpty) 1.0 else 0.0
-      val shift = (pEmb, emb) match {
-        case (Some(a), Some(b)) =>
-          val den = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
-          val cos = if (den == 0.0) 0.0 else dot(a, b) / den
-          1.0 - math.max(cos, 0.0)
-        case _ => 0.0
-      }
-      stateWeight * flip + semanticWeight * shift
-    }
-    def close(key: Long, o: OpenEpisode): EpisodeRow =
-      EpisodeRow(key, o.idx, o.startTs, o.endTs, o.entryStart,
-        o.entryEnd, o.n,
-        o.state, s"${o.n} entries: ${o.firstContent.take(80)}…")
-
-    entries
-      .select(col("key").cast("long").as("key"),
-        col("entry_id").cast("long").as("entry_id"),
-        col("ts").cast("long").as("ts"),
-        coalesce(col("state"), lit("")).as("state"),
-        col("embedding").cast("array<double>").as("embedding"),
-        col("content").cast("string").as("content"))
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", watermarkDelay)
-      .as[TimelineEntry]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[TimelineEntry],
-         state: GroupState[EpisodeBuffer]) =>
-          val st = state.getOption
-            .getOrElse(EpisodeBuffer(Nil, None, 0L, 0L))
-          // the key's sealing clock only ever advances (chained-
-          // stateful guard — scaladoc): entries below a cut already
-          // folded past are dropped like any late row
-          val cut = math.max(state.getCurrentWatermarkMs(), st.sealedWm)
-          val incoming = rows.map(e => PendingEntry(e.entry_id, e.ts,
-            e.state, e.embedding, e.content)).filter(_.ts >= cut).toSeq
-          val all = st.pending ++ incoming
-          require(all.size <= maxPending,
-            s"streamingEpisodes: key $key buffers ${all.size} " +
-              s"unsealed entries > maxPending=$maxPending — widen the " +
-              s"cap deliberately or shorten the watermark delay")
-          // sealed prefix: fold it through the chain in (ts, id) order
-          val (ripe, rest) = all.partition(_.ts < cut)
-          val out = scala.collection.mutable.ArrayBuffer.empty[EpisodeRow]
-          var open = st.open
-          var nextIdx = st.nextIdx
-          ripe.sortBy(e => (e.ts, e.entryId)).foreach { e =>
-            open match {
-              case Some(o)
-                  if score(o.prevState, o.prevEmb, e.state, e.emb) >=
-                    threshold =>
-                out += close(key, o)
-                open = Some(OpenEpisode(nextIdx, e.ts, e.ts, e.entryId,
-                  e.entryId, 1L, e.state, e.content, e.state, e.emb))
-                nextIdx += 1
-              case Some(o) =>
-                open = Some(o.copy(endTs = e.ts, entryEnd = e.entryId,
-                  n = o.n + 1L, prevState = e.state, prevEmb = e.emb))
-              case None =>
-                open = Some(OpenEpisode(nextIdx, e.ts, e.ts, e.entryId,
-                  e.entryId, 1L, e.state, e.content, e.state, e.emb))
-                nextIdx += 1
-            }
-          }
-          state.update(EpisodeBuffer(rest, open, nextIdx, cut))
-          // re-drive the fold as soon as the watermark can seal the
-          // EARLIEST buffered entry (must exceed the current watermark
-          // or Spark throws); no pending -> nothing a timeout could
-          // seal, leave whatever timeout exists — a spurious fire is a
-          // no-op fold
-          if (rest.nonEmpty)
-            state.setTimeoutTimestamp(math.max(rest.map(_.ts).min + 1L,
-              state.getCurrentWatermarkMs() + 1L))
-          out.iterator
-      }
-  }
-
-  /** Streaming CONTINUATION-edge inference — the front half of the
-    * episode graph's `auto_link`
-    * (`experiments/episodic-memory-prototype/memory/graph.py:44-104`)
-    * composed onto the episodes STREAM: consumes closed episodes (the
-    * [[streamingEpisodes]] output, or any append stream with its
-    * shape) and emits `prev → curr` edges between chronologically
-    * adjacent episodes of the same key whose states are equal and
-    * non-empty and whose gap `curr.start − prev.end` is at most
-    * `maxGap` (negative gaps — overlap — link too; only the upper
-    * bound is checked, the batch [[graft.operators.EpisodeGraph
-    * .autoLink]] rule exactly). RETRY_OF stays batch-only by design —
-    * it needs all-history similarity pairs, not adjacency.
-    *
-    * == Why streaming adjacency is exact ==
-    * [[streamingEpisodes]] closes each key's episodes in strictly
-    * increasing `episode_idx` = chronological order, and an episode is
-    * emitted only when PROVABLY final — so "the previously closed
-    * episode" at arrival time IS the chronological predecessor under
-    * any continuation of the stream, and every emitted edge is final
-    * (Append-mode safe). The one-key-one-timeline determinism
-    * deviation: adjacency is per KEY (the reference's per-memory
-    * graph), where the batch twin over a single-key table computes
-    * the same global order.
-    *
-    * == State & replay ==
-    * Per-key state is O(1): the last closed episode (idx, end, state).
-    * Arrivals are folded in `episode_idx` order within a batch, and an
-    * episode at or below the state's index is ignored — an
-    * at-least-once redelivery (restart replaying a sink-uncommitted
-    * batch) can re-emit an edge but never emits a WRONG one, the same
-    * sink contract as every append gate here. NoTimeout: edges derive
-    * from data alone, nothing to time out.
-    */
-  def streamingContinuations(
-      episodes: Dataset[EpisodeRow],
-      maxGap: Long = 3600L): Dataset[EpisodeLinkRow] = {
-    val spark = episodes.sparkSession
-    import spark.implicits._
-    episodes
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[EpisodeRow],
-         state: GroupState[LastEpisode]) =>
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[EpisodeLinkRow]
-          var prev = state.getOption
-          rows.toSeq.sortBy(_.episode_idx).foreach { e =>
-            val fresh = prev.forall(_.idx < e.episode_idx)
-            if (fresh) {
-              prev.foreach { p =>
-                if (p.state == e.state && p.state.nonEmpty &&
-                    e.start_ts - p.endTs <= maxGap)
-                  out += EpisodeLinkRow(key, p.idx, e.episode_idx,
-                    "continuation", 1.0)
-              }
-              prev = Some(LastEpisode(e.episode_idx, e.end_ts, e.state))
-            }
-          }
-          prev.foreach(state.update)
-          out.iterator
-      }
-  }
 
   /** Stream-stream attribution join: left events matched to same-key
     * right events within `[leftTs, leftTs + horizon]`, both sides

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{FeatureDef, FeatureGroupDef, FeatureType}
 import graft.functions.{Similarity, TextFunctions}
-import graft.operators.{EpisodeGraph, FeatureStore, InteractionStore, SimilaritySearch, Training}
+import graft.operators.{FeatureStore, InteractionStore, SimilaritySearch, Training}
 
 /** Degenerate-input hardening: every operator must behave on empty
   * inputs, empty strings and zero vectors — the shapes a 100 TB
@@ -33,11 +33,6 @@ class EdgeCaseSpec extends AnyFunSuite with SparkSuite {
       .toDF("user_id", "ts", "event_id")
     assert(InteractionStore.mergeCap(empty, cap = 5).count() === 0)
     assert(InteractionStore.retention(empty, horizonWeeks = 2).count() === 0)
-  }
-
-  test("connectedComponents on an empty pair list") {
-    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(EpisodeGraph.connectedComponents(empty).count() === 0)
   }
 
   test("similarity on zero vectors: cosine null-safe via int8 scale guard") {
@@ -154,35 +149,6 @@ class EdgeCaseSpec extends AnyFunSuite with SparkSuite {
     val out = Training.pointInTime(labels, history, Seq("user_id"), "ts", "value")
       .collect()
     assert(out.length === 1 && out(0).isNullAt(3))
-  }
-
-  test("round-11 episodic operators on empty and single-row inputs") {
-    import graft.operators.{EpisodeGraph, Pipeline}
-    val emptyEntries = Seq.empty[(Long, Long, String, Seq[Double])]
-      .toDF("entry_id", "ts", "state", "embedding")
-    assert(EpisodeGraph.detectEpisodes(emptyEntries).count() === 0L)
-    // a single entry is one episode (no pair, no boundary)
-    val one = Seq((1L, 10L, "a", Seq(1.0, 0.0)))
-      .toDF("entry_id", "ts", "state", "embedding")
-    val ep = EpisodeGraph.detectEpisodes(one).collect()
-    assert(ep.length === 1 && ep.head.getLong(5) === 1L)
-    // mergeFacts: empty in, empty out; one fact leads itself
-    val emptyFacts = Seq.empty[(Long, Seq[Double])]
-      .toDF("fact_id", "embedding")
-    assert(EpisodeGraph.mergeFacts(emptyFacts).count() === 0L)
-    val oneFact = EpisodeGraph.mergeFacts(
-      Seq((7L, Seq(1.0, 0.0))).toDF("fact_id", "embedding")).collect()
-    assert(oneFact.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-      .toSeq === Seq((7L, 7L, true)))
-    // buildNarrative / preferStateApplicable on empty slates
-    val emptySlate = Seq.empty[(Long, Int, Long, String, String, String)]
-      .toDF("q", "rank", "id", "summary", "state", "outcome")
-    assert(Pipeline.buildNarrative(emptySlate, Seq("q"), "id", "rank",
-      "summary", "state", "outcome").count() === 0L)
-    val emptyFactPool = Seq.empty[(String, Long, Double, Seq[String], String)]
-      .toDF("q", "fact_id", "score", "app", "cur")
-    assert(Pipeline.preferStateApplicable(emptyFactPool, Seq("q"),
-      "fact_id", "score", "app", "cur", k = 3).count() === 0L)
   }
 
   test("two-level semanticNearDupPairs on tiny corpora (n smaller than " +

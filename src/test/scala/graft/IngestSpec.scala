@@ -648,279 +648,4 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
         r.getLong(3), r.getBoolean(4))).toSet
     assert(capped === plain)
   }
-
-  test("streamingEpisodes: multi-batch incremental fold equals the " +
-      "batch detector; cross-batch disorder above the watermark " +
-      "reorders; boundary-only emission; per-key isolation") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val minMs = 60000L
-    def vec(deg: Double) = Some(Seq(math.cos(math.toRadians(deg)),
-      math.sin(math.toRadians(deg))))
-    // key 0: four episodes split by state flips and a semantic shift
-    // (90° turn: shift = 1 - cos(90°) = 1 -> 0.4 term alone fires at
-    // 0.38); key 1 runs its own chain concurrently
-    val k0: Seq[(Long, Long, Long, String, Option[Seq[Double]], String)] = Seq(
-      (0L, 1L, 10 * minMs, "s1", vec(0), "a1"),
-      (0L, 2L, 11 * minMs, "s1", vec(5), "a2"),
-      // 12min + 1s: after batch 1 (max ts 13min) the watermark sits
-      // at exactly 12min, and the late filter drops ts <= wm — the
-      // disorder entry must sit strictly above it to be admissible
-      (0L, 3L, 12 * minMs + 1000L, "s2", vec(10), "b1"), // flip -> boundary
-      (0L, 4L, 13 * minMs, "s2", vec(100), "c1"), // 90° -> boundary
-      (0L, 5L, 14 * minMs, "s2", vec(105), "c2"),
-      (0L, 6L, 15 * minMs, "", None, "d1"),       // no terms -> same ep
-      (0L, 7L, 16 * minMs, "s3", vec(110), "d2")) // vs '' + None: same
-    val k1: Seq[(Long, Long, Long, String, Option[Seq[Double]], String)] = Seq(
-      (1L, 8L, 10 * minMs, "x", vec(0), "k1a"),
-      // also 12min + 1s: ts <= watermark(12min) would be dropped
-      (1L, 9L, 12 * minMs + 1000L, "y", vec(0), "k1b")) // flip -> boundary
-    // sentinel pair per key (the q292 flush pattern)
-    def sent(key: Long, base: Long): Seq[(Long, Long, Long, String, Option[Seq[Double]], String)] = Seq(
-      (key, -1L, base + 100 * minMs, "zzflush", vec(180), "s"),
-      (key, -2L, base + 300 * minMs, "", None, "s"))
-    val mem = MemoryStream[(Long, Long, Long, String, Option[Seq[Double]], String)]
-    val eps = Ingest.streamingEpisodes(
-      mem.toDF.toDF("key", "entry_id", "ts", "state", "embedding",
-        "content"), threshold = 0.38)
-    val q = eps.toDF.writeStream.format("memory").queryName("seps")
-      .outputMode("append").start()
-    // feed in three batches with CROSS-BATCH disorder: batch 2 carries
-    // an entry (id 2) that precedes batch 1's tail in event time but
-    // sits above the watermark (wm after batch 1 = 16*min - 1min,
-    // which is <= every already-shipped ts... use late-but-compliant:
-    // ship id 4 before id 3). The reorder buffer must restore (ts, id)
-    // order before folding.
-    mem.addData(k0(0), k0(1), k0(3), k1(0))      // id 4 BEFORE id 3
-    q.processAllAvailable()
-    mem.addData(k0(2), k0(4), k0(5), k1(1))      // id 3 arrives late
-    q.processAllAvailable()
-    mem.addData(k0(6) +: (sent(0L, 16 * minMs) ++ sent(1L, 12 * minMs)): _*)
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("seps")
-      .select($"key", $"episode_idx", $"start_ts", $"end_ts",
-        $"entry_start", $"entry_end", $"n_entries", $"state", $"summary")
-      .as[(Long, Long, Long, Long, Long, Long, Long, String, String)]
-      .collect().toSet
-    // batch twin over the same entries (per key)
-    def batchOf(rows: Seq[(Long, Long, Long, String, Option[Seq[Double]], String)]) = {
-      val df = rows.toDF("key", "entry_id", "ts", "state", "embedding",
-        "content")
-      graft.operators.EpisodeGraph.detectEpisodes(df,
-          threshold = 0.38, contentCol = "content")
-        .select(col("episode_idx"), col("start_ts"), col("end_ts"),
-          col("entry_start"), col("entry_end"), col("n_entries"),
-          col("state"), col("summary"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5), r.getString(6),
-          r.getString(7)))
-    }
-    // streaming emitted every REAL episode of both keys (the sentinel
-    // boundary closes the last; the sentinel's own episode and the
-    // watermark pusher never emit), each row equal to the batch twin's
-    val expect0 = batchOf(k0).map(t => (0L, t._1, t._2, t._3, t._4,
-      t._5, t._6, t._7, t._8)).toSet
-    val expect1 = batchOf(k1).map(t => (1L, t._1, t._2, t._3, t._4,
-      t._5, t._6, t._7, t._8)).toSet
-    assert(got === expect0 ++ expect1)
-    assert(expect0.size === 3 && expect1.size === 2) // sanity: shapes
-    // incremental emission: episodes sealed by earlier batches must
-    // not wait for the sentinels — not directly observable post-hoc
-    // here, but the disorder case above already fails if the fold ran
-    // eagerly on arrival order.
-  }
-
-  test("streamingEpisodes: checkpoint restart — the reorder buffer, " +
-      "open episode, and episode index survive a stream restart and " +
-      "the resumed run completes the batch-equal result") {
-    val base = tmp("graft-eps-restart")
-    val in = s"$base/in"
-    val out = s"$base/out"
-    val ckpt = s"$base/ckpt"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    val minMs = 60000L
-    def vec(deg: Double) = Some(Seq(math.cos(math.toRadians(deg)),
-      math.sin(math.toRadians(deg))))
-    // e1,e2 same episode; e3 flips state (boundary); e4 continues e3's
-    // episode; e5 (post-restart) continues it further; sentinel closes
-    val stage1: Seq[(Long, Long, Long, String, Option[Seq[Double]], String)] =
-      Seq((0L, 1L, 10 * minMs, "s1", vec(0), "a1"),
-        (0L, 2L, 11 * minMs, "s1", vec(3), "a2"),
-        (0L, 3L, 12 * minMs + 1000L, "s2", vec(6), "b1"),
-        (0L, 4L, 13 * minMs, "s2", vec(9), "b2"))
-    val stage2: Seq[(Long, Long, Long, String, Option[Seq[Double]], String)] =
-      Seq((0L, 5L, 14 * minMs, "s2", vec(12), "b3"),
-        (0L, -1L, 14 * minMs + 100 * minMs, "zzflush", vec(192), "s"),
-        (0L, -2L, 14 * minMs + 300 * minMs, "", None, "s"))
-    val cols = Seq("key", "entry_id", "ts", "state", "embedding",
-      "content")
-    def runOnce(): Unit = {
-      val schema = spark.read.parquet(in).schema
-      val eps = Ingest.streamingEpisodes(
-        Ingest.fileSource(spark, in, schema), threshold = 0.38)
-      eps.toDF.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out)
-        }
-        .start().awaitTermination()
-    }
-    stage1.toDF(cols: _*).coalesce(1).write.mode("append").parquet(in)
-    runOnce()
-    // run 1 ends with the open episode + unsealed tail IN STATE: its
-    // final watermark (13min - 1min) sealed only e1/e2 — nothing
-    // boundary-closed yet, so nothing may have been emitted
-    val mid = try spark.read.parquet(out).count() catch {
-      case _: Throwable => 0L }
-    assert(mid === 0L)
-    // restart from the same checkpoint with the remaining entries
-    // (all above the persisted 12min watermark, so none are late)
-    stage2.toDF(cols: _*).coalesce(1).write.mode("append").parquet(in)
-    runOnce()
-    val got = spark.read.parquet(out)
-      .select($"episode_idx", $"start_ts", $"end_ts", $"entry_start",
-        $"entry_end", $"n_entries", $"state", $"summary")
-      .as[(Long, Long, Long, Long, Long, Long, String, String)]
-      .collect().toSet
-    val batch = graft.operators.EpisodeGraph.detectEpisodes(
-        (stage1 ++ stage2.take(1)).toDF(cols: _*),
-        threshold = 0.38, contentCol = "content")
-      .select($"episode_idx", $"start_ts", $"end_ts", $"entry_start",
-        $"entry_end", $"n_entries", $"state", $"summary")
-      .as[(Long, Long, Long, Long, Long, Long, String, String)]
-      .collect().toSet
-    assert(got === batch)
-    // the restart stitched ONE episode from entries on both sides of
-    // the restart (e3 pre, e4 was pending, e5 post): 2 episodes, the
-    // second spanning 12min+1s..14min with 3 entries
-    assert(got.size === 2)
-    assert(got.exists(e => e._6 === 3L && e._4 === 3L && e._5 === 5L))
-  }
-
-  test("streamingEpisodes: maxPending cap fails loudly") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Long, String, Option[Seq[Double]], String)]
-    val eps = Ingest.streamingEpisodes(
-      mem.toDF.toDF("key", "entry_id", "ts", "state", "embedding",
-        "content"), threshold = 0.38, maxPending = 3)
-    val q = eps.toDF.writeStream.format("memory").queryName("capeps")
-      .outputMode("append").start()
-    mem.addData((1L to 4L).map(i =>
-      (0L, i, i * 1000L, "s1", Some(Seq(1.0, 0.0)), "x")): _*)
-    val err = intercept[Exception] { q.processAllAvailable() }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e =>
-        Option(e.getMessage).toSeq ++ messages(e.getCause))
-    assert(messages(err).exists(_.contains("maxPending")))
-    q.stop()
-  }
-
-  test("streamingContinuations chained on streamingEpisodes: edges " +
-      "link episodes closed in DIFFERENT micro-batches, per-key " +
-      "isolation, gap and state rejection, batch-twin equality") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val minMs = 60000L
-    val gap = 5 * minMs
-    def vec(deg: Double) = Some(Seq(math.cos(math.toRadians(deg)),
-      math.sin(math.toRadians(deg))))
-    // key 0 timeline -> five episodes A..E (boundaries: 90°+ semantic
-    // turns within a state, flips across states):
-    //   A(id1,id2 s1) -> B(id3,id4 s1): same state, gap 2m  => edge
-    //   B -> C(id5 s2): states differ                       => none
-    //   C -> D(id6 s2): same state, gap 10m > 5m            => none
-    //   D -> E(id7 s2): same state, gap 2m                  => edge
-    val k0 = Seq(
-      (0L, 1L, 10 * minMs, "s1", vec(0), "a"),
-      (0L, 2L, 11 * minMs, "s1", vec(5), "a"),
-      (0L, 3L, 13 * minMs + 1000L, "s1", vec(100), "b"),
-      (0L, 4L, 20 * minMs, "s1", vec(105), "b"),
-      (0L, 5L, 40 * minMs, "s2", vec(0), "c"),
-      (0L, 6L, 50 * minMs, "s2", vec(100), "d"),
-      (0L, 7L, 52 * minMs, "s2", vec(200), "e"))
-    // key 1: two same-state episodes within the gap => its own edge
-    // (and never one to key 0's episodes)
-    val k1 = Seq(
-      (1L, 8L, 10 * minMs, "x", vec(0), "f"),
-      (1L, 9L, 13 * minMs, "x", vec(100), "g"))
-    def sent(key: Long, base: Long) = Seq(
-      (key, -1L, base + 100 * minMs, "zzflush", vec(180), "s"),
-      (key, -2L, base + 300 * minMs, "", None, "s"))
-    val mem = MemoryStream[(Long, Long, Long, String, Option[Seq[Double]], String)]
-    val eps = Ingest.streamingEpisodes(
-      mem.toDF.toDF("key", "entry_id", "ts", "state", "embedding",
-        "content"), threshold = 0.38)
-    // the chained-stateful checker guards downstream late-row discard;
-    // streamingContinuations has no event time, so none exists (the
-    // q294 gate's documented override, scoped and restored)
-    spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
-      "false")
-    try {
-      val edges = Ingest.streamingContinuations(eps, maxGap = gap)
-      val q = edges.toDF.writeStream.format("memory").queryName("slinks")
-        .outputMode("append").start()
-      def batchEdges(): Set[(Long, Long, Long)] =
-        spark.table("slinks").as[(Long, Long, Long, String, Double)]
-          .collect().map(e => (e._1, e._2, e._3)).toSet
-      // batch 1 seals A's body; batch 2 (id4 -> wm 19m) seals the id3
-      // boundary, so A CLOSES here and parks in the edge state
-      mem.addData(k0(0) +: k0(1) +: k0(2) +: k1: _*)
-      q.processAllAvailable()
-      mem.addData(k0(3))
-      q.processAllAvailable()
-      assert(batchEdges() === Set.empty) // A alone: nothing to link yet
-      // batch 3 seals id4; batch 4 (id6 -> wm 49m) seals id5, closing
-      // B — the A->B edge spans the batches between A's close and B's
-      mem.addData(k0(4))
-      q.processAllAvailable()
-      mem.addData(k0(5))
-      q.processAllAvailable()
-      assert(batchEdges() === Set((0L, 0L, 1L))) // cross-batch edge
-      // remaining entries + per-key sentinel flushes
-      mem.addData(k0(6) +: (sent(0L, 52 * minMs) ++ sent(1L, 13 * minMs)): _*)
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table("slinks")
-        .as[(Long, Long, Long, String, Double)].collect().toSet
-      assert(got === Set(
-        (0L, 0L, 1L, "continuation", 1.0),
-        (0L, 3L, 4L, "continuation", 1.0),
-        (1L, 0L, 1L, "continuation", 1.0)))
-      // batch twin: detectEpisodes -> autoLink's continuation leg over
-      // the same per-key entries reproduces exactly these edges
-      val twin = Seq(k0, k1).zipWithIndex.flatMap { case (rows, k) =>
-        val epsB = graft.operators.EpisodeGraph.detectEpisodes(
-          rows.toDF("key", "entry_id", "ts", "state", "embedding",
-            "content"), threshold = 0.38)
-          .withColumn("outcome", lit("success"))
-          .withColumn("embedding", lit(null).cast("array<double>"))
-        graft.operators.EpisodeGraph.autoLink(epsB, maxGap = gap,
-            idCol = "episode_idx", startCol = "start_ts",
-            endCol = "end_ts")
-          .as[(Long, Long, String, Double)].collect()
-          .map(e => (k.toLong, e._1, e._2, e._3, e._4))
-      }.toSet
-      assert(twin === got)
-    } finally spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
-      "true")
-  }
-
-  test("q294 restores the stream session clone's correctness-check setting") {
-    val check = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val conf = SparkEntry.streamSession(spark).conf
-    val q294 = SparkEntry.queries("q294_stream_episode_links")
-    try {
-      conf.unset(check)
-      q294(spark, sf).count()
-      assert(conf.getAll.get(check) === None, "an unset setting stays unset")
-      conf.set(check, "true")
-      q294(spark, sf).count()
-      assert(conf.getOption(check) === Some("true"), "a set value is restored")
-    } finally conf.unset(check)
-  }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{FeatureDef, FeatureGroupDef, FeatureType}
-import graft.operators.{FeatureStore, LookupTier}
+import graft.operators.{FeatureStore, LookupTier, SnapshotCache}
 import graft.streaming.Ingest
 
 /** The feature store's driver-side lookup tier: every retrieve and
@@ -186,13 +186,13 @@ class LookupTierSpec extends AnyFunSuite with SparkSuite {
     Ingest.upsertBatch(Seq((1L, 1L, 10.0), (2L, 1L, 20.0)).toDF("k", "ver", "v"),
       path, Seq("k"), "ver")
     assert(read() === Map(1L -> 10.0, 2L -> 20.0, 3L -> -1.0))
-    val before = LookupTier.indexBuilds
+    val before = LookupTier.cache.builds
     assert(read() === Map(1L -> 10.0, 2L -> 20.0, 3L -> -1.0))
-    assert(LookupTier.indexBuilds === before, "a second read of one snapshot reuses its index")
+    assert(LookupTier.cache.builds === before, "a second read of one snapshot reuses its index")
     Ingest.upsertBatch(Seq((2L, 2L, 21.0), (3L, 2L, 30.0)).toDF("k", "ver", "v"),
       path, Seq("k"), "ver")
     assert(read() === Map(1L -> 10.0, 2L -> 21.0, 3L -> 30.0))
-    assert(LookupTier.indexBuilds === before + 1)
+    assert(LookupTier.cache.builds === before + 1)
   }
 
   test("a table above autoBroadcastJoinThreshold and mismatched key types take the scan path") {
@@ -216,24 +216,24 @@ class LookupTierSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("the index cache stays bounded and evicts the least recently used snapshot") {
-    val tables = (0 until LookupTier.MaxSnapshots + 2).map(i =>
+    val tables = (0 until SnapshotCache.MaxEntries + 2).map(i =>
       parquet(Seq((1L, i.toDouble)).toDF("k", "v")))
     def get(i: Int): Double =
       FeatureStore.retrieve(Seq(1L).toDF("k"), tables(i), Seq("k"), fg, Seq("v"))
         .as[(Long, Double)].head()._2
     tables.indices.foreach(i => assert(get(i) === i.toDouble))
-    assert(LookupTier.cachedSnapshots <= LookupTier.MaxSnapshots)
-    val b0 = LookupTier.indexBuilds
+    assert(LookupTier.cache.size <= SnapshotCache.MaxEntries)
+    val b0 = LookupTier.cache.builds
     assert(get(tables.size - 1) === tables.size - 1.0)
-    assert(LookupTier.indexBuilds === b0, "the most recent snapshot is still cached")
+    assert(LookupTier.cache.builds === b0, "the most recent snapshot is still cached")
     assert(get(0) === 0.0)
-    assert(LookupTier.indexBuilds === b0 + 1, "the oldest snapshot was evicted")
-    assert(LookupTier.cachedSnapshots <= LookupTier.MaxSnapshots)
+    assert(LookupTier.cache.builds === b0 + 1, "the oldest snapshot was evicted")
+    assert(LookupTier.cache.size <= SnapshotCache.MaxEntries)
   }
 
   test("concurrent callers build one index per snapshot") {
     val dir = writeParquet((1L to 200L).map(k => (k, k * 0.5)).toDF("k", "v"))
-    val before = LookupTier.indexBuilds
+    val before = LookupTier.cache.builds
     val pool = Executors.newFixedThreadPool(4)
     val start = new CountDownLatch(1)
     try {
@@ -249,6 +249,6 @@ class LookupTierSpec extends AnyFunSuite with SparkSuite {
         assert(f.get(60, TimeUnit.SECONDS) === Map(1L + c -> (1L + c) * 0.5, 300L -> -1.0))
       }
     } finally pool.shutdown()
-    assert(LookupTier.indexBuilds === before + 1)
+    assert(LookupTier.cache.builds === before + 1)
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * computes the formula live — so an engine-formula mutation drifts
   * the query result off the oracle and the driver compare reads RED
   * (the pre-pin live-call shape was tautological: both sides changed
-  * together, proven by tools/killtest.py on q281). These locks make a
+  * together, proven by tools/killtest.py). These locks make a
   * formula change CONSCIOUS: it must regenerate the pin, and the lock
   * failure message says so. No Spark session needed — pure constants. */
 class OraclePinsSpec extends AnyFunSuite {

@@ -139,55 +139,6 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
     events.unpersist()
   }
 
-  test("connectedComponents equals brute-force union-find (random graphs)") {
-    import graft.operators.EpisodeGraph
-    val rnd = seeded()
-    (1 to 3).foreach { _ =>
-      val n = 30
-      val edges = Seq.fill(35)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-      val got = EpisodeGraph.connectedComponents(edges.toDF("id_a", "id_b"))
-        .as[(Long, Long)].collect().toMap
-      // union-find with union-by-min: each root ends as its component min
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      assert(got.size === nodes.size)
-      nodes.foreach { v =>
-        assert(got(v) === find(v.toInt).toLong, s"node $v") }
-    }
-  }
-
-  test("connectedComponents: pointer jumping converges a 400-hop " +
-      "chain within the default budget; an exhausted budget still " +
-      "fails loudly instead of returning unconverged labels") {
-    import graft.operators.EpisodeGraph
-    // a 401-node path 0-1-...-400: edge propagation alone needs 400
-    // rounds (one hop each); pointer jumping from round JumpFrom
-    // doubles coverage per round, so the default 25-round budget
-    // converges with a wide margin — the chain-shaped components
-    // (smeared arcs of near-duplicates) that used to be a documented
-    // loud failure are now just another graph
-    val chain = (0L until 400L).map(i => (i, i + 1L))
-    val got = EpisodeGraph.connectedComponents(chain.toDF("id_a", "id_b"))
-      .as[(Long, Long)].collect().toMap
-    assert(got.size === 401 && got.values.forall(_ === 0L))
-    // a budget too small for even the jumped walk (maxIters = 3 is
-    // all edge-only rounds: distance 4 of 400 covered): unconverged
-    // labels would silently under-merge downstream (phantom split
-    // components), so the operator must refuse instead of returning
-    val err = intercept[IllegalArgumentException] {
-      EpisodeGraph.connectedComponents(chain.toDF("id_a", "id_b"),
-        maxIters = 3).count()
-    }
-    assert(err.getMessage.contains("converge"))
-  }
-
   test("constrainedRerank invariant under 1/4/32-partition shuffles") {
     val rnd = seeded()
     // few distinct scores → heavy ties; the event-id tie-break must

@@ -25,10 +25,14 @@ sampled runs MERGE into the artifact — seeded from the newest
 history/KILLTEST_r*.json when the artifact doesn't exist yet — so a
 partial run never shrinks the recorded corpus. Dev tooling only —
 the Scala library never depends on this. Refuses to start unless every
-mutation target file matches git HEAD, restores every mutated file
-afterwards, and checks with `git diff` that they match HEAD again, so a
-mutation can never ride into a commit.
+MUTATIONS entry, selected or not, is sound (its file exists, its `old`
+string occurs exactly once, its query gates are SparkEntry queries and
+its spec gate is a test class) and every mutation target file matches
+git HEAD; restores every mutated file afterwards, and checks with
+`git diff` that they match HEAD again, so a mutation can never ride
+into a commit.
 """
+import glob
 import json
 import os
 import re
@@ -105,21 +109,6 @@ MUTATIONS = [
         "queries": ["q175_position_ctr_wilson"],
         "expect": "red",
         "mechanism": "one-ulp z drift -> wilson bounds differ in last ulps vs the oracle's own literals",
-    },
-    {
-        # (f) shared-literal IEEE oracle q281: the weight TABLE is
-        # pinned in the oracle (Q281Weights literals, spec-locked to
-        # weightTableMicro); a generation-formula bug must read RED.
-        # Before the pin landed, the oracle CALLED weightTableMicro at
-        # SQL-construction time and this mutation survived GREEN — the
-        # tautology this harness exists to find.
-        "name": "q281_weight_formula",
-        "file": "src/main/scala/graft/operators/Pipeline.scala",
-        "old": "      yield Math.round(blend * rankPows(r) * carryPows(l) * 1e6)",
-        "new": "      yield Math.round(blend * rankPows(r) * carryPows(l) * 1e6) + 1",
-        "queries": ["q281_reinforce_decay"],
-        "expect": "red",
-        "mechanism": "every micro-weight off by 1 -> outcome_score drifts vs the pinned table",
     },
     {
         # (h) temporal boundary: TTL expiry <= flipped to < — a row
@@ -203,19 +192,6 @@ MUTATIONS = [
                      "driver-visible",
     },
     {
-        # (j) stateful-streaming class: invert the episode boundary
-        # comparison inside the flatMapGroupsWithState handler —
-        # episodes split exactly where they should continue.
-        "name": "episode_boundary_invert",
-        "file": "src/main/scala/graft/streaming/Ingest.scala",
-        "old": "                  if score(o.prevState, o.prevEmb, e.state, e.emb) >=\n                    threshold =>",
-        "new": "                  if score(o.prevState, o.prevEmb, e.state, e.emb) <\n                    threshold =>",
-        "queries": ["q292_stream_episodes"],
-        "expect": "red",
-        "mechanism": "inverted segmentation -> different episode rows/counts "
-                     "out of the streaming fold",
-    },
-    {
         # (o) wire-LAYOUT class, proto3: non-canonical varint padding —
         # the final varint byte keeps its continuation bit and a 0x00
         # byte follows. Proto varint DECODERS accept non-canonical
@@ -239,8 +215,8 @@ MUTATIONS = [
         # (p) shared-construction pin q117: DCG discount log base.
         # Before OraclePins landed, the oracle CALLED dcgDiscountsMicro
         # at SQL-construction time — this mutation would have changed
-        # both sides identically (the q281 tautology shape). With the
-        # pin, the engine drifts off the oracle's literals.
+        # both sides identically (the tautology OraclePins describes).
+        # With the pin, the engine drifts off the oracle's literals.
         "name": "ndcg_discount_base",
         "file": "src/main/scala/graft/operators/Evaluation.scala",
         "old": "math.log(r + 1)",
@@ -359,19 +335,6 @@ MUTATIONS = [
                      "timeout from firing -> sessions never close in the "
                      "multi-batch MemoryStream specs",
     },
-    {
-        # (g) consumption-side mutation for the same gate: the recency
-        # horizon filter (independent of the table literals on both
-        # sides — red regardless of the pin)
-        "name": "q281_horizon_offby1",
-        "file": "src/main/scala/graft/operators/Pipeline.scala",
-        "old": '      .filter(col("__later") < horizon)',
-        "new": '      .filter(col("__later") <= horizon)',
-        "queries": ["q281_reinforce_decay"],
-        "expect": "red",
-        "mechanism": "17th-recent event indexes element_at past the 512-entry "
-                     "table -> ANSI INVALID_ARRAY_INDEX error (observed)",
-    },
     # ---- batch 3: one mutation per so-far-unprobed gate family ----
     {
         # (x) point-in-time class: the equal-ts visibility boundary.
@@ -395,25 +358,6 @@ MUTATIONS = [
         "mechanism": "equal-ts history sorts after the label -> each label "
                      "reads the PREVIOUS feature value instead of the one "
                      "written at its own ts",
-    },
-    {
-        # (y) iterative-convergence class: the CC fixpoint test flips
-        # to a vacuous predicate (labels only decrease, so `>` never
-        # matches) — the loop exits 'converged' after ONE propagation
-        # round with no loud error (`require(converged)` passes).
-        # Components of diameter > 2 under-merge silently. The spec
-        # gate's 400-hop chain and random graphs see it.
-        "name": "cc_converge_early",
-        "file": "src/main/scala/graft/operators/EpisodeGraph.scala",
-        "old": '      converged = stepped.filter(col("component") < col("__old")).isEmpty',
-        "new": '      converged = stepped.filter(col("component") > col("__old")).isEmpty',
-        "queries": ["graft.RandomizedSpec"],
-        "gate": "spec",
-        "spec_filter": "connectedComponents",
-        "expect": "red",
-        "mechanism": "premature fixpoint after round 1: any component whose "
-                     "min-id is > 2 propagation hops from some member keeps "
-                     "a phantom split label",
     },
     {
         # (aa) normalization class: min-max loses its min anchor
@@ -576,8 +520,8 @@ MUTATIONS = [
         # fan+1 sub-keys while the fan side replicates only 0..fan-1 —
         # split rows landing in the phantom sub-key never meet any
         # fan row, silently losing in-key pairs. The shared kernel
-        # behind blockedBestMatch(maxBlock) / sessionConcurrency
-        # (maxBin) / autoLink(maxStateBlock).
+        # behind blockedBestMatch(maxBlock) and sessionConcurrency
+        # (maxBin).
         "name": "capped_fan_sub_range",
         "file": "src/main/scala/graft/operators/Skew.scala",
         "old": '      .withColumn("__sub", pmod(xxhash64(splitHash: _*), col("__fan")))',
@@ -652,6 +596,42 @@ def run(cmd, **kw):
 def differs_from_head(files):
     """True if any of `files` differs from git HEAD (staged or not)."""
     return run(["git", "diff", "--quiet", "HEAD", "--"] + sorted(files)).returncode != 0
+
+
+def preflight():
+    """One line per unsound MUTATIONS entry: a target file that does not
+    exist, an `old` string that does not occur exactly once, a query
+    gate that is not a `"<name>" ->` key in SparkEntry.scala, or a spec
+    gate that names no test class. Checks every entry, so a change that
+    deletes a mutation's target or gate fails the next run of any
+    mutation instead of crashing only the run that selects it."""
+    entry = open(os.path.join(
+        REPO, "src/main/scala/graft/SparkEntry.scala")).read()
+    test_classes = set()
+    for path in glob.glob(os.path.join(REPO, "src/test/scala/**/*.scala"),
+                          recursive=True):
+        src = open(path).read()
+        pkg = re.search(r"^package ([\w.]+)", src, re.M)
+        prefix = pkg.group(1) + "." if pkg else ""
+        test_classes |= {prefix + c for c in
+                         re.findall(r"^class (\w+)", src, re.M)}
+    problems = []
+    for m in MUTATIONS:
+        name, path = m["name"], os.path.join(REPO, m["file"])
+        if not os.path.isfile(path):
+            problems.append(f"{name}: {m['file']} does not exist")
+            continue
+        n = open(path).read().count(m["old"])
+        if n != 1:
+            problems.append(f"{name}: old string occurs {n} times in {m['file']}")
+        gate = m.get("gate")
+        if gate is None:
+            problems += [f"{name}: query gate {q} is not a SparkEntry query"
+                         for q in m["queries"] if f'"{q}" ->' not in entry]
+        elif gate == "spec" and m["queries"][0] not in test_classes:
+            problems.append(f"{name}: spec gate {m['queries'][0]} "
+                            "is not a test class")
+    return problems
 
 
 def spec_color(m):
@@ -773,6 +753,10 @@ def main():
         only = set(picked)
         print(f"== sample rotation: round {rnd}, window [{start}..) "
               f"-> {picked}")
+    problems = preflight()
+    if problems:
+        sys.exit("refusing to start: unsound mutation entries\n  " +
+                 "\n  ".join(problems))
     targets = {m["file"] for m in MUTATIONS}
     if differs_from_head(targets):
         sys.exit("refusing to start: mutation target files differ from git "
@@ -785,11 +769,6 @@ def main():
                 continue
             path = os.path.join(REPO, m["file"])
             src = open(path).read()
-            n = src.count(m["old"])
-            if n != 1:
-                results.append({"mutation": m["name"], "result": "SPEC-ERROR",
-                                "detail": f"old-string occurs {n} times"})
-                continue
             originals.setdefault(path, src)
             print(f"== {m['name']}: mutating {m['file']}")
             open(path, "w").write(src.replace(m["old"], m["new"]))
