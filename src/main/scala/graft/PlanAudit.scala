@@ -163,9 +163,9 @@ object PlanAudit {
   /** Max explicit top-N accepted as a provably-bounded BNLJ build side:
     * an `.orderBy(...).limit(n)` (TakeOrdered) with n ≤ this cap
     * carries exactly n rows at ANY corpus size — the pre-trim
-    * convention bounded pairwise operators use (q252's estimator top-m,
-    * q278's rank-agreement top-N). Kept small: a bounded build side
-    * must stay broadcast-sized even when every row is wide. PUBLIC
+    * convention bounded pairwise operators use (q252's estimator
+    * top-m). Kept small: a bounded build side must stay
+    * broadcast-sized even when every row is wide. PUBLIC
     * because the operators that plant such bounds (IvfIndex.MaxCells,
     * topK.maxQueries, centroidSimilarity.maxLabels, audienceOverlap
     * maxSegments) reference it as their default cap — one constant,

@@ -86,8 +86,6 @@ package graft
   *
   * == Bounded-work knobs (bigger = more work, not more risk) ==
   *
-  *  - `Evaluation.kendallTauB(topN)` — gate: q278 runs 50. Pairwise
-  *    in topN; 10³ is still only ~5·10⁵ pairs.
   *  - `PrefixSum` range partitions — derived from the session's
   *    `spark.sql.shuffle.partitions` (gate: 32, = local cores). 100×:
   *    O(total cores); the offset table materializes that many

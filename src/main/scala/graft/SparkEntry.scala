@@ -1163,75 +1163,6 @@ object SparkEntry {
           concat_ws(",", transform(col("path"), x => x.cast("string")))
             .as("path_csv"))),
 
-    // ---- offline eval: tie-aware ROC AUC of `value` against a
-    // deterministic pseudo-label, per event_type; plus precision@20 ----
-    "q115_group_auc" -> ((s, dir) => {
-      val scored = Tables.events(s, dir).select(col("event_type"),
-        col("value"), (col("user_id") % 5 === 0).cast("long").as("label"))
-      graft.operators.Evaluation.groupAuc(
-        scored, Seq("event_type"), "value", "label")
-    }),
-    "q116_precision_at_k" -> ((s, dir) => {
-      val scored = Tables.events(s, dir).select(col("event_type"),
-        col("event_id"), col("value"),
-        (col("user_id") % 5 === 0).cast("long").as("label"))
-      graft.operators.Evaluation.precisionAtK(scored, Seq("event_type"),
-        "value", "label", "event_id", k = 20)
-    }),
-
-    // ---- NDCG@20 with graded relevance (micro-unit literal discount
-    // table — no libm in the compare path) ----
-    "q117_ndcg" -> ((s, dir) => {
-      val scored = Tables.events(s, dir).select(col("event_type"),
-        col("event_id"), col("value"), (col("user_id") % 3).as("rel"))
-      graft.operators.Evaluation.ndcgAtK(scored, Seq("event_type"),
-        "value", "rel", "event_id", k = 20)
-    }),
-
-    // ---- reciprocal rank of the first positive per group ----
-    "q118_reciprocal_rank" -> ((s, dir) => {
-      val scored = Tables.events(s, dir).select(col("event_type"),
-        col("event_id"), col("value"),
-        (col("user_id") % 5 === 0).cast("long").as("label"))
-      graft.operators.Evaluation.reciprocalRank(scored, Seq("event_type"),
-        "value", "label", "event_id")
-    }),
-
-    // ---- chi-square contingency cells: event_type x user bucket ----
-    "q119_chi_square" -> ((s, dir) =>
-      graft.operators.Evaluation.chiSquareCells(
-        Tables.events(s, dir).withColumn("ub", col("user_id") % 4),
-        "event_type", "ub")),
-
-    // ---- exposure Gini of item interaction counts ----
-    "q120_exposure_gini" -> ((s, dir) =>
-      graft.operators.Evaluation.exposureGini(
-        Tables.events(s, dir)
-          .select(graft.operators.Recsys.itemOf(col("props")).as("item_id"))
-          .filter(col("item_id").isNotNull),
-        "item_id")),
-
-    // ---- reliability bins: score confidence vs positive rate ----
-    "q121_reliability_bins" -> ((s, dir) =>
-      graft.operators.Evaluation.reliabilityBins(
-        Tables.events(s, dir).select((col("value") / lit(20.0)).as("score"),
-          (col("user_id") % 5 === 0).cast("long").as("label")),
-        "score", "label", nBins = 10)),
-
-    // ---- two-proportion z-test: user_id parity as the variant split,
-    // click as conversion, per event-week segment ----
-    "q122_ab_test" -> ((s, dir) =>
-      graft.operators.Evaluation.abTest(
-        Tables.events(s, dir).select(
-          date_trunc("week", col("ts")).cast("date").as("week"),
-          (col("user_id") % 2).as("variant"),
-          (col("event_type") === "click").cast("long").as("converted")),
-        Seq("week"), "variant", "converted")),
-
-    // ---- weekly cohort retention over the event log ----
-    "q123_cohort_retention" -> ((s, dir) =>
-      graft.operators.Evaluation.cohortRetention(Tables.events(s, dir))),
-
     // ---- data-contract validation report: one scan, one row per rule ----
     "q124_data_quality" -> ((s, dir) =>
       graft.operators.Validate.report(Tables.events(s, dir), Seq(
@@ -1608,7 +1539,7 @@ object SparkEntry {
         .filter(col("item_id").isNotNull)
         .withColumn("position", row_number().over(sess))
         .filter(col("position") <= 20)
-      graft.operators.Evaluation.ipsItemClicks(imp,
+      graft.operators.Recsys.ipsItemClicks(imp,
         "item_id", "position", "__click")
     }),
 
@@ -1642,21 +1573,6 @@ object SparkEntry {
           floor(col("value") * 1e6).cast("long").as("vm")),
         "event_type", "vm", alpha = 0.1)),
 
-    // ---- slate diversity companion to the accuracy metrics: per
-    // query, pairwise (1 − cosine) stats over the top-10 slate's
-    // embeddings — micro-floored per pair so the sums are integer
-    // order-free (Ziegler et al. WWW'05) ----
-    "q168_intra_list_diversity" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("query_embedding"))
-      val slate = SimilaritySearch.topK(emb, queries, k = 10,
-        metric = SimilaritySearch.Cosine, excludeSelf = true)
-        .select(col("query_id"), col("vec_id"))
-      graft.operators.Evaluation.intraListDiversity(slate, emb)
-    }),
-
     // ---- PQ quantization distortion audit: per-vector squared error
     // between the original embedding and its codeword reconstruction —
     // the figure OPQ's rotation exists to shrink, reported next to the
@@ -1676,20 +1592,6 @@ object SparkEntry {
           floor(col("value") * 1e6).cast("long").as("vm")),
         "event_type", "vm", alpha = 0.1)),
 
-    // ---- q145's position construction -> per-position CTR with
-    // Wilson 95% intervals (small-n-safe uncertainty on the
-    // position-bias curve) ----
-    "q175_position_ctr_wilson" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"), to_date(col("ts")))
-        .orderBy(col("ts").asc, col("event_id").asc)
-      val imp = Tables.events(s, dir)
-        .withColumn("position", row_number().over(w))
-        .filter(col("position") <= 20)
-        .withColumn("click", (col("event_type") === "click").cast("long"))
-      graft.operators.Evaluation.positionCtrWilson(imp, "position", "click")
-    }),
-
     // ---- PSI feature-drift gate: reference = view events, current =
     // click events; equal-frequency bins on the reference (q12's
     // exact-percentile convention), per-bin (p−q)·ln(p/q) rounded to
@@ -1701,16 +1603,6 @@ object SparkEntry {
         ev.filter(col("event_type") === "click").select(col("value")),
         "value", nBins = 10)
     }),
-
-    // ---- operating-point selection: precision/recall at each score
-    // threshold in ONE conditional-aggregation scan (value as the
-    // score, click as the label) ----
-    "q177_pr_curve" -> ((s, dir) =>
-      graft.operators.Evaluation.prCurve(
-        Tables.events(s, dir)
-          .select(col("value").as("score"),
-            (col("event_type") === "click").cast("long").as("y")),
-        "score", "y", thresholds = Seq(10.0, 50.0, 100.0, 250.0, 500.0))),
 
     // ---- ANN recall audit: q38's IVF probe result vs the exact
     // brute-force top-10, per-query overlap — the number probe depth
@@ -1726,7 +1618,7 @@ object SparkEntry {
       val exact = SimilaritySearch.topK(emb, queries, k = 10,
         metric = SimilaritySearch.Cosine)
         .select(col("query_id"), col("vec_id"))
-      graft.operators.Evaluation.retrievalOverlap(approx, exact)
+      SimilaritySearch.retrievalOverlap(approx, exact)
     }),
 
     // ---- ingestion audit: every column's null/cardinality/range
@@ -1778,20 +1670,6 @@ object SparkEntry {
         Tables.embeddings(s, dir), cells = 8, iters = 2, threshold = 0.3,
         targetCellSize = 8L, maxCellsPerLevel = 32)),
 
-    // ---- reciprocal-rank fusion of the cosine and dot retrievers:
-    // score-free merge of incomparable scales, fused top-10 ----
-    "q185_rrf_fusion" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val queries = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("query_embedding"))
-      val cos = SimilaritySearch.topK(emb, queries, k = 10,
-        metric = SimilaritySearch.Cosine, excludeSelf = true)
-      val dot = SimilaritySearch.topK(emb, queries, k = 10,
-        metric = SimilaritySearch.Dot, excludeSelf = true)
-      graft.operators.Evaluation.reciprocalRankFusion(Seq(cos, dot))
-    }),
-
     // ---- distinct-audience overlap per segment pair: KMV theta-
     // intersection read off the q72 sketches alone, next to the exact
     // figure ----
@@ -1833,16 +1711,6 @@ object SparkEntry {
         .select(col("doc_id"), col("source"), col("encoded_cat"),
           col("cat_count"), col("cat_freq"))),
 
-    // ---- MAP@20: the order-sensitive companion to q116 — rewards
-    // putting the hits early, not just inside the window ----
-    "q194_map_at_k" -> ((s, dir) => {
-      val scored = Tables.events(s, dir).select(col("event_type"),
-        col("event_id"), col("value"),
-        (col("user_id") % 5 === 0).cast("long").as("label"))
-      graft.operators.Evaluation.meanAveragePrecisionAtK(scored,
-        Seq("event_type"), "value", "label", "event_id", k = 20)
-    }),
-
     // ---- feature-pair redundancy/leakage audit: Pearson r for all 6
     // pairs of 4 lineitem measures in ONE scan ----
     "q195_corr_matrix" -> ((s, dir) =>
@@ -1878,12 +1746,6 @@ object SparkEntry {
       Sketches.countMinEstimates(
         Tables.part(s, dir), "p_brand", width = 16, depth = 4)),
 
-    // ---- the at-scale bootstrap: 32 Poisson(1)-weighted replicate
-    // means of the payload value in ONE scan ----
-    "q201_poisson_bootstrap" -> ((s, dir) =>
-      graft.operators.Evaluation.poissonBootstrapMeans(
-        Tables.events(s, dir), "value", "event_id", reps = 32)),
-
     // ---- per-user trailing-8 rolling z-score: the metric-series
     // anomaly detector (cold-start rows abstain) ----
     "q202_rolling_zscore" -> ((s, dir) =>
@@ -1901,19 +1763,6 @@ object SparkEntry {
       graft.operators.Validate.benfordDigits(
         Tables.lineitem(s, dir), "l_extendedprice")),
 
-    // ---- beyond-accuracy recsys metrics: catalog coverage + novelty
-    // of the most-popular-complement baseline ----
-    "q204_coverage_novelty" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val inter = ev.select(col("user_id"),
-          graft.operators.Recsys.itemOf(col("props")).as("item_id"))
-        .filter(col("item_id").isNotNull)
-      val recs = graft.operators.Recsys.popularityComplementRecs(
-        ev, topM = 20, perUser = 3)
-      graft.operators.Evaluation.coverageNovelty(
-        recs, inter, "item_id", "user_id")
-    }),
-
     // ---- exact p50/p95/p99 per segment via rank arithmetic — the
     // SLA table, no single-partition window, no approx ----
     "q205_group_quantiles" -> ((s, dir) =>
@@ -1927,14 +1776,6 @@ object SparkEntry {
         Tables.events(s, dir).select(col("value"), col("event_id"),
           (col("event_type") === "purchase").cast("long").as("label")),
         "value", "label", "event_id", nBins = 16)),
-
-    // ---- user-grouped 5-fold AUC: the variance behind q115's
-    // headline number, leakage-safe fold assignment ----
-    "q208_kfold_auc" -> ((s, dir) =>
-      graft.operators.Evaluation.kFoldAuc(
-        Tables.events(s, dir).select(col("user_id"), col("value"),
-          (col("user_id") % 5 === 0).cast("long").as("label")),
-        "user_id", "value", "label", k = 5)),
 
     // ---- linear multi-touch attribution: each purchase splits one
     // credit unit equally over the clicks/views since the previous
@@ -1981,20 +1822,6 @@ object SparkEntry {
         Tables.lineitem(s, dir),
         Seq("l_quantity", "l_discount", "l_tax"))),
 
-    // ---- right-censoring-aware retention: Kaplan-Meier survival of
-    // user lifetimes (active-at-close users censored) ----
-    "q218_kaplan_meier" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val u = ev.groupBy(col("user_id"))
-        .agg(min(to_date(col("ts"))).as("__f"),
-          max(to_date(col("ts"))).as("__l"))
-      val anchor = ev.agg(max(to_date(col("ts"))).as("__mx"))
-      val subj = u.crossJoin(broadcast(anchor))
-        .select(datediff(col("__l"), col("__f")).as("duration"),
-          (col("__l") < date_sub(col("__mx"), 7)).cast("long").as("event"))
-      graft.operators.Evaluation.kaplanMeier(subj, "duration", "event")
-    }),
-
     // ---- covariate-shift repair: map view payload values onto the
     // click distribution by exact ECDF matching ----
     "q219_quantile_match" -> ((s, dir) => {
@@ -2012,21 +1839,6 @@ object SparkEntry {
         Tables.events(s, dir).withColumn("item_id",
           graft.operators.Recsys.itemOf(col("props"))),
         cutoff = "2024-01-24 00:00:00")),
-
-    // ---- learning curve: AUC at nested 10/25/50/100% hash subsets
-    // in one scan ----
-    "q221_learning_curve" -> ((s, dir) =>
-      graft.operators.Evaluation.learningCurveAuc(
-        Tables.events(s, dir).select(col("event_id"), col("value"),
-          (col("user_id") % 5 === 0).cast("long").as("label")),
-        "event_id", "value", "label", Seq(0.1, 0.25, 0.5, 1.0))),
-
-    // ---- experiment health: sample-ratio-mismatch chi2 over an
-    // 8-way user hash bucketing ----
-    "q224_srm_check" -> ((s, dir) =>
-      graft.operators.Evaluation.sampleRatioMismatch(
-        Tables.events(s, dir).select(col("user_id")).distinct(),
-        "user_id", buckets = 8)),
 
     // ---- feature predictiveness: WOE / IV over 10 equal-count
     // value bins vs the purchase label ----
@@ -2066,11 +1878,6 @@ object SparkEntry {
     "q230_active_users" -> ((s, dir) =>
       InteractionStore.activeUserCurve(Tables.events(s, dir),
         windowDays = 7)),
-
-    // ---- revenue view of retention: cumulative per-user value by
-    // signup cohort week ----
-    "q231_cohort_ltv" -> ((s, dir) =>
-      graft.operators.Evaluation.cohortLtv(Tables.events(s, dir))),
 
     // ---- daily SLA bands: p50/p95 of the payload value per day via
     // the rank-arithmetic quantiles ----
@@ -2197,7 +2004,7 @@ object SparkEntry {
         .filter(col("item_id").isNotNull)
         .withColumn("position", row_number().over(sess))
         .filter(col("position") <= 20)
-      graft.operators.Evaluation.snipsItemCtr(imp,
+      graft.operators.Recsys.snipsItemCtr(imp,
         "item_id", "position", "__click")
     }),
 
@@ -2288,12 +2095,6 @@ object SparkEntry {
       graft.operators.Profile.joinCardinalityEstimate(
         Tables.events(s, dir), "user_id",
         Tables.orders(s, dir), "o_custkey", mcv = 20)),
-
-    // ---- distribution-free uncertainty: split-conformal [p05, p95]
-    // bands per event type, held-out coverage audited ----
-    "q254_conformal_coverage" -> ((s, dir) =>
-      graft.operators.Evaluation.conformalCoverage(
-        Tables.events(s, dir), "event_type", "value", "event_id")),
 
     // ---- consistent-hash routing: 16 -> 17 shard resize moves
     // ~1/17th of keys (measured), ring as plan-literal metadata ----
@@ -2389,27 +2190,6 @@ object SparkEntry {
 
     ,
 
-    // ---- A/B variance reduction: CUPED-adjusted means from exact
-    // integer moments (pre-period = thru Jan 15, post after; variant
-    // = user parity) ----
-    "q264_cuped" -> ((s, dir) => {
-      val units = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_millis(ts) div 86400000").as("__d"),
-          col("value"))
-        .groupBy(col("user_id"))
-        .agg(
-          (sum(when(col("__d") < 19738,
-            floor(col("value") * 1e6).cast("long")).otherwise(0L))
-            .cast("double") / 1e6).as("pre"),
-          (sum(when(col("__d") >= 19738,
-            floor(col("value") * 1e6).cast("long")).otherwise(0L))
-            .cast("double") / 1e6).as("post"))
-        .withColumn("variant", (col("user_id") % 2).cast("int"))
-      graft.operators.Evaluation.cupedAdjustedMeans(units,
-        "variant", "pre", "post")
-    }),
-
     // ---- lifecycle segmentation: R/F/M quintiles from exact global
     // boundaries (no ntile window), segment census ----
     "q265_rfm_segments" -> ((s, dir) =>
@@ -2476,22 +2256,6 @@ object SparkEntry {
             .as("is_anomaly"))
     }),
 
-    // ---- offline policy check without a new experiment: replay
-    // matches of the frequency-argmax recommender ----
-    "q269_replay_eval" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("__d", expr("unix_millis(ts) div 86400000"))
-        .withColumn("item_id",
-          graft.operators.Recsys.itemOf(col("props")))
-        .filter(col("item_id").isNotNull)
-      val train = ev.filter(col("__d") < 19738)
-        .select(col("user_id"), col("item_id"))
-      val replay = ev.filter(col("__d") >= 19738)
-        .select(col("user_id"), col("item_id"),
-          (col("event_type") === "click").cast("long").as("click"))
-      graft.operators.Evaluation.replayPolicyEval(train, replay)
-    }),
-
     // ---- right-to-be-forgotten cascade: sweep a deletion key-set
     // through raw + derived datasets, residual proven zero ----
     "q270_deletion_sweep" -> ((s, dir) => {
@@ -2528,17 +2292,6 @@ object SparkEntry {
         byUser.unionByName(byTime), "layout", "file_id", "is_upd")
     }),
 
-    // ---- which cut ships: F1 and cost-weighted operating points over
-    // the one-scan PR sweep ----
-    "q272_operating_point" -> ((s, dir) =>
-      graft.operators.Evaluation.operatingPoint(
-        Tables.events(s, dir)
-          .select(col("value").as("score"),
-            (col("event_type") === "click").cast("long").as("y")),
-        "score", "y",
-        thresholds = Seq(10.0, 50.0, 100.0, 250.0, 500.0),
-        fpCost = 1L, fnCost = 5L)),
-
     // ---- graph topology health: do popular items link popular items
     // (degree assortativity over the thresholded co-visit graph) ----
     "q273_assortativity" -> ((s, dir) =>
@@ -2553,15 +2306,6 @@ object SparkEntry {
         graft.operators.Recsys.covisitation(Tables.events(s, dir),
           recentPerUser = 30, minUsers = 12),
         ks = Seq(20L, 40L, 60L, 80L))),
-
-    // ---- is the score miscalibrated or undiscriminating: Murphy
-    // decomposition of the Brier score over rank bins ----
-    "q275_brier_decomposition" -> ((s, dir) =>
-      graft.operators.Evaluation.brierDecomposition(
-        Tables.events(s, dir)
-          .select((col("value") / lit(500.0)).as("score"),
-            (col("user_id") % 5 === 0).cast("long").as("label")),
-        "score", "label", nBins = 10)),
 
     // ---- per-key mean/variance straight off the STREAM: moments
     // state through the restart-safe sink, finished to baselines ----
@@ -2585,23 +2329,6 @@ object SparkEntry {
           round(col("mean"), 6).as("mean"),
           round(col("variance"), 6).as("variance"))
     }),
-
-    // ---- does popularity track revenue: Kendall tau-b between
-    // per-item view counts and value sums, over the top-50 items by
-    // event count (explicit TakeOrdered bound BEFORE the pairwise
-    // join — at a million-item catalog this stays 50·49/2 pairs) ----
-    "q278_rank_agreement" -> ((s, dir) =>
-      graft.operators.Evaluation.kendallTauB(
-        Tables.events(s, dir)
-          .withColumn("item_id",
-            graft.operators.Recsys.itemOf(col("props")))
-          .filter(col("item_id").isNotNull)
-          .groupBy(col("item_id"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(floor(col("value") * 1e6).cast("long"))
-              .as("value_micro")),
-        "item_id", "n_events", "value_micro",
-        topN = 50, rankBy = "n_events")),
 
     // ---- streaming session windows: flatMapGroupsWithState with
     // EventTimeTimeout, O(1) state per user; a single far-future
@@ -3946,158 +3673,6 @@ object SparkEntry {
          |  AS path_csv FROM s3""".stripMargin
     },
 
-    // Mann-Whitney U with tie-averaged ranks in exact 2x-unit integers
-    "q115_group_auc" ->
-      """WITH s AS (SELECT event_type, value,
-        |    CAST(user_id % 5 = 0 AS BIGINT) AS y,
-        |    RANK() OVER (PARTITION BY event_type ORDER BY value ASC) AS r,
-        |    COUNT(*) OVER (PARTITION BY event_type, value) AS eq
-        |  FROM events),
-        |a AS (SELECT event_type, CAST(SUM(y) AS BIGINT) AS n_pos,
-        |    CAST(SUM(1 - y) AS BIGINT) AS n_neg,
-        |    CAST(SUM(y * (2 * (r - 1) + eq + 1)) AS BIGINT) AS s2
-        |  FROM s GROUP BY event_type)
-        |SELECT event_type, n_pos, n_neg,
-        |  CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
-        |    ELSE CAST(s2 - n_pos * (n_pos + 1) AS DOUBLE)
-        |      / (2.0 * CAST(n_pos * n_neg AS DOUBLE)) END AS auc
-        |FROM a""".stripMargin,
-
-    "q116_precision_at_k" ->
-      """WITH s AS (SELECT event_type, event_id, value,
-        |    CAST(user_id % 5 = 0 AS BIGINT) AS y,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id ASC) AS rn
-        |  FROM events)
-        |SELECT event_type, COUNT(*) AS n_at_k,
-        |  CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS precision
-        |FROM s WHERE rn <= 20 GROUP BY event_type""".stripMargin,
-
-    // PINNED micro-unit discount literals (OraclePins): the engine's
-    // ndcgAtK derives them live from 1/log2(r+1), so a discount-formula
-    // mutation drifts the engine off this pin and reads RED (planting a
-    // live dcgDiscountsMicro call here is the tautology OraclePins
-    // describes)
-    "q117_ndcg" -> {
-      val disc = OraclePins.q117DiscountsMicro
-        .mkString("[", ", ", "]")
-      s"""WITH s AS (SELECT event_type,
-         |    CAST(user_id % 3 AS BIGINT) AS rel,
-         |    ROW_NUMBER() OVER (PARTITION BY event_type
-         |      ORDER BY value DESC, event_id ASC) AS r,
-         |    ROW_NUMBER() OVER (PARTITION BY event_type
-         |      ORDER BY CAST(user_id % 3 AS BIGINT) DESC, event_id ASC)
-         |      AS ri
-         |  FROM events),
-         |a AS (SELECT event_type,
-         |    CAST(SUM(CASE WHEN r <= 20 THEN rel * ($disc)[r]
-         |      ELSE 0 END) AS BIGINT) AS dcg,
-         |    CAST(SUM(CASE WHEN ri <= 20 THEN rel * ($disc)[ri]
-         |      ELSE 0 END) AS BIGINT) AS idcg
-         |  FROM s GROUP BY event_type)
-         |SELECT event_type, CASE WHEN idcg = 0 THEN NULL
-         |  ELSE CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE) END AS ndcg
-         |FROM a""".stripMargin
-    },
-
-    "q118_reciprocal_rank" ->
-      """WITH s AS (SELECT event_type,
-        |    CAST(user_id % 5 = 0 AS BIGINT) AS y,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id ASC) AS r
-        |  FROM events)
-        |SELECT event_type,
-        |  CAST(MIN(CASE WHEN y = 1 THEN r END) AS INT) AS first_pos_rank,
-        |  COALESCE(1.0 / CAST(MIN(CASE WHEN y = 1 THEN r END) AS DOUBLE),
-        |    0.0) AS rr
-        |FROM s GROUP BY event_type""".stripMargin,
-
-    // identical fixed double expression tree over exact integer counts
-    "q119_chi_square" ->
-      """WITH c AS (SELECT event_type, CAST(user_id % 4 AS BIGINT) AS ub,
-        |    COUNT(*) AS o FROM events GROUP BY 1, 2),
-        |ra AS (SELECT event_type, CAST(SUM(o) AS BIGINT) AS ta
-        |       FROM c GROUP BY 1),
-        |rb AS (SELECT ub, CAST(SUM(o) AS BIGINT) AS tb FROM c GROUP BY 1),
-        |n AS (SELECT CAST(SUM(o) AS BIGINT) AS nn FROM c)
-        |SELECT c.event_type, c.ub, c.o,
-        |  CAST(ra.ta * rb.tb AS DOUBLE) / CAST(n.nn AS DOUBLE) AS expected,
-        |  (CAST(c.o AS DOUBLE)
-        |     - CAST(ra.ta * rb.tb AS DOUBLE) / CAST(n.nn AS DOUBLE))
-        |  * (CAST(c.o AS DOUBLE)
-        |     - CAST(ra.ta * rb.tb AS DOUBLE) / CAST(n.nn AS DOUBLE))
-        |  / (CAST(ra.ta * rb.tb AS DOUBLE) / CAST(n.nn AS DOUBLE))
-        |    AS contrib
-        |FROM c JOIN ra USING (event_type) JOIN rb USING (ub)
-        |CROSS JOIN n""".stripMargin,
-
-    "q120_exposure_gini" ->
-      """WITH c AS (SELECT CAST(json_extract(props, '$.k') AS BIGINT)
-        |    AS item_id, COUNT(*) AS cnt
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL
-        |  GROUP BY 1),
-        |r AS (SELECT cnt, ROW_NUMBER() OVER (
-        |        ORDER BY cnt ASC, item_id ASC) AS rk FROM c)
-        |SELECT COUNT(*) AS n_items, CAST(SUM(cnt) AS BIGINT) AS total,
-        |  CAST(2 * SUM(rk * cnt) - (COUNT(*) + 1) * SUM(cnt) AS DOUBLE)
-        |    / CAST(COUNT(*) * SUM(cnt) AS DOUBLE) AS gini
-        |FROM r""".stripMargin,
-
-    // conf rides exact micro-unit sums; the double expression trees
-    // for conf/pos_rate/gap mirror the Spark side
-    "q121_reliability_bins" ->
-      """WITH s0 AS (SELECT value / 20.0 AS score,
-        |    CAST(user_id % 5 = 0 AS BIGINT) AS y FROM events),
-        |s AS (SELECT score,
-        |    CAST(floor(score * 1000000) AS BIGINT) AS sm, y,
-        |    PERCENT_RANK() OVER (ORDER BY score) AS pr FROM s0),
-        |b AS (SELECT sm, y,
-        |    CAST(least(floor(pr * 10), 9) AS INT) AS bin FROM s)
-        |SELECT bin, COUNT(*) AS n,
-        |  CAST(SUM(sm) AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1000000.0)
-        |    AS conf,
-        |  CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pos_rate,
-        |  abs(CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-        |    - CAST(SUM(sm) AS DOUBLE)
-        |      / (CAST(COUNT(*) AS DOUBLE) * 1000000.0)) AS gap
-        |FROM b GROUP BY bin""".stripMargin,
-
-    // division + sqrt only (both correctly-rounded IEEE ops)
-    "q122_ab_test" ->
-      """WITH s AS (SELECT CAST(date_trunc('week', ts) AS DATE) AS week,
-        |    user_id % 2 AS v,
-        |    CAST(event_type = 'click' AS BIGINT) AS y FROM events),
-        |a AS (SELECT week,
-        |    CAST(SUM(CASE WHEN v = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |    CAST(SUM(CASE WHEN v = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |    CAST(SUM(CASE WHEN v = 0 THEN y ELSE 0 END) AS BIGINT) AS pos_a,
-        |    CAST(SUM(CASE WHEN v = 1 THEN y ELSE 0 END) AS BIGINT) AS pos_b
-        |  FROM s GROUP BY week)
-        |SELECT week, n_a, n_b, pos_a, pos_b,
-        |  CAST(pos_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS p_a,
-        |  CAST(pos_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS p_b,
-        |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE
-        |    (CAST(pos_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-        |     - CAST(pos_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-        |    / sqrt((CAST(pos_a + pos_b AS DOUBLE)
-        |            / CAST(n_a + n_b AS DOUBLE))
-        |      * (1.0 - CAST(pos_a + pos_b AS DOUBLE)
-        |            / CAST(n_a + n_b AS DOUBLE))
-        |      * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
-        |  END AS z
-        |FROM a""".stripMargin,
-
-    "q123_cohort_retention" ->
-      """WITH uw AS (SELECT DISTINCT user_id,
-        |    CAST(date_trunc('week', ts) AS DATE) AS week FROM events),
-        |c AS (SELECT user_id, MIN(week) AS cohort FROM uw GROUP BY 1)
-        |SELECT c.cohort,
-        |  CAST(date_diff('day', c.cohort, uw.week) // 7 AS INT)
-        |    AS week_offset,
-        |  COUNT(DISTINCT uw.user_id) AS n_users
-        |FROM uw JOIN c USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
-
     "q124_data_quality" ->
       """WITH a AS (SELECT COUNT(*) AS n,
         |  CAST(SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -4724,33 +4299,6 @@ object SparkEntry {
         |    AS trimmed_mean
         |FROM k JOIN t USING (event_type) GROUP BY 1, 2""".stripMargin,
 
-    // q15's top-10 cosine slates -> within-slate pair join -> per-pair
-    // micro-floored (1 - cos) so the per-query sums are integer
-    // order-free on both engines
-    "q168_intra_list_diversity" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-         |           FROM embeddings WHERE vec_id < 20),
-         |scored AS (
-         |  SELECT q.query_id, e.vec_id,
-         |    ${sqlCosOf("CAST(e.embedding AS DOUBLE[])", "q.qe")} AS score
-         |  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-         |slate AS (SELECT query_id, vec_id FROM (
-         |  SELECT *, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-         |  FROM scored) WHERE rank <= 10),
-         |se AS (SELECT s.query_id, s.vec_id,
-         |         CAST(e.embedding AS DOUBLE[]) AS emb
-         |       FROM slate s JOIN embeddings e USING (vec_id)),
-         |p AS (SELECT a.query_id,
-         |    greatest(CAST(floor((1e0 - ${sqlCosOf("a.emb", "b.emb")}) * 1e6)
-         |      AS BIGINT), 0) AS d
-         |  FROM se a JOIN se b
-         |    ON a.query_id = b.query_id AND a.vec_id < b.vec_id)
-         |SELECT query_id, COUNT(*) AS n_pairs,
-         |  CAST(SUM(d) AS BIGINT) AS ild_sum_micro,
-         |  CAST(SUM(d) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS ild_mean_micro
-         |FROM p GROUP BY 1""".stripMargin,
-
     // q58's codebook/assign CTEs -> per-subspace squared distance to
     // the assigned codeword, summed in fixed subspace order, one floor
     "q169_pq_recon_error" -> {
@@ -4807,39 +4355,6 @@ object SparkEntry {
         |FROM t JOIN mid USING (event_type) JOIN lo USING (event_type)
         |  JOIN hi USING (event_type)""".stripMargin,
 
-    // q145's position CTE -> Wilson 95% interval, identical IEEE op
-    // order and the same z / z^2 double literals on both sides
-    "q175_position_ctr_wilson" ->
-      """WITH imp AS (SELECT
-        |    CAST(event_type = 'click' AS BIGINT) AS click,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-        |      ORDER BY ts, event_id) AS position
-        |  FROM events),
-        |b AS (SELECT position, COUNT(*) AS n,
-        |    CAST(SUM(click) AS BIGINT) AS clicks
-        |  FROM imp WHERE position <= 20 GROUP BY 1)
-        |SELECT position, n, clicks,
-        |  CAST(clicks AS DOUBLE) / CAST(n AS DOUBLE) AS ctr,
-        |  ((CAST(clicks AS DOUBLE) / CAST(n AS DOUBLE)
-        |      + 3.8415999999999997E0 / (2E0 * CAST(n AS DOUBLE)))
-        |    - 1.96E0 * sqrt(
-        |        CAST(clicks AS DOUBLE) / CAST(n AS DOUBLE)
-        |          * (1E0 - CAST(clicks AS DOUBLE) / CAST(n AS DOUBLE))
-        |          / CAST(n AS DOUBLE)
-        |        + 3.8415999999999997E0
-        |          / (4E0 * CAST(n AS DOUBLE) * CAST(n AS DOUBLE))))
-        |  / (1E0 + 3.8415999999999997E0 / CAST(n AS DOUBLE)) AS wilson_lo,
-        |  ((CAST(clicks AS DOUBLE) / CAST(n AS DOUBLE)
-        |      + 3.8415999999999997E0 / (2E0 * CAST(n AS DOUBLE)))
-        |    + 1.96E0 * sqrt(
-        |        CAST(clicks AS DOUBLE) / CAST(n AS DOUBLE)
-        |          * (1E0 - CAST(clicks AS DOUBLE) / CAST(n AS DOUBLE))
-        |          / CAST(n AS DOUBLE)
-        |        + 3.8415999999999997E0
-        |          / (4E0 * CAST(n AS DOUBLE) * CAST(n AS DOUBLE))))
-        |  / (1E0 + 3.8415999999999997E0 / CAST(n AS DOUBLE)) AS wilson_hi
-        |FROM b""".stripMargin,
-
     // q12's quantile_cont edges on the reference side; strict-> bin
     // assignment; round(ln, 6) for the terms (libm-ulp-safe)
     "q176_psi_drift" -> {
@@ -4871,28 +4386,6 @@ object SparkEntry {
          |  END AS psi_term
          |FROM t""".stripMargin
     },
-
-    // one grouped pass per threshold via the thresholds spine; exact
-    // counts, guarded divisions
-    "q177_pr_curve" ->
-      """WITH s AS (SELECT value AS score,
-        |    CAST(event_type = 'click' AS BIGINT) AS y FROM events),
-        |t AS (SELECT unnest([10.0E0, 50.0E0, 100.0E0, 250.0E0, 500.0E0])
-        |        AS threshold),
-        |c AS (SELECT t.threshold,
-        |    CAST(SUM(CASE WHEN s.score >= t.threshold THEN s.y
-        |             ELSE 0 END) AS BIGINT) AS tp,
-        |    CAST(SUM(CASE WHEN s.score >= t.threshold THEN 1 - s.y
-        |             ELSE 0 END) AS BIGINT) AS fp,
-        |    CAST(SUM(CASE WHEN s.score < t.threshold THEN s.y
-        |             ELSE 0 END) AS BIGINT) AS fn
-        |  FROM t, s GROUP BY 1)
-        |SELECT threshold, tp, fp, fn,
-        |  CASE WHEN tp + fp > 0 THEN
-        |    CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END AS precision,
-        |  CASE WHEN tp + fn > 0 THEN
-        |    CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END AS recall
-        |FROM c""".stripMargin,
 
     "q180_ann_recall" ->
       s"""WITH p AS (SELECT greatest(count(*) // 8, 1) AS stride FROM embeddings),
@@ -5074,38 +4567,6 @@ object SparkEntry {
          |WHERE cosine > 0.3E0""".stripMargin
     },
 
-    // both retriever rank lists in SQL (same tie orders as topK), FULL
-    // JOIN on (query, item), rrf summed left-to-right with absent
-    // entries as 0 — identical IEEE order to reciprocalRankFusion
-    "q185_rrf_fusion" ->
-      s"""WITH q AS (SELECT vec_id AS query_id,
-         |            CAST(embedding AS DOUBLE[]) AS qe
-         |          FROM embeddings WHERE vec_id < 8),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-         |      FROM embeddings),
-         |cosr AS (SELECT query_id, vec_id, rank FROM (
-         |  SELECT q.query_id, e.vec_id, ROW_NUMBER() OVER (
-         |    PARTITION BY q.query_id ORDER BY
-         |      ${sqlCosOf("e.emb", "q.qe")} DESC, e.vec_id ASC) AS rank
-         |  FROM e, q WHERE e.vec_id <> q.query_id) WHERE rank <= 10),
-         |dotr AS (SELECT query_id, vec_id, rank FROM (
-         |  SELECT q.query_id, e.vec_id, ROW_NUMBER() OVER (
-         |    PARTITION BY q.query_id ORDER BY
-         |      ${sqlDotOf("e.emb", "q.qe")} DESC, e.vec_id ASC) AS rank
-         |  FROM e, q WHERE e.vec_id <> q.query_id) WHERE rank <= 10),
-         |f AS (SELECT coalesce(a.query_id, b.query_id) AS query_id,
-         |        coalesce(a.vec_id, b.vec_id) AS vec_id,
-         |        coalesce(1.0E0 / (60.0E0 + CAST(a.rank AS DOUBLE)), 0.0E0)
-         |          + coalesce(1.0E0 / (60.0E0 + CAST(b.rank AS DOUBLE)), 0.0E0)
-         |          AS rrf_score
-         |      FROM cosr a FULL JOIN dotr b
-         |        ON a.query_id = b.query_id AND a.vec_id = b.vec_id)
-         |SELECT query_id, vec_id, rrf_score,
-         |  CAST(fused_rank AS INT) AS fused_rank FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |    ORDER BY rrf_score DESC, vec_id ASC) AS fused_rank FROM f)
-         |WHERE fused_rank <= 10""".stripMargin,
-
     // q72's sketch CTEs paired; theta-intersection arithmetic matches
     // kmvIntersectEstimate term for term; exact leg from the distinct
     // (segment, user) self-join
@@ -5229,30 +4690,6 @@ object SparkEntry {
         |  CAST(m.cat_count AS DOUBLE) / CAST(m.t AS DOUBLE) AS cat_freq
         |FROM documents d JOIN m ON CAST(d.source AS VARCHAR) = m.k""".stripMargin,
 
-    // per-rank precision terms micro-rounded before the group sum;
-    // AP = micro-sum / 1e6 / min(R, k) — identical IEEE order
-    "q194_map_at_k" ->
-      """WITH s AS (SELECT event_type,
-        |    CAST(user_id % 5 = 0 AS BIGINT) AS y,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id ASC) AS r,
-        |    SUM(CAST(user_id % 5 = 0 AS BIGINT)) OVER (
-        |      PARTITION BY event_type
-        |      ORDER BY value DESC, event_id ASC
-        |      ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM events)
-        |SELECT event_type,
-        |  CAST(SUM(y) AS BIGINT) AS n_pos,
-        |  CAST(SUM(CASE WHEN r <= 20 THEN y ELSE 0 END) AS BIGINT)
-        |    AS n_pos_at_k,
-        |  CASE WHEN LEAST(SUM(y), 20) > 0 THEN
-        |    CAST(SUM(CASE WHEN r <= 20 AND y = 1 THEN
-        |      CAST(ROUND(CAST(cum AS DOUBLE) / CAST(r AS DOUBLE) * 1e6)
-        |        AS BIGINT) ELSE 0 END) AS DOUBLE) / 1e6
-        |      / CAST(LEAST(SUM(y), 20) AS DOUBLE)
-        |  END AS ap
-        |FROM s GROUP BY event_type""".stripMargin,
-
     // one moment scan (xsum staging), pairs unpivot from the one-row
     // aggregate; r recomputed with the identical IEEE expression tree
     "q195_corr_matrix" -> {
@@ -5369,32 +4806,6 @@ object SparkEntry {
         |FROM probes p JOIN tab t ON p.d = t.d AND p.bucket = t.bucket
         |GROUP BY p.item, p.exact""".stripMargin,
 
-    // per-(replicate, row) Poisson weight from the same "b:id" md5;
-    // PINNED CDF threshold literals (OraclePins) — the engine derives
-    // its thresholds live from the e^-1 series, so a CDF-generation
-    // mutation drifts it off this pin (a live call here is the
-    // tautology OraclePins describes)
-    "q201_poisson_bootstrap" -> {
-      // E0 suffix: parse as DOUBLE, not DECIMAL (decimal->double
-      // conversion can land 1 ulp off the text->double parse)
-      val wExpr = OraclePins.q201PoissonCdf
-        .map(c => s"(CASE WHEN u >= ${c}E0 THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH bs AS (SELECT unnest(generate_series(0, 31)) AS b),
-         |p AS (SELECT CAST(event_id AS VARCHAR) AS id,
-         |    CAST(ROUND(CAST(value AS DOUBLE) * 1e6) AS BIGINT) AS xm
-         |  FROM events WHERE value IS NOT NULL),
-         |u AS (SELECT b, xm,
-         |    CAST(('0x'||substr(md5(CAST(b AS VARCHAR)||':'||id), 1, 8))
-         |      AS BIGINT) / 4294967296.0 AS u FROM p, bs),
-         |w AS (SELECT b, xm, ($wExpr) AS w FROM u)
-         |SELECT CAST(b AS INT) AS rep, CAST(SUM(w) AS BIGINT) AS n_eff,
-         |  CASE WHEN SUM(w) > 0 THEN
-         |    CAST(SUM(w * xm) AS DOUBLE) / 1e6 / CAST(SUM(w) AS DOUBLE)
-         |  END AS mean_boot
-         |FROM w GROUP BY b""".stripMargin
-    },
-
     // decimal-staged window sums; z recomputed with the identical
     // IEEE chain; is_anomaly from the z CTE column
     "q202_rolling_zscore" ->
@@ -5423,7 +4834,8 @@ object SparkEntry {
     // micro-unit integer staging makes the first significant digit a
     // string head — no log10 boundary hazards
     "q203_benford" -> {
-      // E0 suffix: DOUBLE literals, not DECIMAL (see q201 note).
+      // E0 suffix: parse as DOUBLE, not DECIMAL (decimal->double
+      // conversion can land 1 ulp off the text->double parse).
       // PINNED P(d) literals (OraclePins) — the engine computes
       // log10(1+1/d) live, so a formula mutation reads RED here
       val pList = OraclePins.q203BenfordP
@@ -5444,41 +4856,6 @@ object SparkEntry {
          |    / (expected_p * td) AS chi2_term
          |FROM x""".stripMargin
     },
-
-    // most-popular-complement recs -> self-information novelty terms
-    // in micro-bits; coverage over the interaction catalog
-    "q204_coverage_novelty" ->
-      """WITH inter AS (SELECT user_id,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id
-        |  FROM events
-        |  WHERE CAST(json_extract(props, '$.k') AS BIGINT) IS NOT NULL),
-        |pop AS (SELECT item_id, COUNT(*) AS pop FROM inter GROUP BY 1),
-        |topm AS (SELECT item_id, pop FROM pop
-        |         ORDER BY pop DESC, item_id ASC LIMIT 20),
-        |users AS (SELECT DISTINCT user_id FROM inter),
-        |hist AS (SELECT DISTINCT user_id, item_id FROM inter),
-        |recs AS (SELECT user_id, item_id FROM (
-        |    SELECT u.user_id, t.item_id,
-        |      ROW_NUMBER() OVER (PARTITION BY u.user_id
-        |        ORDER BY t.pop DESC, t.item_id ASC) AS rnk
-        |    FROM users u CROSS JOIN topm t
-        |    WHERE NOT EXISTS (SELECT 1 FROM hist h
-        |      WHERE h.user_id = u.user_id AND h.item_id = t.item_id))
-        |  WHERE rnk <= 3),
-        |tot AS (SELECT CAST(SUM(pop) AS BIGINT) AS t,
-        |    COUNT(*) AS catalog FROM pop),
-        |terms AS (SELECT r.item_id,
-        |    CAST(ROUND(-LOG2(CAST(p.pop AS DOUBLE) / CAST(tt.t AS DOUBLE))
-        |      * 1e6) AS BIGINT) AS term, tt.catalog
-        |  FROM recs r JOIN pop p USING (item_id), tot tt)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_recs,
-        |  CAST(COUNT(DISTINCT item_id) AS BIGINT) AS n_rec_items,
-        |  CAST(MAX(catalog) AS BIGINT) AS n_catalog,
-        |  CAST(COUNT(DISTINCT item_id) AS DOUBLE)
-        |    / CAST(MAX(catalog) AS DOUBLE) AS coverage,
-        |  CAST(SUM(term) AS DOUBLE) / 1e6 / CAST(COUNT(*) AS DOUBLE)
-        |    AS novelty
-        |FROM terms""".stripMargin,
 
     // distinct-value cumulative counts; the target rank in pure
     // integer arithmetic ((pm*n + 999999) // 1e6)
@@ -5522,25 +4899,6 @@ object SparkEntry {
         |  CAST(MAX(xm) AS DOUBLE) / 1e6 AS hi,
         |  CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pos_rate
         |FROM r, t GROUP BY 1""".stripMargin,
-
-    // q115's tie-aware rank AUC per md5-assigned user fold
-    "q208_kfold_auc" ->
-      """WITH s AS (SELECT
-        |    CAST(('0x'||substr(md5('21:'||CAST(user_id AS VARCHAR)),
-        |      1, 8)) AS BIGINT) % 5 AS fold, value,
-        |    CAST(user_id % 5 = 0 AS BIGINT) AS y FROM events),
-        |r AS (SELECT fold, y,
-        |    RANK() OVER (PARTITION BY fold ORDER BY value ASC) AS r,
-        |    COUNT(*) OVER (PARTITION BY fold, value) AS eq FROM s),
-        |a AS (SELECT fold, CAST(SUM(y) AS BIGINT) AS n_pos,
-        |    CAST(SUM(1 - y) AS BIGINT) AS n_neg,
-        |    CAST(SUM(y * (2 * (r - 1) + eq + 1)) AS BIGINT) AS s2
-        |  FROM r GROUP BY fold)
-        |SELECT fold, n_pos, n_neg,
-        |  CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
-        |    ELSE CAST(s2 - n_pos * (n_pos + 1) AS DOUBLE)
-        |      / (2.0 * CAST(n_pos * n_neg AS DOUBLE)) END AS auc
-        |FROM a""".stripMargin,
 
     // epoch = #prior conversions (window cumsum); per-epoch per-type
     // credit micro-rounded before the cross-epoch integer sum
@@ -5707,36 +5065,6 @@ object SparkEntry {
         .stripMargin
     },
 
-    // at-risk from one prefix sum; micro-nat log factors cumsum; a
-    // full-death time pins survival to 0 from there on
-    "q218_kaplan_meier" ->
-      """WITH u AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS f,
-        |    MAX(CAST(ts AS DATE)) AS l FROM events GROUP BY 1),
-        |a AS (SELECT MAX(CAST(ts AS DATE)) AS mx FROM events),
-        |s AS (SELECT CAST(datediff('day', f, l) AS BIGINT) AS t,
-        |    CAST(l < mx - INTERVAL 7 DAY AS BIGINT) AS ev FROM u, a),
-        |c AS (SELECT t, CAST(SUM(ev) AS BIGINT) AS d,
-        |    CAST(SUM(1 - ev) AS BIGINT) AS cns FROM s GROUP BY t),
-        |tot AS (SELECT CAST(SUM(d + cns) AS BIGINT) AS n FROM c),
-        |w AS (SELECT *, CAST(SUM(d + cns) OVER (ORDER BY t
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM c),
-        |r AS (SELECT t, d, cns, tot.n - cum + d + cns AS nr
-        |      FROM w, tot),
-        |lt AS (SELECT *, CASE WHEN d > 0 AND d < nr THEN
-        |      CAST(ROUND(LN(1.0 - CAST(d AS DOUBLE) / CAST(nr AS DOUBLE))
-        |        * 1e6) AS BIGINT) ELSE 0 END AS term,
-        |    CASE WHEN d = nr THEN 1 ELSE 0 END AS dead FROM r),
-        |z AS (SELECT t, nr, d, cns,
-        |    CAST(SUM(term) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
-        |      AS BIGINT) AS ct,
-        |    CAST(SUM(dead) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
-        |      AS BIGINT) AS dc FROM lt)
-        |SELECT t AS duration, nr AS n_risk, d AS d_events,
-        |  cns AS n_censored,
-        |  CASE WHEN dc > 0 THEN 0.0
-        |    ELSE ROUND(EXP(CAST(ct AS DOUBLE) / 1e6), 6) END AS survival
-        |FROM z""".stripMargin,
-
     // both ECDFs as distinct-value rank tables; probe rank k =
     // ceil(cum_src * n_ref / n_src) in integers; interval lookup
     "q219_quantile_match" ->
@@ -5793,43 +5121,6 @@ object SparkEntry {
         |  CAST(ui.nui AS DOUBLE) / CAST(b.nti AS DOUBLE)
         |    AS item_cold_rate
         |FROM b, uu, ui""".stripMargin,
-
-    // nested hash subsets (u < fraction) -> q115's rank AUC per cut
-    "q221_learning_curve" ->
-      """WITH f AS (SELECT unnest([0.1E0, 0.25E0, 0.5E0, 1.0E0])
-        |           AS fraction),
-        |s AS (SELECT f.fraction, e.value,
-        |    CAST(e.user_id % 5 = 0 AS BIGINT) AS y
-        |  FROM events e, f
-        |  WHERE CAST(('0x'||substr(md5('33:'||CAST(e.event_id
-        |      AS VARCHAR)), 1, 8)) AS BIGINT) / 4294967296.0
-        |    < f.fraction),
-        |r AS (SELECT fraction, y,
-        |    RANK() OVER (PARTITION BY fraction ORDER BY value ASC) AS r,
-        |    COUNT(*) OVER (PARTITION BY fraction, value) AS eq FROM s),
-        |a AS (SELECT fraction, CAST(SUM(y) AS BIGINT) AS n_pos,
-        |    CAST(SUM(1 - y) AS BIGINT) AS n_neg,
-        |    CAST(SUM(y * (2 * (r - 1) + eq + 1)) AS BIGINT) AS s2
-        |  FROM r GROUP BY fraction)
-        |SELECT fraction, n_pos, n_neg,
-        |  CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
-        |    ELSE CAST(s2 - n_pos * (n_pos + 1) AS DOUBLE)
-        |      / (2.0 * CAST(n_pos * n_neg AS DOUBLE)) END AS auc
-        |FROM a""".stripMargin,
-
-    // uniform expectation over the distinct-user md5 bucketing
-    "q224_srm_check" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-        |c AS (SELECT CAST(('0x'||substr(md5('51:'||CAST(user_id
-        |      AS VARCHAR)), 1, 8)) AS BIGINT) % 8 AS bucket,
-        |    COUNT(*) AS n_obs FROM u GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS t FROM c)
-        |SELECT bucket, CAST(n_obs AS BIGINT) AS n_obs,
-        |  CAST(t.t AS DOUBLE) / 8.0E0 AS n_expected,
-        |  (CAST(n_obs AS DOUBLE) - CAST(t.t AS DOUBLE) / 8.0E0)
-        |    * (CAST(n_obs AS DOUBLE) - CAST(t.t AS DOUBLE) / 8.0E0)
-        |    / (CAST(t.t AS DOUBLE) / 8.0E0) AS chi2_term
-        |FROM c, t""".stripMargin,
 
     // q206's equal-count bins at 10 -> WOE (micro-nat) and IV terms
     "q225_weight_of_evidence" ->
@@ -5992,30 +5283,6 @@ object SparkEntry {
         |  CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE)
         |    AS stickiness
         |FROM dau JOIN wau ON wau.d = dau.day""".stripMargin,
-
-    // per-user cohort anchor; micro-unit weekly sums; per-cohort
-    // cumulative prefix
-    "q231_cohort_ltv" ->
-      """WITH s AS (SELECT user_id,
-        |    epoch_ms(ts) // 604800000 AS wk,
-        |    CAST(ROUND(CAST(value AS DOUBLE) * 1e6) AS BIGINT) AS vm
-        |  FROM events),
-        |c AS (SELECT user_id,
-        |    MIN(wk) OVER (PARTITION BY user_id) AS cohort, wk, vm
-        |  FROM s),
-        |sizes AS (SELECT cohort, COUNT(*) AS nu FROM (
-        |    SELECT DISTINCT user_id, cohort FROM c) GROUP BY cohort),
-        |weekly AS (SELECT cohort, wk - cohort AS off,
-        |    CAST(SUM(vm) AS BIGINT) AS wv FROM c GROUP BY 1, 2),
-        |cum AS (SELECT cohort, off, wv,
-        |    CAST(SUM(wv) OVER (PARTITION BY cohort ORDER BY off
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cv FROM weekly)
-        |SELECT cohort AS cohort_week, off AS offset_weeks,
-        |  CAST(sizes.nu AS BIGINT) AS n_cohort_users,
-        |  CAST(wv AS DOUBLE) / 1e6 AS week_value,
-        |  CAST(cv AS DOUBLE) / 1e6 / CAST(sizes.nu AS DOUBLE)
-        |    AS cum_value_per_user
-        |FROM cum JOIN sizes USING (cohort)""".stripMargin,
 
     // q205's rank-quantile machinery grouped by calendar day
     "q232_daily_quantiles" -> {
@@ -6427,50 +5694,6 @@ object SparkEntry {
         |    / CAST(actual AS DOUBLE), 6) AS mcv_rel_err
         |FROM x""".stripMargin,
 
-    "q254_conformal_coverage" -> {
-      val probs = Seq(0.05, 0.95)
-      val pL = probs.map(p => s"${p}E0").mkString("[", ", ", "]")
-      val pmL = probs.map(p => math.round(p * 1e6)).mkString("[", ", ", "]")
-      s"""WITH st AS (SELECT event_type, value,
-         |    ${sqlHash32(13, "CAST(event_id AS VARCHAR)")} % 100 AS h
-         |  FROM events),
-         |s AS (SELECT event_type,
-         |    CAST(ROUND(CAST(value AS DOUBLE) * 1e6) AS BIGINT) AS vm
-         |  FROM st WHERE h < 80 AND value IS NOT NULL),
-         |c AS (SELECT event_type, vm, COUNT(*) AS cnt FROM s GROUP BY 1, 2),
-         |w AS (SELECT event_type, vm, cnt,
-         |    CAST(SUM(cnt) OVER (PARTITION BY event_type ORDER BY vm
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS hi FROM c),
-         |n AS (SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS n
-         |      FROM c GROUP BY 1),
-         |p AS (SELECT unnest($pL) AS prob, unnest($pmL) AS pm),
-         |k AS (SELECT n.event_type, n.n, p.prob,
-         |    GREATEST(1, (p.pm * n.n + 999999) // 1000000) AS kk
-         |  FROM n, p),
-         |q AS (SELECT k.event_type, k.prob, k.n,
-         |    CAST(w.vm AS DOUBLE) / 1e6 AS quantile
-         |  FROM k JOIN w ON w.event_type = k.event_type
-         |    AND w.hi - w.cnt < k.kk AND k.kk <= w.hi),
-         |b AS (SELECT event_type,
-         |    MAX(CASE WHEN prob = 0.05E0 THEN quantile END) AS lo,
-         |    MAX(CASE WHEN prob = 0.95E0 THEN quantile END) AS hi,
-         |    CAST(MAX(n) AS BIGINT) AS n_train FROM q GROUP BY 1),
-         |te AS (SELECT event_type,
-         |    CAST(ROUND(CAST(value AS DOUBLE) * 1e6) AS BIGINT) AS vm
-         |  FROM st WHERE h >= 80),
-         |j AS (SELECT te.event_type, n_train, lo, hi,
-         |    CASE WHEN vm >= CAST(ROUND(lo * 1.0E6) AS BIGINT)
-         |         AND vm <= CAST(ROUND(hi * 1.0E6) AS BIGINT)
-         |      THEN 1 ELSE 0 END AS cov
-         |  FROM te JOIN b USING (event_type))
-         |SELECT event_type, MAX(n_train) AS n_train, MAX(lo) AS lo,
-         |  MAX(hi) AS hi, CAST(COUNT(*) AS BIGINT) AS n_test,
-         |  CAST(SUM(cov) AS BIGINT) AS n_covered,
-         |  ROUND(CAST(SUM(cov) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-         |    AS coverage
-         |FROM j GROUP BY 1""".stripMargin
-    },
-
     "q255_shard_rebalance" ->
       """WITH ring17 AS (SELECT
         |    CAST(('0x'||substr(md5('ring:'||CAST(t1.s AS VARCHAR)||':'
@@ -6677,48 +5900,6 @@ object SparkEntry {
         |    6) AS delta
         |FROM g, t""".stripMargin,
 
-    "q264_cuped" ->
-      """WITH u AS (SELECT user_id,
-        |    CAST(SUM(CASE WHEN epoch_ms(ts) // 86400000 < 19738
-        |      THEN CAST(floor(value * 1.0E6) AS BIGINT) ELSE 0 END)
-        |      AS DOUBLE) / 1.0E6 AS pre,
-        |    CAST(SUM(CASE WHEN epoch_ms(ts) // 86400000 >= 19738
-        |      THEN CAST(floor(value * 1.0E6) AS BIGINT) ELSE 0 END)
-        |      AS DOUBLE) / 1.0E6 AS post,
-        |    CAST(user_id % 2 AS INT) AS variant
-        |  FROM events GROUP BY 1),
-        |st AS (SELECT variant, CAST(floor(pre * 1.0E6) AS BIGINT) AS x,
-        |    CAST(floor(post * 1.0E6) AS BIGINT) AS y FROM u),
-        |mom AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    SUM(CAST(x AS HUGEINT)) AS sx, SUM(CAST(y AS HUGEINT)) AS sy,
-        |    SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-        |    SUM(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-        |    SUM(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy FROM st),
-        |pv AS (SELECT variant, CAST(COUNT(*) AS BIGINT) AS n_units,
-        |    SUM(CAST(x AS HUGEINT)) AS vx, SUM(CAST(y AS HUGEINT)) AS vy
-        |  FROM st GROUP BY 1),
-        |c AS (SELECT pv.variant, pv.n_units, pv.vx, pv.vy, mom.n, mom.sx,
-        |    CAST(n * sxy - sx * sy AS DOUBLE) AS covn,
-        |    CAST(n * sxx - sx * sx AS DOUBLE) AS varxn,
-        |    CAST(n * syy - sy * sy AS DOUBLE) AS varyn
-        |  FROM pv, mom),
-        |t AS (SELECT *,
-        |    CASE WHEN varxn > 0.0E0 THEN covn / varxn
-        |         ELSE 0.0E0 END AS theta,
-        |    CASE WHEN varxn > 0.0E0 AND varyn > 0.0E0
-        |         THEN covn * covn / (varxn * varyn)
-        |         ELSE 0.0E0 END AS rho2 FROM c)
-        |SELECT variant, n_units,
-        |  ROUND(CAST(vy AS DOUBLE) / (CAST(n_units AS DOUBLE) * 1.0E6), 6)
-        |    AS mean_post,
-        |  ROUND((CAST(vy AS DOUBLE) / (CAST(n_units AS DOUBLE) * 1.0E6))
-        |    - theta * ((CAST(vx AS DOUBLE)
-        |        / (CAST(n_units AS DOUBLE) * 1.0E6))
-        |      - (CAST(sx AS DOUBLE) / (CAST(n AS DOUBLE) * 1.0E6))), 6)
-        |    AS mean_adjusted,
-        |  ROUND(theta, 6) AS theta, ROUND(rho2, 6) AS var_reduction
-        |FROM t""".stripMargin,
-
     "q265_rfm_segments" -> {
       val pp = "pp AS (SELECT unnest([0.2E0, 0.4E0, 0.6E0, 0.8E0])" +
         " AS prob, unnest([200000, 400000, 600000, 800000]) AS pm)"
@@ -6815,32 +5996,6 @@ object SparkEntry {
         |       THEN CAST(ABS(zr) > 3.0E0 AS INT) END AS is_anomaly
         |FROM z""".stripMargin,
 
-    "q269_replay_eval" ->
-      """WITH it AS (SELECT user_id,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id,
-        |    event_type, epoch_ms(ts) // 86400000 AS d
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL),
-        |tr AS (SELECT user_id, item_id, COUNT(*) AS c FROM it
-        |       WHERE d < 19738 GROUP BY 1, 2),
-        |pol AS (SELECT user_id, item_id AS rec FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY c DESC, item_id ASC) AS rn FROM tr) WHERE rn = 1),
-        |rp AS (SELECT i.user_id, i.item_id,
-        |    CAST(i.event_type = 'click' AS BIGINT) AS click, p.rec
-        |  FROM it i LEFT JOIN pol p ON p.user_id = i.user_id
-        |  WHERE i.d >= 19738)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_logged,
-        |  CAST(SUM(CASE WHEN item_id = rec THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_matched,
-        |  ROUND(CAST(SUM(CASE WHEN item_id = rec THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS match_rate,
-        |  ROUND(CAST(SUM(CASE WHEN item_id = rec THEN click ELSE 0 END)
-        |    AS DOUBLE) / CAST(SUM(CASE WHEN item_id = rec THEN 1 ELSE 0
-        |    END) AS DOUBLE), 6) AS replay_ctr,
-        |  ROUND(CAST(SUM(click) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-        |    AS logged_ctr
-        |FROM rp""".stripMargin,
-
     "q270_deletion_sweep" ->
       """WITH e AS (SELECT CAST(COUNT(*) AS BIGINT) AS b,
         |    CAST(SUM(CASE WHEN user_id % 7 = 0 THEN 1 ELSE 0 END)
@@ -6883,38 +6038,6 @@ object SparkEntry {
         |  ROUND(CAST(SUM(CASE WHEN upd > 0 THEN rows_ ELSE 0 END)
         |    AS DOUBLE) / CAST(SUM(upd) AS DOUBLE), 6) AS write_amp
         |FROM pf GROUP BY 1""".stripMargin,
-
-    "q272_operating_point" ->
-      """WITH s AS (SELECT value AS score,
-        |    CAST(event_type = 'click' AS BIGINT) AS y FROM events),
-        |t AS (SELECT unnest([10.0E0, 50.0E0, 100.0E0, 250.0E0, 500.0E0])
-        |        AS threshold),
-        |c AS (SELECT t.threshold,
-        |    CAST(SUM(CASE WHEN s.score >= t.threshold THEN s.y
-        |             ELSE 0 END) AS BIGINT) AS tp,
-        |    CAST(SUM(CASE WHEN s.score >= t.threshold THEN 1 - s.y
-        |             ELSE 0 END) AS BIGINT) AS fp,
-        |    CAST(SUM(CASE WHEN s.score < t.threshold THEN s.y
-        |             ELSE 0 END) AS BIGINT) AS fn
-        |  FROM t, s GROUP BY 1),
-        |f AS (SELECT *,
-        |    CASE WHEN 2 * tp + fp + fn > 0 THEN
-        |      2 * CAST(tp AS DOUBLE) / CAST(2 * tp + fp + fn AS DOUBLE)
-        |      ELSE 0.0E0 END AS f1r,
-        |    fp * 1 + fn * 5 AS cost FROM c),
-        |bf AS (SELECT min(threshold) AS bft FROM f
-        |       WHERE f1r = (SELECT max(f1r) FROM f)),
-        |mc AS (SELECT min(threshold) AS mct FROM f
-        |       WHERE cost = (SELECT min(cost) FROM f))
-        |SELECT threshold, tp, fp, fn,
-        |  CASE WHEN tp + fp > 0 THEN
-        |    CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END AS precision,
-        |  CASE WHEN tp + fn > 0 THEN
-        |    CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END AS recall,
-        |  ROUND(f1r, 6) AS f1, CAST(cost AS BIGINT) AS cost,
-        |  (threshold = bft) AS is_best_f1,
-        |  (threshold = mct) AS is_min_cost
-        |FROM f, bf, mc""".stripMargin,
 
     "q273_assortativity" ->
       """WITH ui AS (
@@ -6986,47 +6109,6 @@ object SparkEntry {
         |FROM nc LEFT JOIN ec ON ec.k = nc.k
         |WHERE n_club > 1""".stripMargin,
 
-    "q275_brier_decomposition" ->
-      """WITH s0 AS (SELECT value / 500.0 AS score,
-        |    CAST(user_id % 5 = 0 AS BIGINT) AS y FROM events),
-        |s AS (SELECT CAST(floor(score * 1000000) AS BIGINT) AS fm, y,
-        |    PERCENT_RANK() OVER (ORDER BY score) AS pr FROM s0),
-        |b AS (SELECT fm, y,
-        |    CAST(least(floor(pr * 10), 9) AS INT) AS bin FROM s),
-        |pb AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS nb,
-        |    CAST(SUM(fm) AS BIGINT) AS sf, CAST(SUM(y) AS BIGINT) AS sy,
-        |    SUM(CAST((fm - y * 1000000) * (fm - y * 1000000) AS HUGEINT))
-        |      AS sq
-        |  FROM b GROUP BY 1),
-        |g AS (SELECT CAST(SUM(nb) AS BIGINT) AS n,
-        |    CAST(SUM(sy) AS BIGINT) AS gy, SUM(sq) AS gsq FROM pb),
-        |t AS (SELECT nb,
-        |    CAST(sf AS DOUBLE) / (CAST(nb AS DOUBLE) * 1.0E6) AS fb,
-        |    CAST(sy AS DOUBLE) / CAST(nb AS DOUBLE) AS ob,
-        |    CAST(gy AS DOUBLE) / CAST(n AS DOUBLE) AS obar,
-        |    n, gy, gsq FROM pb, g),
-        |m AS (SELECT n, gy, gsq,
-        |    CAST(SUM(CAST(round(CAST(nb AS DOUBLE) * (fb - ob) * (fb - ob)
-        |      * 1.0E6) AS BIGINT)) AS BIGINT) AS relm,
-        |    CAST(SUM(CAST(round(CAST(nb AS DOUBLE) * (ob - obar)
-        |      * (ob - obar) * 1.0E6) AS BIGINT)) AS BIGINT) AS resm
-        |  FROM t GROUP BY 1, 2, 3),
-        |r AS (SELECT n,
-        |    ROUND(CAST(gsq AS DOUBLE) / (CAST(n AS DOUBLE) * 1.0E12), 6)
-        |      AS brier,
-        |    ROUND(CAST(relm AS DOUBLE) / (CAST(n AS DOUBLE) * 1.0E6), 6)
-        |      AS reliability,
-        |    ROUND(CAST(resm AS DOUBLE) / (CAST(n AS DOUBLE) * 1.0E6), 6)
-        |      AS resolution,
-        |    ROUND((CAST(gy AS DOUBLE) / CAST(n AS DOUBLE))
-        |      * (1.0E0 - CAST(gy AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-        |      AS uncertainty
-        |  FROM m)
-        |SELECT n, brier, reliability, resolution, uncertainty,
-        |  ROUND(brier - (reliability - resolution + uncertainty), 6)
-        |    AS decomp_gap
-        |FROM r""".stripMargin,
-
     "q277_stream_moments" ->
       """SELECT event_type, CAST(COUNT(value) AS BIGINT) AS cnt,
         |  ROUND(CAST(SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6)))
@@ -7039,36 +6121,7 @@ object SparkEntry {
         |      * (CAST(SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6)))
         |        AS DOUBLE) / CAST(COUNT(value) AS DOUBLE)), 6)
         |    AS variance
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q278_rank_agreement" ->
-      """WITH it AS (SELECT CAST(json_extract(props, '$.k') AS BIGINT)
-        |      AS item_id,
-        |    CAST(floor(value * 1.0E6) AS BIGINT) AS vm
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL),
-        |g0 AS (SELECT item_id, CAST(COUNT(*) AS BIGINT) AS x,
-        |    CAST(SUM(vm) AS BIGINT) AS y FROM it GROUP BY 1),
-        |g AS (SELECT * FROM g0 ORDER BY x DESC, item_id ASC LIMIT 50),
-        |p AS (SELECT a.x AS xa, a.y AS ya, b.x AS xb, b.y AS yb
-        |  FROM g a JOIN g b ON a.item_id < b.item_id),
-        |c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n0,
-        |    CAST(SUM(CASE WHEN (xa < xb AND ya < yb)
-        |      OR (xa > xb AND ya > yb) THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS concordant,
-        |    CAST(SUM(CASE WHEN (xa < xb AND ya > yb)
-        |      OR (xa > xb AND ya < yb) THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS discordant,
-        |    CAST(SUM(CASE WHEN xa = xb THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS ties_x,
-        |    CAST(SUM(CASE WHEN ya = yb THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS ties_y
-        |  FROM p)
-        |SELECT n0, concordant, discordant, ties_x, ties_y,
-        |  ROUND(CASE WHEN (n0 - ties_x) > 0 AND (n0 - ties_y) > 0
-        |    THEN CAST(concordant - discordant AS DOUBLE)
-        |      / sqrt(CAST(n0 - ties_x AS DOUBLE)
-        |          * CAST(n0 - ties_y AS DOUBLE)) END, 6) AS tau_b
-        |FROM c""".stripMargin
+        |FROM events GROUP BY 1""".stripMargin
   )
 
   /** q139's oracle for a given pinned rotation matrix (the engine

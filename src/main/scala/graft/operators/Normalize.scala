@@ -85,7 +85,7 @@ object Normalize {
   }
 
   /** Isotonic calibration via pool-adjacent-violators, fit on a
-    * reliability table (e.g. [[Evaluation.reliabilityBins]]'s output):
+    * reliability table (e.g. [[calibrationBins]]'s output):
     * bins ordered by `orderCol` get the maximal non-decreasing fit to
     * their positive rates under bin weights. The ONLY driver-side data
     * is the bin table itself — bounded by `nBins` at construction,

@@ -17,8 +17,8 @@ import graft.OracleMath.xsum
   * aggregates all ride a single `agg(...)` (Catalyst plans the exact
   * distinct counts via one Expand — |cols|+1 projections of the scan,
   * partial-aggregated map-side), and the single result row unpivots
-  * row-locally into one row per column ([[Evaluation.prCurve]]'s
-  * inline-array convention — never a per-column pass over the data).
+  * row-locally into one row per column (an inline array exploded
+  * per row — never a per-column pass over the data).
   * All outputs are exact (counts, min/max) — no sampled or
   * approximate figures, so the audit is engine-reproducible.
   */

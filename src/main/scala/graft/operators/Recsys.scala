@@ -688,37 +688,100 @@ object Recsys {
           .as("jaccard"))
   }
 
-  /** Popularity-complement baseline recommender: each user gets the
-    * `perUser` most popular items (by interaction count, item-id
-    * tiebreak) they have NOT interacted with — the classic
-    * most-popular baseline every beyond-accuracy metric
-    * ([[Evaluation.coverageNovelty]]) is calibrated against.
+  /** Inverse-propensity-scored (IPS) item click totals — the
+    * position-debiased popularity estimate: each click at display
+    * position `p` counts `1/propensity(p)`, with `propensity(p) =
+    * ctr(p)/ctr(1)` estimated from the same log (the q145 curve).
+    * Corrects the "rank-1 items look better because rank 1 gets seen"
+    * feedback loop before the counts feed training.
     *
-    * == Scale ==
-    * The candidate pool is the global top-`topM` (TakeOrdered — the
-    * full item domain is never sorted), broadcast into a users ×
-    * topM fan-out (constant per user); the only data-sized shuffle is
-    * the history anti-join on (user, item). Output:
-    * `(user_id, item_id, rank)`. */
-  def popularityComplementRecs(
-      events: DataFrame, topM: Int, perUser: Int): DataFrame = {
-    require(topM >= perUser && perUser >= 1,
-      s"need topM >= perUser >= 1, got $topM, $perUser")
-    val inter = events
-      .select(col("user_id"), itemOf(col("props")).as("item_id"))
-      .filter(col("item_id").isNotNull)
-    val top = inter.groupBy(col("item_id"))
-      .agg(count(lit(1)).as("__pop"))
-      .orderBy(col("__pop").desc, col("item_id").asc)
-      .limit(topM)
-    val users = inter.select(col("user_id")).distinct()
-    users.crossJoin(broadcast(top))
-      .join(inter.distinct(), Seq("user_id", "item_id"), "left_anti")
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("user_id"))
-          .orderBy(col("__pop").desc, col("item_id").asc)))
-      .filter(col("rank") <= perUser)
-      .select(col("user_id"), col("item_id"), col("rank"))
+    * Determinism: per-(item, position) click counts, per-position
+    * impression/click counts and the position-1 base are all exact
+    * longs; each (item, position) term is ONE fixed-order double
+    * expression `((c_ip·imps_p)·clicks_1) / (clicks_p·imps_1)` floored
+    * to micro-units, so the final per-item sum is a long — identical
+    * on any engine and partitioning. Positions (or items) with zero
+    * clicks contribute nothing and are filtered before the division
+    * (no 0/0). Output: `(itemCol, n_clicks, ips_clicks_micro)`.
+    *
+    * Scale: two aggregations (by position — bounded; by (item,
+    * position) — the data's natural key) and a broadcast of the
+    * ≤maxPosition-row propensity table. */
+  def ipsItemClicks(
+      impressions: DataFrame,
+      itemCol: String,
+      posCol: String,
+      clickCol: String): DataFrame = {
+    val posAgg = impressions.groupBy(col(posCol))
+      .agg(count(lit(1)).as("__imps"),
+        sum(col(clickCol).cast("long")).as("__clicks"))
+    val base = posAgg.filter(col(posCol) === 1)
+      .select(col("__imps").as("__imps1"), col("__clicks").as("__clicks1"))
+    val itemPos = impressions
+      .groupBy(col(itemCol), col(posCol))
+      .agg(sum(col(clickCol).cast("long")).as("__cip"))
+      .filter(col("__cip") > 0)
+    itemPos
+      .join(broadcast(posAgg), posCol)
+      .crossJoin(broadcast(base))
+      .filter(col("__clicks") > 0 && col("__clicks1") > 0)
+      .withColumn("__term_micro",
+        floor(((col("__cip").cast("double") * col("__imps").cast("double")) *
+          col("__clicks1").cast("double")) /
+          (col("__clicks").cast("double") * col("__imps1").cast("double")) *
+          1e6).cast("long"))
+      .groupBy(col(itemCol))
+      .agg(sum(col("__cip")).as("n_clicks"),
+        sum(col("__term_micro")).as("ips_clicks_micro"))
+  }
+
+  /** Self-normalized inverse-propensity (SNIPS) per-item CTR: the
+    * [[ipsItemClicks]] estimator's ratio form
+    * `Σ_p w_p·clicks_ip / Σ_p w_p·imps_ip`, with the same
+    * position-examination weights `w_p = (clicks_1·imps_p) /
+    * (imps_1·clicks_p)`. Normalizing by the weighted impression mass
+    * cancels the propensity model's global miscalibration — the
+    * variance-reduced estimator an off-policy evaluation actually
+    * reports (at the cost of a small bias). Each weighted term is
+    * floor-staged to micro-units, so numerator and denominator are
+    * exact integer sums; the ratio is one double division.
+    *
+    * Plan: identical shape to IPS — per-position aggregate (broadcast;
+    * positions are a bounded set), per-(item, position) aggregate, one
+    * final per-item aggregate. Everything shuffles on the item key. */
+  def snipsItemCtr(
+      impressions: DataFrame,
+      itemCol: String,
+      posCol: String,
+      clickCol: String): DataFrame = {
+    val posAgg = impressions.groupBy(col(posCol))
+      .agg(count(lit(1)).as("__imps"),
+        sum(col(clickCol).cast("long")).as("__clicks"))
+    val base = posAgg.filter(col(posCol) === 1)
+      .select(col("__imps").as("__imps1"), col("__clicks").as("__clicks1"))
+    val itemPos = impressions
+      .groupBy(col(itemCol), col(posCol))
+      .agg(count(lit(1)).as("__iip"),
+        sum(col(clickCol).cast("long")).as("__cip"))
+    val w = (col("__clicks1").cast("double") * col("__imps").cast("double")) /
+      (col("__imps1").cast("double") * col("__clicks").cast("double"))
+    itemPos
+      .join(broadcast(posAgg), posCol)
+      .crossJoin(broadcast(base))
+      .filter(col("__clicks") > 0 && col("__clicks1") > 0)
+      .withColumn("__num_micro",
+        floor(col("__cip").cast("double") * w * 1e6).cast("long"))
+      .withColumn("__den_micro",
+        floor(col("__iip").cast("double") * w * 1e6).cast("long"))
+      .groupBy(col(itemCol))
+      .agg(sum(col("__cip")).as("n_clicks"),
+        sum(col("__iip")).as("n_imps"),
+        sum(col("__num_micro")).as("num_micro"),
+        sum(col("__den_micro")).as("den_micro"))
+      .filter(col("den_micro") > 0L)
+      .withColumn("snips_ctr",
+        round(col("num_micro").cast("double") /
+          col("den_micro").cast("double"), 6))
   }
 
   /** RFM segmentation: quintile-bucket every user on Recency (days

@@ -338,6 +338,38 @@ object SimilaritySearch {
       .withColumn("accuracy",
         col("n_correct").cast("double") / col("n").cast("double"))
   }
+
+  /** Per-query overlap between an approximate retrieval result and
+    * the exact one — the recall audit every ANN deployment runs before
+    * trusting an index (probe depth / cell count / code budget are
+    * tuned against exactly this number). Both inputs are
+    * `(queryCol, itemCol)` result sets (one row per returned item).
+    *
+    * == Scale ==
+    * One full-outer equi-join on `(query, item)` — k rows per query
+    * on each side, never a corpus product — then a per-query count
+    * reduce. `recall` is the exact rational `n_common / n_exact`
+    * divided once. */
+  def retrievalOverlap(
+      approx: DataFrame,
+      exact: DataFrame,
+      queryCol: String = "query_id",
+      itemCol: String = "vec_id"): DataFrame = {
+    val a = approx.select(col(queryCol), col(itemCol))
+      .withColumn("__a", lit(1L))
+    val e = exact.select(col(queryCol), col(itemCol))
+      .withColumn("__e", lit(1L))
+    a.join(e, Seq(queryCol, itemCol), "full")
+      .groupBy(col(queryCol))
+      .agg(
+        sum(coalesce(col("__a"), lit(0L))).as("n_approx"),
+        sum(coalesce(col("__e"), lit(0L))).as("n_exact"),
+        sum(when(col("__a").isNotNull && col("__e").isNotNull, 1L)
+          .otherwise(0L)).as("n_common"))
+      .withColumn("recall",
+        when(col("n_exact") > 0,
+          col("n_common").cast("double") / col("n_exact").cast("double")))
+  }
 }
 
 /** Skye payload filter operators (SURVEY P7) — the reference's filter

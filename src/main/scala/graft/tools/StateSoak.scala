@@ -117,7 +117,6 @@ object StateSoak {
     val (_, okCap) = verdict("statefulMergeCap", capCurve,
       rowBound = users * weeks)
 
-    val keys = math.max(1L, users / 2)
     val minMs = 60000L
 
     // ---- streamingSessionize: fixed users, advancing event time
@@ -129,11 +128,11 @@ object StateSoak {
         memSes.toDF.toDF("user_id", "event_id", "ts"), gapMs = 120000L)
       .toDF.writeStream.format("noop").outputMode("append").start()
     val sesCurve = drive(sesQ, batches, { i =>
-      memSes.addData((0L until keys).map(k =>
-        (k, i.toLong, week0 + i * minMs + (i / 5) * 10 * minMs)))
+      memSes.addData((0L until users).map(u =>
+        (u, i.toLong, week0 + i * minMs + (i / 5) * 10 * minMs)))
     })
     val (_, okSes) = verdict("streamingSessionize", sesCurve,
-      rowBound = keys)
+      rowBound = users)
 
     val ok = okCap && okSes
     println(s"""STATESOAK_SUMMARY {"batches":$batches,"users":$users,"ok":$ok}""")

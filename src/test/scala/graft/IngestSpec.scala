@@ -545,25 +545,6 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("replay eval matches a naive fixture") {
-    import graft.operators.Evaluation
-    val train = Seq((1L, 10L), (1L, 10L), (1L, 11L), (2L, 20L))
-      .toDF("user_id", "item_id")
-    // user 1 policy -> 10, user 2 -> 20
-    val replay = Seq(
-      (1L, 10L, 1L), (1L, 10L, 0L), (1L, 11L, 1L),
-      (2L, 20L, 0L), (2L, 21L, 1L), (3L, 30L, 1L))
-      .toDF("user_id", "item_id", "click")
-    val r = Evaluation.replayPolicyEval(train, replay).collect().head
-    assert(r.getAs[Long]("n_logged") === 6L)
-    assert(r.getAs[Long]("n_matched") === 3L) // (1,10)x2, (2,20)
-    assert(r.getAs[Double]("match_rate") === 0.5)
-    assert(r.getAs[Double]("replay_ctr") === BigDecimal(1.0 / 3)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    assert(r.getAs[Double]("logged_ctr") === BigDecimal(4.0 / 6)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-  }
-
   test("blockedBestMatch links within blocks only, naive-checked") {
     import graft.operators.EntityResolution
     val clean = Seq((1L, "alpha", 0L), (2L, "alphq", 0L),

@@ -22,22 +22,6 @@ class OraclePinsSpec extends AnyFunSuite {
         "drift on an unchanged formula = platform, see OraclePins doc)")
   }
 
-  test("q117 discount pin == dcgDiscountsMicro(20)") {
-    assert(OraclePins.q117DiscountsMicro ===
-      graft.operators.Evaluation.dcgDiscountsMicro(20),
-      "dcgDiscountsMicro drifted off the q117 pin — regenerate " +
-        "OraclePins.q117DiscountsMicro if the change is intentional")
-  }
-
-  test("q201 CDF pin == Evaluation.PoissonCdf") {
-    assert(OraclePins.q201PoissonCdf ===
-      graft.operators.Evaluation.PoissonCdf,
-      "PoissonCdf drifted off the q201 pin — regenerate " +
-        "OraclePins.q201PoissonCdf if the change is intentional, or if " +
-        "this JVM's libm rounds exp differently (last-ulp-only drift " +
-        "on an unchanged formula = platform, see OraclePins doc)")
-  }
-
   test("q203 Benford pin == Validate.BenfordP") {
     assert(OraclePins.q203BenfordP ===
       graft.operators.Validate.BenfordP,

@@ -240,7 +240,7 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
         .orderBy($"ts".asc, $"event_id".asc)
       val imp = d.withColumn("position", row_number().over(w))
         .filter($"position" <= 20)
-      graft.operators.Evaluation.ipsItemClicks(
+      graft.operators.Recsys.ipsItemClicks(
           imp, "item_id", "position", "click")
         .as[(Long, Long, Long)].collect().toSet
     }

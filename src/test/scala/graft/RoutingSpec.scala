@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Evaluation
 import graft.sources.ShardRing
 
-/** Consistent-hash routing, conformal coverage. */
+/** Consistent-hash routing. */
 class RoutingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
@@ -36,22 +34,5 @@ class RoutingSpec extends AnyFunSuite with SparkSuite {
     assert(a.values.forall(s => s >= 0 && s < 16))
     // all 16 shards own something at 500 keys x 50 vnodes
     assert(a.values.toSet.size === 16)
-  }
-
-  test("conformal coverage near nominal on a smooth distribution") {
-    val rnd = new scala.util.Random(41)
-    val rows = (1 to 4000).map(i =>
-      ("seg" + (i % 2), rnd.nextDouble() * 100.0, i.toLong))
-    val out = Evaluation.conformalCoverage(
-      rows.toDF("k", "value", "id"), "k", "value", "id")
-      .collect()
-    assert(out.length === 2)
-    out.foreach { r =>
-      val cov = r.getAs[Double]("coverage")
-      // nominal 0.90 band; smooth uniform data -> close on holdout
-      assert(cov > 0.82 && cov < 0.97, s"coverage $cov")
-      assert(r.getAs[Double]("lo") < r.getAs[Double]("hi"))
-      assert(r.getAs[Long]("n_train") + 0L > 0L)
-    }
   }
 }

@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Evaluation, Normalize}
+import graft.operators.{Normalize, Recsys}
 
-/** ACF, empirical-Bayes shrinkage, SNIPS: independent naive
-  * reimplementations on randomized fixtures + the statistical
-  * invariants (shrinkage direction, self-normalization bounds). */
+/** ACF, empirical-Bayes shrinkage, SNIPS, RFM segments: independent
+  * naive reimplementations on randomized fixtures + the statistical
+  * invariants (shrinkage direction, self-normalization bounds, bucket
+  * ranges). */
 class ShrinkageSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
@@ -77,7 +78,7 @@ class ShrinkageSpec extends AnyFunSuite with SparkSuite {
       (item, pos, click)
     }
     val df = imps.toDF("item", "pos", "click")
-    val got = Evaluation.snipsItemCtr(df, "item", "pos", "click")
+    val got = Recsys.snipsItemCtr(df, "item", "pos", "click")
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("snips_ctr")).toMap
     // naive: same micro-floor staging, driver-side
     val posAgg = imps.groupBy(_._2).map { case (p, xs) =>
@@ -104,45 +105,10 @@ class ShrinkageSpec extends AnyFunSuite with SparkSuite {
     assert(got === naive)
     // snips of an item shown only at position 1 equals its raw CTR
     val solo = Seq((99L, 1, 1L), (99L, 1, 0L), (99L, 1, 0L), (99L, 1, 1L))
-    val soloOut = Evaluation.snipsItemCtr(
+    val soloOut = Recsys.snipsItemCtr(
       (imps ++ solo).toDF("item", "pos", "click"), "item", "pos", "click")
       .filter(col("item") === 99L).collect().head.getAs[Double]("snips_ctr")
     assert(math.abs(soloOut - 0.5) < 1e-6)
-  }
-
-  test("cuped: correlated covariate yields high rho2 and tighter means") {
-    val rnd = new scala.util.Random(61)
-    // post = pre + small noise; variant 1 got unlucky heavy users in
-    // the PRE period — CUPED should strip that imbalance
-    val units = (1 to 2000).map { i =>
-      val pre = 50.0 + rnd.nextGaussian() * 20.0 + (if (i % 2 == 1) 5.0 else 0.0)
-      val post = pre + rnd.nextGaussian() * 2.0
-      (i.toLong % 2, pre, post)
-    }
-    val out = Evaluation.cupedAdjustedMeans(
-      units.toDF("variant", "pre", "post"), "variant", "pre", "post")
-      .collect().map(r => r.getLong(0) ->
-        ((r.getAs[Double]("mean_post"), r.getAs[Double]("mean_adjusted"),
-          r.getAs[Double]("var_reduction"), r.getAs[Double]("theta")))).toMap
-    val rho2 = out(0L)._3
-    assert(rho2 > 0.95, s"rho2 $rho2 should be near 1 for post≈pre")
-    assert(math.abs(out(0L)._4 - 1.0) < 0.1, "theta should be near 1")
-    val rawGap = math.abs(out(1L)._1 - out(0L)._1)
-    val adjGap = math.abs(out(1L)._2 - out(0L)._2)
-    assert(adjGap < rawGap / 2,
-      s"adjusted gap $adjGap should collapse vs raw $rawGap")
-  }
-
-  test("cuped: zero-variance covariate degrades to raw means") {
-    val units = (1 to 100).map(i => (i.toLong % 2, 1.0, i.toDouble))
-    val out = Evaluation.cupedAdjustedMeans(
-      units.toDF("variant", "pre", "post"), "variant", "pre", "post")
-      .collect()
-    out.foreach { r =>
-      assert(r.getAs[Double]("theta") === 0.0)
-      assert(r.getAs[Double]("mean_adjusted") ===
-        r.getAs[Double]("mean_post"))
-    }
   }
 
   test("rfm segments: census covers all users, buckets in range") {
@@ -181,10 +147,10 @@ class ShrinkageSpec extends AnyFunSuite with SparkSuite {
         .filter(col("position") <= 20)
       if (rep > 0) base.repartition(rep) else base
     }
-    val a = Evaluation.snipsItemCtr(imp(0), "item_id", "position", "__click")
+    val a = Recsys.snipsItemCtr(imp(0), "item_id", "position", "__click")
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("snips_ctr"))
       .sortBy(_._1)
-    val b = Evaluation.snipsItemCtr(imp(7), "item_id", "position", "__click")
+    val b = Recsys.snipsItemCtr(imp(7), "item_id", "position", "__click")
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("snips_ctr"))
       .sortBy(_._1)
     assert(a.sameElements(b))

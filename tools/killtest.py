@@ -86,6 +86,19 @@ MUTATIONS = [
                      "NaN > threshold is true -> phantom pairs either way)",
     },
     {
+        # (c2) ANN recall audit: retrievalOverlap counts every
+        # approximate hit as common (the exact-side condition dropped),
+        # so recall reads 1.0 whatever the index misses
+        "name": "recall_overlap_approx_only",
+        "file": "src/main/scala/graft/operators/SimilaritySearch.scala",
+        "old": '        sum(when(col("__a").isNotNull && col("__e").isNotNull, 1L)',
+        "new": '        sum(when(col("__a").isNotNull, 1L)',
+        "queries": ["q180_ann_recall"],
+        "expect": "red",
+        "mechanism": "n_common = n_approx -> recall reads 1.0 on queries the "
+                     "2-of-8-cell probe misses -> n_common/recall hash mismatch",
+    },
+    {
         # (d1) data-pinned oracle q139: the engine LEARNS the rotation;
         # the oracle applies pinned literals. A single-point covariance
         # bug must drift the learned rotation off the pin.
@@ -96,19 +109,6 @@ MUTATIONS = [
         "queries": ["q139_ann_opq_rotated"],
         "expect": "red",
         "mechanism": "asymmetric mean correction -> wrong covariance -> rotation off the pin",
-    },
-    {
-        # (e) shared-literal IEEE oracle q175: the oracle carries its
-        # OWN z / z^2 decimal literals — a one-ulp engine drift in z
-        # must read RED (proves the literals are independent copies,
-        # not echoed from the engine).
-        "name": "q175_z_ulp",
-        "file": "src/main/scala/graft/operators/Evaluation.scala",
-        "old": "      z: Double = 1.96): DataFrame = {",
-        "new": "      z: Double = 1.9600000000000002): DataFrame = {",
-        "queries": ["q175_position_ctr_wilson"],
-        "expect": "red",
-        "mechanism": "one-ulp z drift -> wilson bounds differ in last ulps vs the oracle's own literals",
     },
     {
         # (h) temporal boundary: TTL expiry <= flipped to < — a row
@@ -212,21 +212,6 @@ MUTATIONS = [
                      "CPython-derived pin",
     },
     {
-        # (p) shared-construction pin q117: DCG discount log base.
-        # Before OraclePins landed, the oracle CALLED dcgDiscountsMicro
-        # at SQL-construction time — this mutation would have changed
-        # both sides identically (the tautology OraclePins describes).
-        # With the pin, the engine drifts off the oracle's literals.
-        "name": "ndcg_discount_base",
-        "file": "src/main/scala/graft/operators/Evaluation.scala",
-        "old": "math.log(r + 1)",
-        "new": "math.log(r + 2)",
-        "queries": ["q117_ndcg"],
-        "expect": "red",
-        "mechanism": "engine discounts become 1/log2(r+2) while the oracle "
-                     "plants the pinned 1/log2(r+1) micro-literals",
-    },
-    {
         # (p2) shared-construction pin q107: half-life decay rate.
         "name": "decay_lambda_halflife",
         "file": "src/main/scala/graft/operators/Recsys.scala",
@@ -236,17 +221,6 @@ MUTATIONS = [
         "expect": "red",
         "mechanism": "engine lambda = ln2/25h while the oracle's exp() uses "
                      "the pinned ln2/24h double -> recency_micro drifts",
-    },
-    {
-        # (p3) shared-construction pin q201: Poisson(1) CDF series.
-        "name": "poisson_cdf_series",
-        "file": "src/main/scala/graft/operators/Evaluation.scala",
-        "old": "p = p / (k + 1)",
-        "new": "p = p / (k + 2)",
-        "queries": ["q201_poisson_bootstrap"],
-        "expect": "red",
-        "mechanism": "engine resampling thresholds drift off the pinned "
-                     "e^-1-series literals -> per-replicate weights differ",
     },
     {
         # (p4) shared-construction pin q203: Benford P(d) formula.
