@@ -2,13 +2,12 @@ package graft
 
 /** PINNED shared-literal oracle constants.
   *
-  * Two oracles used to call their ENGINE formula at SQL-construction
-  * time — q107 (`Recsys.timeDecayLambda`) and q203
-  * (`Validate.BenfordP`). That shape is a tautology: a mutation
+  * The q203 oracle used to call its ENGINE formula at SQL-construction
+  * time (`Validate.BenfordP`). That shape is a tautology: a mutation
   * in the generation formula changes BOTH sides identically and the
   * driver compare stays GREEN (demonstrated live by
   * tools/killtest.py on a weight-table oracle of the same structure
-  * before its pin landed). Each constant below is the formula's output
+  * before its pin landed). The constant below is the formula's output
   * FROZEN as source literals; the oracle plants the pin, the engine
   * keeps computing live, and OraclePinsSpec locks `pin == formula` so
   * a conscious formula change must regenerate the pin. Both sides
@@ -16,20 +15,17 @@ package graft
   * property that motivated the sharing in the first place.
   *
   * PLATFORM/LIBM ASSUMPTION (r14 ADVICE): pins that pass through
-  * transcendental functions (`Math.log`, `Math.log10`) are exact only
+  * transcendental functions (`Math.log10`) are exact only
   * for the libm this JVM links — IEEE 754 does not require correctly
   * rounded transcendentals, and e.g. the q203 d=3 value
   * 0.12493873660829993 differs in its last ulp from CPython's log10
   * on the same box. The pins were generated by THIS project's JVM
-  * (Temurin 17 / glibc x86-64); on a JVM whose log10/exp rounds a
+  * (Temurin 17 / glibc x86-64); on a JVM whose log10 rounds a
   * last ulp differently, an OraclePinsSpec lock failure (and the
-  * q107/q203 driver compares) means "regenerate the pins on this
+  * q203 driver compare) means "regenerate the pins on this
   * platform", NOT "the formula regressed" — the spec failure messages
   * say so. */
 private[graft] object OraclePins {
-
-  /** q107: half-life decay rate `ln 2 / 24h` (Recsys.timeDecayLambda). */
-  val q107Lambda24: Double = 0.028881132523331052
 
   /** q203: Benford first-digit probabilities `log10(1+1/d)`, d=1..9
     * (Validate.BenfordP). */

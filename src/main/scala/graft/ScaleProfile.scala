@@ -78,11 +78,6 @@ package graft
   *    data, 845.7 s vs the sweep-line's 16.6 s at the same sf), so
   *    at 100× the pair join is only for pair-list OUTPUT, never for
   *    counts.
-  *  - `Recsys.userOverlapJaccard(maxItemPop)` — gate: q229 runs 80. 100×:
-  *    the super-node cut; pair fan-out ≤ maxItemPop·|interactions|.
-  *    Keep it at the head of the item-popularity distribution you can
-  *    afford to drop pairs THROUGH (popular items carry little
-  *    similarity signal anyway — the standard co-occurrence cut).
   *
   * == Bounded-work knobs (bigger = more work, not more risk) ==
   *

@@ -1103,65 +1103,12 @@ object SparkEntry {
           Tables.documents(s, dir).select(col("doc_id")), "doc_id", 64L)
         .select(col("doc_id"), col("shard_id"), col("shard_offset"))),
 
-    // ---- item co-visitation candidate generation: recency-capped
-    // per-user item sets -> within-user pairs -> cross-user counts ----
-    "q104_covisitation" -> ((s, dir) =>
-      graft.operators.Recsys.covisitation(Tables.events(s, dir),
-        recentPerUser = 30, minUsers = 2)),
-
-    // ---- deterministic negative sampling against the click set ----
-    "q105_negative_sample" -> ((s, dir) =>
-      graft.operators.Recsys.negativeSample(Tables.events(s, dir),
-        posType = "click", nItems = 100, perUser = 4, oversample = 8)),
-
-    // ---- leave-one-out target encoding of event_type on value ----
-    "q106_target_encode" -> ((s, dir) =>
-      graft.operators.Recsys.targetEncodeLoo(Tables.events(s, dir),
-        "event_type", "value", Seq("event_id"), alpha = 10.0)),
-
-    // ---- time-decayed engagement profile per user ----
-    "q107_decayed_engagement" -> ((s, dir) =>
-      graft.operators.Recsys.decayedEngagement(Tables.events(s, dir))),
-
-    // ---- next-item-prediction example assembly (session-based
-    // recsys training): trailing item-context window per user ----
-    "q108_next_item" -> ((s, dir) =>
-      graft.operators.Recsys.nextItemExamples(Tables.events(s, dir),
-          contextLen = 5)
-        // csv-render the context window (ids are digits, ',' can't
-        // collide) so the driver's comparator gets scalar rows
-        .select(col("user_id"), col("event_id"),
-          concat_ws(",", transform(col("context"), x => x.cast("string")))
-            .as("context_ids"),
-          col("label"))),
-
-    // ---- hashed feature cross of (user_id, event_type) into 256
-    // buckets, histogrammed ----
-    "q109_hashed_cross" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("bucket", graft.operators.Recsys.hashedCross(
-          Seq(col("user_id"), col("event_type")), buckets = 256))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n"))),
-
     // ---- equal-frequency calibration table of value -> click rate ----
     "q110_calibration_bins" -> ((s, dir) =>
       graft.operators.Normalize.calibrationBins(
         Tables.events(s, dir).select(col("value"),
           (col("event_type") === "click").cast("long").as("label")),
         "value", "label", nBins = 10)),
-
-    // ---- deterministic random walks over the co-visitation graph
-    // (DeepWalk-style graph-embedding corpus) ----
-    "q113_random_walks" -> ((s, dir) =>
-      graft.operators.Recsys.randomWalks(
-          graft.operators.Recsys.covisitation(Tables.events(s, dir),
-            recentPerUser = 30, minUsers = 2),
-          walkLen = 3)
-        // csv-render the walk path (scalar output for the driver's
-        // comparator); every hop is still hash-compared in order
-        .select(col("start"),
-          concat_ws(",", transform(col("path"), x => x.cast("string")))
-            .as("path_csv"))),
 
     // ---- data-contract validation report: one scan, one row per rule ----
     "q124_data_quality" -> ((s, dir) =>
@@ -1223,7 +1170,7 @@ object SparkEntry {
       graft.operators.Pipeline.constrainedRerank(
         Tables.events(s, dir).select(col("user_id"), col("event_id"),
           col("value"),
-          (graft.operators.Recsys.itemOf(col("props")) % 8).as("cat"))
+          (InteractionStore.itemOf(col("props")) % 8).as("cat"))
           .filter(col("cat").isNotNull),
         Seq("user_id"), "value", "cat", "event_id",
         maxPerCat = 2, k = 10)),
@@ -1278,12 +1225,6 @@ object SparkEntry {
       graft.operators.Validate.profile(Tables.events(s, dir),
         Seq("user_id", "event_type", "value", "props"))),
 
-    // ---- association rules (support / confidence / lift) over the
-    // recency-capped co-visitation sets ----
-    "q138_association_rules" -> ((s, dir) =>
-      graft.operators.Recsys.associationRules(Tables.events(s, dir),
-        recentPerUser = 30, minUsers = 2)),
-
     // ---- OPQ with the LEARNED PCA rotation, end to end. Oracled
     // since round 7: no SQL engine eigendecomposes, but the fit is
     // deterministic, so the rotation is materialized as literals
@@ -1302,31 +1243,6 @@ object SparkEntry {
       graft.operators.PqIndex.build(rotated, m = 8, k = 16)
         .searchDot(q, kResults = 10)
     }),
-
-    // ---- weight-sensitive random walks over co-visitation edges ----
-    "q142_weighted_walks" -> ((s, dir) =>
-      graft.operators.Recsys.weightedRandomWalks(
-          graft.operators.Recsys.covisitation(Tables.events(s, dir),
-            recentPerUser = 30, minUsers = 2),
-          walkLen = 3)
-        // csv path rendering, as in q113
-        .select(col("start"),
-          concat_ws(",", transform(col("path"), x => x.cast("string")))
-            .as("path_csv"))),
-
-    // ---- skip-gram (center, context) pairs from the walk corpus ----
-    "q143_skipgram_pairs" -> ((s, dir) =>
-      graft.operators.Recsys.skipGramPairs(
-        graft.operators.Recsys.randomWalks(
-          graft.operators.Recsys.covisitation(Tables.events(s, dir),
-            recentPerUser = 30, minUsers = 2),
-          walkLen = 3),
-        window = 2)),
-
-    // ---- churn-label training set with a strict temporal split ----
-    "q144_churn_labels" -> ((s, dir) =>
-      graft.operators.Recsys.churnLabels(Tables.events(s, dir),
-        labelDays = 7)),
 
     // ---- Pearson correlation matrix of lineitem's numeric features.
     // The columns carry <=2dp, so cents-integer staging keeps every
@@ -1401,16 +1317,6 @@ object SparkEntry {
         .withColumn("ctr", col("n_clicks").cast("double") /
           col("n_impressions").cast("double"))
     }),
-
-    // ---- deterministic PageRank popularity prior over the
-    // co-visitation item graph: exact 1e-12-unit integer iteration,
-    // bit-reproducible under any partitioning (the graph-global
-    // popularity signal next to q113's walk corpus) ----
-    "q152_pagerank" -> ((s, dir) =>
-      graft.operators.Recsys.pageRank(
-        graft.operators.Recsys.covisitation(Tables.events(s, dir),
-          recentPerUser = 30, minUsers = 2),
-        iterations = 3)),
 
     // ---- engine-portable quantile sketch: bottom-200-by-hash sample
     // (deterministic, mergeable — the KMV trick applied to rows) with
@@ -1514,40 +1420,6 @@ object SparkEntry {
     "q162_robust_stats" -> ((s, dir) =>
       graft.operators.Normalize.robustStatsBy(
         Tables.events(s, dir), "event_type", "value")),
-
-    // ---- session-scoped co-visitation: item pairs count per (user,
-    // session) intent window instead of per user (q104's variant with
-    // the browsing-signal semantics); sessions from q51's lag-gap
-    // scan ----
-    "q163_session_covisitation" -> ((s, dir) =>
-      graft.operators.Recsys.covisitationBySession(Tables.events(s, dir),
-        gap = "1 day", recentPerSession = 30, minSessions = 2)),
-
-    // ---- position-debiased item popularity: every click weighted by
-    // 1/propensity(position) with the propensity curve estimated from
-    // the same log (q145). Exact fixed-order double per (item, pos)
-    // term, floored to micro-units — deterministic IPS totals ----
-    "q164_ips_item_clicks" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val sess = Window.partitionBy(col("user_id"), col("__day"))
-        .orderBy(col("ts").asc, col("event_id").asc)
-      val imp = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          to_date(col("ts")).as("__day"),
-          graft.operators.Recsys.itemOf(col("props")).as("item_id"),
-          (col("event_type") === "click").cast("long").as("__click"))
-        .filter(col("item_id").isNotNull)
-        .withColumn("position", row_number().over(sess))
-        .filter(col("position") <= 20)
-      graft.operators.Recsys.ipsItemClicks(imp,
-        "item_id", "position", "__click")
-    }),
-
-    // ---- candidate-quality gate: recall@5 of the co-visitation
-    // generator against observed next-item transitions ----
-    "q165_candidate_recall" -> ((s, dir) =>
-      graft.operators.Recsys.candidateRecallAtK(Tables.events(s, dir),
-        k = 5)),
 
     // ---- point-in-time join with a staleness horizon — the offline
     // twin of TTL-on-read (P4): features older than 2 days at label
@@ -1837,7 +1709,7 @@ object SparkEntry {
     "q220_cold_start" -> ((s, dir) =>
       graft.operators.Validate.coldStartReport(
         Tables.events(s, dir).withColumn("item_id",
-          graft.operators.Recsys.itemOf(col("props"))),
+          InteractionStore.itemOf(col("props"))),
         cutoff = "2024-01-24 00:00:00")),
 
     // ---- feature predictiveness: WOE / IV over 10 equal-count
@@ -1847,14 +1719,6 @@ object SparkEntry {
         Tables.events(s, dir).select(col("value"), col("event_id"),
           (col("event_type") === "purchase").cast("long").as("label")),
         "value", "label", "event_id", nBins = 10)),
-
-    // ---- graph cohesion: degree-oriented triangle count + global
-    // clustering over the co-visitation graph ----
-    "q226_triangle_stats" -> ((s, dir) =>
-      graft.operators.Recsys.triangleStats(
-        graft.operators.Recsys.covisitation(Tables.events(s, dir),
-            recentPerUser = 30, minUsers = 2)
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
 
     // ---- candlestick compaction: hourly OHLC of the payload value
     // per user ----
@@ -1866,12 +1730,6 @@ object SparkEntry {
       graft.operators.Funnel.timeToConvert(
         Tables.events(s, dir), "user_id", "ts", "event_type",
         fromStage = "view", toStage = "purchase", probs = Seq(0.5, 0.9))),
-
-    // ---- lookalike audiences: user-user Jaccard through shared
-    // items, super-node items cut at 50 users ----
-    "q229_user_overlap" -> ((s, dir) =>
-      graft.operators.Recsys.userOverlapJaccard(
-        Tables.events(s, dir), maxItemPop = 80, minCommon = 2L)),
 
     // ---- engagement headline: DAU / trailing-7-day WAU with
     // stickiness, exact distinct fan-out ----
@@ -1989,49 +1847,6 @@ object SparkEntry {
             sum((col("event_type") === "view").cast("long"))
               .as("n_fail")),
         "user_id", "n_succ", "n_fail")),
-
-    // ---- off-policy eval, variance-reduced: self-normalized IPS
-    // per-item CTR under the q164 position-examination model ----
-    "q244_snips_item_ctr" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val sess = Window.partitionBy(col("user_id"), col("__day"))
-        .orderBy(col("ts").asc, col("event_id").asc)
-      val imp = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          to_date(col("ts")).as("__day"),
-          graft.operators.Recsys.itemOf(col("props")).as("item_id"),
-          (col("event_type") === "click").cast("long").as("__click"))
-        .filter(col("item_id").isNotNull)
-        .withColumn("position", row_number().over(sess))
-        .filter(col("position") <= 20)
-      graft.operators.Recsys.snipsItemCtr(imp,
-        "item_id", "position", "__click")
-    }),
-
-    // ---- cohesive catalog core: 3 peeling rounds of the 35-core
-    // over the strongly-co-visited item graph ----
-    "q245_kcore" -> ((s, dir) =>
-      graft.operators.Recsys.kCore(
-        graft.operators.Recsys.covisitation(Tables.events(s, dir),
-          recentPerUser = 30, minUsers = 14),
-        k = 35L, rounds = 3)),
-
-    // ---- traffic funnels vs sinks: 2-round integer HITS over the
-    // observed next-item transition graph ----
-    "q246_hits" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ord = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").asc, col("event_id").asc)
-      val trans = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          graft.operators.Recsys.itemOf(col("props")).as("item"))
-        .filter(col("item").isNotNull)
-        .withColumn("next", lead(col("item"), 1).over(ord))
-        .filter(col("next").isNotNull && col("next") =!= col("item"))
-        .select(col("item").as("src"), col("next").as("dst"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      graft.operators.Recsys.hits(trans, rounds = 2)
-    }),
 
     // ---- entity resolution: dirty records (one digit deleted from
     // the name) resolved to the canonical table by blocked edit
@@ -2190,11 +2005,6 @@ object SparkEntry {
 
     ,
 
-    // ---- lifecycle segmentation: R/F/M quintiles from exact global
-    // boundaries (no ntile window), segment census ----
-    "q265_rfm_segments" -> ((s, dir) =>
-      graft.operators.Recsys.rfmSegments(Tables.events(s, dir))),
-
     // ---- continuous reconciliation: the sharded incremental touch
     // state fingerprints equal to a from-scratch batch recompute ----
     "q266_state_reconciliation" -> ((s, dir) => {
@@ -2291,21 +2101,6 @@ object SparkEntry {
       graft.sources.Layout.cowAmplification(
         byUser.unionByName(byTime), "layout", "file_id", "is_upd")
     }),
-
-    // ---- graph topology health: do popular items link popular items
-    // (degree assortativity over the thresholded co-visit graph) ----
-    "q273_assortativity" -> ((s, dir) =>
-      graft.operators.Recsys.degreeAssortativity(
-        graft.operators.Recsys.covisitation(Tables.events(s, dir),
-          recentPerUser = 30, minUsers = 14))),
-
-    // ---- rich-club curve: density among nodes above each degree
-    // rung ----
-    "q274_rich_club" -> ((s, dir) =>
-      graft.operators.Recsys.richClub(
-        graft.operators.Recsys.covisitation(Tables.events(s, dir),
-          recentPerUser = 30, minUsers = 12),
-        ks = Seq(20L, 40L, 60L, 80L))),
 
     // ---- per-key mean/variance straight off the STREAM: moments
     // state through the restart-safe sink, finished to baselines ----
@@ -3520,108 +3315,6 @@ object SparkEntry {
         |SELECT doc_id, CAST(rn // 64 AS INT) AS shard_id,
         |  CAST(rn % 64 AS INT) AS shard_offset FROM r""".stripMargin,
 
-    "q104_covisitation" ->
-      """WITH ui AS (
-        |  SELECT user_id, CAST(json_extract(props, '$.k') AS BIGINT) AS item_id,
-        |    MAX(ts) AS last_ts
-        |  FROM events
-        |  WHERE json_extract(props, '$.k') IS NOT NULL
-        |  GROUP BY 1, 2),
-        |capped AS (SELECT user_id, item_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-        |  WHERE rn <= 30)
-        |SELECT a.item_id AS item_a, b.item_id AS item_b,
-        |  COUNT(*) AS n_users
-        |FROM capped a JOIN capped b
-        |  ON a.user_id = b.user_id AND a.item_id < b.item_id
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin,
-
-    // draws = md5(seed:user:slot) mod 100, exactly as the Spark side
-    "q105_negative_sample" ->
-      """WITH pos AS (SELECT DISTINCT user_id,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id
-        |  FROM events WHERE event_type = 'click'
-        |    AND json_extract(props, '$.k') IS NOT NULL),
-        |u AS (SELECT DISTINCT user_id FROM pos),
-        |d0 AS (SELECT user_id, list_transform(generate_series(0, 31),
-        |         i -> CAST(('0x'||substr(md5('7:'||CAST(user_id AS VARCHAR)
-        |           ||':'||CAST(i AS VARCHAR)), 1, 8)) AS BIGINT) % 100) AS ds
-        |       FROM u),
-        |d AS (SELECT user_id, generate_subscripts(ds, 1) - 1 AS slot,
-        |        unnest(ds) AS item_id FROM d0),
-        |neg AS (SELECT d.user_id, d.item_id, MIN(d.slot) AS slot
-        |  FROM d LEFT JOIN pos p
-        |    ON d.user_id = p.user_id AND d.item_id = p.item_id
-        |  WHERE p.user_id IS NULL
-        |  GROUP BY d.user_id, d.item_id)
-        |SELECT user_id, item_id, rank FROM (
-        |  SELECT user_id, item_id, CAST(ROW_NUMBER() OVER (
-        |    PARTITION BY user_id ORDER BY slot ASC) AS INT) AS rank
-        |  FROM neg)
-        |WHERE rank <= 4""".stripMargin,
-
-    // identical double expression tree over exact micro-unit longs
-    "q106_target_encode" ->
-      """WITH m AS (SELECT event_id, event_type,
-        |    CAST(floor(value * 1000000) AS BIGINT) AS xm FROM events),
-        |cs AS (SELECT event_type, CAST(SUM(xm) AS BIGINT) AS s,
-        |         COUNT(*) AS c FROM m GROUP BY event_type),
-        |g AS (SELECT CAST(SUM(xm) AS BIGINT) AS gs, COUNT(*) AS gc FROM m)
-        |SELECT m.event_id, m.event_type,
-        |  (CAST(cs.s - m.xm AS DOUBLE)
-        |     + 10.0 * (CAST(g.gs AS DOUBLE) / CAST(g.gc AS DOUBLE)))
-        |    / (CAST(cs.c - 1 AS DOUBLE) + 10.0) / 1000000.0 AS te
-        |FROM m JOIN cs USING (event_type) CROSS JOIN g""".stripMargin,
-
-    // hyperbolic decay: floor(micro / (1 + age_days)) is exact binary64
-    // in both engines; the per-user sum is an exact long
-    // recency_micro: encoder.py's half-life weight exp(-λ·Δh) at the
-    // user's latest event; λ is the PINNED double (OraclePins —
-    // planting a live timeDecayLambda call here would make a
-    // decay-formula mutation invisible, the tautology OraclePins
-    // describes), Δhours from exact epoch-ms longs, and the weight
-    // micro-rounds before compare so libm exp's last ulp can't flip
-    // the hash
-    "q107_decayed_engagement" -> {
-      val lam = OraclePins.q107Lambda24
-      s"""WITH a AS (SELECT MAX(CAST(ts AS DATE)) AS anchor,
-         |    MAX(ts) AS anchor_ts FROM events),
-         |c AS (SELECT user_id,
-         |    CAST(floor(CAST(CAST(floor(value * 1000000) AS BIGINT) AS DOUBLE)
-         |      / CAST(1 + date_diff('day', CAST(ts AS DATE), a.anchor)
-         |             AS DOUBLE)) AS BIGINT) AS cm,
-         |    CAST(round(exp(-$lam * greatest(
-         |        CAST(epoch_ms(a.anchor_ts) - epoch_ms(ts) AS DOUBLE)
-         |          / 3600000.0E0, 0.0E0)) * 1000000.0E0) AS BIGINT) AS dm
-         |  FROM events CROSS JOIN a)
-         |SELECT user_id, CAST(SUM(cm) AS DOUBLE) / 1000000.0 AS decayed,
-         |  COUNT(*) AS n_events, MAX(dm) AS recency_micro
-         |FROM c GROUP BY user_id""".stripMargin
-    },
-
-    // DuckDB's empty list() frame is NULL where Spark's collect_list
-    // is []; both sides drop context-less first events, so the
-    // surviving rows agree
-    "q108_next_item" ->
-      """WITH e AS (SELECT event_id, user_id, ts,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL),
-        |w AS (SELECT user_id, event_id, item AS label,
-        |    list(item) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING) AS context
-        |  FROM e)
-        |SELECT user_id, event_id,
-        |  array_to_string(context, ',') AS context_ids, label FROM w
-        |WHERE context IS NOT NULL AND len(context) >= 1""".stripMargin,
-
-    // same 32-bit md5 over the chr(1)-joined string forms
-    "q109_hashed_cross" ->
-      """SELECT CAST(('0x'||substr(md5('0:'||CAST(user_id AS VARCHAR)
-        |    ||chr(1)||event_type), 1, 8)) AS BIGINT) % 256 AS bucket,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-
     // PERCENT_RANK ties collapse to one value per distinct score in
     // both engines; the bin floor/clamp is the identical double expr
     "q110_calibration_bins" ->
@@ -3635,43 +3328,6 @@ object SparkEntry {
         |  MAX(value) AS score_max,
         |  CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pos_rate
         |FROM b GROUP BY bin""".stripMargin,
-
-    // q104's co-visitation CTE -> undirected adjacency -> three argmin-
-    // hash steps, exactly the Spark iteration
-    "q113_random_walks" -> {
-      // single-line body: nesting stripMargin templates would strip
-      // the inner margins twice
-      def step(t: Int, prev: String, prevCols: String, curCol: String) =
-        s"s$t AS (SELECT start, $prevCols nbr AS $curCol FROM (" +
-          s"SELECT $prev.*, adj.nbr, ROW_NUMBER() OVER (" +
-          s"PARTITION BY $prev.start ORDER BY " +
-          s"CAST(('0x'||substr(md5('11:'||CAST($prev.start AS VARCHAR)" +
-          s"||':$t:'||CAST(adj.nbr AS VARCHAR)), 1, 8)) AS BIGINT), " +
-          s"adj.nbr) AS rn FROM $prev JOIN adj ON " +
-          s"$prev.${if (t == 1) "start" else s"c${t - 1}"} = adj.node) " +
-          "WHERE rn = 1)"
-      s"""WITH ui AS (SELECT user_id,
-         |    CAST(json_extract(props, '$$.k') AS BIGINT) AS item_id,
-         |    MAX(ts) AS last_ts
-         |  FROM events WHERE json_extract(props, '$$.k') IS NOT NULL
-         |  GROUP BY 1, 2),
-         |capped AS (SELECT user_id, item_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-         |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-         |  WHERE rn <= 30),
-         |cov AS (SELECT a.item_id AS item_a, b.item_id AS item_b
-         |  FROM capped a JOIN capped b
-         |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |adj AS (SELECT item_a AS node, item_b AS nbr FROM cov
-         |        UNION SELECT item_b, item_a FROM cov),
-         |s0 AS (SELECT DISTINCT node AS start FROM adj),
-         |${step(1, "s0", "", "c1")},
-         |${step(2, "s1", "c1,", "c2")},
-         |${step(3, "s2", "c1, c2,", "c3")}
-         |SELECT start, array_to_string([start, c1, c2, c3], ',')
-         |  AS path_csv FROM s3""".stripMargin
-    },
 
     "q124_data_quality" ->
       """WITH a AS (SELECT COUNT(*) AS n,
@@ -3830,82 +3486,6 @@ object SparkEntry {
     // SQL-expressed) PQ assign/score side.
     "q139_ann_opq_rotated" -> sqlQ139For(Q139Rotation.sf001),
 
-    // q113's walk chain with hash/weight keys on the weighted adjacency
-    "q142_weighted_walks" -> {
-      def step(t: Int, prev: String, prevCols: String, curCol: String) =
-        s"s$t AS (SELECT start, $prevCols nbr AS $curCol FROM (" +
-          s"SELECT $prev.*, adj.nbr, ROW_NUMBER() OVER (" +
-          s"PARTITION BY $prev.start ORDER BY " +
-          s"CAST(CAST(('0x'||substr(md5('11:'||CAST($prev.start AS VARCHAR)" +
-          s"||':$t:'||CAST(adj.nbr AS VARCHAR)), 1, 8)) AS BIGINT) AS DOUBLE)" +
-          s" / CAST(adj.wt AS DOUBLE), " +
-          s"adj.nbr) AS rn FROM $prev JOIN adj ON " +
-          s"$prev.${if (t == 1) "start" else s"c${t - 1}"} = adj.node) " +
-          "WHERE rn = 1)"
-      s"""WITH ui AS (SELECT user_id,
-         |    CAST(json_extract(props, '$$.k') AS BIGINT) AS item_id,
-         |    MAX(ts) AS last_ts
-         |  FROM events WHERE json_extract(props, '$$.k') IS NOT NULL
-         |  GROUP BY 1, 2),
-         |capped AS (SELECT user_id, item_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-         |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-         |  WHERE rn <= 30),
-         |cov AS (SELECT a.item_id AS item_a, b.item_id AS item_b,
-         |    COUNT(*) AS n_users
-         |  FROM capped a JOIN capped b
-         |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |adj AS (SELECT item_a AS node, item_b AS nbr, n_users AS wt
-         |        FROM cov
-         |        UNION SELECT item_b, item_a, n_users FROM cov),
-         |s0 AS (SELECT DISTINCT node AS start FROM adj),
-         |${step(1, "s0", "", "c1")},
-         |${step(2, "s1", "c1,", "c2")},
-         |${step(3, "s2", "c1, c2,", "c3")}
-         |SELECT start, array_to_string([start, c1, c2, c3], ',')
-         |  AS path_csv FROM s3""".stripMargin
-    },
-
-    // q113's walks, then every ordered position pair within 2 hops
-    "q143_skipgram_pairs" -> {
-      def step(t: Int, prev: String, prevCols: String, curCol: String) =
-        s"s$t AS (SELECT start, $prevCols nbr AS $curCol FROM (" +
-          s"SELECT $prev.*, adj.nbr, ROW_NUMBER() OVER (" +
-          s"PARTITION BY $prev.start ORDER BY " +
-          s"CAST(('0x'||substr(md5('11:'||CAST($prev.start AS VARCHAR)" +
-          s"||':$t:'||CAST(adj.nbr AS VARCHAR)), 1, 8)) AS BIGINT), " +
-          s"adj.nbr) AS rn FROM $prev JOIN adj ON " +
-          s"$prev.${if (t == 1) "start" else s"c${t - 1}"} = adj.node) " +
-          "WHERE rn = 1)"
-      s"""WITH ui AS (SELECT user_id,
-         |    CAST(json_extract(props, '$$.k') AS BIGINT) AS item_id,
-         |    MAX(ts) AS last_ts
-         |  FROM events WHERE json_extract(props, '$$.k') IS NOT NULL
-         |  GROUP BY 1, 2),
-         |capped AS (SELECT user_id, item_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-         |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-         |  WHERE rn <= 30),
-         |cov AS (SELECT a.item_id AS item_a, b.item_id AS item_b
-         |  FROM capped a JOIN capped b
-         |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |adj AS (SELECT item_a AS node, item_b AS nbr FROM cov
-         |        UNION SELECT item_b, item_a FROM cov),
-         |s0 AS (SELECT DISTINCT node AS start FROM adj),
-         |${step(1, "s0", "", "c1")},
-         |${step(2, "s1", "c1,", "c2")},
-         |${step(3, "s2", "c1, c2,", "c3")},
-         |p AS (SELECT [start, c1, c2, c3] AS path FROM s3),
-         |e1 AS (SELECT path, generate_subscripts(path, 1) - 1 AS i,
-         |         unnest(path) AS center FROM p),
-         |e2 AS (SELECT i, center, generate_subscripts(path, 1) - 1 AS j,
-         |         unnest(path) AS context FROM e1)
-         |SELECT center, context, COUNT(*) AS n FROM e2
-         |WHERE i <> j AND abs(i - j) <= 2 GROUP BY 1, 2""".stripMargin
-    },
-
     "q147_feature_corr" -> {
       val cols2 = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
       def cc(c: String) = s"CAST(round_even($c * 100, 0) AS BIGINT)"
@@ -3955,100 +3535,6 @@ object SparkEntry {
         |  CAST(SUM(y) AS BIGINT) AS n_clicks,
         |  CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS ctr
         |FROM s WHERE position <= 20 GROUP BY position""".stripMargin,
-
-    "q144_churn_labels" ->
-      """WITH a AS (SELECT MAX(CAST(ts AS DATE)) AS anchor FROM events),
-        |s AS (SELECT user_id, CAST(ts AS DATE) AS d, event_type, value,
-        |        a.anchor - 7 AS cutoff FROM events CROSS JOIN a),
-        |f AS (SELECT user_id, COUNT(*) AS n_events,
-        |    CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_clicks,
-        |    CAST(SUM(CAST(floor(value * 1000000) AS BIGINT)) AS DOUBLE)
-        |      / 1000000.0 AS value_sum,
-        |    MAX(d) AS last_d, MAX(cutoff) AS co
-        |  FROM s WHERE d < cutoff GROUP BY user_id),
-        |act AS (SELECT DISTINCT user_id FROM s WHERE d >= cutoff)
-        |SELECT f.user_id, f.n_events, f.n_clicks, f.value_sum,
-        |  CAST(date_diff('day', f.last_d, f.co) AS INT) AS recency_days,
-        |  act.user_id IS NULL AS churned
-        |FROM f LEFT JOIN act ON f.user_id = act.user_id""".stripMargin,
-
-    "q138_association_rules" ->
-      """WITH ui AS (SELECT user_id,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id,
-        |    MAX(ts) AS last_ts
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL
-        |  GROUP BY 1, 2),
-        |capped AS (SELECT user_id, item_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-        |  WHERE rn <= 30),
-        |pairs AS (SELECT a.item_id AS item_a, b.item_id AS item_b,
-        |    COUNT(*) AS supp_ab
-        |  FROM capped a JOIN capped b
-        |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |supp AS (SELECT item_id, COUNT(*) AS s FROM capped GROUP BY 1),
-        |nu AS (SELECT COUNT(DISTINCT user_id) AS n FROM capped),
-        |d AS (SELECT item_a AS antecedent, item_b AS consequent, supp_ab
-        |        FROM pairs
-        |      UNION ALL
-        |      SELECT item_b, item_a, supp_ab FROM pairs)
-        |SELECT d.antecedent, d.consequent, d.supp_ab,
-        |  CAST(d.supp_ab AS DOUBLE) / CAST(sa.s AS DOUBLE) AS confidence,
-        |  CAST(d.supp_ab * nu.n AS DOUBLE)
-        |    / CAST(sa.s * sc.s AS DOUBLE) AS lift
-        |FROM d JOIN supp sa ON d.antecedent = sa.item_id
-        |JOIN supp sc ON d.consequent = sc.item_id CROSS JOIN nu""".stripMargin,
-
-    // q113's co-visitation adjacency, then three unrolled iterations of
-    // the SAME integral divisions the Spark side performs (// on
-    // positive BIGINTs = div = floor); sums of longs are exact, so the
-    // ranks agree to the last unit
-    "q152_pagerank" ->
-      s"""WITH ui AS (SELECT user_id,
-         |    CAST(json_extract(props, '$$.k') AS BIGINT) AS item_id,
-         |    MAX(ts) AS last_ts
-         |  FROM events WHERE json_extract(props, '$$.k') IS NOT NULL
-         |  GROUP BY 1, 2),
-         |capped AS (SELECT user_id, item_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-         |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-         |  WHERE rn <= 30),
-         |cov AS (SELECT a.item_id AS item_a, b.item_id AS item_b
-         |  FROM capped a JOIN capped b
-         |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |adj AS (SELECT item_a AS node, item_b AS nbr FROM cov
-         |        UNION SELECT item_b, item_a FROM cov),
-         |deg AS (SELECT node, COUNT(*) AS d FROM adj GROUP BY 1),
-         |n AS (SELECT COUNT(*) AS nn FROM deg),
-         |r0 AS (SELECT deg.node, deg.d, 1000000000000 // n.nn AS r
-         |       FROM deg CROSS JOIN n),
-         |c1 AS (SELECT adj.nbr AS node,
-         |    CAST(SUM((r0.r * 85) // (100 * r0.d)) AS BIGINT) AS infl
-         |  FROM r0 JOIN adj ON r0.node = adj.node GROUP BY 1),
-         |r1 AS (SELECT deg.node, deg.d,
-         |    ((1000000000000 * 15) // (100 * n.nn))
-         |      + COALESCE(c1.infl, 0) AS r
-         |  FROM deg CROSS JOIN n LEFT JOIN c1 ON deg.node = c1.node),
-         |c2 AS (SELECT adj.nbr AS node,
-         |    CAST(SUM((r1.r * 85) // (100 * r1.d)) AS BIGINT) AS infl
-         |  FROM r1 JOIN adj ON r1.node = adj.node GROUP BY 1),
-         |r2 AS (SELECT deg.node, deg.d,
-         |    ((1000000000000 * 15) // (100 * n.nn))
-         |      + COALESCE(c2.infl, 0) AS r
-         |  FROM deg CROSS JOIN n LEFT JOIN c2 ON deg.node = c2.node),
-         |c3 AS (SELECT adj.nbr AS node,
-         |    CAST(SUM((r2.r * 85) // (100 * r2.d)) AS BIGINT) AS infl
-         |  FROM r2 JOIN adj ON r2.node = adj.node GROUP BY 1),
-         |r3 AS (SELECT deg.node, deg.d,
-         |    ((1000000000000 * 15) // (100 * n.nn))
-         |      + COALESCE(c3.infl, 0) AS r
-         |  FROM deg CROSS JOIN n LEFT JOIN c3 ON deg.node = c3.node)
-         |SELECT node, r AS rank_micro,
-         |  CAST(r AS DOUBLE) / 1000000000000.0 AS pagerank
-         |FROM r3""".stripMargin,
 
     // the identical bottom-k-by-hash sample, ranked the same way; the
     // rank index 1 + floor(p·(m-1)) is the same double expression on
@@ -4178,98 +3664,6 @@ object SparkEntry {
         |FROM d JOIN t USING (event_type) JOIN med USING (event_type)
         |  JOIN mad USING (event_type)
         |GROUP BY 1, 2, 3, 4""".stripMargin,
-
-    // q51's lag-gap session CTE (filtered to item events) -> q104's
-    // pair chain, keyed by (user, session)
-    "q163_session_covisitation" ->
-      """WITH x AS (SELECT user_id, event_id, ts,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS prev
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL),
-        |sx AS (SELECT user_id, item_id, ts,
-        |    SUM(CASE WHEN prev IS NULL OR ts > prev + INTERVAL 1 DAY
-        |             THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM x),
-        |ui AS (SELECT user_id, sid, item_id, MAX(ts) AS last_ts
-        |  FROM sx GROUP BY 1, 2, 3),
-        |capped AS (SELECT user_id, sid, item_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, sid
-        |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-        |  WHERE rn <= 30)
-        |SELECT a.item_id AS item_a, b.item_id AS item_b,
-        |  COUNT(*) AS n_sessions
-        |FROM capped a JOIN capped b
-        |  ON a.user_id = b.user_id AND a.sid = b.sid
-        |    AND a.item_id < b.item_id
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin,
-
-    // q145's position construction (item events only) -> per-position
-    // propensities -> fixed-order IPS term, floored to micro-units
-    "q164_ips_item_clicks" ->
-      """WITH imp AS (SELECT user_id, ts, event_id,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id,
-        |    CAST(event_type = 'click' AS BIGINT) AS click,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-        |      ORDER BY ts, event_id) AS position
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL),
-        |i2 AS (SELECT * FROM imp WHERE position <= 20),
-        |pa AS (SELECT position, COUNT(*) AS imps,
-        |    CAST(SUM(click) AS BIGINT) AS clicks FROM i2 GROUP BY 1),
-        |base AS (SELECT imps AS imps1, clicks AS clicks1 FROM pa
-        |         WHERE position = 1),
-        |ip AS (SELECT item_id, position, CAST(SUM(click) AS BIGINT) AS cip
-        |       FROM i2 GROUP BY 1, 2 HAVING SUM(click) > 0)
-        |SELECT item_id, CAST(SUM(cip) AS BIGINT) AS n_clicks,
-        |  CAST(SUM(CAST(floor((((CAST(cip AS DOUBLE) * CAST(imps AS DOUBLE))
-        |      * CAST(clicks1 AS DOUBLE))
-        |    / (CAST(clicks AS DOUBLE) * CAST(imps1 AS DOUBLE))) * 1e6)
-        |    AS BIGINT)) AS BIGINT) AS ips_clicks_micro
-        |FROM ip JOIN pa USING (position), base
-        |WHERE clicks > 0 AND clicks1 > 0
-        |GROUP BY 1""".stripMargin,
-
-    // q104's co-visitation CTEs -> symmetric top-5 neighbor rank ->
-    // lag-pair transitions -> hit counting
-    "q165_candidate_recall" ->
-      """WITH ui AS (SELECT user_id,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id,
-        |    MAX(ts) AS last_ts
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL
-        |  GROUP BY 1, 2),
-        |capped AS (SELECT user_id, item_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-        |  WHERE rn <= 30),
-        |cov AS (SELECT a.item_id AS item_a, b.item_id AS item_b,
-        |    COUNT(*) AS n_users
-        |  FROM capped a JOIN capped b
-        |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |adjn AS (SELECT item_a AS node, item_b AS nbr, n_users FROM cov
-        |  UNION ALL SELECT item_b, item_a, n_users FROM cov),
-        |topk AS (SELECT node, nbr FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY node
-        |      ORDER BY n_users DESC, nbr ASC) AS rn FROM adjn)
-        |  WHERE rn <= 5),
-        |tr AS (SELECT user_id, ts, event_id, item_id,
-        |    lag(item_id) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM (SELECT user_id, ts, event_id,
-        |      CAST(json_extract(props, '$.k') AS BIGINT) AS item_id
-        |    FROM events WHERE json_extract(props, '$.k') IS NOT NULL)),
-        |t2 AS (SELECT * FROM tr
-        |  WHERE prev IS NOT NULL AND prev <> item_id)
-        |SELECT COUNT(*) AS n_transitions,
-        |  CAST(COALESCE(SUM(CASE WHEN topk.node IS NOT NULL
-        |    THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_hits,
-        |  CAST(COALESCE(SUM(CASE WHEN topk.node IS NOT NULL
-        |      THEN 1 ELSE 0 END), 0) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE) AS recall
-        |FROM t2 LEFT JOIN topk
-        |  ON t2.prev = topk.node AND t2.item_id = topk.nbr""".stripMargin,
 
     // q47's ASOF oracle + the staleness null-out
     "q166_pit_fresh" ->
@@ -5153,48 +4547,6 @@ object SparkEntry {
         |    AS iv_term
         |FROM gg, tt""".stripMargin,
 
-    // q104's covisit edges -> degree orientation -> closed wedges
-    "q226_triangle_stats" ->
-      """WITH ui AS (SELECT user_id,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id,
-        |    MAX(ts) AS last_ts FROM events
-        |  WHERE json_extract(props, '$.k') IS NOT NULL GROUP BY 1, 2),
-        |capped AS (SELECT user_id, item_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-        |  WHERE rn <= 30),
-        |cov AS (SELECT a.item_id AS src, b.item_id AS dst
-        |  FROM capped a JOIN capped b ON a.user_id = b.user_id
-        |    AND a.item_id < b.item_id
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |und AS (SELECT DISTINCT LEAST(src, dst) AS a,
-        |    GREATEST(src, dst) AS b FROM cov
-        |  WHERE src <> dst AND src IS NOT NULL AND dst IS NOT NULL),
-        |deg AS (SELECT v, COUNT(*) AS d FROM (
-        |    SELECT a AS v FROM und UNION ALL SELECT b FROM und)
-        |  GROUP BY v),
-        |ori AS (SELECT CASE WHEN da.d < db.d
-        |      OR (da.d = db.d AND u.a < u.b) THEN u.a ELSE u.b END AS u,
-        |    CASE WHEN da.d < db.d
-        |      OR (da.d = db.d AND u.a < u.b) THEN u.b ELSE u.a END AS w
-        |  FROM und u JOIN deg da ON da.v = u.a
-        |  JOIN deg db ON db.v = u.b),
-        |tri AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles FROM (
-        |    SELECT e1.w AS x, e2.w AS y FROM ori e1 JOIN ori e2
-        |      ON e1.u = e2.u AND e1.w < e2.w) p
-        |  JOIN (SELECT LEAST(u, w) AS x, GREATEST(u, w) AS y FROM ori) o
-        |    ON o.x = p.x AND o.y = p.y),
-        |base AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes,
-        |    CAST(SUM(d) // 2 AS BIGINT) AS n_edges,
-        |    CAST(SUM((d * (d - 1)) // 2) AS BIGINT) AS n_wedges
-        |  FROM deg)
-        |SELECT base.n_nodes, base.n_edges, base.n_wedges,
-        |  tri.n_triangles,
-        |  CASE WHEN base.n_wedges > 0 THEN
-        |    3.0E0 * CAST(tri.n_triangles AS DOUBLE)
-        |      / CAST(base.n_wedges AS DOUBLE) END AS clustering_coeff
-        |FROM base, tri""".stripMargin,
-
     // first/last by (ts, event_id) replicated with two row_numbers
     "q227_ohlc_resample" ->
       """WITH s AS (SELECT user_id,
@@ -5245,28 +4597,6 @@ object SparkEntry {
         |  CAST(wq.vm AS DOUBLE) / 1e6 AS quantile_sec
         |FROM k JOIN wq ON wq.hi - wq.cnt < k.kk AND k.kk <= wq.hi,
         |  smry""".stripMargin,
-
-    // shared-item pair generation with the super-node cut; Jaccard
-    // from full degrees
-    "q229_user_overlap" ->
-      """WITH ui AS (SELECT DISTINCT user_id,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id
-        |  FROM events
-        |  WHERE CAST(json_extract(props, '$.k') AS BIGINT) IS NOT NULL),
-        |deg AS (SELECT user_id, COUNT(*) AS d FROM ui GROUP BY 1),
-        |pop AS (SELECT item_id, COUNT(*) AS p FROM ui GROUP BY 1),
-        |bl AS (SELECT ui.user_id, ui.item_id FROM ui
-        |  JOIN pop ON pop.item_id = ui.item_id AND pop.p <= 80),
-        |pr AS (SELECT x.user_id AS user_a, y.user_id AS user_b,
-        |    COUNT(*) AS n_common
-        |  FROM bl x JOIN bl y ON x.item_id = y.item_id
-        |    AND x.user_id < y.user_id
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
-        |SELECT pr.user_a, pr.user_b, pr.n_common,
-        |  CAST(pr.n_common AS DOUBLE)
-        |    / CAST(da.d + db.d - pr.n_common AS DOUBLE) AS jaccard
-        |FROM pr JOIN deg da ON da.user_id = pr.user_a
-        |JOIN deg db ON db.user_id = pr.user_b""".stripMargin,
 
     // presence fan-out over the trailing window -> one distinct count
     // per day
@@ -5507,96 +4837,6 @@ object SparkEntry {
         |    / (CAST(c AS DOUBLE) + CAST(f AS DOUBLE) + alpha + beta), 6)
         |    AS smoothed_rate
         |FROM fin""".stripMargin,
-
-    "q244_snips_item_ctr" ->
-      """WITH imp AS (SELECT user_id, ts, event_id,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item_id,
-        |    CAST(event_type = 'click' AS BIGINT) AS click,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-        |      ORDER BY ts, event_id) AS position
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL),
-        |i2 AS (SELECT * FROM imp WHERE position <= 20),
-        |pa AS (SELECT position, CAST(COUNT(*) AS BIGINT) AS imps,
-        |    CAST(SUM(click) AS BIGINT) AS clicks FROM i2 GROUP BY 1),
-        |base AS (SELECT imps AS imps1, clicks AS clicks1 FROM pa
-        |         WHERE position = 1),
-        |ip AS (SELECT item_id, position, CAST(COUNT(*) AS BIGINT) AS iip,
-        |    CAST(SUM(click) AS BIGINT) AS cip FROM i2 GROUP BY 1, 2),
-        |t AS (SELECT item_id, iip, cip,
-        |    (CAST(clicks1 AS DOUBLE) * CAST(imps AS DOUBLE))
-        |      / (CAST(imps1 AS DOUBLE) * CAST(clicks AS DOUBLE)) AS w
-        |  FROM ip JOIN pa USING (position), base
-        |  WHERE clicks > 0 AND clicks1 > 0),
-        |agg AS (SELECT item_id, CAST(SUM(cip) AS BIGINT) AS n_clicks,
-        |    CAST(SUM(iip) AS BIGINT) AS n_imps,
-        |    CAST(SUM(CAST(floor(CAST(cip AS DOUBLE) * w * 1.0E6) AS BIGINT))
-        |      AS BIGINT) AS num_micro,
-        |    CAST(SUM(CAST(floor(CAST(iip AS DOUBLE) * w * 1.0E6) AS BIGINT))
-        |      AS BIGINT) AS den_micro
-        |  FROM t GROUP BY 1)
-        |SELECT item_id, n_clicks, n_imps, num_micro, den_micro,
-        |  ROUND(CAST(num_micro AS DOUBLE) / CAST(den_micro AS DOUBLE), 6)
-        |    AS snips_ctr
-        |FROM agg WHERE den_micro > 0""".stripMargin,
-
-    "q245_kcore" -> {
-      // unrolled peeling rounds: deg_r over e_r, keep_r, e_{r+1}
-      val rounds = (1 to 3).map { r =>
-        val semi = if (r < 3)
-          s""",
-             |e${r + 1} AS (SELECT ia, ib FROM e$r
-             |  WHERE ia IN (SELECT n FROM k$r)
-             |    AND ib IN (SELECT n FROM k$r))""".stripMargin
-        else ""
-        s"""d$r AS (SELECT n, CAST(COUNT(*) AS BIGINT) AS deg FROM
-           |    (SELECT ia AS n FROM e$r UNION ALL SELECT ib FROM e$r) t
-           |  GROUP BY 1),
-           |k$r AS (SELECT n FROM d$r WHERE deg >= 35)$semi""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ui AS (
-         |  SELECT user_id, CAST(json_extract(props, '$$.k') AS BIGINT)
-         |      AS item_id,
-         |    MAX(ts) AS last_ts
-         |  FROM events
-         |  WHERE json_extract(props, '$$.k') IS NOT NULL
-         |  GROUP BY 1, 2),
-         |capped AS (SELECT user_id, item_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-         |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-         |  WHERE rn <= 30),
-         |e1 AS (SELECT a.item_id AS ia, b.item_id AS ib
-         |  FROM capped a JOIN capped b
-         |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 14),
-         |$rounds
-         |SELECT n AS node, deg AS degree FROM d3 WHERE deg >= 35""".stripMargin
-    },
-
-    "q246_hits" ->
-      """WITH it AS (SELECT user_id, ts, event_id,
-        |    CAST(json_extract(props, '$.k') AS BIGINT) AS item
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL),
-        |nx AS (SELECT item, lead(item) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS nxt FROM it),
-        |e AS (SELECT item AS src, nxt AS dst, CAST(COUNT(*) AS BIGINT) AS w
-        |      FROM nx WHERE nxt IS NOT NULL AND nxt <> item GROUP BY 1, 2),
-        |a1 AS (SELECT dst, CAST(SUM(w) AS BIGINT) AS a FROM e GROUP BY 1),
-        |h1 AS (SELECT src, CAST(SUM(e.w * a1.a) AS BIGINT) AS h
-        |       FROM e JOIN a1 USING (dst) GROUP BY 1),
-        |a2 AS (SELECT dst, CAST(SUM(e.w * h1.h) AS BIGINT) AS a
-        |       FROM e JOIN h1 USING (src) GROUP BY 1),
-        |h2 AS (SELECT src, CAST(SUM(e.w * a2.a) AS BIGINT) AS h
-        |       FROM e JOIN a2 USING (dst) GROUP BY 1),
-        |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |sc AS (SELECT node, COALESCE(h2.h, 0) AS hub,
-        |         COALESCE(a2.a, 0) AS auth
-        |       FROM n LEFT JOIN h2 ON h2.src = n.node
-        |            LEFT JOIN a2 ON a2.dst = n.node),
-        |mx AS (SELECT max(hub) AS mh, max(auth) AS ma FROM sc)
-        |SELECT node, hub, auth,
-        |  ROUND(CAST(hub AS DOUBLE) / CAST(mh AS DOUBLE), 6) AS hub_norm,
-        |  ROUND(CAST(auth AS DOUBLE) / CAST(ma AS DOUBLE), 6) AS auth_norm
-        |FROM sc, mx""".stripMargin,
 
     "q247_fuzzy_linkage" ->
       """WITH cl AS (SELECT c_custkey AS ckey, c_name AS cname,
@@ -5900,55 +5140,6 @@ object SparkEntry {
         |    6) AS delta
         |FROM g, t""".stripMargin,
 
-    "q265_rfm_segments" -> {
-      val pp = "pp AS (SELECT unnest([0.2E0, 0.4E0, 0.6E0, 0.8E0])" +
-        " AS prob, unnest([200000, 400000, 600000, 800000]) AS pm)"
-      def chain(x: String) =
-        s"""${x}c AS (SELECT CAST(ROUND(CAST($x AS DOUBLE) * 1e6)
-           |    AS BIGINT) AS vm FROM rfm),
-           |${x}g AS (SELECT vm, COUNT(*) AS cnt FROM ${x}c GROUP BY 1),
-           |${x}w AS (SELECT vm, cnt, CAST(SUM(cnt) OVER (ORDER BY vm
-           |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS hi FROM ${x}g),
-           |${x}n AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM ${x}g),
-           |${x}k AS (SELECT prob,
-           |    GREATEST(1, (pm * n + 999999) // 1000000) AS kk
-           |  FROM ${x}n, pp),
-           |${x}q AS (SELECT prob, CAST(vm AS DOUBLE) / 1e6 AS qv
-           |  FROM ${x}k JOIN ${x}w
-           |    ON ${x}w.hi - ${x}w.cnt < ${x}k.kk AND ${x}k.kk <= ${x}w.hi),
-           |${x}b AS (SELECT
-           |    MAX(CASE WHEN prob = 0.2E0 THEN qv END) AS ${x}0,
-           |    MAX(CASE WHEN prob = 0.4E0 THEN qv END) AS ${x}1,
-           |    MAX(CASE WHEN prob = 0.6E0 THEN qv END) AS ${x}2,
-           |    MAX(CASE WHEN prob = 0.8E0 THEN qv END) AS ${x}3
-           |  FROM ${x}q)""".stripMargin
-      def bucket(x: String) = (0 to 3).map(i =>
-        s"(CASE WHEN CAST($x AS DOUBLE) > $x$i THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH per AS (SELECT user_id,
-         |    max(epoch_ms(ts) // 86400000) AS last_day,
-         |    CAST(COUNT(*) AS BIGINT) AS f,
-         |    CAST(SUM(CAST(floor(value * 1.0E6) AS BIGINT)) AS BIGINT)
-         |      AS m
-         |  FROM events GROUP BY 1),
-         |gm AS (SELECT max(last_day) AS gmax FROM per),
-         |rfm AS (SELECT user_id, gmax - last_day AS r, f, m FROM per, gm),
-         |$pp,
-         |${chain("r")},
-         |${chain("f")},
-         |${chain("m")},
-         |asg AS (SELECT user_id, m,
-         |    ${bucket("r")} AS r_bucket,
-         |    ${bucket("f")} AS f_bucket,
-         |    ${bucket("m")} AS m_bucket
-         |  FROM rfm, rb, fb, mb)
-         |SELECT r_bucket, f_bucket, m_bucket,
-         |  CAST(COUNT(*) AS BIGINT) AS n_users,
-         |  ROUND(CAST(SUM(m) AS DOUBLE)
-         |    / (CAST(COUNT(*) AS DOUBLE) * 1.0E6), 6) AS avg_monetary
-         |FROM asg GROUP BY 1, 2, 3""".stripMargin
-    },
-
     "q266_state_reconciliation" ->
       """WITH b AS (SELECT user_id, min(epoch_ms(ts)) AS first_ms,
         |    max(epoch_ms(ts)) AS last_ms, CAST(COUNT(*) AS BIGINT) AS cnt,
@@ -6038,76 +5229,6 @@ object SparkEntry {
         |  ROUND(CAST(SUM(CASE WHEN upd > 0 THEN rows_ ELSE 0 END)
         |    AS DOUBLE) / CAST(SUM(upd) AS DOUBLE), 6) AS write_amp
         |FROM pf GROUP BY 1""".stripMargin,
-
-    "q273_assortativity" ->
-      """WITH ui AS (
-        |  SELECT user_id, CAST(json_extract(props, '$.k') AS BIGINT)
-        |      AS item_id,
-        |    MAX(ts) AS last_ts
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL
-        |  GROUP BY 1, 2),
-        |capped AS (SELECT user_id, item_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-        |  WHERE rn <= 30),
-        |cov AS (SELECT a.item_id AS ia, b.item_id AS ib
-        |  FROM capped a JOIN capped b
-        |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 14),
-        |sym AS (SELECT ia AS s2, ib AS d2 FROM cov
-        |        UNION ALL SELECT ib, ia FROM cov),
-        |deg AS (SELECT s2 AS n, CAST(COUNT(*) AS BIGINT) AS dg
-        |        FROM sym GROUP BY 1),
-        |pr AS (SELECT dx.dg AS x, dy.dg AS y FROM sym
-        |       JOIN deg dx ON dx.n = sym.s2
-        |       JOIN deg dy ON dy.n = sym.d2),
-        |mom AS (SELECT CAST(COUNT(*) AS BIGINT) AS ne,
-        |    SUM(CAST(x AS HUGEINT)) AS sx, SUM(CAST(y AS HUGEINT)) AS sy,
-        |    SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-        |    SUM(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-        |    SUM(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy FROM pr)
-        |SELECT ne AS n_ends,
-        |  ROUND(CASE WHEN CAST(ne * sxx - sx * sx AS DOUBLE) > 0.0E0
-        |          AND CAST(ne * syy - sy * sy AS DOUBLE) > 0.0E0
-        |    THEN CAST(ne * sxy - sx * sy AS DOUBLE)
-        |      / sqrt(CAST(ne * sxx - sx * sx AS DOUBLE)
-        |          * CAST(ne * syy - sy * sy AS DOUBLE)) END, 6)
-        |    AS assortativity
-        |FROM mom""".stripMargin,
-
-    "q274_rich_club" ->
-      """WITH ui AS (
-        |  SELECT user_id, CAST(json_extract(props, '$.k') AS BIGINT)
-        |      AS item_id,
-        |    MAX(ts) AS last_ts
-        |  FROM events WHERE json_extract(props, '$.k') IS NOT NULL
-        |  GROUP BY 1, 2),
-        |capped AS (SELECT user_id, item_id FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY last_ts DESC, item_id ASC) AS rn FROM ui)
-        |  WHERE rn <= 30),
-        |cov AS (SELECT a.item_id AS ia, b.item_id AS ib
-        |  FROM capped a JOIN capped b
-        |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 12),
-        |sym AS (SELECT ia AS s2, ib AS d2 FROM cov
-        |        UNION ALL SELECT ib, ia FROM cov),
-        |deg AS (SELECT s2 AS n, CAST(COUNT(*) AS BIGINT) AS dg
-        |        FROM sym GROUP BY 1),
-        |kk AS (SELECT unnest([20, 40, 60, 80]) AS k),
-        |nc AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n_club
-        |       FROM deg, kk WHERE dg > k GROUP BY 1),
-        |ec AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS e_club
-        |       FROM cov e JOIN deg da ON da.n = e.ia
-        |            JOIN deg db ON db.n = e.ib, kk
-        |       WHERE da.dg > k AND db.dg > k GROUP BY 1)
-        |SELECT CAST(nc.k AS BIGINT) AS k, n_club,
-        |  COALESCE(e_club, 0) AS e_club,
-        |  n_club * (n_club - 1) // 2 AS possible,
-        |  ROUND(CAST(COALESCE(e_club, 0) AS DOUBLE)
-        |    / CAST(n_club * (n_club - 1) // 2 AS DOUBLE), 6) AS phi
-        |FROM nc LEFT JOIN ec ON ec.k = nc.k
-        |WHERE n_club > 1""".stripMargin,
 
     "q277_stream_moments" ->
       """SELECT event_type, CAST(COUNT(value) AS BIGINT) AS cnt,

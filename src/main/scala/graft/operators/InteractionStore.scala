@@ -44,6 +44,10 @@ object InteractionStore {
   val MaxEventsPerWeek = 500      // constants.go:22-25
   val MaxRangeWeeks    = 24       // 24 weekly buckets, README.md:7
 
+  /** Item surrogate carried in the event props JSON (`$.k`). */
+  def itemOf(props: Column): Column =
+    get_json_object(props, "$.k").cast("long")
+
   /** Monday-start event-time week bucket (F10/ST5). */
   def week(ts: Column): Column = date_trunc("week", ts).cast("date")
 

@@ -28,10 +28,10 @@ import org.apache.spark.sql.DataFrame
   * the table BEFORE pinning executes the expensive upstream one extra
   * time (the exact replay disease the pins cure), and counting AFTER
   * pinning can only unpersist back to the replay-per-consumer shape —
-  * strictly worse than keeping the pin on durable storage. The
-  * censused broadcast-vs-shuffle decision (Recsys.BroadcastAdjCap)
-  * stays separate and unchanged: it reads its count off the
-  * already-materialized pin, where the count is cheap.
+  * strictly worse than keeping the pin on durable storage. A
+  * censused decision (say broadcast-vs-shuffle) belongs downstream of
+  * the pin: it reads its count off the already-materialized table,
+  * where the count is cheap.
   */
 object Pins {
 

@@ -189,16 +189,7 @@ class EdgeCaseSpec extends AnyFunSuite with SparkSuite {
     assert(capped === uncapped)
   }
 
-  test("recsys ops on empty event logs") {
-    val empty = Seq.empty[(Long, Long, String, Double, String)]
-      .toDF("event_id", "user_id", "event_type", "value", "props")
-      .withColumn("ts", to_timestamp(lit("2024-01-01 00:00:00")))
-      .filter(lit(false))
-    assert(graft.operators.Recsys.covisitation(empty).count() === 0)
-    assert(graft.operators.Recsys.negativeSample(empty).count() === 0)
-    assert(graft.operators.Recsys.decayedEngagement(empty).count() === 0)
-    assert(graft.operators.Recsys.targetEncodeLoo(empty, "event_type",
-      "value", Seq("event_id")).count() === 0)
+  test("shard on an empty key set") {
     assert(Training.shard(Seq.empty[Long].toDF("doc_id"), "doc_id", 64L)
       .count() === 0)
   }

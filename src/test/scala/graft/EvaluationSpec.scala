@@ -106,28 +106,6 @@ class EvaluationSpec extends AnyFunSuite with SparkSuite {
     assert(prof("s") === ((3L, 1L, 1L)))
   }
 
-  test("associationRules: confidence and lift from exact supports") {
-    def ev(id: Long, user: Long, item: Long) =
-      (id, user, "view", 1.0, s"""{"k": $item}""",
-        java.sql.Timestamp.valueOf(f"2024-01-01 00:${id % 60}%02d:00"))
-    // items 1,2 co-occur for users 1,2,3; item 3 only with user 1
-    val rows = Seq(
-      ev(1, 1, 1), ev(2, 1, 2), ev(3, 1, 3),
-      ev(4, 2, 1), ev(5, 2, 2),
-      ev(6, 3, 1), ev(7, 3, 2))
-    val df = rows.toDF("event_id", "user_id", "event_type", "value",
-      "props", "ts")
-    val got = graft.operators.Recsys.associationRules(df, minUsers = 2)
-      .select($"antecedent", $"consequent", $"supp_ab", $"confidence",
-        $"lift")
-      .as[(Long, Long, Long, Double, Double)].collect()
-      .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
-    // supp(1)=3, supp(2)=3, supp(12)=3, N=3 users
-    assert(got((1L, 2L)) === ((3L, 1.0, 1.0)))
-    assert(got((2L, 1L)) === ((3L, 1.0, 1.0)))
-    assert(!got.contains((1L, 3L))) // below minUsers
-  }
-
   test("pavCalibrateCountsBy fits each group exactly like the global " +
       "fit applied per group") {
     val bins = Seq(
@@ -147,28 +125,6 @@ class EvaluationSpec extends AnyFunSuite with SparkSuite {
     // s1 is fully decreasing → one pooled block at (8+2+1)/30
     assert(grouped.filter(_._1 == "s1").map(_._3).distinct ===
       Seq(11.0 / 30.0))
-  }
-
-  test("ipsItemClicks reweights clicks by 1/propensity(position)") {
-    // pos 1: 4 imps, 2 clicks (ctr 0.5, propensity 1)
-    // pos 2: 4 imps, 1 click  (ctr 0.25, propensity 0.5 → click counts 2)
-    val rows = Seq(
-      ("A", 1, 1L), ("B", 1, 1L), ("A", 1, 0L), ("B", 1, 0L),
-      ("A", 2, 1L), ("B", 2, 0L), ("A", 2, 0L), ("B", 2, 0L))
-      .toDF("item", "pos", "click")
-    val got = graft.operators.Recsys
-      .ipsItemClicks(rows, "item", "pos", "click")
-      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-    // A: 1 click at pos1 (×1) + 1 click at pos2 (×2) = 3.0 → 3e6 micro
-    // B: 1 click at pos1 (×1) = 1.0 → 1e6 micro
-    assert(got === Seq(("A", 2L, 3000000L), ("B", 1L, 1000000L)))
-    // a zero-click position contributes nothing and causes no 0/0
-    val deadPos = rows.unionByName(
-      Seq(("A", 3, 0L), ("B", 3, 0L)).toDF("item", "pos", "click"))
-    val got2 = graft.operators.Recsys
-      .ipsItemClicks(deadPos, "item", "pos", "click")
-      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(got2 === got)
   }
 
   test("medianBy picks the exact lower median per group, any partitioning") {

@@ -13,15 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * failure message says so. No Spark session needed — pure constants. */
 class OraclePinsSpec extends AnyFunSuite {
 
-  test("q107 lambda pin == timeDecayLambda(24.0)") {
-    assert(OraclePins.q107Lambda24 ===
-      graft.operators.Recsys.timeDecayLambda(24.0),
-      "timeDecayLambda drifted off the q107 pin — regenerate " +
-        "OraclePins.q107Lambda24 if the formula change is intentional, " +
-        "or if this JVM's libm rounds exp differently (last-ulp-only " +
-        "drift on an unchanged formula = platform, see OraclePins doc)")
-  }
-
   test("q203 Benford pin == Validate.BenfordP") {
     assert(OraclePins.q203BenfordP ===
       graft.operators.Validate.BenfordP,

@@ -220,36 +220,6 @@ class RandomizedSpec extends AnyFunSuite with SparkSuite {
     assert(run(df.repartition(32, $"id")) === base)
   }
 
-  test("IPS-weighted clicks invariant under 1/4/32-partition shuffles") {
-    val rnd = seeded()
-    // q164's full composition: position assignment via the (user, day)
-    // window with the (ts, event_id) tie-break, then ipsItemClicks —
-    // duplicated timestamps stress the tie rule, tied propensity terms
-    // stress the micro-floored sum
-    val rows = Seq.fill(600)((
-      rnd.nextInt(6).toLong,
-      java.sql.Timestamp.valueOf(
-        f"2024-02-${1 + rnd.nextInt(3)}%02d ${rnd.nextInt(4)}%02d:00:00"),
-      rnd.nextLong().abs,
-      rnd.nextInt(10).toLong,
-      rnd.nextInt(2).toLong)).distinct
-    val df = rows.toDF("user_id", "ts", "event_id", "item_id", "click")
-    def run(d: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"user_id", to_date($"ts"))
-        .orderBy($"ts".asc, $"event_id".asc)
-      val imp = d.withColumn("position", row_number().over(w))
-        .filter($"position" <= 20)
-      graft.operators.Recsys.ipsItemClicks(
-          imp, "item_id", "position", "click")
-        .as[(Long, Long, Long)].collect().toSet
-    }
-    val base = run(df.repartition(1))
-    assert(base.nonEmpty)
-    assert(run(df.repartition(4, $"ts")) === base)
-    assert(run(df.repartition(32, $"item_id")) === base)
-  }
-
   test("uint64 maps to DecimalType(20,0): full unsigned range survives") {
     import graft.core.FeatureType
     val maxU64 = BigDecimal("18446744073709551615") // 2^64 - 1

@@ -212,15 +212,18 @@ MUTATIONS = [
                      "CPython-derived pin",
     },
     {
-        # (p2) shared-construction pin q107: half-life decay rate.
-        "name": "decay_lambda_halflife",
-        "file": "src/main/scala/graft/operators/Recsys.scala",
-        "old": "math.log(2) / math.max(halfLifeHours, 1e-9)",
-        "new": "math.log(2) / math.max(halfLifeHours + 1.0, 1e-9)",
-        "queries": ["q107_decayed_engagement"],
+        # props item surrogate: itemOf reads a JSON path the events do
+        # not carry, so every item id parses to null
+        "name": "item_of_wrong_path",
+        "file": "src/main/scala/graft/operators/InteractionStore.scala",
+        "old": 'get_json_object(props, "$.k").cast("long")',
+        "new": 'get_json_object(props, "$.item").cast("long")',
+        "queries": ["q131_constrained_rerank", "q220_cold_start"],
         "expect": "red",
-        "mechanism": "engine lambda = ln2/25h while the oracle's exp() uses "
-                     "the pinned ln2/24h double -> recency_micro drifts",
+        "mechanism": "null item ids: q131's category filter drops every "
+                     "row (0 vs 1500) and q220's item cold rate divides "
+                     "by zero test items (no output), while both oracles "
+                     "read $.k",
     },
     {
         # (p4) shared-construction pin q203: Benford P(d) formula.
